@@ -58,6 +58,14 @@ def sha256(text: str) -> str:
 
 
 # --- query mix ---------------------------------------------------------
+#
+# Where each proportion comes from: the four term classes, the top-k
+# shapes, the page-op kinds and the one-in-five page-op share are the
+# serve workload's definition (perfbench/NOTES.md); the hot-keyword
+# skew is the corpus's own (keywords are drawn Zipf(1.3) when documents
+# are generated, see FIXTURES.md). The class shares (45/35/15/5 %) and
+# the Zipf(1.0) skew over identifier parts are assumptions: no query log
+# exists to take them from.
 
 # top-k shapes, issued in this fixed rotation so every run sees the same
 # proportions; only the terms are drawn from the seed
@@ -70,6 +78,12 @@ PAGE_OPS = (
     "facet_counts", "field_stats", "facet_histogram", "search_sorted",
     "search_collapse", "search_after_topk",
 )
+# top-k ops in a round: every shape twice, so with one op of each page
+# kind 6 of 28 ops (21 %) are page ops, the nearest share to one in
+# five that keeps every shape and every page kind equally often
+TOPK_PER_ROUND = 2 * len(TOPK_SHAPES)
+HOT_ZIPF = 1.3
+MID_ZIPF = 1.0
 
 _ABSENT_CHARS = np.array(list("qxzjvkw"))
 
@@ -84,16 +98,22 @@ class Vocab:
         self.mid = sorted(set(datagen._IDENT_HEADS) | set(datagen._IDENT_TAILS))
         self.rare = sorted({str(i).lower() for i in idents[:2000]})
 
-    def _zipf(self, items: list[str], a: float = 1.2) -> str:
+    def _zipf(self, items: list[str], a: float) -> str:
         p = np.arange(1, len(items) + 1, dtype=np.float64) ** -a
         return items[int(self.rng.choice(len(items), p=p / p.sum()))]
+
+    def hot_term(self) -> str:
+        return self._zipf(self.hot, HOT_ZIPF)
+
+    def mid_term(self) -> str:
+        return self._zipf(self.mid, MID_ZIPF)
 
     def term(self) -> str:
         kind = self.rng.random()
         if kind < 0.45:
-            return self._zipf(self.hot)
+            return self.hot_term()
         if kind < 0.8:
-            return self._zipf(self.mid, 1.0)
+            return self.mid_term()
         if kind < 0.95:
             return self.rare[int(self.rng.integers(len(self.rare)))]
         return "zz" + "".join(self.rng.choice(_ABSENT_CHARS, 5))
@@ -105,7 +125,7 @@ class Vocab:
         return str(self.rng.choice(datagen._IDENT_HEADS))
 
     def known(self) -> str:
-        return self._zipf(self.mid, 1.0) if self.rng.random() < 0.5 else self._zipf(self.hot)
+        return self.mid_term() if self.rng.random() < 0.5 else self.hot_term()
 
     def topk_query(self, shape: str) -> str:
         t, u = self.term(), self.known()
@@ -122,11 +142,11 @@ class Vocab:
         if shape == "prefix":
             return f"{self.head()}* {u}"
         if shape == "fuzzy":
-            m = self._zipf(self.mid, 1.0)
+            m = self.mid_term()
             i = int(self.rng.integers(1, len(m)))
             return f"{m[:i]}{self.rng.choice(_ABSENT_CHARS)}{m[i + 1:]}~1"
         if shape == "phrase":
-            return f'"{self._zipf(self.hot)} {self._zipf(self.hot)}"'
+            return f'"{self.hot_term()} {self.hot_term()}"'
         if shape == "wildcard":
             return f"{self.head()}*{self.rng.choice(datagen._IDENT_TAILS)[-2:]} {u}"
         if shape == "range":
@@ -140,30 +160,33 @@ class Vocab:
         return f"{self.known()} {self.known()}" if self.rng.random() < 0.5 else self.known()
 
 
-def single_rounds(seed: int, idents: np.ndarray, page_queries: int = 8) -> Iterator[list[tuple[str, str]]]:
+def single_rounds(seed: int, idents: np.ndarray, page_queries: int = 4) -> Iterator[list[tuple[str, str]]]:
     """The serve workload's endless stream of single-op rounds. A round
-    is one top-k op of every shape followed, after every second one, by
-    a result-page op, one of each kind: (kind, query) pairs where kind
-    is ``topk`` or a page op name. Every round has the same mix, so runs
-    that time whole rounds time the same mix whatever the seed. Page ops
-    draw from a small set of result-page queries, as a search page
-    re-aggregates the same popular queries."""
+    is ``TOPK_PER_ROUND`` top-k ops, every shape twice in the fixed
+    rotation, with one result-page op of each kind spread evenly among
+    them: (kind, query) pairs where kind is ``topk`` or a page op name.
+    Every round has the same mix, so runs that time whole rounds time
+    the same mix whatever the seed. Page ops draw from a small set of
+    result-page queries, as a search page re-aggregates the same popular
+    queries."""
     vocab = Vocab(np.random.default_rng([seed, 2]), idents)
     pages = [vocab.page_query() for _ in range(page_queries)]
+    n, m = TOPK_PER_ROUND, len(PAGE_OPS)
     while True:
         out: list[tuple[str, str]] = []
         kinds = iter(PAGE_OPS)
-        for j, shape in enumerate(TOPK_SHAPES):
-            out.append(("topk", vocab.topk_query(shape)))
-            if j % 2 == 1 or j == len(TOPK_SHAPES) - 1:
+        for j in range(n):
+            out.append(("topk", vocab.topk_query(TOPK_SHAPES[j % len(TOPK_SHAPES)])))
+            if (j + 1) * m // n > j * m // n:
                 out.append((next(kinds), pages[int(vocab.rng.integers(len(pages)))]))
         yield out
 
 
-def warmup_queries(seed: int, idents: np.ndarray) -> list[str]:
-    """One query of every top-k shape, from a stream the timed ops do not use."""
+def warmup_queries(seed: int, idents: np.ndarray) -> tuple[list[str], str]:
+    """One query of every top-k shape and one result-page query, from a
+    stream the timed ops do not use."""
     vocab = Vocab(np.random.default_rng([seed, 8]), idents)
-    return [vocab.topk_query(shape) for shape in TOPK_SHAPES]
+    return [vocab.topk_query(shape) for shape in TOPK_SHAPES], vocab.page_query()
 
 
 def probe_queries(seed: int, idents: np.ndarray, n: int) -> list[str]:

@@ -3,8 +3,9 @@
     python3 -m pytest perfbench/test_smoke.py -q
 
 Runs every workload untraced and traced on one local Spark session, and
-checks that a corrupted answer is counted as a failed operation and
-that the command refuses to run without the package beside it.
+checks that a corrupted answer and a failing batch are counted as
+failed operations, and that the command refuses to run without the
+package beside it.
 """
 
 from __future__ import annotations
@@ -91,6 +92,16 @@ def test_corrupted_answer_counts_as_failure(spark, tmp_path, monkeypatch):
     result, r = _run(spark, tmp_path, "serve", trace=False)
     assert result["failed"] > 0
     assert not result["correct"]
+
+
+def test_failing_batches_end_the_run(spark, tmp_path, monkeypatch):
+    def broken(*args, **kwargs):
+        raise RuntimeError("batch path broken")
+
+    monkeypatch.setattr(workloads.wand, "search_wand_batch", broken)
+    result, r = _run(spark, tmp_path, "serve", trace=False)
+    assert result["failed"] > 0
+    assert any("batch path broken" in e for e in r.errors)
 
 
 def test_command_fails_without_the_package(tmp_path):

@@ -43,6 +43,9 @@ from xsearch_spark.plans.query import parse
 from xsearch_spark.streaming import ingest
 
 K = 10
+# one top-k op in RELATIONAL_EVERY, drawn from the seed, is checked
+# against the relational scorer; the rest are checked for shape only
+RELATIONAL_EVERY = 5
 ATTRS = ("lang", "n_lines")
 # index geometry for a few-thousand-doc corpus on 4 cores: several
 # shards per index (so scoring is spread over tasks) and 4 buckets per
@@ -61,9 +64,8 @@ class Sizes:
     probes: int = 4  # probe queries after each compaction
     batch: int = 32
     input_reps: int = 3  # input generation is repeated; setup_s uses the median
-    min_builds: int = 3
-    min_batches: int = 3
-    relational_every: int = 5  # about one top-k op in five is checked relationally
+    min_builds: int = 2
+    min_batches: int = 2
 
 
 class Run:
@@ -327,9 +329,13 @@ def run_build(r: Run) -> None:
     rows_seen: set[int] = set()
     ratios: list[float] = []
     deadline = _deadline(r)
-    i = 0
+    i, last = 0, 0.0
     per_iter = 2 if r.traced else 1
-    while i * per_iter < r.sizes.min_builds or time.perf_counter() < deadline:
+    # whole builds only: another starts only if it would end in time.
+    # Starting one whenever time is left made the count flip between
+    # runs, and the median with it (the first timed build is the slowest)
+    while i * per_iter < r.sizes.min_builds or time.perf_counter() + last < deadline:
+        t_iter = time.perf_counter()
         out = r.path("builds", f"b{i}")
         if r.traced:
             # pairs of one whole-build call (one span, nothing inside
@@ -366,6 +372,7 @@ def run_build(r: Run) -> None:
                 ratios.append((dir_bytes(os.path.join(out, "index")) + dir_bytes(os.path.join(out, "source"))) / src_bytes)
         shutil.rmtree(out, ignore_errors=True)
         i += 1
+        last = time.perf_counter() - t_iter
 
     if r.traced:
         _trace_ingest(r, *stream)
@@ -449,12 +456,14 @@ def run_serve(r: Run) -> None:
     idents = corpus.identifier_pool(r.seed)
 
     def warm():
-        # every top-k shape once, so no timed top-k op is the first of
-        # its plan shape. Page ops and batches stay cold: warming each
-        # would add ~9 s of set-up to every run, so their first use is
-        # part of the timed round and of the first batch
-        for q in corpus.warmup_queries(r.seed, idents):
+        # every top-k shape and every page op once, so no timed single
+        # op is the first of its plan shape; only the first batch of the
+        # batch phase runs cold
+        topk_qs, page_q = corpus.warmup_queries(r.seed, idents)
+        for q in topk_qs:
             wand.search_wand(built, P(q), k=K).collect()
+        for kind in corpus.PAGE_OPS:
+            page_fns[kind](P(page_q)).collect()
 
     r.timed_setup("warmup", warm)
 
@@ -478,7 +487,7 @@ def run_serve(r: Run) -> None:
                 return None
             p, got = res
             singles[q] = got
-            if check_rng.random() < 1.0 / r.sizes.relational_every:
+            if check_rng.random() < 1.0 / RELATIONAL_EVERY:
                 want = _topk_rows(wand.search_index_relational(built, p, k=K))
                 ok = r.check(same_topk(got, want), f"topk {q!r}: wand {got} != relational {want}")
             else:
@@ -516,10 +525,11 @@ def run_serve(r: Run) -> None:
     pool = list(singles)
     t_batch = time.perf_counter()
     deadline = _deadline(r, 0.25)
-    walls, answered = [], 0
-    while pool and (len(walls) < r.sizes.min_batches or time.perf_counter() < deadline):
-        lo = len(walls) * r.sizes.batch
-        qs = [pool[(lo + j) % len(pool)] for j in range(r.sizes.batch)]
+    walls, answered, b = [], 0, 0
+    # counts attempts, not successes, so failing batches still end the phase
+    while pool and (b < r.sizes.min_batches or time.perf_counter() < deadline):
+        qs = [pool[(b * r.sizes.batch + j) % len(pool)] for j in range(r.sizes.batch)]
+        b += 1
         with r.tracer.span("batch") as s:
             res, wall = r.guarded(
                 "batch",
