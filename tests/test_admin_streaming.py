@@ -401,10 +401,23 @@ def test_incremental_compact_frozen_stats(spark, built):
     trues the stats up using the pending_deleted sidecar."""
     docs = read_documents(spark, SF_DIR)
     queries = ("hash join", "hash OR join", "the", "lang:zh spark")
+    # the pre-delete dictionary comes from the decoded postings, never
+    # from built.term_stats: that frame is first actioned only after the
+    # compaction, so no completed stage of it can stand in for a read of
+    # the rewritten files
+    pre = seg.decode_postings(built.index_df).select("term", "doc_id", "df").collect()
+    df0 = {r["term"]: r["df"] for r in pre}
+    holders: dict[str, set] = {}
+    for r in pre:
+        holders.setdefault(r["term"], set()).add(r["doc_id"])
     victims = [
         r["doc_id"]
         for r in search_wand(built, parse("the"), k=4, source_df=docs).collect()
     ][:3]
+    # plus every holder of the rarest term, so that term loses all postings
+    rarest = min(holders, key=lambda t: (len(holders[t]), t))
+    victims = sorted(set(victims) | holders[rarest])
+    purged = {t for t, ids in holders.items() if ids <= set(victims)}
     tomb_df = spark.createDataFrame([(int(v),) for v in victims], "doc_id long")
 
     # oracle: pre-delete index + query-time tombstones (exact scores)
@@ -418,19 +431,19 @@ def test_incremental_compact_frozen_stats(spark, built):
         for q in queries
     }
     n0, avgdl0, sum0 = built.n_docs, built.avgdl, built.sum_dl
-    df0 = {r["term"]: r["df"] for r in built.term_stats.collect()}
 
     admin.append_tombstones(spark, built.root, victims)
     outcome = admin.compact_incremental(spark, built, max_dl_drift=0.5)
     assert outcome == "incremental"
     assert admin.load_tombstones(spark, built.root) is None
-    # frozen stats
+    # frozen stats: every surviving term keeps its pre-delete df; a term
+    # whose postings were all purged drops out of the lazy dictionary
+    # (term_stats_lazy's documented boundary with the old sidecar)
     assert (built.n_docs, built.avgdl, built.sum_dl) == (n0, avgdl0, sum0)
-    assert {r["term"]: r["df"] for r in built.term_stats.collect()} == df0
+    want_df = {t: d for t, d in df0.items() if t not in purged}
+    assert {r["term"]: r["df"] for r in built.term_stats.collect()} == want_df
     # purged postings: victims absent from the index entirely
-    from xsearch_spark.operators import segments as seg2
-
-    left_ids = {r["doc_id"] for r in seg2.decode_postings(built.index_df).collect()}
+    left_ids = {r["doc_id"] for r in seg.decode_postings(built.index_df).collect()}
     assert not set(victims) & left_ids
     # result equivalence + engine/relational agreement post-compact
     from xsearch_spark.operators.wand import search_index_relational

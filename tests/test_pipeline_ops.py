@@ -271,6 +271,55 @@ def test_emb_lsh_bucket_cap(emb, spark):
     assert not big  # the duplicated cluster's quadratic bucket is gone
 
 
+def test_srp_bit_at_the_rounding_boundary(spark):
+    """A dot product within one ulp of ±5e-7 gets the same bucket bit
+    from every bucketing form — the NumPy projection the ANN build
+    writes, the exploded Spark reference, the DuckDB oracle and the
+    Python probe twin — and that bit is the correctly rounded one: set
+    iff the double's exact value rounds half-even to 6 decimals >= 0.
+    (Spark's and DuckDB's round(x, 6) send the double -5e-7 to -1e-6.)"""
+    import math
+    from decimal import ROUND_HALF_EVEN, Decimal
+
+    import duckdb
+
+    from xsearch_spark.oracles_pipeline import lsh_buckets_sql
+
+    P, dim = 8, 4
+    signs = similarity._plane_signs(P, dim)
+    edges = [
+        x
+        for b in (-5e-7, 5e-7)
+        for x in (math.nextafter(b, -1.0), b, math.nextafter(b, 1.0))
+    ]
+    rows, want = [], {}
+    for vec_id, edge in enumerate(edges):
+        # only dim 0 is non-zero, so every plane's dot is exactly ±edge
+        vec = [edge * signs[0][0]] + [0.0] * (dim - 1)
+        rows.append((vec_id, vec))
+        want[vec_id] = sum(
+            1 << p
+            for p in range(P)
+            if Decimal(vec[0] * signs[p][0]).quantize(Decimal("1e-6"), ROUND_HALF_EVEN) >= 0
+        )
+    assert len(set(want.values())) > 1  # the boundary really splits the bits
+
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    projection = {r["vec_id"]: r["bucket"] for r in similarity.lsh_buckets(emb, P).collect()}
+    exploded = {
+        r["vec_id"]: r["bucket"] for r in similarity.lsh_buckets_exploded(emb, P).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    oracle = dict(con.execute(lsh_buckets_sql(P)).fetchall())
+    probe = {vec_id: similarity.query_bucket_of(vec, P) for vec_id, vec in rows}
+    assert projection == want
+    assert exploded == want
+    assert oracle == want
+    assert probe == want
+
+
 def test_lsh_buckets_projection_equals_exploded(emb):
     """Round-4: lsh_buckets is now a pure per-row projection (zip_with
     against literal sign arrays — no explode, no shuffle); it must equal

@@ -176,6 +176,18 @@ def wildcard_scan_prefix(pattern: str) -> str:
 # divided by the shuffle partition count are "hot" and get salted.
 HOT_TERM_SALT_BUCKETS: int = 8
 
+# --- ANN sign-random-projection bits -------------------------------------
+# A vector's bit for one hyperplane is set iff its dot product, rounded
+# correctly to 6 decimals, is >= 0 — i.e. iff the dot is not below
+# -5e-7. No double is a 6-decimal midpoint, and the double nearest
+# -5e-7 lies just ABOVE it, so that rule is exactly the float comparison
+# ``dot >= SRP_BIT_FLOOR``. Every bucketing form (the NumPy projection,
+# the exploded Spark reference, the Python probe twin, the DuckDB
+# oracle) compares against this constant: Spark's and DuckDB's
+# round(x, 6) round the double's shortest decimal form half-up, which
+# sends the double -5e-7 itself to -1e-6 and would clear the bit.
+SRP_BIT_FLOOR: float = -5e-7
+
 # --- idf -------------------------------------------------------------------
 
 

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from xsearch_spark.constants import SRP_BIT_FLOOR
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -137,7 +139,7 @@ def _bucket_expr(emb_col: str, num_planes: int, dim: int) -> "F.Column":
     Bit-for-bit the same fold: the per-element products are exact, the
     cumsum accumulates left-to-right in the same IEEE order as the JVM
     ``aggregate`` and the Python twin (:func:`query_bucket_of`), and
-    the round-to-6 sign rule is the twin's."""
+    the sign rule is the shared ``constants.SRP_BIT_FLOOR`` comparison."""
     signs = np.asarray(_plane_signs(num_planes, dim), dtype=np.float64)
 
     @pandas_udf("long")
@@ -148,7 +150,7 @@ def _bucket_expr(emb_col: str, num_planes: int, dim: int) -> "F.Column":
         bucket = np.zeros(mat.shape[0], dtype=np.int64)
         for p in range(signs.shape[0]):
             acc = np.cumsum(mat * signs[p], axis=1)[:, -1]
-            bucket |= (np.round(acc, 6) >= 0).astype(np.int64) << p
+            bucket |= (acc >= SRP_BIT_FLOOR).astype(np.int64) << p
         return pd.Series(bucket)
 
     return srp_bucket(F.col(emb_col).cast("array<double>"))
@@ -194,7 +196,7 @@ def lsh_buckets_exploded(
     )
     return (
         dots.withColumn(
-            "bit", (F.round(F.col("dot"), 6) >= 0).cast("long")
+            "bit", (F.col("dot") >= F.lit(SRP_BIT_FLOOR)).cast("long")
         )
         .groupBy("vec_id")
         .agg(
@@ -264,8 +266,8 @@ def embedding_cosine_pairs(
 def query_bucket_of(query_vec: list[float], num_planes: int = 8) -> int:
     """Driver-side Python twin of :func:`lsh_buckets` for ONE vector —
     planning an ANN probe costs zero Spark jobs (same md5-derived plane
-    construction, same round-to-6 sign rule, so it agrees bit-for-bit
-    with the table's bucket column; parity-tested)."""
+    construction, same ``SRP_BIT_FLOOR`` sign rule, so it agrees
+    bit-for-bit with the table's bucket column; parity-tested)."""
     import numpy as np
 
     qv = np.asarray(query_vec, dtype=np.float64)
@@ -275,7 +277,7 @@ def query_bucket_of(query_vec: list[float], num_planes: int = 8) -> int:
         acc = 0.0
         for x, s in zip(qv, signs):
             acc += float(x) * s
-        if round(acc, 6) >= 0:
+        if acc >= SRP_BIT_FLOOR:
             bucket |= 1 << p
     return bucket
 

@@ -8,7 +8,7 @@ both sides; hash/count outputs are exact.
 
 from __future__ import annotations
 
-from xsearch_spark.constants import TOKEN_SPLIT_REGEX
+from xsearch_spark.constants import SRP_BIT_FLOOR, TOKEN_SPLIT_REGEX
 from xsearch_spark.functions.textops import (
     BPE_ISH_REGEX,
     FINGERPRINT_MAX_POSITIONS,
@@ -167,7 +167,7 @@ signed AS (
 ),
 dots AS (SELECT vec_id, plane, sum(sv) AS dot FROM signed GROUP BY vec_id, plane)
 SELECT vec_id,
-       sum(CASE WHEN round(dot, 6) >= 0 THEN (1::BIGINT << plane) ELSE 0 END)::BIGINT AS bucket
+       sum(CASE WHEN dot >= {SRP_BIT_FLOOR!r} THEN (1::BIGINT << plane) ELSE 0 END)::BIGINT AS bucket
 FROM dots GROUP BY vec_id
 """
 

@@ -252,7 +252,7 @@ def compact_incremental(
         MERGED_BUCKET_SCHEMA,
         _bm25_factor,
     )
-    from xsearch_spark.plans.build_index import _paths
+    from xsearch_spark.plans.build_index import _paths, term_stats_lazy
 
     tomb = load_tombstones(spark, built.root)
     if tomb is None or tomb.isEmpty():
@@ -399,5 +399,9 @@ def compact_incremental(
     os.replace(paths["stats"] + ".tmp", paths["stats"])
     shutil.rmtree(tombstone_path(built.root), ignore_errors=True)
     built.index_df = spark.read.parquet(paths["index"])
-    # N/avgdl/term_stats deliberately unchanged (frozen-stats semantics)
+    # N/avgdl/df deliberately unchanged (frozen-stats semantics); the
+    # lazy dictionary is re-bound because the old frame lists files the
+    # bucket swap just deleted — rows keep their frozen df, so its values
+    # only lose terms whose postings were all purged
+    built.term_stats = term_stats_lazy(built.index_df)
     return "incremental"

@@ -161,10 +161,14 @@ def term_stats_lazy(index_df: DataFrame) -> DataFrame:
     projection + one-value-per-term aggregate — IDENTICAL to the old
     sidecar, including across incremental compaction, where rows keep
     their FROZEN df (the ``_term_stats_of`` sum over per-run n_docs
-    would drift there; max(df) cannot). Pre-v4 rows (no df column) fall
-    back to the n_docs sum. Nothing executes until a consumer actions
-    the frame — the pre-v4 ``df_of`` fallback and tests; warm queries
-    never do."""
+    would drift there; max(df) cannot). One boundary differs from the
+    old sidecar: a term whose postings are ALL purged by incremental
+    compaction has no rows left, so it drops out of this dictionary
+    while its frozen df would have stayed in the sidecar until the next
+    full compact (pinned in ``test_incremental_compact_frozen_stats``).
+    Pre-v4 rows (no df column) fall back to the n_docs sum. Nothing
+    executes until a consumer actions the frame — the pre-v4 ``df_of``
+    fallback and tests; warm queries never do."""
     from xsearch_spark.constants import ATTR_TERM_PREFIX
 
     if "df" in index_df.columns:
