@@ -90,7 +90,7 @@ def main() -> None:
     w_plan = plan_of(search_wand(built, parse("hash OR join"), source_df=docs))
     assert "poss" not in w_plan, (
         "non-phrase WAND query reads the v6 positional stream — "
-        "_prune_poss is not engaged (every plain query pays ~2x scan IO "
+        "_project_scorer_cols is not engaged (every plain query pays ~2x scan IO "
         "on a positional index)"
     )
     sections.append((
@@ -625,27 +625,22 @@ def main() -> None:
         "never a corpus scan per query.",
     ))
 
-    # 7. v4 stats discipline: planning a warm query (single or batch,
-    # incl. the lang/tombstone cogroup) must NEVER collect the term
-    # dictionary to the driver — df rides on the index rows.
-    from pyspark.sql import functions as F
+    # 7. stats discipline: a warm query can never collect the term
+    # dictionary to the driver — BuiltIndex has no dictionary to collect,
+    # and an index whose rows lack the denormalized df cannot be wrapped.
+    import dataclasses
 
-    from xsearch_spark.operators.wand import search_wand_batch
-
-    assert "df" in built.index_df.columns, "index layout v4: df column missing"
-    built.invalidate_stats_cache()
-    tomb = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
-    search_wand(built, parse("hash join"), source_df=docs).collect()
-    search_wand(
-        built, parse("lang:zh hash OR join"), source_df=docs, tombstones=tomb
-    ).collect()
-    search_wand_batch(
-        built, {"a": parse("hash join"), "b": parse("the OR scan")}, source_df=docs
-    ).collect()
-    assert built._df_cache is None, (
-        "warm query populated BuiltIndex.df_of — full-vocabulary driver "
-        "collect is back on the hot path"
-    )
+    for attr in ("df_of", "term_stats"):
+        assert not hasattr(built, attr), (
+            f"BuiltIndex.{attr} is back — a driver-side term dictionary "
+            f"next to the df the index rows carry"
+        )
+    try:
+        dataclasses.replace(built, index_df=built.index_df.drop("df"))
+    except ValueError:
+        pass
+    else:
+        raise AssertionError("BuiltIndex accepted index rows without df")
 
     failures = []
     lines = ["# Physical plan audit (generated by scripts/audit_plans.py)\n"]

@@ -81,9 +81,13 @@ def test_tombstone_then_compact(spark, built):
             for r in engine.run_query(fresh, p, k=10).collect()
         ]
         assert got == want, q
-    fresh_df = {r["term"]: r["df"] for r in fresh.term_stats.filter(F.col("term").isin(["hash", "join"])).collect()}
-    built_df = {r["term"]: r["df"] for r in built.term_stats.filter(F.col("term").isin(["hash", "join"])).collect()}
-    assert fresh_df == built_df
+    # the compacted rows' df, decoded from the swapped-in index, equals
+    # the no-index df over the surviving docs
+    terms = ["hash", "join"]
+    fresh_df = {(r["term"], r["df"]) for r in fresh.term_stats.filter(F.col("term").isin(terms)).collect()}
+    built_rows = seg.decode_postings(built.index_df.filter(F.col("term").isin(terms)))
+    built_df = {(r["term"], r["df"]) for r in built_rows.select("term", "df").distinct().collect()}
+    assert len(fresh_df) == 2 and fresh_df == built_df
     # Q11 facets survive the compact: the rebuilt attr postings
     # (include_attrs=True on the decode->rebuild path) must serve the
     # same per-lang counts as a groupby over the surviving corpus
@@ -401,10 +405,7 @@ def test_incremental_compact_frozen_stats(spark, built):
     trues the stats up using the pending_deleted sidecar."""
     docs = read_documents(spark, SF_DIR)
     queries = ("hash join", "hash OR join", "the", "lang:zh spark")
-    # the pre-delete dictionary comes from the decoded postings, never
-    # from built.term_stats: that frame is first actioned only after the
-    # compaction, so no completed stage of it can stand in for a read of
-    # the rewritten files
+    # df before and after comes only from decoded index rows
     pre = seg.decode_postings(built.index_df).select("term", "doc_id", "df").collect()
     df0 = {r["term"]: r["df"] for r in pre}
     holders: dict[str, set] = {}
@@ -436,15 +437,16 @@ def test_incremental_compact_frozen_stats(spark, built):
     outcome = admin.compact_incremental(spark, built, max_dl_drift=0.5)
     assert outcome == "incremental"
     assert admin.load_tombstones(spark, built.root) is None
-    # frozen stats: every surviving term keeps its pre-delete df; a term
-    # whose postings were all purged drops out of the lazy dictionary
-    # (term_stats_lazy's documented boundary with the old sidecar)
+    # frozen stats: every surviving row keeps its term's pre-delete df,
+    # read from freshly decoded rows of the rewritten index; a term whose
+    # postings were all purged has no rows left
     assert (built.n_docs, built.avgdl, built.sum_dl) == (n0, avgdl0, sum0)
-    want_df = {t: d for t, d in df0.items() if t not in purged}
-    assert {r["term"]: r["df"] for r in built.term_stats.collect()} == want_df
+    post = seg.decode_postings(built.index_df).select("term", "doc_id", "df").collect()
+    want_df = {(t, d) for t, d in df0.items() if t not in purged}
+    assert {(r["term"], r["df"]) for r in post} == want_df
+    assert rarest in purged and not purged & {r["term"] for r in post}
     # purged postings: victims absent from the index entirely
-    left_ids = {r["doc_id"] for r in seg.decode_postings(built.index_df).collect()}
-    assert not set(victims) & left_ids
+    assert not set(victims) & {r["doc_id"] for r in post}
     # result equivalence + engine/relational agreement post-compact
     from xsearch_spark.operators.wand import search_index_relational
 

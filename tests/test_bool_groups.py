@@ -158,10 +158,9 @@ def test_group_batch_equals_singles(spark, built, corpus):
 
 
 def test_group_requires_df_rows_raises(built):
+    """Index rows without the denormalized df are not layout v6: the
+    wrapper raises at construction, before any group query can run."""
     import dataclasses
 
-    legacy = dataclasses.replace(built, index_df=built.index_df.drop("df"))
-    with pytest.raises(ValueError, match="v4\\+ index"):
-        search_wand(legacy, parse("(hash OR join)"))
-    with pytest.raises(ValueError, match="v4\\+ index"):
-        search_wand_batch(legacy, {"a": parse("(hash OR join)")})
+    with pytest.raises(ValueError, match="lack df: not index layout v6"):
+        dataclasses.replace(built, index_df=built.index_df.drop("df"))

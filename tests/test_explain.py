@@ -86,8 +86,9 @@ def test_explain_absent_doc_or_terms_empty(spark, built):
 
 
 def test_explain_requires_df_rows_raises(built):
+    """Index rows without the denormalized df are not layout v6: the
+    wrapper raises at construction, before explain_score can run."""
     import dataclasses
 
-    legacy = dataclasses.replace(built, index_df=built.index_df.drop("df"))
-    with pytest.raises(ValueError, match="v4\\+ index"):
-        explain_score(legacy, parse("hash"), 0)
+    with pytest.raises(ValueError, match="lack df: not index layout v6"):
+        dataclasses.replace(built, index_df=built.index_df.drop("df"))

@@ -176,12 +176,9 @@ def test_fuzzy_batch_equals_singles(spark, built, corpus):
 
 
 def test_fuzzy_requires_df_rows_raises(built):
-    """Pre-v4 indexes fall back to a driver df dictionary that cannot
-    carry expansion stats — fuzzy raises exactly like prefix groups."""
+    """Index rows without the denormalized df are not layout v6: the
+    wrapper raises at construction, before any fuzzy query can run."""
     import dataclasses
 
-    legacy = dataclasses.replace(built, index_df=built.index_df.drop("df"))
-    with pytest.raises(ValueError, match="v4\\+ index"):
-        search_wand(legacy, parse("sow~1"))
-    with pytest.raises(ValueError, match="v4\\+ index"):
-        search_wand_batch(legacy, {"a": parse("sow~1")})
+    with pytest.raises(ValueError, match="lack df: not index layout v6"):
+        dataclasses.replace(built, index_df=built.index_df.drop("df"))

@@ -71,8 +71,19 @@ def test_index_roundtrip_postings(spark, built, corpus):
 
 
 def test_term_stats_match(built, corpus):
+    """The index's df column is the term dictionary: one df per real
+    term, equal to the no-index path's term_stats."""
+    from xsearch_spark.constants import ATTR_TERM_PREFIX
+
     direct = {r["term"]: r["df"] for r in corpus.term_stats.collect()}
-    via = {r["term"]: r["df"] for r in built.term_stats.collect()}
+    rows = (
+        built.index_df.filter(~F.col("term").startswith(ATTR_TERM_PREFIX))
+        .select("term", "df")
+        .distinct()
+        .collect()
+    )
+    via = {r["term"]: r["df"] for r in rows}
+    assert len(via) == len(rows)  # every row of a term carries one df
     assert direct == via
 
 
@@ -104,6 +115,36 @@ def test_postings_sorted_unique_invariant(built):
         ids = codec.decode_doc_ids(r["doc_ids"])
         assert ids.size == r["n_docs"]
         assert np.all(ids[1:] > ids[:-1])
+
+
+@pytest.mark.parametrize("version", [5, None])
+def test_load_index_rejects_other_layouts(spark, built, tmp_path, version):
+    """stats.json must name this code's layout version: an older or
+    unversioned sidecar raises before any query path runs."""
+    import json
+    import os
+
+    with open(os.path.join(built.root, "stats.json")) as f:
+        stats = json.load(f)
+    stats.pop("format_version")
+    if version is not None:
+        stats["format_version"] = version
+    with open(tmp_path / "stats.json", "w") as f:
+        json.dump(stats, f)
+    shutil.copytree(os.path.join(built.root, "index"), tmp_path / "index")
+    found = "no format_version" if version is None else f"format_version {version}"
+    with pytest.raises(ValueError, match=f"{found}.*layout v6"):
+        load_index(spark, str(tmp_path))
+
+
+@pytest.mark.parametrize("col", ["df", "poss"])
+def test_builtindex_requires_layout_v6(built, col):
+    """Index rows without the denormalized df or the positional stream
+    are not layout v6: wrapping them raises before any query can run."""
+    import dataclasses
+
+    with pytest.raises(ValueError, match=f"lack {col}: not index layout v6"):
+        dataclasses.replace(built, index_df=built.index_df.drop(col))
 
 
 def test_load_index_equivalent(spark, built):
@@ -224,13 +265,13 @@ def test_batch_search_equals_singles(spark, built, corpus):
         assert got.get(qid, []) == single, qid
 
 
-def test_index_rows_carry_global_df(built):
+def test_index_rows_carry_global_df(built, corpus):
     """v4 layout invariant: every index row's denormalized df equals the
     term's collection-wide document frequency — this is what lets warm
     queries compute idf from the pruned scan with zero driver stats."""
     from xsearch_spark.constants import ATTR_TERM_PREFIX
 
-    want = {r["term"]: r["df"] for r in built.term_stats.collect()}
+    want = {r["term"]: r["df"] for r in corpus.term_stats.collect()}
     rows = built.index_df.select("term", "df").collect()
     assert rows
     saw_attr = False
@@ -243,21 +284,6 @@ def test_index_rows_carry_global_df(built):
         else:
             assert r["df"] == want[r["term"]], r["term"]
     assert saw_attr  # the fixture source has a lang column -> v5 runs exist
-
-
-def test_warm_query_needs_no_driver_stats(built, corpus):
-    """The v4 warm path must never populate the df_of fallback dict
-    (the full-vocabulary driver collect is a 10^12-scale OOM)."""
-    built.invalidate_stats_cache()
-    for q in ("hash join", "the OR scan", "lang:zh spark", "hash -join"):
-        search_wand(built, parse(q), source_df=corpus.source).collect()
-    from xsearch_spark.operators.wand import search_wand_batch
-
-    search_wand_batch(
-        built, {"a": parse("hash join"), "b": parse("the OR scan")},
-        source_df=corpus.source,
-    ).collect()
-    assert built._df_cache is None
 
 
 def test_single_term_fast_path_gated_on_unique_keys(built, corpus):

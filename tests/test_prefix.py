@@ -158,26 +158,15 @@ def test_spell_matches_oracle(built, duck, body):
 
 
 def test_spell_guards_raise(built):
-    import dataclasses
-
     for bad in ("", "a b", "A-", "\x01lang", "x" * 65):
         with pytest.raises(ValueError, match="one term shape"):
             spell_suggest(built, bad)
-    legacy = dataclasses.replace(built, index_df=built.index_df.drop("df"))
-    with pytest.raises(ValueError, match="v4\\+ index"):
-        spell_suggest(legacy, "sow")
 
 
 def test_prefix_requires_df_rows_raises(built):
-    """A pre-v4 index (no denormalized df) cannot enumerate expansions
-    executor-side; the engine path must raise, never collect the
-    vocabulary."""
+    """Index rows without the denormalized df are not layout v6: the
+    wrapper raises at construction, before any prefix query or suggest_terms can run."""
     import dataclasses
 
-    legacy = dataclasses.replace(built, index_df=built.index_df.drop("df"))
-    with pytest.raises(ValueError, match="v4\\+ index"):
-        search_wand(legacy, parse("d* join"))
-    with pytest.raises(ValueError, match="v4\\+ index"):
-        search_wand_batch(legacy, {"a": parse("d* join")})
-    with pytest.raises(ValueError, match="v4\\+ index"):
-        suggest_terms(legacy, "d")
+    with pytest.raises(ValueError, match="lack df: not index layout v6"):
+        dataclasses.replace(built, index_df=built.index_df.drop("df"))

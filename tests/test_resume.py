@@ -15,8 +15,8 @@ from xsearch_spark.operators import segments as seg
 from xsearch_spark.plans.build_index import build_index
 from xsearch_spark.sources.io import read_documents
 
-# round 7: term_stats is no longer a materialized stage — the (term, df)
-# dictionary derives lazily from the denormalized df index rows
+# term df is not a stage of its own: merge_to_index stamps it on every
+# index row
 STAGES = ["segments", "index"]
 
 

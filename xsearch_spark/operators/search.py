@@ -75,7 +75,7 @@ def positive_term_pred(parsed: ParsedQuery):
 
 def score_postings(
     postings_df: DataFrame,
-    term_stats_df: DataFrame,
+    term_stats_df: DataFrame | None,
     doc_stats_df: DataFrame | None,
     stats: CollectionStats,
     parsed: ParsedQuery,
@@ -84,9 +84,10 @@ def score_postings(
 
     ``postings_df``: (term, doc_id, tf[, dl[, df]]). If ``dl`` is already
     a column (denormalized index), pass ``doc_stats_df=None`` and the big
-    doc-stats join is skipped entirely. If ``df`` is also a column (v4
-    index rows carry the global per-term df), the term-stats join is
-    skipped too — the whole score is computed from the pruned scan.
+    doc-stats join is skipped entirely. If ``df`` is also a column (index
+    rows carry the global per-term df), pass ``term_stats_df=None`` and
+    the term-stats join is skipped too — the whole score is computed
+    from the pruned scan.
 
     Prefix groups (round-6, FIXTURES.md §3.10): ``parsed.prefixes``
     widen the term predicate with ``startswith`` disjuncts; expansions
@@ -110,6 +111,8 @@ def score_postings(
     term_pred = positive_term_pred(parsed)
     q = postings_df.filter(term_pred(F.col("term")))
     if "df" not in q.columns:
+        if term_stats_df is None:
+            raise ValueError("postings lack df and no term_stats provided")
         ts = term_stats_df.filter(term_pred(F.col("term")))
         q = q.join(F.broadcast(ts), "term")
     if "dl" not in q.columns:

@@ -446,8 +446,6 @@ def make_merge_iter(include_bucket: bool = False):
     def merge_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
         for pdf in batches:
-            if "poss" not in pdf.columns:  # pre-v6 packed runs
-                pdf = pdf.assign(poss=b"")
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
                 carry = None
@@ -1102,9 +1100,9 @@ def decode_postings(
 ) -> DataFrame:
     """Q3: mirror of the packing codec — packed runs back to long form.
     Vectorized: one NumPy concat per Arrow batch, never per-posting
-    Python. A v4 index's denormalized ``df`` column is carried through
+    Python. The index rows' denormalized ``df`` is carried through
     (repeated per posting) so the relational scorer needs no term-stats
-    join either.
+    join.
 
     Synthetic attribute runs (v5, tf=0 filter carriers) are excluded by
     default — they are not document postings; ``include_attrs=True``
@@ -1114,22 +1112,17 @@ def decode_postings(
     so compaction's rebuild re-packs the positional stream too."""
     if not include_attrs:
         packed = packed.filter(~F.col("term").startswith(ATTR_TERM_PREFIX))
-    with_df = "df" in packed.columns
     # project to exactly the columns the decoder reads BEFORE the Arrow
     # boundary (round 7, guide §4.1): mapInPandas is opaque to the
     # optimizer, so without this the scan reads and ships every index
     # column — block_last/block_max arrays, doc-range metadata — that
     # the decode never touches (also prunes the positional stream for
     # non-positional decodes, the round-6 poss rule)
-    need = ["term", "doc_ids", "tfs", "dls"]
-    if with_df:
-        need.append("df")
+    need = ["term", "doc_ids", "tfs", "dls", "df"]
     if include_positions:
         need.append("poss")
-    packed = packed.select(*[c for c in need if c in packed.columns])
-    fields = list(LONG_SCHEMA.fields)
-    if with_df:
-        fields.append(StructField("df", LongType(), False))
+    packed = packed.select(*need)
+    fields = list(LONG_SCHEMA.fields) + [StructField("df", LongType(), False)]
     if include_positions:
         fields.append(StructField("poss", ArrayType(LongType()), False))
     schema = StructType(fields)
@@ -1148,9 +1141,8 @@ def decode_postings(
                 "doc_id": np.concatenate(ids).astype(np.int64),
                 "tf": np.concatenate(tfs).astype(np.int64),
                 "dl": np.concatenate(dls).astype(np.int64),
+                "df": np.repeat(pdf["df"].to_numpy(np.int64), lens),
             }
-            if with_df:
-                cols["df"] = np.repeat(pdf["df"].to_numpy(np.int64), lens)
             out = pd.DataFrame(cols)
             if include_positions:
                 per_post: list[np.ndarray] = []

@@ -61,7 +61,6 @@ from xsearch_spark.constants import (
 )
 from xsearch_spark.functions import codec
 from xsearch_spark.functions.buckets import buckets_of
-from xsearch_spark.operators.segments import _bm25_factor
 from xsearch_spark.plans.query import ParsedQuery
 
 TOPK_SCHEMA = StructType(
@@ -661,18 +660,6 @@ def pruned_index_scan_prefix(
     return base.unionByName(pre) if terms else pre
 
 
-def _prune_poss(rows: DataFrame, need_positions: bool) -> DataFrame:
-    """Drop the v6 positional stream from a query scan that will never
-    decode it. Positions roughly double posting bytes, and mapInPandas /
-    cogroup ship every input column through Arrow — without this, every
-    plain BM25 query on a positional index paid ~2x scan+serialize IO
-    for bytes it never read (round-5 verdict weak mark #1; the plan
-    audit asserts the non-phrase ReadSchema excludes ``poss``)."""
-    if not need_positions and "poss" in rows.columns:
-        return rows.drop("poss")
-    return rows
-
-
 # every column the Arrow scorer (_assemble_shard / _split_range_rows)
 # actually decodes; shard is the grouping/cogroup key
 _SCORER_COLS = (
@@ -687,12 +674,11 @@ def _project_scorer_cols(rows: DataFrame, need_positions: bool) -> DataFrame:
     are opaque to the optimizer, so without an explicit select every
     warm query also reads (parquet ReadSchema) and ships (Arrow) the
     doc-range metadata — n_docs, first_doc_id, last_doc_id, bucket —
-    that the scorer never touches. Subsumes the round-6 ``poss`` rule:
-    the positional stream is kept only for position-decoding queries."""
-    keep = [c for c in _SCORER_COLS if c in rows.columns]
-    if not need_positions and "poss" in keep:
-        keep.remove("poss")
-    return rows.select(*keep)
+    that the scorer never touches. The positional stream (``poss``) is
+    kept only for position-decoding queries: positions roughly double
+    posting bytes, and the plan audit asserts a non-phrase ReadSchema
+    excludes it (round-5 verdict weak mark #1)."""
+    return rows.select(*[c for c in _SCORER_COLS if need_positions or c != "poss"])
 
 
 def _assemble_shard(
@@ -707,36 +693,32 @@ def _assemble_shard(
     """Decode one shard's index rows into per-term posting arrays.
 
     Returns (lists, blocks, exclude_lists, dfs, attr_lists, pos_lists).
-    ``pos_lists`` (v6, only for ``position_terms`` — phrase members) maps
+    ``pos_lists`` (only for ``position_terms`` — phrase members) maps
     term -> (doc_ids, flat_positions, offsets) where posting i's
-    positions are ``flat[offsets[i]:offsets[i+1]]``. ``dfs`` is
-    the global per-term df read from the v4 index rows (every row of a
-    term carries the same collection-wide value, stamped at merge time)
-    — this is what lets a warm query compute idf executor-side with zero
-    driver stats state; empty for pre-v4 rows. ``attr_lists`` maps each
-    requested synthetic attribute term (v5 — ``attr_term("lang", x)``)
-    to its sorted doc-id allowlist for this shard; such runs are filter
-    carriers (tf=0), never scored.
+    positions are ``flat[offsets[i]:offsets[i+1]]``. ``dfs`` is the
+    global per-term df read from the index rows (every row of a term
+    carries the same collection-wide value, stamped at merge time) —
+    this is what lets a warm query compute idf executor-side with zero
+    driver stats state. ``attr_lists`` maps each requested synthetic
+    attribute term (``attr_term("lang", x)``) to its sorted doc-id
+    allowlist for this shard; such runs are filter carriers (tf=0),
+    never scored. Block maxima are read from the rows, never recomputed,
+    so ``avgdl`` is not consulted.
 
-    A (term, shard) key is unique in a freshly merged index, but unions
-    of independently built PRE-v4 indexes (streamed epochs queried
-    pre-compact, test fixtures) can legally repeat it. Repeated runs are
-    disjoint doc-id ranges — k-way merged here, with block metadata
-    recomputed; a true duplicate doc_id raises instead of silently
-    dropping a run (round-1 advisor: the old dict assignment overwrote
-    prior runs). A raw union of v4+ indexes however carries PER-SUB-INDEX
-    global df values on repeated keys — no locally computable combination
-    yields the true collection df (it depends on which sub-indexes have
-    runs in which shards), so scoring such a union silently corrupts the
-    top-k merge (round-3 advisor). That case now raises: route unions
+    A (term, shard) key is unique in every merged index. A raw union of
+    merged indexes can repeat it, but each copy carries its own
+    sub-index's global df — no locally computable combination yields the
+    true collection df (it depends on which sub-indexes have runs in
+    which shards), so scoring such a union would silently corrupt the
+    top-k merge (round-3 advisor). A repeated key raises: route unions
     through merge_to_index / streaming.compact_segments.
     """
-    acc: dict[str, list[tuple]] = {}
+    lists: dict[str, tuple] = {}
+    blocks: dict[str, tuple] = {}
+    pos_lists: dict[str, tuple] = {}
     ex_lists: list[np.ndarray] = []
     dfs: dict[str, int] = {}
     attr_acc: dict[str, list[np.ndarray]] = {}
-    has_df = "df" in g.columns
-    has_poss = "poss" in g.columns
     for r in g.itertuples(index=False):
         ids = codec.decode_doc_ids(r.doc_ids).astype(np.int64)
         if (
@@ -749,75 +731,30 @@ def _assemble_shard(
         if r.term in attr_terms:
             attr_acc.setdefault(r.term, []).append(ids)
             continue
-        if has_df:
-            dfs[r.term] = dfs.get(r.term, 0) + int(r.df)
-        poss_b = (
-            bytes(r.poss) if has_poss and r.term in position_terms and r.poss else b""
-        )
-        acc.setdefault(r.term, []).append(
-            (
-                ids,
-                codec.decode_tfs(r.tfs).astype(np.int64),
-                codec.decode_tfs(r.dls).astype(np.int64),
-                np.asarray(r.block_last, dtype=np.int64),
-                np.asarray(r.block_max, dtype=np.float64),
-                poss_b,
+        if r.term in lists:
+            raise ValueError(
+                f"repeated (term, shard) index rows for term={r.term!r} "
+                f"shard={int(r.shard)}: raw unions of merged indexes carry "
+                f"per-sub-index df values and cannot be scored consistently "
+                f"— merge them first (segments.merge_to_index / "
+                f"streaming.compact_segments)"
             )
+        tfs = codec.decode_tfs(r.tfs).astype(np.int64)
+        lists[r.term] = (ids, tfs, codec.decode_tfs(r.dls).astype(np.int64))
+        blocks[r.term] = (
+            np.asarray(r.block_last, dtype=np.int64),
+            np.asarray(r.block_max, dtype=np.float64),
         )
-    lists: dict[str, tuple] = {}
-    blocks: dict[str, tuple] = {}
-    pos_lists: dict[str, tuple] = {}
-    for t, runs in acc.items():
-        flat = None
-        if len(runs) == 1:
-            ids, tfs, dls, bl, bm, poss_b = runs[0]
-            if t in position_terms:
-                flat = codec.decode_tfs(poss_b).astype(np.int64)
-        else:
-            if has_df:
+        dfs[r.term] = int(r.df)
+        if r.term in position_terms:
+            flat = codec.decode_tfs(bytes(r.poss)).astype(np.int64)
+            if flat.size != int(tfs.sum()):
                 raise ValueError(
-                    f"repeated (term, shard) index rows with denormalized df "
-                    f"for term={t!r} shard={int(g['shard'].iloc[0])}: raw "
-                    f"unions of v4+ merged indexes carry per-sub-index df "
-                    f"values and cannot be scored consistently — merge them "
-                    f"first (segments.merge_to_index / "
-                    f"streaming.compact_segments)"
-                )
-            runs.sort(key=lambda r: int(r[0][0]) if r[0].size else -1)
-            ids = np.concatenate([r[0] for r in runs])
-            tfs = np.concatenate([r[1] for r in runs])
-            dls = np.concatenate([r[2] for r in runs])
-            if t in position_terms:
-                flat = np.concatenate(
-                    [codec.decode_tfs(r[5]) for r in runs]
-                ).astype(np.int64)
-            if not np.all(ids[1:] > ids[:-1]):
-                order = np.argsort(ids, kind="mergesort")
-                if flat is not None and flat.size:
-                    from xsearch_spark.operators.segments import (
-                        _gather_substreams,
-                    )
-
-                    flat = _gather_substreams(flat, tfs, order)
-                ids, tfs, dls = ids[order], tfs[order], dls[order]
-                if not np.all(ids[1:] > ids[:-1]):
-                    raise ValueError(
-                        f"duplicate doc_id across index runs for term={t!r} "
-                        f"shard={int(g['shard'].iloc[0])} — apply S4 dedup/compaction"
-                    )
-            starts = np.arange(0, ids.size, BLOCK_SIZE)
-            bl = ids[np.minimum(starts + BLOCK_SIZE - 1, ids.size - 1)]
-            bm = np.maximum.reduceat(_bm25_factor(tfs, dls, avgdl), starts)
-        lists[t] = (ids, tfs, dls)
-        blocks[t] = (bl, bm)
-        if t in position_terms:
-            if flat is None or flat.size != int(tfs.sum()):
-                raise ValueError(
-                    f"phrase query needs positions for term={t!r} but the "
-                    f"index rows carry none — build with positions=True "
+                    f"phrase query needs positions for term={r.term!r} but "
+                    f"the index rows carry none — build with positions=True "
                     f"(index layout v6)"
                 )
-            pos_lists[t] = (
+            pos_lists[r.term] = (
                 ids,
                 flat,
                 np.concatenate([[0], np.cumsum(tfs)]).astype(np.int64),
@@ -846,11 +783,11 @@ def _attr_range_specs(built, parsed: ParsedQuery) -> list[tuple[str, str]]:
 
     out: list[tuple[str, str]] = []
     for fld, lo, hi in getattr(parsed, "ranges", ()):
-        if not getattr(built, "has_num_attr", lambda f: False)(fld):
+        if not built.has_num_attr(fld):
             raise ValueError(
                 f"{fld}: range filter requires the field in the index's "
                 f"num_attr_fields (integer attr_cols, FIXTURES.md §3.13); "
-                f"this index carries {getattr(built, 'num_attr_fields', ())!r}"
+                f"this index carries {built.num_attr_fields!r}"
             )
         lo_enc = num_attr_encode(lo) if lo is not None else "0" * NUM_ATTR_WIDTH
         hi_enc = num_attr_encode(hi) if hi is not None else "9" * NUM_ATTR_WIDTH
@@ -920,7 +857,7 @@ def _phrase_terms(built, parsed: ParsedQuery) -> frozenset[str]:
     it, and falling back to a source scan would be the 10^12-doc
     anti-pattern."""
     terms = {t for ph in getattr(parsed, "phrases", ()) for t in ph}
-    if terms and not getattr(built, "has_positions", False):
+    if terms and not built.has_positions:
         raise ValueError(
             "phrase query requires an index built with positions=True "
             "(index layout v6 positional stream)"
@@ -961,23 +898,21 @@ def _phrase_pos_need(built, parsed: ParsedQuery) -> "_PosNeed":
 
 def _attr_filter_terms(built, parsed: ParsedQuery) -> list[str]:
     """Synthetic index terms for the query's generic ``field:value``
-    filters (``parsed.attrs``). Unlike ``lang:`` (which keeps a pre-v5
-    source-cogroup fallback), these REQUIRE a v5 index carrying the
-    field — raising beats a silent per-query corpus scan at 10^12
-    docs."""
+    filters (``parsed.attrs``). Unlike ``lang:`` (which keeps a
+    source-cogroup fallback for indexes built without the lang attr),
+    these REQUIRE an index carrying the field — raising beats a silent
+    per-query corpus scan at 10^12 docs."""
     from xsearch_spark.constants import num_attr_encode
 
     out: list[str] = []
-    has_attr = getattr(built, "has_attr", lambda f: False)
-    has_num = getattr(built, "has_num_attr", lambda f: False)
     for fld, val in getattr(parsed, "attrs", ()):
-        if not has_attr(fld):
+        if not built.has_attr(fld):
             raise ValueError(
                 f"{fld}: filter requires an index built with attr_cols "
                 f"including {fld!r} (index layout v5); this index carries "
-                f"{getattr(built, 'attr_fields', ())!r}"
+                f"{built.attr_fields!r}"
             )
-        if has_num(fld):
+        if built.has_num_attr(fld):
             # numeric fields store encoded values (round-6 §3.13) —
             # equality must encode; a non-integer literal can never match
             try:
@@ -1039,11 +974,10 @@ def search_wand(
 
     A warm query is ONE Spark job with ZERO driver-side stats state:
     bucket ids come from driver-side Python (functions.buckets), per-term
-    df rides ON the v4 index rows themselves (denormalized at merge time
+    df rides ON the index rows themselves (denormalized at merge time
     — segments.merge_to_index), so idf is computed executor-side from the
     pruned scan. The only driver scalars are (n_docs, avgdl) from the
-    stats sidecar. Pre-v4 indexes (no ``df`` column) fall back to the
-    BuiltIndex.df_of dictionary collect.
+    stats sidecar.
 
     ``lang:`` filtering (v5 index): the attribute is indexed as a
     synthetic posting list (``attr_term("lang", x)``, build-time), so the
@@ -1051,9 +985,10 @@ def search_wand(
     query terms and is applied in the scorer with zero extra reads — a
     lang: query costs O(matching docs in the probed shards), never a
     per-query scan+shuffle of the source table (the round-3 weak mark).
-    Pre-v5 indexes fall back to the round-2 distributed cogroup: the
-    lang-filtered source doc_ids co-shuffle with the index rows on the
-    shard key and meet the scorer in a cogrouped Arrow UDF.
+    Indexes built without the lang attr (``attr_cols=None``) fall back
+    to the round-2 distributed cogroup: the lang-filtered source doc_ids
+    co-shuffle with the index rows on the shard key and meet the scorer
+    in a cogrouped Arrow UDF.
 
     Generic ``field:value`` filters (round-5, ``parsed.attrs``): every
     field indexed via ``attr_cols`` rides the same machinery — one
@@ -1083,9 +1018,7 @@ def search_wand(
         wildcard_scan_prefix(w) for w in wildcards + exclude_wildcards
     ]
     fz_pos, fz_neg = _fuzzy_unions(parsed)
-    use_attr_lang = parsed.lang is not None and getattr(
-        built, "has_attr", lambda f: False
-    )("lang")
+    use_attr_lang = parsed.lang is not None and built.has_attr("lang")
     lang_term = attr_term("lang", parsed.lang) if use_attr_lang else None
     extra_attr_terms = _attr_filter_terms(built, parsed)
     required_attr_terms = ([lang_term] if lang_term else []) + extra_attr_terms
@@ -1106,22 +1039,6 @@ def search_wand(
         term_ranges=range_specs,
     )
     rows = _project_scorer_cols(rows, bool(phrase_terms))
-    row_df = "df" in rows.columns
-    if row_df:
-        static_idfs = None
-    else:  # pre-v4 fallback: driver dictionary
-        if prefixes or exclude_prefixes or fz_pos or fz_neg or wc_pos_rx or wc_neg_rx:
-            # the expansion set is only enumerable executor-side from
-            # the denormalized df rows; a driver-dictionary expansion
-            # would collect the vocabulary (the anti-pattern audit_plans
-            # forbids)
-            raise ValueError(
-                "prefix/fuzzy/group queries require a v4+ index (denormalized df)"
-            )
-        stats = built.df_of(all_terms)
-        static_idfs = {
-            t: idf_py(built.n_docs, stats[t]) for t in parsed.terms if t in stats
-        }
     n_docs, avgdl = built.n_docs, built.avgdl
     # exclusion wins over positive membership for fuzzy exactly as for
     # exact/prefix exclusion: fold the neighborhood into the exclude set
@@ -1152,7 +1069,7 @@ def search_wand(
             wc_neg_rx,
         )
         # AND-intersect every index-side attr allowlist into `allowed`
-        # (which may already hold the pre-v5 cogroup lang allowlist)
+        # (which may already hold the cogroup lang allowlist)
         for t_attr in required_attr_terms:
             lst = attr_lists.get(t_attr, _EMPTY_I64)
             allowed = (
@@ -1168,12 +1085,7 @@ def search_wand(
             )
         if tombs is not None and tombs.size:
             ex_lists = ex_lists + [tombs]
-        idfs = _scaled_idfs(
-            {t: idf_py(n_docs, dfs[t]) for t in lists}
-            if static_idfs is None
-            else static_idfs,
-            parsed,
-        )
+        idfs = _scaled_idfs({t: idf_py(n_docs, dfs[t]) for t in lists}, parsed)
         ids_out, scores_out = score_shard(
             lists, blocks, idfs, avgdl, parsed, k, ex_lists, allowed,
             pos_lists, after,
@@ -1225,7 +1137,7 @@ def search_wand(
             and not wc_pos_rx
             and not wc_neg_rx
             and not range_specs
-            and getattr(built, "unique_term_shard", False)
+            and built.unique_term_shard
         ):
             # single-term query: every (term, shard) run scores alone —
             # nothing to co-locate, so skip the shard exchange entirely
@@ -1234,9 +1146,9 @@ def search_wand(
             # group). One stage instead of two for the most common
             # query shape. Gated on unique_term_shard (round-4 advisor):
             # an index that can repeat (term, shard) keys — a raw union
-            # of epoch sidecars or of v4+ indexes — must take the
-            # shuffled path so _assemble_shard's duplicate-doc_id and
-            # per-sub-index-df guards see all runs of a key together.
+            # of merged indexes — must take the shuffled path so
+            # _assemble_shard's repeated-key guard sees all runs of a key
+            # together.
             local = rows.mapInPandas(wand_iter, TOPK_SCHEMA)
         else:
             local = rows.repartition("shard").mapInPandas(wand_iter, TOPK_SCHEMA)
@@ -1269,13 +1181,13 @@ def search_wand_batch(
     per-query window takes the exact top-k. Throughput scales with
     shards x queries, not jobs.
 
-    ``lang:`` queries read their allowlists from the index itself on a
-    v5 index (synthetic attr posting lists ride the same pruned scan,
-    sliced per query); on pre-v5 indexes they fall back to the cogrouped
-    source allowlist carrying (doc_id, lang, shard) for the union of
-    requested langs. ``tombstones`` (S5) ride the shard-keyed cogroup
-    and are excluded from every query's results — fresh deletes are
-    visible to the whole batch with no extra job.
+    ``lang:`` queries read their allowlists from the index itself
+    (synthetic attr posting lists ride the same pruned scan, sliced per
+    query); on indexes built without the lang attr they fall back to
+    the cogrouped source allowlist carrying (doc_id, lang, shard) for
+    the union of requested langs. ``tombstones`` (S5) ride the
+    shard-keyed cogroup and are excluded from every query's results —
+    fresh deletes are visible to the whole batch with no extra job.
     """
     all_terms = sorted(
         {t for p in queries.values() for t in list(p.terms) + list(p.exclude)}
@@ -1328,9 +1240,7 @@ def search_wand_batch(
         {t for pos, neg in q_fuzzy.values() for t in pos | neg}
     )
     langs = sorted({p.lang for p in queries.values() if p.lang is not None})
-    use_attr_lang = bool(langs) and getattr(built, "has_attr", lambda f: False)(
-        "lang"
-    )
+    use_attr_lang = bool(langs) and built.has_attr("lang")
     lang_terms = (
         {lang: attr_term("lang", lang) for lang in langs} if use_attr_lang else {}
     )
@@ -1375,14 +1285,6 @@ def search_wand_batch(
     )
     rows = _project_scorer_cols(rows, bool(phrase_terms_all))
     n_docs, avgdl = built.n_docs, built.avgdl
-    if "df" in rows.columns:
-        static_stats = None
-    else:  # pre-v4 fallback
-        if all_prefixes or all_fuzzy or all_wc_prefixes:
-            raise ValueError(
-                "prefix/fuzzy/group queries require a v4+ index (denormalized df)"
-            )
-        static_stats = built.df_of(all_terms)
     per_q = {qid: (p, set(p.exclude)) for qid, p in queries.items()}
     positive_all = {t for p in queries.values() for t in p.terms} | {
         t for pos, _neg in q_fuzzy.values() for t in pos
@@ -1416,8 +1318,6 @@ def search_wand_batch(
                 lang: attr_lists.get(t, _EMPTY_I64)
                 for lang, t in lang_terms.items()
             }
-        if static_stats is not None:
-            dfs = static_stats
         for qid, (p, ex_terms) in per_q.items():
             ppfx = tuple(getattr(p, "prefixes", ()))
             expfx = tuple(getattr(p, "exclude_prefixes", ()))
@@ -1444,9 +1344,7 @@ def search_wand_batch(
 
             q_lists = {t: lists[t] for t in lists if q_has(t)}
             q_blocks = {t: blocks[t] for t in q_lists}
-            idfs = _scaled_idfs(
-                {t: idf_py(n_docs, dfs[t]) for t in q_lists if t in dfs}, p
-            )
+            idfs = _scaled_idfs({t: idf_py(n_docs, dfs[t]) for t in q_lists}, p)
             ex = [
                 lists[t][0]
                 for t in lists
@@ -1596,11 +1494,9 @@ def _index_match_scored(
     )
     long_postings = seg.decode_postings(rows)
     stats = CollectionStats(built.n_docs, built.avgdl)
-    scored = rel.score_postings(long_postings, built.term_stats, None, stats, parsed)
+    scored = rel.score_postings(long_postings, None, None, stats, parsed)
     allowed_df = None
-    if parsed.lang is not None and getattr(built, "has_attr", lambda f: False)(
-        "lang"
-    ):
+    if parsed.lang is not None and built.has_attr("lang"):
         attr_rows = pruned_index_scan(
             built.index_df, [attr_term("lang", parsed.lang)], built.num_buckets
         )
@@ -1762,11 +1658,11 @@ def _facet_values(built, field: str, source_df: DataFrame | None) -> DataFrame:
     from xsearch_spark.constants import ATTR_TERM_PREFIX
     from xsearch_spark.operators import segments as seg
 
-    if getattr(built, "has_attr", lambda f: False)(field):
+    if built.has_attr(field):
         pref = f"{ATTR_TERM_PREFIX}{field}:"
         rows = built.index_df.filter(F.col("term").startswith(pref))
         raw_val = F.col("term").substr(F.lit(len(pref) + 1), F.lit(2**30))
-        if getattr(built, "has_num_attr", lambda f: False)(field):
+        if built.has_num_attr(field):
             # round-6 §3.13: numeric values are stored order-preserving
             # encoded — decode back to the int64 (same type the source
             # fallback and the oracle emit)
@@ -2098,11 +1994,11 @@ def _num_attr_values(
     from xsearch_spark.constants import ATTR_TERM_PREFIX
     from xsearch_spark.operators import segments as seg
 
-    if not getattr(built, "has_num_attr", lambda f: False)(field):
+    if not built.has_num_attr(field):
         raise ValueError(
             f"{field}: requires the field in the index's "
             f"num_attr_fields (integer attr_cols, FIXTURES.md §3.13); "
-            f"this index carries {getattr(built, 'num_attr_fields', ())!r}"
+            f"this index carries {built.num_attr_fields!r}"
         )
     pref = f"{ATTR_TERM_PREFIX}{field}:"
     rows = built.index_df.filter(F.col("term").startswith(pref))
@@ -2356,13 +2252,10 @@ def more_like_this(
         )
     terms = sorted(tf)
     scan = pruned_index_scan(built.index_df, terms, built.num_buckets)
-    if "df" in scan.columns:
-        dfs = {
-            r["term"]: int(r["df"])
-            for r in scan.select("term", "df").distinct().collect()
-        }
-    else:  # pre-v4 fallback: driver dictionary
-        dfs = built.df_of(terms)
+    dfs = {
+        r["term"]: int(r["df"])
+        for r in scan.select("term", "df").distinct().collect()
+    }
     n_docs, avgdl = built.n_docs, built.avgdl
     denom_base = K1 * (1.0 - B + B * dl / avgdl)
     w = {
@@ -2419,11 +2312,6 @@ def explain_score(built, parsed: ParsedQuery, doc_id: int) -> DataFrame:
         ],
         built.num_buckets,
     )
-    rows = _prune_poss(rows, False)
-    if "df" not in rows.columns:
-        raise ValueError(
-            "explain_score requires a v4+ index (denormalized df)"
-        )
     long = seg.decode_postings(rows).filter(F.col("doc_id") == int(doc_id))
     long = long.filter(positive_term_pred(parsed)(F.col("term")))
     idf = idf_col(built.n_docs, F.col("df").cast("double"))
@@ -2454,7 +2342,7 @@ def spell_suggest(built, body: str, n: int = 5) -> DataFrame:
     expand (``constants.fuzzy_candidates``), enumerated driver-side,
     so the dictionary probe is the ordinary bucket-pruned exact-term
     IN scan — zero Spark jobs to plan, no dictionary walk, no
-    startswith sweep at any vocabulary size; df rides every v4+ index
+    startswith sweep at any vocabulary size; df rides every index
     row. The DuckDB oracle states membership declaratively
     (``levenshtein(term, body) <= 1`` over the corpus vocabulary),
     independently verifying the enumeration is complete."""
@@ -2469,10 +2357,6 @@ def spell_suggest(built, body: str, n: int = 5) -> DataFrame:
     rows = pruned_index_scan(
         built.index_df, list(fuzzy_candidates(body)), built.num_buckets
     )
-    if "df" not in rows.columns:
-        raise ValueError(
-            "spell_suggest requires a v4+ index (denormalized df rows)"
-        )
     return (
         rows.select("term", F.col("df").cast("long").alias("df"))
         .distinct()
@@ -2487,7 +2371,7 @@ def suggest_terms(built, prefix: str, n: int = 10) -> DataFrame:
     (term, df), ordered (df DESC, term ASC) — the search-box
     autocomplete surface.
 
-    Index-only and collect-free: every v4+ index row carries its term's
+    Index-only and collect-free: every index row carries its term's
     GLOBAL df (stamped at merge time), so one ``startswith``-pushed scan
     plus a distinct over the tiny matched dictionary slice answers the
     query — the full vocabulary is never collected (the billion-term
@@ -2502,10 +2386,6 @@ def suggest_terms(built, prefix: str, n: int = 10) -> DataFrame:
             f"suggest prefix must be one term shape [a-z0-9_]+; got {prefix!r}"
         )
     rows = built.index_df.filter(F.col("term").startswith(prefix))
-    if "df" not in rows.columns:
-        raise ValueError(
-            "suggest_terms requires a v4+ index (denormalized df rows)"
-        )
     return (
         rows.select("term", F.col("df").cast("long").alias("df"))
         .distinct()

@@ -106,7 +106,7 @@ def compact(
     import shutil
 
     from xsearch_spark.operators import segments as seg
-    from xsearch_spark.plans.build_index import _paths, term_stats_lazy
+    from xsearch_spark.plans.build_index import _paths, read_stats, write_stats
 
     # docs already purged by earlier incremental compactions still count
     # in the persisted stats — a full compact trues them up too, EVEN
@@ -114,10 +114,7 @@ def compact(
     # an empty tombstone table left accumulated pending_deleted applied
     # never, so frozen N/avgdl drifted permanently)
     paths = _paths(built.root)
-    import json
-
-    with open(paths["stats"]) as f:
-        sidecar = json.load(f)
+    sidecar = read_stats(built.root)
     pending = sidecar.pop("pending_deleted", {"n_docs": 0, "sum_dl": 0})
     tomb = load_tombstones(spark, built.root)
     has_tomb = tomb is not None and not tomb.isEmpty()
@@ -144,7 +141,7 @@ def compact(
         seg.decode_postings(
             idx,
             include_attrs=True,
-            include_positions=getattr(built, "has_positions", False),
+            include_positions=built.has_positions,
         )
         .drop("df")
         .join(t, "doc_id", "left_anti")
@@ -159,26 +156,18 @@ def compact(
     shutil.rmtree(paths["index"], ignore_errors=True)
     os.replace(tmp, paths["index"])
     final = spark.read.parquet(paths["index"])
-    # term_stats: lazily derived from the rebuilt rows (round 7) — the
-    # full-vocabulary parquet swap was a job no query path read; a stale
-    # pre-round-7 sidecar dir is simply abandoned
-    shutil.rmtree(paths["term_stats"], ignore_errors=True)
 
     # --- refresh sidecar stats + the in-memory handle --------------------
     # (pending_deleted was popped above: the full rebuild trues it up)
     sidecar.update(
         {"n_docs": n_docs_new, "avgdl": avgdl_new, "sum_dl": sum_dl_new}
     )
-    with open(paths["stats"] + ".tmp", "w") as f:
-        json.dump(sidecar, f)
-    os.replace(paths["stats"] + ".tmp", paths["stats"])
+    write_stats(built.root, **sidecar)
     shutil.rmtree(tombstone_path(built.root), ignore_errors=True)
     built.index_df = final
-    built.term_stats = term_stats_lazy(final)
     built.n_docs = n_docs_new
     built.avgdl = avgdl_new
     built.sum_dl = sum_dl_new
-    built.invalidate_stats_cache()
 
 
 def _measure_deleted(idx: DataFrame, t: DataFrame) -> tuple[int, int]:
@@ -240,7 +229,6 @@ def compact_incremental(
     first_doc_id) before the write so parquet row-group min/max term
     skipping survives incremental folds (round-3 verdict item 4).
     """
-    import json
     import shutil
 
     import numpy as np
@@ -252,7 +240,7 @@ def compact_incremental(
         MERGED_BUCKET_SCHEMA,
         _bm25_factor,
     )
-    from xsearch_spark.plans.build_index import _paths, term_stats_lazy
+    from xsearch_spark.plans.build_index import _paths, read_stats, write_stats
 
     tomb = load_tombstones(spark, built.root)
     if tomb is None or tomb.isEmpty():
@@ -261,8 +249,7 @@ def compact_incremental(
     t = F.broadcast(tomb.select("doc_id").distinct())
     n_deleted, dl_deleted = _measure_deleted(idx, t)
     paths = _paths(built.root)
-    with open(paths["stats"]) as f:
-        sidecar = json.load(f)
+    sidecar = read_stats(built.root)
     pend = sidecar.get("pending_deleted", {"n_docs": 0, "sum_dl": 0})
     # the drift gate bounds TOTAL frozen-stats drift, so it must include
     # the dl mass already purged by earlier incremental passes (round-3
@@ -322,7 +309,7 @@ def compact_incremental(
             tfs_full = codec.decode_tfs(r.tfs).astype(np.int64)
             tfs_k = tfs_full[keep]
             dls_k = codec.decode_tfs(r.dls).astype(np.int64)[keep]
-            if getattr(r, "poss", b""):
+            if r.poss:
                 # v6: the positional stream is purged with the same
                 # keep-mask (kept postings keep their substreams intact)
                 from xsearch_spark.operators.segments import (
@@ -394,14 +381,8 @@ def compact_incremental(
         "n_docs": int(pend["n_docs"]) + n_deleted,
         "sum_dl": int(pend["sum_dl"]) + dl_deleted,
     }
-    with open(paths["stats"] + ".tmp", "w") as f:
-        json.dump(sidecar, f)
-    os.replace(paths["stats"] + ".tmp", paths["stats"])
+    write_stats(built.root, **sidecar)
     shutil.rmtree(tombstone_path(built.root), ignore_errors=True)
+    # N/avgdl/df deliberately unchanged (frozen-stats semantics)
     built.index_df = spark.read.parquet(paths["index"])
-    # N/avgdl/df deliberately unchanged (frozen-stats semantics); the
-    # lazy dictionary is re-bound because the old frame lists files the
-    # bucket swap just deleted — rows keep their frozen df, so its values
-    # only lose terms whose postings were all purged
-    built.term_stats = term_stats_lazy(built.index_df)
     return "incremental"

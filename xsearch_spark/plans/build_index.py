@@ -32,7 +32,7 @@ import hashlib
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,7 +60,6 @@ INDEX_FORMAT_VERSION = 6  # bump on any on-disk layout/codec change:
 class BuiltIndex:
     root: str
     index_df: DataFrame  # merged (term, shard) runs with bucket column
-    term_stats: DataFrame  # (term, df)
     n_docs: int
     avgdl: float
     num_buckets: int
@@ -71,26 +70,35 @@ class BuiltIndex:
     docs_per_segment: int = seg.DEFAULT_DOCS_PER_SEGMENT
     segs_per_shard: int = seg.DEFAULT_SEGS_PER_SHARD
     sum_dl: int = 0  # exact Σdl over all docs (avgdl = sum_dl / n_docs)
-    # v5: attribute fields indexed as synthetic posting lists — queries
-    # on these fields never touch the source table (wand._aux_doc_side
-    # fallback remains for pre-v5 indexes)
+    # attribute fields indexed as synthetic posting lists — queries on
+    # these fields never touch the source table
     attr_fields: tuple[str, ...] = ()
     # True iff every (term, shard) key is unique — guaranteed by all
     # merge_to_index-routed producers (build_index, load_index,
     # streaming.compact_segments). wand's single-term zero-exchange fast
     # path is gated on this: a hand-assembled UNION of indexes can
     # legally repeat keys, and the fast path scores runs wherever the
-    # scan read them, bypassing _assemble_shard's duplicate/df guards
+    # scan read them, bypassing _assemble_shard's repeated-key guard
     # (round-4 advisor). Defaults False so ad-hoc BuiltIndex wrappers
     # take the guarded shuffled path.
     unique_term_shard: bool = False
-    # v6: rows carry the positional stream (phrase queries allowed)
+    # rows carry the positional stream (phrase queries allowed)
     has_positions: bool = False
     # round-6 §3.13: the subset of attr_fields whose values are
     # order-preserving-encoded int64s — range filters and sort-by-field
     # are only servable on these (and equality filters must encode)
     num_attr_fields: tuple[str, ...] = ()
-    _df_cache: dict | None = field(default=None, repr=False)
+
+    def __post_init__(self) -> None:
+        # the one layout check: every producer writes through
+        # segments.merge_to_index, which stamps the global df and the
+        # positional stream on every row; the query paths assume both
+        missing = [c for c in ("df", "poss") if c not in self.index_df.columns]
+        if missing:
+            raise ValueError(
+                f"index rows lack {', '.join(missing)}: not index layout "
+                f"v{INDEX_FORMAT_VERSION} — rebuild the index"
+            )
 
     def has_attr(self, fld: str) -> bool:
         return fld in self.attr_fields
@@ -102,35 +110,12 @@ class BuiltIndex:
     def docs_per_shard(self) -> int:
         return self.docs_per_segment * self.segs_per_shard
 
-    def df_of(self, terms: list[str]) -> dict[str, int]:
-        """Per-term document frequency — COMPATIBILITY FALLBACK ONLY.
-
-        Since index layout v4 the global df is denormalized into every
-        index row at merge time (segments.merge_to_index), and the warm
-        query paths (search_wand / search_wand_batch / the relational
-        decode) read it from the pruned scan — zero driver state, one
-        Spark job. This method remains only for pre-v4 indexes (whose
-        rows lack the ``df`` column); it collects the ENTIRE term
-        dictionary to a driver dict, which does not survive a
-        billion-term source-code vocabulary — never call it on the hot
-        path for a v4 index (scripts/audit_plans.py asserts this).
-        """
-        if self._df_cache is None:
-            self._df_cache = {
-                r["term"]: int(r["df"]) for r in self.term_stats.collect()
-            }
-        return {t: self._df_cache[t] for t in terms if t in self._df_cache}
-
-    def invalidate_stats_cache(self) -> None:
-        self._df_cache = None
-
 
 def _paths(root: str) -> dict[str, str]:
     return {
         "postings": os.path.join(root, "postings"),
         "segments": os.path.join(root, "segments"),
         "index": os.path.join(root, "index"),
-        "term_stats": os.path.join(root, "term_stats"),
         "stats": os.path.join(root, "stats.json"),
     }
 
@@ -139,45 +124,33 @@ def _fingerprint(*parts: object) -> str:
     return hashlib.sha256("|".join(str(p) for p in parts).encode()).hexdigest()[:16]
 
 
-def _term_stats_of(index_df: DataFrame) -> DataFrame:
-    """(term, df) over REAL terms — synthetic attr runs (v5, df=0 filter
-    carriers) are not vocabulary and stay out of the dictionary."""
-    from xsearch_spark.constants import ATTR_TERM_PREFIX
+def write_stats(root: str, **stats: object) -> None:
+    """Write the stats.json sidecar (N, avgdl, Σdl, build geometry, the
+    serveable attr fields and positions) stamped with
+    ``INDEX_FORMAT_VERSION`` — the one writer, shared by every index
+    producer and the compactions. Write-temp-then-rename, so a reader
+    never sees a torn file."""
+    path = _paths(root)["stats"]
+    with open(path + ".tmp", "w") as f:
+        json.dump({**stats, "format_version": INDEX_FORMAT_VERSION}, f)
+    os.replace(path + ".tmp", path)
 
-    return (
-        index_df.filter(~F.col("term").startswith(ATTR_TERM_PREFIX))
-        .groupBy("term")
-        .agg(F.sum("n_docs").alias("df"))
-    )
 
-
-def term_stats_lazy(index_df: DataFrame) -> DataFrame:
-    """(term, df) dictionary derived LAZILY from the index rows — the
-    round-7 replacement for the materialized ``term_stats`` parquet
-    stage (a full-vocabulary shuffle + write + count that no warm v4+
-    query path ever read: df is denormalized into every index row).
-
-    v4+ rows all carry the term's global df, so the dictionary is a
-    projection + one-value-per-term aggregate — IDENTICAL to the old
-    sidecar, including across incremental compaction, where rows keep
-    their FROZEN df (the ``_term_stats_of`` sum over per-run n_docs
-    would drift there; max(df) cannot). One boundary differs from the
-    old sidecar: a term whose postings are ALL purged by incremental
-    compaction has no rows left, so it drops out of this dictionary
-    while its frozen df would have stayed in the sidecar until the next
-    full compact (pinned in ``test_incremental_compact_frozen_stats``).
-    Pre-v4 rows (no df column) fall back to the n_docs sum. Nothing
-    executes until a consumer actions the frame — the pre-v4 ``df_of``
-    fallback and tests; warm queries never do."""
-    from xsearch_spark.constants import ATTR_TERM_PREFIX
-
-    if "df" in index_df.columns:
-        return (
-            index_df.filter(~F.col("term").startswith(ATTR_TERM_PREFIX))
-            .groupBy("term")
-            .agg(F.max("df").alias("df"))
+def read_stats(root: str) -> dict:
+    """The stats.json sidecar of an index root — the one reader. Raises
+    unless it was written for this code's ``INDEX_FORMAT_VERSION``, so no
+    query ever runs over a layout the code does not serve."""
+    path = _paths(root)["stats"]
+    with open(path) as f:
+        stats = json.load(f)
+    version = stats.get("format_version")
+    if version != INDEX_FORMAT_VERSION:
+        found = "no format_version" if version is None else f"format_version {version}"
+        raise ValueError(
+            f"{path} has {found}; this code serves only index layout "
+            f"v{INDEX_FORMAT_VERSION} — rebuild the index"
         )
-    return _term_stats_of(index_df)
+    return stats
 
 
 def _partition_rows(df: DataFrame, key: str) -> dict[str, dict]:
@@ -336,8 +309,7 @@ def build_index(
         and m2.status == "done"
         and os.path.exists(paths["stats"])
     ):
-        with open(paths["stats"]) as f:
-            n_docs = int(json.load(f)["n_docs"])  # checkpointed: no job
+        n_docs = int(read_stats(out_dir)["n_docs"])  # checkpointed: no job
     if n_docs is None:
         # callers that know the row count (parquet metadata) pass it in;
         # otherwise this is the only full-input driver job
@@ -403,28 +375,16 @@ def build_index(
         # sum(dl over all docs) == sum(tf over postings): avgdl is exact
         # with no second tokenizer pass and no decode
         sum_dl = sum(p["sum_tf"] for p in m2.partitions.values())
-        avgdl_l = (sum_dl / n_docs) if n_docs else 0.0
-        with open(paths["stats"] + ".tmp", "w") as f:
-            json.dump(
-                {
-                    "n_docs": n_docs,
-                    "avgdl": avgdl_l,
-                    "sum_dl": sum_dl,
-                    # geometry persisted so compact()/load_index rebuild
-                    # with the exact build-time doc->seg->shard mapping
-                    "docs_per_segment": docs_per_segment,
-                    "segs_per_shard": segs_per_shard,
-                    "num_buckets": num_buckets,
-                    "format_version": INDEX_FORMAT_VERSION,
-                    "attr_fields": list(attrs),
-                    "num_attr_fields": list(num_attrs),
-                    "positions": positions,
-                },
-                f,
-            )
-        os.replace(paths["stats"] + ".tmp", paths["stats"])
-    with open(paths["stats"]) as f:
-        sidecar = json.load(f)
+        # geometry persisted so compact()/load_index rebuild with the
+        # exact build-time doc->seg->shard mapping
+        write_stats(
+            out_dir, n_docs=n_docs, avgdl=(sum_dl / n_docs) if n_docs else 0.0,
+            sum_dl=sum_dl, docs_per_segment=docs_per_segment,
+            segs_per_shard=segs_per_shard, num_buckets=num_buckets,
+            attr_fields=list(attrs), num_attr_fields=list(num_attrs),
+            positions=positions,
+        )
+    sidecar = read_stats(out_dir)
     n_docs, avgdl = int(sidecar["n_docs"]), float(sidecar["avgdl"])
     seg_df = spark.read.parquet(paths["segments"])
 
@@ -449,12 +409,6 @@ def build_index(
         m3.rows_out = sum(p["rows"] for p in m3.partitions.values())
         m3.completed_at = time.time()
         ckpt.save_manifest(out_dir, m3)
-    index_df = spark.read.parquet(paths["index"])
-
-    # term stats: derived lazily from the denormalized df rows (round 7)
-    # — the materialized stage-4 parquet was a full-vocabulary shuffle +
-    # write + count no warm query path ever read
-    term_stats = term_stats_lazy(index_df)
 
     ckpt.progress_event(
         os.getcwd(),
@@ -465,21 +419,7 @@ def build_index(
             "wall_s": time.monotonic() - t_start,
         },
     )
-    return BuiltIndex(
-        out_dir,
-        index_df,
-        term_stats,
-        n_docs,
-        avgdl,
-        num_buckets,
-        docs_per_segment=docs_per_segment,
-        segs_per_shard=segs_per_shard,
-        sum_dl=int(sidecar.get("sum_dl", round(avgdl * n_docs))),
-        attr_fields=tuple(sidecar.get("attr_fields", [])),
-        num_attr_fields=tuple(sidecar.get("num_attr_fields", [])),
-        unique_term_shard=True,
-        has_positions=bool(sidecar.get("positions", False)),
-    )
+    return load_index(spark, out_dir)
 
 
 def _build_index_fused(
@@ -546,80 +486,43 @@ def _build_index_fused(
         )
         m.completed_at = time.time()
         ckpt.save_manifest(out_dir, m)
-        with open(paths["stats"] + ".tmp", "w") as f:
-            json.dump(
-                {
-                    "n_docs": n_docs,
-                    "avgdl": avgdl,
-                    "sum_dl": sum_dl,
-                    "docs_per_segment": docs_per_segment,
-                    "segs_per_shard": segs_per_shard,
-                    "num_buckets": num_buckets,
-                    "format_version": INDEX_FORMAT_VERSION,
-                    "attr_fields": list(attrs),
-                    "num_attr_fields": list(num_attrs),
-                    "positions": positions,
-                },
-                f,
-            )
-        os.replace(paths["stats"] + ".tmp", paths["stats"])
-    with open(paths["stats"]) as f:
-        sidecar = json.load(f)
-    n_docs, avgdl = int(sidecar["n_docs"]), float(sidecar["avgdl"])
-    index_df = spark.read.parquet(paths["index"])
-
-    # term stats: lazy derivation from the df rows (round 7; see
-    # term_stats_lazy) — no stage-4 job, write, or manifest
-    term_stats = term_stats_lazy(index_df)
+        write_stats(
+            out_dir, n_docs=n_docs, avgdl=avgdl, sum_dl=sum_dl,
+            docs_per_segment=docs_per_segment, segs_per_shard=segs_per_shard,
+            num_buckets=num_buckets, attr_fields=list(attrs),
+            num_attr_fields=list(num_attrs), positions=positions,
+        )
+    built = load_index(spark, out_dir)
 
     ckpt.progress_event(
         os.getcwd(),
         {
             "event": "index_built",
             "out_dir": out_dir,
-            "n_docs": n_docs,
+            "n_docs": built.n_docs,
             "fused": True,
             "wall_s": time.monotonic() - t_start,
         },
     )
-    return BuiltIndex(
-        out_dir,
-        index_df,
-        term_stats,
-        n_docs,
-        avgdl,
-        num_buckets,
-        docs_per_segment=docs_per_segment,
-        segs_per_shard=segs_per_shard,
-        sum_dl=int(sidecar.get("sum_dl", round(avgdl * n_docs))),
-        attr_fields=tuple(sidecar.get("attr_fields", [])),
-        num_attr_fields=tuple(sidecar.get("num_attr_fields", [])),
-        unique_term_shard=True,
-        has_positions=bool(sidecar.get("positions", False)),
-    )
+    return built
 
 
 def load_index(spark: SparkSession, out_dir: str, num_buckets: int | None = None) -> BuiltIndex:
-    paths = _paths(out_dir)
-    with open(paths["stats"]) as f:
-        sidecar = json.load(f)
-    n_docs = int(sidecar["n_docs"])
-    avgdl = float(sidecar["avgdl"])
-    index_df = spark.read.parquet(paths["index"])
+    """Open a built index from its root: the stats.json sidecar (checked
+    by :func:`read_stats`) plus the index parquet. Every producer returns
+    its BuiltIndex through here."""
+    stats = read_stats(out_dir)
     return BuiltIndex(
         out_dir,
-        index_df,
-        term_stats_lazy(index_df),
-        n_docs,
-        avgdl,
-        num_buckets or int(sidecar.get("num_buckets", DEFAULT_NUM_BUCKETS)),
-        docs_per_segment=int(
-            sidecar.get("docs_per_segment", seg.DEFAULT_DOCS_PER_SEGMENT)
-        ),
-        segs_per_shard=int(sidecar.get("segs_per_shard", seg.DEFAULT_SEGS_PER_SHARD)),
-        sum_dl=int(sidecar.get("sum_dl", round(avgdl * n_docs))),
-        attr_fields=tuple(sidecar.get("attr_fields", [])),
-        num_attr_fields=tuple(sidecar.get("num_attr_fields", [])),
+        spark.read.parquet(_paths(out_dir)["index"]),
+        int(stats["n_docs"]),
+        float(stats["avgdl"]),
+        num_buckets or int(stats["num_buckets"]),
+        docs_per_segment=int(stats["docs_per_segment"]),
+        segs_per_shard=int(stats["segs_per_shard"]),
+        sum_dl=int(stats["sum_dl"]),
+        attr_fields=tuple(stats["attr_fields"]),
+        num_attr_fields=tuple(stats["num_attr_fields"]),
         unique_term_shard=True,
-        has_positions=bool(sidecar.get("positions", False)),
+        has_positions=bool(stats["positions"]),
     )
