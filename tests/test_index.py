@@ -314,6 +314,39 @@ def test_single_term_fast_path_gated_on_unique_keys(built, corpus):
     )
 
 
+def test_single_term_fast_path_in_a_batch(built, corpus):
+    """The no-exchange path is a predicate over the compiled plans, so a
+    batch made only of single-exact-term queries takes it too: its plan
+    has no shard exchange and its answers equal the single-query ones.
+    With unique_term_shard=False the same batch shuffles by shard and
+    still gives the same answers."""
+    import dataclasses
+    import io
+    from contextlib import redirect_stdout
+
+    from xsearch_spark.operators.wand import search_wand_batch
+
+    qset = {q: parse(q) for q in ("hash", "join", "the", "zzzznotaterm")}
+    guarded = dataclasses.replace(built, unique_term_shard=False)
+
+    def plan(bi):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            search_wand_batch(bi, qset).explain("formatted")
+        return buf.getvalue()
+
+    assert "hashpartitioning(shard" not in plan(built)
+    assert "hashpartitioning(shard" in plan(guarded)
+    for bi in (built, guarded):
+        got: dict[str, list] = {}
+        for r in search_wand_batch(bi, qset).collect():
+            got.setdefault(r["query_id"], []).append(
+                (r["doc_id"], round(r["score"], 6))
+            )
+        for qid, parsed in qset.items():
+            assert got.get(qid, []) == _rounded(search_wand(built, parsed)), qid
+
+
 def test_wand_tombstones_equal_relational(spark, built, corpus):
     """S5 on the engine path: search_wand with tombstones must equal the
     relational path's pre-top-k anti-join, across AND/OR/lang/NOT."""
@@ -350,17 +383,27 @@ def test_lang_serves_from_index_no_source(spark, built, corpus):
     assert "FlatMapCoGroupsInPandas" not in plan
 
 
-def test_lang_fallback_without_attr_index(spark, corpus, tmp_path):
-    """Pre-v5 compatibility: an index built with attr_col=None must still
-    serve lang: queries through the distributed source-allowlist cogroup
-    and produce identical results."""
-    docs = corpus.source
+@pytest.fixture(scope="module")
+def noattr_built(spark, corpus, tmp_path_factory):
+    """The same documents indexed with attr_cols=None: lang: queries on
+    it are served by the source-allowlist cogroup."""
+    out = str(tmp_path_factory.mktemp("noattr_idx"))
     bi = build_index(
-        spark, docs, str(tmp_path / "noattr_idx"),
+        spark, corpus.source, out,
         text_col="text", variant="base",
         docs_per_segment=128, segs_per_shard=2, num_buckets=16,
         attr_cols=None,
     )
+    yield bi
+    shutil.rmtree(out, ignore_errors=True)
+
+
+def test_lang_fallback_without_attr_index(spark, corpus, noattr_built):
+    """Pre-v5 compatibility: an index built with attr_col=None must still
+    serve lang: queries through the distributed source-allowlist cogroup
+    and produce identical results."""
+    docs = corpus.source
+    bi = noattr_built
     from xsearch_spark.constants import ATTR_TERM_PREFIX
 
     assert not bi.has_attr("lang")
@@ -373,6 +416,43 @@ def test_lang_fallback_without_attr_index(spark, corpus, tmp_path):
         ]
         got = _rounded(search_wand(bi, parse(q), source_df=docs))
         assert got == naive, q
+
+
+def test_lang_fallback_batch_equals_singles(spark, corpus, noattr_built):
+    """One batch on the attr_cols=None index mixing two cogroup-served
+    langs and a no-lang query, with and without tombstones: every answer
+    equals its single-query answer and the naive evaluation (the naive
+    ranking read past the tombstoned docs)."""
+    from xsearch_spark.constants import DEFAULT_TOP_K
+    from xsearch_spark.operators.wand import search_wand_batch
+
+    docs = corpus.source
+    bi = noattr_built
+    qs = {"zh": "lang:zh spark", "en": "lang:en hash OR join", "none": "hash OR scan"}
+    tomb = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
+    dead = {r["doc_id"] for r in tomb.collect()}
+    for tombstones in (None, tomb):
+        gone = dead if tombstones is not None else set()
+        batch = search_wand_batch(
+            bi, {qid: parse(q) for qid, q in qs.items()},
+            source_df=docs, tombstones=tombstones,
+        ).collect()
+        got: dict[str, list] = {}
+        for r in batch:
+            got.setdefault(r["query_id"], []).append(
+                (r["doc_id"], round(r["score"], 6))
+            )
+        for qid, q in qs.items():
+            single = _rounded(
+                search_wand(bi, parse(q), source_df=docs, tombstones=tombstones)
+            )
+            naive = [
+                (r["doc_id"], r["score"])
+                for r in engine.run_query(corpus, q, k=bi.n_docs).collect()
+                if r["doc_id"] not in gone
+            ][:DEFAULT_TOP_K]
+            assert single, q
+            assert got.get(qid, []) == single == naive, (q, tombstones is None)
 
 
 PHRASE_QUERIES = [
@@ -1029,9 +1109,9 @@ def test_array_attr_full_oracle_two_scales(spark, tmp_path, sf_fixture, request)
 
 def test_batch_random_querysets_with_tombstones(spark, built, corpus):
     """Randomized mixed query SETS (AND/OR/NOT/lang) with tombstones:
-    the batch slicing (score_all's shared _assemble_shard + per-query
-    term/exclude/lang/tomb slicing) must reproduce every single-query
-    result (VERDICT r2 item 6)."""
+    the batch slicing (the shard scorer's one _assemble_shard per shard
+    + per-plan term/exclude/lang/tomb slicing) must reproduce every
+    single-query result (VERDICT r2 item 6)."""
     import random
 
     from xsearch_spark.operators.wand import search_wand_batch

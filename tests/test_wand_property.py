@@ -11,7 +11,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from xsearch_spark.constants import B, BLOCK_SIZE, K1
-from xsearch_spark.operators.wand import score_shard
+from xsearch_spark.operators.wand import _compile, score_shard
 from xsearch_spark.plans.query import ParsedQuery
 
 
@@ -474,12 +474,14 @@ def test_prefix_groups_equal_naive(
         prefixes=prefixes,
         exclude_prefixes=ex_prefixes,
     )
-    # mirror search_wand's _assemble_shard routing: terms under an
-    # exclusion prefix are diverted to exclude lists, never scored
-    ex_terms = [t for t in vocab if ex_prefixes and t.startswith(ex_prefixes)]
-    q_lists = {t: v for t, v in lists.items() if t not in ex_terms}
+    # route through the compiled plan's predicate, as the shard scorer
+    # does: terms under an exclusion prefix feed exclude lists, never
+    # scores (the query needs nothing of an index to compile)
+    plan = _compile(None, parsed)
+    q_lists = {t: v for t, v in lists.items() if plan.route(t)}
     q_blocks = {t: blocks[t] for t in q_lists}
-    exclude = [lists[t][0] for t in ex_terms] or None
+    exclude = [v[0] for t, v in lists.items() if plan.route(t) is False] or None
+    ex_terms = [t for t in vocab if ex_prefixes and t.startswith(ex_prefixes)]
     got_ids, got_scores = score_shard(
         q_lists, q_blocks, idfs, avgdl, parsed, k, exclude
     )

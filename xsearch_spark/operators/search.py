@@ -45,8 +45,8 @@ def _set_groups(parsed: ParsedQuery) -> list[list[str]]:
     from xsearch_spark.constants import fuzzy_candidates
 
     return [
-        list(fuzzy_candidates(b)) for b in getattr(parsed, "fuzzies", ())
-    ] + [list(g) for g in getattr(parsed, "groups", ())]
+        list(fuzzy_candidates(b)) for b in parsed.fuzzies
+    ] + [list(g) for g in parsed.groups]
 
 
 def positive_term_pred(parsed: ParsedQuery):
@@ -56,8 +56,8 @@ def positive_term_pred(parsed: ParsedQuery):
     score_postings and explain_score."""
     from xsearch_spark.constants import wildcard_regex
 
-    prefixes = list(getattr(parsed, "prefixes", ()))
-    wildcards = list(getattr(parsed, "wildcards", ()))
+    prefixes = list(parsed.prefixes)
+    wildcards = list(parsed.wildcards)
     set_groups = _set_groups(parsed)
 
     def term_pred(col: "F.Column") -> "F.Column":
@@ -101,8 +101,8 @@ def score_postings(
     """
     from xsearch_spark.constants import wildcard_regex
 
-    prefixes = list(getattr(parsed, "prefixes", ()))
-    wildcards = list(getattr(parsed, "wildcards", ()))
+    prefixes = list(parsed.prefixes)
+    wildcards = list(parsed.wildcards)
     fuzzy_groups = _set_groups(parsed)
     if not parsed.terms and not prefixes and not wildcards and not fuzzy_groups:
         return postings_df.sparkSession.createDataFrame(
@@ -124,7 +124,7 @@ def score_postings(
     # per-term boosts (round-6 §3.15): multiply the weight — same fold
     # as the scorer path's idf scaling (dict() keeps the LAST
     # declaration of a repeated term, matching boost_of)
-    for t, b in dict(getattr(parsed, "boosts", ())).items():
+    for t, b in dict(parsed.boosts).items():
         w = F.when(F.col("term") == t, w * F.lit(b)).otherwise(w)
     scored = q.select("doc_id", "term", w.alias("w"))
     aggs = [F.sum("w").alias("score")]
@@ -165,7 +165,7 @@ def score_postings(
             agg = agg.filter(F.col("n_terms") == len(parsed.terms))
         for flag in group_flags:
             agg = agg.filter(F.col(flag) == 1)
-    elif getattr(parsed, "min_match", 0):
+    elif parsed.min_match:
         # §3.20: >= min_match satisfied clauses (plain terms count
         # individually; each group's >= 1 flag contributes one)
         sat = F.col("n_terms") if parsed.terms else F.lit(0)
@@ -279,7 +279,7 @@ def apply_doc_filters(
             out = out.join(allowed, "doc_id", "left_semi")
         else:
             raise ValueError("lang: filter requires the source table")
-    for i, (fld, val) in enumerate(getattr(parsed, "attrs", ())):
+    for i, (fld, val) in enumerate(parsed.attrs):
         adf = attr_allowed_dfs[i] if attr_allowed_dfs else None
         if adf is not None:
             out = out.join(adf.select("doc_id"), "doc_id", "left_semi")
@@ -299,7 +299,7 @@ def apply_doc_filters(
             )
         else:
             raise ValueError(f"{fld}: filter requires the source table")
-    for fld, lo, hi in getattr(parsed, "ranges", ()):
+    for fld, lo, hi in parsed.ranges:
         # numeric range filter (round-6 §3.13), no-index fallback: a
         # plain predicate semi-join on the source table (the index path
         # serves it from the encoded attr postings instead)
@@ -313,7 +313,7 @@ def apply_doc_filters(
         out = out.join(
             source_df.filter(pred).select("doc_id"), "doc_id", "left_semi"
         )
-    for pi, ph in enumerate(getattr(parsed, "phrases", ())):
+    for pi, ph in enumerate(parsed.phrases):
         if tokenized_df is None:
             raise ValueError(
                 "phrase filter on the no-index path requires the tokenized "
@@ -331,10 +331,10 @@ def apply_doc_filters(
         )
         match = tokenized_df.filter(pred).select("doc_id")
         out = out.join(match, "doc_id", "left_semi")
-    ex_prefixes = getattr(parsed, "exclude_prefixes", ())
-    ex_fuzzies = getattr(parsed, "exclude_fuzzies", ())
-    ex_groups = getattr(parsed, "exclude_groups", ())
-    ex_wildcards = getattr(parsed, "exclude_wildcards", ())
+    ex_prefixes = parsed.exclude_prefixes
+    ex_fuzzies = parsed.exclude_fuzzies
+    ex_groups = parsed.exclude_groups
+    ex_wildcards = parsed.exclude_wildcards
     if parsed.exclude or ex_prefixes or ex_fuzzies or ex_groups or ex_wildcards:
         from xsearch_spark.constants import fuzzy_candidates, wildcard_regex
 

@@ -33,6 +33,7 @@ loop (the input_hint forbids per-row Python):
 from __future__ import annotations
 
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 import re
 
@@ -62,14 +63,6 @@ from xsearch_spark.constants import (
 from xsearch_spark.functions import codec
 from xsearch_spark.functions.buckets import buckets_of
 from xsearch_spark.plans.query import ParsedQuery
-
-TOPK_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("score", DoubleType(), False),
-    ]
-)
-
 
 def _w(idf: float, tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     tf = tf.astype(np.float64)
@@ -128,7 +121,7 @@ def score_shard(
     (rounded_score, doc_id) cursor — only docs strictly after it in
     the (round6 DESC, doc_id ASC) order survive, and the returned
     scores are the ROUNDED values (the paging order's own key)."""
-    if getattr(parsed, "phrases", ()) and parsed.connective != "AND":
+    if parsed.phrases and parsed.connective != "AND":
         # parse() forces AND whenever phrases exist; a hand-built
         # ParsedQuery(connective='OR', phrases=...) would otherwise pass
         # the top-k-pruned OR candidate set (NOT a superset of all
@@ -138,7 +131,7 @@ def score_shard(
             "phrase queries require AND semantics (parse() enforces this); "
             "got a ParsedQuery with phrases and connective='OR'"
         )
-    if getattr(parsed, "min_match", 0) and parsed.connective != "OR":
+    if parsed.min_match and parsed.connective != "OR":
         # parse() rejects min_match under AND; a hand-built ParsedQuery
         # would otherwise silently ignore it (AND already requires all)
         raise ValueError(
@@ -146,56 +139,36 @@ def score_shard(
             "got a ParsedQuery with min_match and connective='AND'"
         )
     present = [t for t in parsed.terms if t in lists]
-    # prefix groups (round-6, FIXTURES.md §3.10): each group's local
-    # members are the shard's vocabulary terms under the prefix; the
+    # term groups: prefix (round-6, FIXTURES.md §3.10 — the shard's
+    # vocabulary terms under the prefix), fuzzy (§3.12 — the exactly-
+    # enumerated d=1 neighborhood), boolean OR (§3.19 — an explicit
+    # member set) and wildcard (§3.24 — anchored-glob membership). A
     # group behaves like ONE query term whose posting list is the union
-    # of its members' lists, while members score individually below
-    prefixes = tuple(getattr(parsed, "prefixes", ()))
-    pfx_members = {
-        p: [t for t in lists if t.startswith(p) and t not in parsed.terms]
-        for p in prefixes
-    }
-    # fuzzy groups (round-6, FIXTURES.md §3.12): same group semantics as
-    # prefixes, membership by the exactly-enumerated d=1 neighborhood.
-    # Boolean OR-groups (round-6, FIXTURES.md §3.19) are the same shape
-    # again with the member set explicit — they share this list
-    fuzzy_sets = [
-        frozenset(fuzzy_candidates(b)) for b in getattr(parsed, "fuzzies", ())
-    ] + [frozenset(g) for g in getattr(parsed, "groups", ())]
-    fz_members = [
-        [t for t in lists if t in s and t not in parsed.terms] for s in fuzzy_sets
+    # of its local members' lists, while members score individually
+    fuzzy_sets = [frozenset(fuzzy_candidates(b)) for b in parsed.fuzzies] + [
+        frozenset(g) for g in parsed.groups
     ]
-    # wildcard groups (round-6, FIXTURES.md §3.24): prefix-group shape
-    # with anchored-glob membership over the shard vocabulary
-    wc_regexes = [
-        re.compile(wildcard_regex(w)) for w in getattr(parsed, "wildcards", ())
-    ]
-    wc_members = [
-        [t for t in lists if rx.fullmatch(t) and t not in parsed.terms]
-        for rx in wc_regexes
-    ]
-    scored_terms = (
-        present
-        + [t for ms in pfx_members.values() for t in ms]
-        + [t for ms in fz_members for t in ms]
-        + [t for ms in wc_members for t in ms]
+    wc_regexes = [re.compile(wildcard_regex(w)) for w in parsed.wildcards]
+    member_sets = (
+        [[t for t in lists if t.startswith(p)] for p in parsed.prefixes]
+        + [[t for t in lists if t in s] for s in fuzzy_sets]
+        + [[t for t in lists if rx.fullmatch(t)] for rx in wc_regexes]
     )
-    scored_terms = list(dict.fromkeys(scored_terms))
+    # a member that is also a plain term scores once, as the plain term
+    scored_terms = list(
+        dict.fromkeys(
+            present
+            + [t for ms in member_sets for t in ms if t not in parsed.terms]
+        )
+    )
     if not scored_terms:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     if parsed.connective == "AND":
         if len(present) != len(parsed.terms):
             return np.empty(0, np.int64), np.empty(0, np.float64)
         group_lists = [lists[t][0] for t in present]
-        member_sets = (
-            [[t for t in lists if t.startswith(p)] for p in prefixes]
-            + [[t for t in lists if t in s] for s in fuzzy_sets]
-            + [[t for t in lists if rx.fullmatch(t)] for rx in wc_regexes]
-        )
         for group in member_sets:
-            # a member that is also a plain term still satisfies the
-            # group — re-include it here (pfx_members/fz_members keep it
-            # out of scored_terms only to avoid double counting)
+            # a member that is also a plain term still satisfies the group
             members = [lists[t][0] for t in group]
             if not members:  # no expansion in this shard -> no match
                 return np.empty(0, np.int64), np.empty(0, np.float64)
@@ -212,9 +185,9 @@ def score_shard(
             if cand.size == 0:
                 return np.empty(0, np.int64), np.empty(0, np.float64)
     else:
-        msm = int(getattr(parsed, "min_match", 0) or 0)
+        msm = parsed.min_match
         clause_arrays = (
-            _msm_clause_arrays(present, prefixes, fuzzy_sets, wc_regexes, lists)
+            _msm_clause_arrays(present, member_sets, lists)
             if msm
             else None
         )
@@ -234,13 +207,13 @@ def score_shard(
         if msm:  # §3.20: >= msm satisfied clauses (only a filter)
             cand = cand[_msm_count(cand, clause_arrays) >= msm]
     cand = _apply_filters(cand, exclude_lists, allowed)
-    if getattr(parsed, "phrases", ()):
+    if parsed.phrases:
         cand = _phrase_filter(
             cand,
             parsed.phrases,
             pos_lists or {},
-            getattr(parsed, "phrase_slops", ()),
-            getattr(parsed, "phrase_prefixes", ()),
+            parsed.phrase_slops,
+            parsed.phrase_prefixes,
         )
     if cand.size == 0:
         return np.empty(0, np.int64), np.empty(0, np.float64)
@@ -496,19 +469,12 @@ def _after_keep(
 
 def _msm_clause_arrays(
     present: list[str],
-    prefixes: tuple[str, ...],
-    fuzzy_sets: list[frozenset[str]],
-    wc_regexes: "list[re.Pattern[str]]",
+    member_sets: list[list[str]],
     lists: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]],
 ) -> list[np.ndarray]:
     """One sorted-unique doc array per positive CLAUSE (§3.20): each
     present plain term, then each prefix/fuzzy/boolean/wildcard group
     (the union of its local members' lists — satisfied by >= 1)."""
-    member_sets = (
-        [[t for t in lists if t.startswith(p)] for p in prefixes]
-        + [[t for t in lists if t in s] for s in fuzzy_sets]
-        + [[t for t in lists if rx.fullmatch(t)] for rx in wc_regexes]
-    )
     return [lists[t][0] for t in present] + [
         np.unique(np.concatenate([lists[t][0] for t in ms]))
         if ms
@@ -766,7 +732,6 @@ def _assemble_shard(
     return lists, blocks, ex_lists, dfs, attr_lists, pos_lists
 
 
-_EMPTY_TOPK = {"doc_id": np.empty(0, np.int64), "score": np.empty(0, np.float64)}
 _EMPTY_I64 = np.empty(0, np.int64)
 
 
@@ -782,7 +747,7 @@ def _attr_range_specs(built, parsed: ParsedQuery) -> list[tuple[str, str]]:
     )
 
     out: list[tuple[str, str]] = []
-    for fld, lo, hi in getattr(parsed, "ranges", ()):
+    for fld, lo, hi in parsed.ranges:
         if not built.has_num_attr(fld):
             raise ValueError(
                 f"{fld}: range filter requires the field in the index's "
@@ -827,7 +792,7 @@ def _scaled_idfs(idfs: dict[str, float], parsed: ParsedQuery) -> dict[str, float
     map: boost·w(t,d) == (boost·idf)·tf·(k1+1)/(...), so scaling idf is
     the complete implementation — WAND's block-max bounds derive from
     the same map and stay valid upper bounds automatically."""
-    boosts = dict(getattr(parsed, "boosts", ()))
+    boosts = dict(parsed.boosts)
     if not boosts:
         return idfs
     return {t: v * boosts.get(t, 1.0) for t, v in idfs.items()}
@@ -841,13 +806,13 @@ def _fuzzy_unions(parsed: ParsedQuery) -> tuple[frozenset[str], frozenset[str]]:
     ordinary bucket-pruned exact-term scan: neither needs a dictionary
     walk (unlike prefix groups)."""
     pos = frozenset(
-        t for b in getattr(parsed, "fuzzies", ()) for t in fuzzy_candidates(b)
-    ) | frozenset(t for g in getattr(parsed, "groups", ()) for t in g)
+        t for b in parsed.fuzzies for t in fuzzy_candidates(b)
+    ) | frozenset(t for g in parsed.groups for t in g)
     neg = frozenset(
         t
-        for b in getattr(parsed, "exclude_fuzzies", ())
+        for b in parsed.exclude_fuzzies
         for t in fuzzy_candidates(b)
-    ) | frozenset(t for g in getattr(parsed, "exclude_groups", ()) for t in g)
+    ) | frozenset(t for g in parsed.exclude_groups for t in g)
     return pos, neg
 
 
@@ -856,7 +821,7 @@ def _phrase_terms(built, parsed: ParsedQuery) -> frozenset[str]:
     carries the positional stream — a phrase cannot be served without
     it, and falling back to a source scan would be the 10^12-doc
     anti-pattern."""
-    terms = {t for ph in getattr(parsed, "phrases", ()) for t in ph}
+    terms = {t for ph in parsed.phrases for t in ph}
     if terms and not built.has_positions:
         raise ValueError(
             "phrase query requires an index built with positions=True "
@@ -892,7 +857,7 @@ def _phrase_pos_need(built, parsed: ParsedQuery) -> "_PosNeed":
     positional-index validation of ``_phrase_terms``) plus the §3.28
     phrase-prefix bodies."""
     return _PosNeed(
-        _phrase_terms(built, parsed), getattr(parsed, "phrase_prefixes", ())
+        _phrase_terms(built, parsed), parsed.phrase_prefixes
     )
 
 
@@ -905,7 +870,7 @@ def _attr_filter_terms(built, parsed: ParsedQuery) -> list[str]:
     from xsearch_spark.constants import num_attr_encode
 
     out: list[str] = []
-    for fld, val in getattr(parsed, "attrs", ()):
+    for fld, val in parsed.attrs:
         if not built.has_attr(fld):
             raise ValueError(
                 f"{fld}: filter requires an index built with attr_cols "
@@ -927,22 +892,20 @@ def _attr_filter_terms(built, parsed: ParsedQuery) -> list[str]:
 
 
 def _aux_doc_side(
-    lang: str | None,
+    langs: list[str],
     source_df: DataFrame | None,
     tombstones: DataFrame | None,
     docs_per_shard: int,
-    langs: list[str] | None = None,
 ) -> DataFrame | None:
     """The doc-side input of the scorer cogroup: lang-allowlist rows and
     tombstone rows in ONE DataFrame keyed by the shard doc-range, so one
     co-shuffle carries every per-doc filter to its postings. Columns:
     (doc_id, lang, tomb, shard); None when neither filter is present."""
     aux: DataFrame | None = None
-    want_langs = langs if langs is not None else ([lang] if lang is not None else [])
-    if want_langs:
+    if langs:
         if source_df is None:
             raise ValueError("lang: filter requires source_df")
-        aux = source_df.filter(F.col("lang").isin(want_langs)).select(
+        aux = source_df.filter(F.col("lang").isin(langs)).select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("lang"),
             F.lit(False).alias("tomb"),
@@ -961,6 +924,263 @@ def _aux_doc_side(
     )
 
 
+@dataclass(frozen=True, eq=False)
+class _QueryPlan:
+    """One ParsedQuery compiled once (``_compile``) for the shard scorer
+    (``_score_plans``): what its pruned scan reads, how each scanned
+    term routes, and which allowlists, positions and cursor it needs."""
+
+    parsed: ParsedQuery
+    # exact scan terms: terms, excludes, fuzzy and group members (both
+    # signs) and the required index-side attr terms
+    scan_terms: tuple[str, ...]
+    # prefixes, exclusion prefixes and wildcard literal prefixes (§3.24:
+    # the scan is bounded by the literal before the first '*'; glob
+    # membership narrows executor-side)
+    scan_prefixes: tuple[str, ...]
+    range_specs: tuple[tuple[str, str], ...]
+    # synthetic attr terms whose postings AND into the allowlist
+    allow_terms: tuple[str, ...]
+    # the lang the source cogroup serves: set only on an index built
+    # without the lang attr (attr_cols=None)
+    cogroup_lang: str | None
+    pos_need: _PosNeed
+    after: tuple[float, int] | None
+    # what route() reads beside parsed.prefixes / parsed.exclude_prefixes
+    exclude_terms: frozenset[str]
+    exclude_rx: "tuple[re.Pattern[str], ...]"
+    score_terms: frozenset[str]
+    score_rx: "tuple[re.Pattern[str], ...]"
+
+    def route(self, t: str) -> bool | None:
+        """True when the plan scores term ``t``, False when ``t``'s docs
+        are excluded, None when the plan has no use for ``t``. Exclusion
+        (exact, prefix, fuzzy neighborhood, group or wildcard) wins over
+        a positive match."""
+        p = self.parsed
+        if (
+            t in self.exclude_terms
+            or (p.exclude_prefixes and t.startswith(p.exclude_prefixes))
+            or any(rx.fullmatch(t) for rx in self.exclude_rx)
+        ):
+            return False
+        if (
+            t in self.score_terms
+            or (p.prefixes and t.startswith(p.prefixes))
+            or any(rx.fullmatch(t) for rx in self.score_rx)
+        ):
+            return True
+        return None
+
+    @property
+    def one_exact_term(self) -> bool:
+        """The plan reads only the rows of its one query term: no
+        exclusion, allowlist, prefix, fuzzy, group, wildcard or range
+        rows ride its scan, so each (term, shard) run scores alone."""
+        return (
+            len(self.parsed.terms) == 1
+            and self.scan_terms == self.parsed.terms
+            and not (self.scan_prefixes or self.range_specs)
+        )
+
+
+def _compile(
+    built, parsed: ParsedQuery, after: tuple[float, int] | None = None
+) -> _QueryPlan:
+    """Compile ``parsed`` against ``built``. Every index-dependent check
+    (attr fields, positions, numeric ranges) raises here, before any
+    Spark work."""
+    fz_pos, fz_neg = _fuzzy_unions(parsed)
+    lang_attr = parsed.lang is not None and built.has_attr("lang")
+    allow_terms = (
+        [attr_term("lang", parsed.lang)] if lang_attr else []
+    ) + _attr_filter_terms(built, parsed)
+    pos_need = _phrase_pos_need(built, parsed)
+    range_specs = tuple(_attr_range_specs(built, parsed))
+    exact = list(parsed.terms) + list(parsed.exclude)
+    return _QueryPlan(
+        parsed=parsed,
+        # fuzzy neighborhoods and group members ride the bucket-pruned
+        # exact scan (the point of the closed-form d=1 enumeration)
+        scan_terms=tuple(
+            exact + sorted((fz_pos | fz_neg) - set(exact)) + allow_terms
+        ),
+        scan_prefixes=parsed.prefixes
+        + parsed.exclude_prefixes
+        + tuple(
+            wildcard_scan_prefix(w)
+            for w in parsed.wildcards + parsed.exclude_wildcards
+        ),
+        range_specs=range_specs,
+        allow_terms=tuple(allow_terms),
+        cogroup_lang=None if lang_attr else parsed.lang,
+        pos_need=pos_need,
+        after=after,
+        exclude_terms=frozenset(parsed.exclude) | fz_neg,
+        exclude_rx=tuple(
+            re.compile(wildcard_regex(w)) for w in parsed.exclude_wildcards
+        ),
+        score_terms=frozenset(parsed.terms) | fz_pos,
+        score_rx=tuple(re.compile(wildcard_regex(w)) for w in parsed.wildcards),
+    )
+
+
+BATCH_TOPK_SCHEMA = StructType(
+    [
+        StructField("query_id", StringType(), False),
+        StructField("doc_id", LongType(), False),
+        StructField("score", DoubleType(), False),
+    ]
+)
+
+_EMPTY_OUT = {
+    "query_id": pd.Series(dtype=object),
+    "doc_id": _EMPTY_I64,
+    "score": np.empty(0, np.float64),
+}
+
+
+def _score_plans(
+    built,
+    plans: dict[str, _QueryPlan],
+    k: int,
+    source_df: DataFrame | None,
+    tombstones: DataFrame | None,
+) -> DataFrame:
+    """The one shard scorer -> (query_id, doc_id, score): every plan's
+    exact LOCAL top-k in each shard.
+
+    One pruned scan reads the union of the plans' scans; each shard task
+    decodes that union once and slices it per plan through the plan's
+    routing predicate. The per-doc filters the index does not carry —
+    tombstones, and lang: on an index built without the lang attr — ride
+    one shard-keyed cogroup (``_aux_doc_side``)."""
+    scan_terms = sorted({t for p in plans.values() for t in p.scan_terms})
+    scan_prefixes = sorted({b for p in plans.values() for b in p.scan_prefixes})
+    range_specs = sorted({s for p in plans.values() for s in p.range_specs})
+    spec_idx = {s: i for i, s in enumerate(range_specs)}
+    allow_terms = frozenset(t for p in plans.values() for t in p.allow_terms)
+    pos_need = _PosNeed(
+        {t for p in plans.values() for t in p.pos_need.exact},
+        sorted({b for p in plans.values() for b in p.pos_need.prefixes}),
+    )
+    rows = pruned_index_scan_prefix(
+        built.index_df,
+        scan_terms,
+        scan_prefixes,
+        built.num_buckets,
+        term_ranges=range_specs,
+    )
+    rows = _project_scorer_cols(rows, bool(pos_need))
+    n_docs, avgdl = built.n_docs, built.avgdl
+
+    def score_rows(
+        g: pd.DataFrame, by_lang: dict[str, np.ndarray], tombs: np.ndarray
+    ) -> pd.DataFrame:
+        # shards holding only allowlist/exclusion runs can't contribute;
+        # skip before decoding (a hot lang list + rare term query would
+        # otherwise decode huge allowlists in shards the term never hits)
+        terms = g["term"].unique()
+        if not any(p.route(t) for p in plans.values() for t in terms):
+            return pd.DataFrame(_EMPTY_OUT)
+        # numeric range rows (round-6 §3.13) are interval-membership
+        # allowlist carriers — split them out before posting assembly
+        g, range_lists = _split_range_rows(g, range_specs)
+        lists, blocks, _, dfs, attr_lists, pos_lists = _assemble_shard(
+            g, set(), avgdl, allow_terms, pos_need
+        )
+        out = []
+        for qid, p in plans.items():
+            routes = {t: p.route(t) for t in lists}
+            q_lists = {t: lists[t] for t, r in routes.items() if r}
+            ex = [lists[t][0] for t, r in routes.items() if r is False]
+            if tombs.size:
+                ex.append(tombs)
+            allowed = (
+                None
+                if p.cogroup_lang is None
+                else by_lang.get(p.cogroup_lang, _EMPTY_I64)
+            )
+            # AND-intersect every index-side allowlist into `allowed`
+            for lst in [attr_lists.get(t, _EMPTY_I64) for t in p.allow_terms] + [
+                range_lists[spec_idx[s]] for s in p.range_specs
+            ]:
+                allowed = (
+                    lst
+                    if allowed is None
+                    else np.intersect1d(allowed, lst, assume_unique=True)
+                )
+            idfs = _scaled_idfs(
+                {t: idf_py(n_docs, dfs[t]) for t in q_lists}, p.parsed
+            )
+            out.append(
+                (qid,)
+                + score_shard(
+                    q_lists, {t: blocks[t] for t in q_lists}, idfs, avgdl,
+                    p.parsed, k, ex, allowed, pos_lists, p.after,
+                )
+            )
+        # one frame per shard, however many plans
+        qids, ids, scores = zip(*out)
+        return pd.DataFrame(
+            {
+                "query_id": np.repeat(
+                    np.array(qids, dtype=object), [a.size for a in ids]
+                ),
+                "doc_id": np.concatenate(ids),
+                "score": np.concatenate(scores),
+            }
+        )
+
+    aux = _aux_doc_side(
+        sorted({p.cogroup_lang for p in plans.values()} - {None}),
+        source_df,
+        tombstones,
+        built.docs_per_shard,
+    )
+    if aux is not None:
+
+        def cogroup_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            if left.empty:
+                return pd.DataFrame(_EMPTY_OUT)
+            tomb_mask = right["tomb"].to_numpy(bool)
+            by_lang = {
+                lang: np.sort(grp["doc_id"].to_numpy(np.int64))
+                for lang, grp in right[~tomb_mask].groupby("lang", sort=False)
+            }
+            tombs = np.sort(right["doc_id"].to_numpy(np.int64)[tomb_mask])
+            return score_rows(left, by_lang, tombs)
+
+        return (
+            rows.groupBy("shard")
+            .cogroup(aux.groupBy("shard"))
+            .applyInPandas(cogroup_fn, BATCH_TOPK_SCHEMA)
+        )
+
+    def shard_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # group rows by shard within the partition; the scan holds query
+        # terms only, so concat-then-group is safe here
+        frames = [f for f in batches if not f.empty]
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True)
+        for _, g in pdf.groupby("shard", sort=False):
+            yield score_rows(g, {}, _EMPTY_I64)
+
+    if not (
+        built.unique_term_shard and all(p.one_exact_term for p in plans.values())
+    ):
+        # co-locate every run of a shard in one task. Plans that each read
+        # one term's runs need no exchange: every (term, shard) run scores
+        # alone wherever the scan read it — one stage instead of two for
+        # the commonest query shape. Gated on unique_term_shard (round-4
+        # advisor): an index that can repeat (term, shard) keys — a raw
+        # union of merged indexes — must shuffle so _assemble_shard's
+        # repeated-key guard sees all runs of a key together.
+        rows = rows.repartition("shard")
+    return rows.mapInPandas(shard_iter, BATCH_TOPK_SCHEMA)
+
+
 def search_wand(
     built,
     parsed: ParsedQuery,
@@ -970,14 +1190,20 @@ def search_wand(
     after: tuple[float, int] | None = None,
 ) -> DataFrame:
     """Engine-path search over the packed index -> (doc_id, score) exact
-    top-k (raw scores; caller rounds for presentation).
+    top-k (raw scores; caller rounds for presentation). The query runs
+    as a batch of one through the shard scorer (``_score_plans``); the
+    per-shard top-k's merge in one TakeOrderedAndProject.
 
-    A warm query is ONE Spark job with ZERO driver-side stats state:
-    bucket ids come from driver-side Python (functions.buckets), per-term
-    df rides ON the index rows themselves (denormalized at merge time
-    — segments.merge_to_index), so idf is computed executor-side from the
+    A warm query holds ZERO driver-side stats state: bucket ids come
+    from driver-side Python (functions.buckets), per-term df rides ON
+    the index rows themselves (denormalized at merge time —
+    segments.merge_to_index), so idf is computed executor-side from the
     pruned scan. The only driver scalars are (n_docs, avgdl) from the
-    stats sidecar.
+    stats sidecar. On the shuffled path a warm query runs as TWO Spark
+    jobs: the shard exchange's map stage, then the scorer and the top-k
+    merge (the traced serve benchmark reads topk.jobs = 2). The
+    no-exchange path runs as one; the doc-side cogroup adds the
+    exchange of its aux side.
 
     ``lang:`` filtering (v5 index): the attribute is indexed as a
     synthetic posting list (``attr_term("lang", x)``, build-time), so the
@@ -1003,165 +1229,14 @@ def search_wand(
     engine path serves correct results between compactions with no extra
     Spark job and no driver-side delete set.
     """
-    all_terms = list(parsed.terms) + list(parsed.exclude)
-    prefixes = tuple(getattr(parsed, "prefixes", ()))
-    exclude_prefixes = tuple(getattr(parsed, "exclude_prefixes", ()))
-    # wildcard groups (§3.24): scan bounded by the literal prefix
-    # before the first '*'; glob membership narrows executor-side
-    wildcards = tuple(getattr(parsed, "wildcards", ()))
-    exclude_wildcards = tuple(getattr(parsed, "exclude_wildcards", ()))
-    wc_pos_rx = tuple(re.compile(wildcard_regex(w)) for w in wildcards)
-    wc_neg_rx = tuple(
-        re.compile(wildcard_regex(w)) for w in exclude_wildcards
+    local = _score_plans(
+        built, {"_": _compile(built, parsed, after)}, k, source_df, tombstones
     )
-    wc_scan_prefixes = [
-        wildcard_scan_prefix(w) for w in wildcards + exclude_wildcards
-    ]
-    fz_pos, fz_neg = _fuzzy_unions(parsed)
-    use_attr_lang = parsed.lang is not None and built.has_attr("lang")
-    lang_term = attr_term("lang", parsed.lang) if use_attr_lang else None
-    extra_attr_terms = _attr_filter_terms(built, parsed)
-    required_attr_terms = ([lang_term] if lang_term else []) + extra_attr_terms
-    phrase_terms = _phrase_pos_need(built, parsed)
-    range_specs = _attr_range_specs(built, parsed)
-    # fuzzy neighborhoods ride the exact-term scan (bucket-pruned — the
-    # whole point of the closed-form d=1 enumeration)
-    scan_terms = (
-        all_terms
-        + sorted((fz_pos | fz_neg) - set(all_terms))
-        + required_attr_terms
+    return (
+        local.drop("query_id")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
     )
-    rows = pruned_index_scan_prefix(
-        built.index_df,
-        scan_terms,
-        list(prefixes) + list(exclude_prefixes) + wc_scan_prefixes,
-        built.num_buckets,
-        term_ranges=range_specs,
-    )
-    rows = _project_scorer_cols(rows, bool(phrase_terms))
-    n_docs, avgdl = built.n_docs, built.avgdl
-    # exclusion wins over positive membership for fuzzy exactly as for
-    # exact/prefix exclusion: fold the neighborhood into the exclude set
-    exclude_terms = set(parsed.exclude) | set(fz_neg)
-    positive_terms = set(parsed.terms)
-    attr_set = frozenset(required_attr_terms)
-
-    def score_group(
-        g: pd.DataFrame, allowed: np.ndarray | None, tombs: np.ndarray | None = None
-    ) -> pd.DataFrame:
-        # shards holding only attr/exclude runs can't contribute results;
-        # skip before decoding (a hot lang list + rare term query would
-        # otherwise decode huge allowlists in shards the term never hits)
-        positive = g["term"].isin(positive_terms)
-        if prefixes:
-            positive = positive | g["term"].str.startswith(tuple(prefixes))
-        if fz_pos:
-            positive = positive | g["term"].isin(fz_pos)
-        for rx in wc_pos_rx:
-            positive = positive | g["term"].str.fullmatch(rx).fillna(False)
-        if not positive.any():
-            return pd.DataFrame(_EMPTY_TOPK)
-        # numeric range rows (round-6 §3.13) are interval-membership
-        # allowlist carriers — split them out before posting assembly
-        g, range_lists = _split_range_rows(g, range_specs)
-        lists, blocks, ex_lists, dfs, attr_lists, pos_lists = _assemble_shard(
-            g, exclude_terms, avgdl, attr_set, phrase_terms, exclude_prefixes,
-            wc_neg_rx,
-        )
-        # AND-intersect every index-side attr allowlist into `allowed`
-        # (which may already hold the cogroup lang allowlist)
-        for t_attr in required_attr_terms:
-            lst = attr_lists.get(t_attr, _EMPTY_I64)
-            allowed = (
-                lst
-                if allowed is None
-                else np.intersect1d(allowed, lst, assume_unique=True)
-            )
-        for lst in range_lists:
-            allowed = (
-                lst
-                if allowed is None
-                else np.intersect1d(allowed, lst, assume_unique=True)
-            )
-        if tombs is not None and tombs.size:
-            ex_lists = ex_lists + [tombs]
-        idfs = _scaled_idfs({t: idf_py(n_docs, dfs[t]) for t in lists}, parsed)
-        ids_out, scores_out = score_shard(
-            lists, blocks, idfs, avgdl, parsed, k, ex_lists, allowed,
-            pos_lists, after,
-        )
-        return pd.DataFrame({"doc_id": ids_out, "score": scores_out})
-
-    aux = _aux_doc_side(
-        None if use_attr_lang else parsed.lang,
-        source_df,
-        tombstones,
-        built.docs_per_shard,
-    )
-    if aux is not None:
-        has_lang = parsed.lang is not None and not use_attr_lang
-
-        def cogroup_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return pd.DataFrame(_EMPTY_TOPK)
-            doc_ids = right["doc_id"].to_numpy(np.int64)
-            tomb_mask = right["tomb"].to_numpy(bool)
-            tombs = np.sort(doc_ids[tomb_mask])
-            allowed = np.sort(doc_ids[~tomb_mask]) if has_lang else None
-            return score_group(left, allowed, tombs)
-
-        local = (
-            rows.groupBy("shard")
-            .cogroup(aux.groupBy("shard"))
-            .applyInPandas(cogroup_fn, TOPK_SCHEMA)
-        )
-    else:
-
-        def wand_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # group rows by shard within the partition; shards are small
-            # (query terms only), so concat-then-group is safe here.
-            frames = [f for f in batches if not f.empty]
-            if not frames:
-                return
-            pdf = pd.concat(frames, ignore_index=True)
-            for _, g in pdf.groupby("shard", sort=False):
-                yield score_group(g, None)
-
-        if (
-            len(parsed.terms) == 1
-            and not exclude_terms
-            and not required_attr_terms
-            and not prefixes
-            and not exclude_prefixes
-            and not fz_pos
-            and not wc_pos_rx
-            and not wc_neg_rx
-            and not range_specs
-            and built.unique_term_shard
-        ):
-            # single-term query: every (term, shard) run scores alone —
-            # nothing to co-locate, so skip the shard exchange entirely
-            # and score runs wherever the pruned scan read them (the
-            # within-partition shard groupby degenerates to one row per
-            # group). One stage instead of two for the most common
-            # query shape. Gated on unique_term_shard (round-4 advisor):
-            # an index that can repeat (term, shard) keys — a raw union
-            # of merged indexes — must take the shuffled path so
-            # _assemble_shard's repeated-key guard sees all runs of a key
-            # together.
-            local = rows.mapInPandas(wand_iter, TOPK_SCHEMA)
-        else:
-            local = rows.repartition("shard").mapInPandas(wand_iter, TOPK_SCHEMA)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-BATCH_TOPK_SCHEMA = StructType(
-    [
-        StructField("query_id", StringType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("score", DoubleType(), False),
-    ]
-)
 
 
 def search_wand_batch(
@@ -1171,8 +1246,8 @@ def search_wand_batch(
     source_df: DataFrame | None = None,
     tombstones: DataFrame | None = None,
 ) -> DataFrame:
-    """Batched engine-path search: M queries in ONE Spark job ->
-    (query_id, doc_id, score) exact top-k per query.
+    """Batched engine-path search: M queries through one pruned scan and
+    one scorer stage -> (query_id, doc_id, score) exact top-k per query.
 
     Interactive p50 is dominated by per-job scheduling overhead (~0.3 s
     on this box), not scoring — a proxy serving a query stream should
@@ -1189,243 +1264,10 @@ def search_wand_batch(
     shard-keyed cogroup and are excluded from every query's results —
     fresh deletes are visible to the whole batch with no extra job.
     """
-    all_terms = sorted(
-        {t for p in queries.values() for t in list(p.terms) + list(p.exclude)}
-    )
-    # prefix groups (round-6): the scan covers the union of every
-    # query's positive and exclusion prefixes; per-query membership is
-    # re-derived executor-side by string match when slicing
-    all_prefixes = sorted(
-        {
-            pre
-            for p in queries.values()
-            for pre in list(getattr(p, "prefixes", ()))
-            + list(getattr(p, "exclude_prefixes", ()))
-        }
-    )
-    # wildcard groups (round-6 §3.24): the scan covers the union of
-    # every query's pattern prefixes; per-query membership re-derives
-    # executor-side by anchored-glob match
-    q_wc = {
-        qid: (
-            tuple(
-                re.compile(wildcard_regex(w))
-                for w in getattr(p, "wildcards", ())
-            ),
-            tuple(
-                re.compile(wildcard_regex(w))
-                for w in getattr(p, "exclude_wildcards", ())
-            ),
-        )
-        for qid, p in queries.items()
-    }
-    all_wc_prefixes = sorted(
-        {
-            wildcard_scan_prefix(w)
-            for p in queries.values()
-            for w in list(getattr(p, "wildcards", ()))
-            + list(getattr(p, "exclude_wildcards", ()))
-        }
-    )
-    all_pos_rx = tuple(
-        re.compile(wildcard_regex(w))
-        for w in sorted(
-            {w for p in queries.values() for w in getattr(p, "wildcards", ())}
-        )
-    )
-    # fuzzy groups (round-6): per-query enumerated neighborhoods; the
-    # scan covers their union as ordinary exact terms
-    q_fuzzy = {qid: _fuzzy_unions(p) for qid, p in queries.items()}
-    all_fuzzy = sorted(
-        {t for pos, neg in q_fuzzy.values() for t in pos | neg}
-    )
-    langs = sorted({p.lang for p in queries.values() if p.lang is not None})
-    use_attr_lang = bool(langs) and built.has_attr("lang")
-    lang_terms = (
-        {lang: attr_term("lang", lang) for lang in langs} if use_attr_lang else {}
-    )
-    # generic field:value filters per query (round-5): index-side only
-    q_attr_terms = {qid: _attr_filter_terms(built, p) for qid, p in queries.items()}
-    extra_attr_union = sorted({t for ts in q_attr_terms.values() for t in ts})
-    # numeric range filters per query (round-6 §3.13): the scan covers
-    # the union of every query's intervals; per-query membership slices
-    # the shared per-interval allowlists
-    q_range_specs = {
-        qid: _attr_range_specs(built, p) for qid, p in queries.items()
-    }
-    all_range_specs = sorted(
-        {spec for specs in q_range_specs.values() for spec in specs}
-    )
-    spec_idx = {spec: i for i, spec in enumerate(all_range_specs)}
-    # phrase members per batch (v6): decode positions once for the union
-    # (exact members plus the §3.28 phrase-prefix bodies' expansions)
-    phrase_terms_all = _PosNeed(
-        {t for p in queries.values() for t in _phrase_terms(built, p)},
-        sorted(
-            {
-                b
-                for p in queries.values()
-                for b in getattr(p, "phrase_prefixes", ())
-                if b
-            }
-        ),
-    )
-    scan_terms = (
-        all_terms
-        + [t for t in all_fuzzy if t not in set(all_terms)]
-        + sorted(lang_terms.values())
-        + extra_attr_union
-    )
-    rows = pruned_index_scan_prefix(
-        built.index_df,
-        scan_terms,
-        all_prefixes + all_wc_prefixes,
-        built.num_buckets,
-        term_ranges=all_range_specs,
-    )
-    rows = _project_scorer_cols(rows, bool(phrase_terms_all))
-    n_docs, avgdl = built.n_docs, built.avgdl
-    per_q = {qid: (p, set(p.exclude)) for qid, p in queries.items()}
-    positive_all = {t for p in queries.values() for t in p.terms} | {
-        t for pos, _neg in q_fuzzy.values() for t in pos
-    }
-    positive_prefixes = tuple(
-        sorted({pre for p in queries.values() for pre in getattr(p, "prefixes", ())})
-    )
-    attr_set = set(lang_terms.values()) | set(extra_attr_union)
-
-    def score_all(
-        g: pd.DataFrame, allowed_by_lang: dict, tombs: np.ndarray | None = None
-    ) -> pd.DataFrame:
-        positive = g["term"].isin(positive_all)
-        if positive_prefixes:
-            positive = positive | g["term"].str.startswith(positive_prefixes)
-        for rx in all_pos_rx:
-            positive = positive | g["term"].str.fullmatch(rx).fillna(False)
-        if not positive.any():
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype=object), **_EMPTY_TOPK}
-            )
-        out = []
-        # decode once per UNION of terms; slice per query (range rows
-        # split out first — shared per-interval allowlists)
-        g, range_lists = _split_range_rows(g, all_range_specs)
-        lists, blocks, _, dfs, attr_lists, pos_lists = _assemble_shard(
-            g, set(), avgdl, attr_set, phrase_terms_all
-        )
-        if use_attr_lang:
-            allowed_by_lang = {
-                lang: attr_lists.get(t, _EMPTY_I64)
-                for lang, t in lang_terms.items()
-            }
-        for qid, (p, ex_terms) in per_q.items():
-            ppfx = tuple(getattr(p, "prefixes", ()))
-            expfx = tuple(getattr(p, "exclude_prefixes", ()))
-            fz_pos_q, fz_neg_q = q_fuzzy[qid]
-            wc_pos_q, wc_neg_q = q_wc[qid]
-
-            def q_has(t: str) -> bool:
-                # mirror the single-query path's _assemble_shard routing:
-                # exclusion (exact, prefixed, fuzzy-neighborhood, or
-                # wildcard) wins over positive match
-                if (
-                    t in ex_terms
-                    or (expfx and t.startswith(expfx))
-                    or t in fz_neg_q
-                    or any(rx.fullmatch(t) for rx in wc_neg_q)
-                ):
-                    return False
-                return (
-                    t in p.terms
-                    or (bool(ppfx) and t.startswith(ppfx))
-                    or t in fz_pos_q
-                    or any(rx.fullmatch(t) for rx in wc_pos_q)
-                )
-
-            q_lists = {t: lists[t] for t in lists if q_has(t)}
-            q_blocks = {t: blocks[t] for t in q_lists}
-            idfs = _scaled_idfs({t: idf_py(n_docs, dfs[t]) for t in q_lists}, p)
-            ex = [
-                lists[t][0]
-                for t in lists
-                if t in ex_terms
-                or (expfx and t.startswith(expfx))
-                or t in fz_neg_q
-                or any(rx.fullmatch(t) for rx in wc_neg_q)
-            ]
-            if tombs is not None and tombs.size:
-                ex = ex + [tombs]
-            allowed = allowed_by_lang.get(p.lang) if p.lang is not None else None
-            if p.lang is not None and allowed is None:
-                allowed = np.empty(0, np.int64)
-            for t_attr in q_attr_terms[qid]:
-                lst = attr_lists.get(t_attr, _EMPTY_I64)
-                allowed = (
-                    lst
-                    if allowed is None
-                    else np.intersect1d(allowed, lst, assume_unique=True)
-                )
-            for spec in q_range_specs[qid]:
-                lst = range_lists[spec_idx[spec]]
-                allowed = (
-                    lst
-                    if allowed is None
-                    else np.intersect1d(allowed, lst, assume_unique=True)
-                )
-            ids_out, scores_out = score_shard(
-                q_lists, q_blocks, idfs, avgdl, p, k, ex, allowed, pos_lists
-            )
-            out.append(
-                pd.DataFrame(
-                    {"query_id": qid, "doc_id": ids_out, "score": scores_out}
-                )
-            )
-        if not out:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype=object), **_EMPTY_TOPK}
-            )
-        return pd.concat(out, ignore_index=True)
-
-    aux = _aux_doc_side(
-        None,
-        source_df,
-        tombstones,
-        built.docs_per_shard,
-        langs=[] if use_attr_lang else langs,
-    )
-    if aux is not None:
-
-        def cogroup_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return pd.DataFrame({"query_id": pd.Series(dtype=object), **_EMPTY_TOPK})
-            tomb_mask = right["tomb"].to_numpy(bool)
-            tombs = np.sort(right["doc_id"].to_numpy(np.int64)[tomb_mask])
-            alw = right[~tomb_mask]
-            by_lang = {
-                lang: np.sort(grp["doc_id"].to_numpy(np.int64))
-                for lang, grp in alw.groupby("lang", sort=False)
-            }
-            return score_all(left, by_lang, tombs)
-
-        local = (
-            rows.groupBy("shard")
-            .cogroup(aux.groupBy("shard"))
-            .applyInPandas(cogroup_fn, BATCH_TOPK_SCHEMA)
-        )
-    else:
-
-        def batch_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            frames = [f for f in batches if not f.empty]
-            if not frames:
-                return
-            pdf = pd.concat(frames, ignore_index=True)
-            for _, g in pdf.groupby("shard", sort=False):
-                yield score_all(g, {})
-
-        local = rows.repartition("shard").mapInPandas(batch_iter, BATCH_TOPK_SCHEMA)
-
     from pyspark.sql import Window
 
+    plans = {qid: _compile(built, p) for qid, p in queries.items()}
+    local = _score_plans(built, plans, k, source_df, tombstones)
     # Final per-query cut. The window's input is provably bounded: every
     # shard task already emitted its LOCAL exact top-k per query, so at
     # most |queries| x num_shards x k rows reach this exchange — e.g.
@@ -1483,12 +1325,12 @@ def _index_match_scored(
     rows = pruned_index_scan_prefix(
         built.index_df,
         all_terms,
-        list(getattr(parsed, "prefixes", ()))
-        + list(getattr(parsed, "exclude_prefixes", ()))
+        list(parsed.prefixes)
+        + list(parsed.exclude_prefixes)
         + [
             wildcard_scan_prefix(w)
-            for w in list(getattr(parsed, "wildcards", ()))
-            + list(getattr(parsed, "exclude_wildcards", ()))
+            for w in list(parsed.wildcards)
+            + list(parsed.exclude_wildcards)
         ],
         built.num_buckets,
     )
@@ -2305,10 +2147,10 @@ def explain_score(built, parsed: ParsedQuery, doc_id: int) -> DataFrame:
     rows = pruned_index_scan_prefix(
         built.index_df,
         all_terms,
-        list(getattr(parsed, "prefixes", ()))
+        list(parsed.prefixes)
         + [
             wildcard_scan_prefix(w)
-            for w in getattr(parsed, "wildcards", ())
+            for w in parsed.wildcards
         ],
         built.num_buckets,
     )
@@ -2316,7 +2158,7 @@ def explain_score(built, parsed: ParsedQuery, doc_id: int) -> DataFrame:
     long = long.filter(positive_term_pred(parsed)(F.col("term")))
     idf = idf_col(built.n_docs, F.col("df").cast("double"))
     w = bm25_weight_col(idf, F.col("tf"), F.col("dl"), built.avgdl)
-    for t, b in dict(getattr(parsed, "boosts", ())).items():
+    for t, b in dict(parsed.boosts).items():
         # §3.15: the same last-wins fold as the relational scorer
         w = F.when(F.col("term") == t, w * F.lit(b)).otherwise(w)
     from xsearch_spark.constants import SCORE_ROUND_DECIMALS

@@ -33,10 +33,10 @@ def _no_positive(parsed: ParsedQuery) -> bool:
     empty by construction."""
     return not (
         parsed.terms
-        or getattr(parsed, "prefixes", ())
-        or getattr(parsed, "fuzzies", ())
-        or getattr(parsed, "groups", ())
-        or getattr(parsed, "wildcards", ())
+        or parsed.prefixes
+        or parsed.fuzzies
+        or parsed.groups
+        or parsed.wildcards
     )
 
 
@@ -56,7 +56,7 @@ def _doc_attr_filters(
             f"AND tf.doc_id IN (SELECT doc_id FROM {table_expr} "
             f"WHERE lang = {_sql_quote(parsed.lang)})"
         )
-    for fld, val in getattr(parsed, "attrs", ()):
+    for fld, val in parsed.attrs:
         pred = (
             f"list_contains({fld}, {_sql_quote(val)})"
             if fld in array_fields
@@ -66,7 +66,7 @@ def _doc_attr_filters(
             f" AND tf.doc_id IN (SELECT doc_id FROM {table_expr} "
             f"WHERE {pred})"
         )
-    for fld, lo, hi in getattr(parsed, "ranges", ()):
+    for fld, lo, hi in parsed.ranges:
         # numeric range filters (round-6 §3.13): plain comparisons over
         # the source column — the declarative twin of the engine's
         # encoded term-interval scan
@@ -200,7 +200,7 @@ def bm25_code_sql(
     AND terms). ``derived_compounds``: run over the snake_case-fused
     derived table (the code-shaped stand-in corpus)."""
     table_expr = compound_documents_sql(table) if derived_compounds else table
-    if getattr(parsed, "phrases", ()):
+    if parsed.phrases:
         raise ValueError(
             "phrase oracle is base-variant only: the code analyzer's "
             "token emission order is not reproducible in this SQL form"
@@ -214,11 +214,11 @@ def bm25_code_sql(
     not_filter = _not_filter_sql(parsed)
     w_term = (
         ", tf.term AS term"
-        if getattr(parsed, "prefixes", ())
-        or getattr(parsed, "fuzzies", ())
-        or getattr(parsed, "groups", ())
-        or getattr(parsed, "wildcards", ())
-        or getattr(parsed, "min_match", 0)
+        if parsed.prefixes
+        or parsed.fuzzies
+        or parsed.groups
+        or parsed.wildcards
+        or parsed.min_match
         else ""
     )
     return f"""
@@ -264,7 +264,7 @@ def _boosted_w_sql(w: str, parsed: ParsedQuery) -> str:
     """Per-term boosts (round-6, FIXTURES.md §3.15): multiply the BM25
     weight by the term's declared factor (last declaration of a
     repeated term wins, matching plans.query.boost_of)."""
-    boosts = dict(getattr(parsed, "boosts", ()))
+    boosts = dict(parsed.boosts)
     if not boosts:
         return w
     cases = " ".join(
@@ -295,14 +295,14 @@ def _term_pred_sql(parsed: ParsedQuery, col: str = "tf.term") -> str:
     if parsed.terms:
         terms_list = ", ".join(_sql_quote(t) for t in parsed.terms)
         conds.append(f"{col} IN ({terms_list})")
-    for p in getattr(parsed, "prefixes", ()):
+    for p in parsed.prefixes:
         conds.append(f"starts_with({col}, {_sql_quote(p)})")
-    for b in getattr(parsed, "fuzzies", ()):
+    for b in parsed.fuzzies:
         conds.append(_lev_pred_sql(col, b))
-    for g in getattr(parsed, "groups", ()):  # §3.19: explicit member set
+    for g in parsed.groups:  # §3.19: explicit member set
         members = ", ".join(_sql_quote(t) for t in g)
         conds.append(f"{col} IN ({members})")
-    for wc in getattr(parsed, "wildcards", ()):  # §3.24: anchored glob
+    for wc in parsed.wildcards:  # §3.24: anchored glob
         conds.append(f"regexp_matches({col}, {_sql_quote(wildcard_regex(wc))})")
     return "(" + " OR ".join(conds) + ")"
 
@@ -314,14 +314,14 @@ def _not_filter_sql(parsed: ParsedQuery) -> str:
     if parsed.exclude:
         ex_list = ", ".join(_sql_quote(t) for t in parsed.exclude)
         conds.append(f"term IN ({ex_list})")
-    for p in getattr(parsed, "exclude_prefixes", ()):
+    for p in parsed.exclude_prefixes:
         conds.append(f"starts_with(term, {_sql_quote(p)})")
-    for b in getattr(parsed, "exclude_fuzzies", ()):
+    for b in parsed.exclude_fuzzies:
         conds.append(_lev_pred_sql("term", b))
-    for g in getattr(parsed, "exclude_groups", ()):  # §3.19: any member
+    for g in parsed.exclude_groups:  # §3.19: any member
         members = ", ".join(_sql_quote(t) for t in g)
         conds.append(f"term IN ({members})")
-    for wc in getattr(parsed, "exclude_wildcards", ()):  # §3.24
+    for wc in parsed.exclude_wildcards:  # §3.24
         conds.append(f"regexp_matches(term, {_sql_quote(wildcard_regex(wc))})")
     if not conds:
         return ""
@@ -336,10 +336,10 @@ def _having_sql(parsed: ParsedQuery) -> str:
     every prefix group matched by >= 1 term. The no-prefix form keeps
     the historical ``count(*) = n`` shape (the w rows are exactly the
     plain-term rows there)."""
-    prefixes = getattr(parsed, "prefixes", ())
-    fuzzies = getattr(parsed, "fuzzies", ())
-    groups = getattr(parsed, "groups", ())
-    wildcards = getattr(parsed, "wildcards", ())
+    prefixes = parsed.prefixes
+    fuzzies = parsed.fuzzies
+    groups = parsed.groups
+    wildcards = parsed.wildcards
     # one ">= 1 member present" condition per term-set group, shared by
     # the AND form (each must hold) and the msm form (each counts one)
     group_conds = (
@@ -355,7 +355,7 @@ def _having_sql(parsed: ParsedQuery) -> str:
         ]
     )
     if parsed.connective != "AND":
-        msm = int(getattr(parsed, "min_match", 0) or 0)
+        msm = int(parsed.min_match or 0)
         if not msm:
             return ""
         # §3.20: >= msm satisfied clauses — each plain term counts
@@ -405,11 +405,11 @@ def _match_ctes(
     # the w rows carry term only when the HAVING needs per-group FILTERs
     w_term = (
         ", tf.term AS term"
-        if getattr(parsed, "prefixes", ())
-        or getattr(parsed, "fuzzies", ())
-        or getattr(parsed, "groups", ())
-        or getattr(parsed, "wildcards", ())
-        or getattr(parsed, "min_match", 0)
+        if parsed.prefixes
+        or parsed.fuzzies
+        or parsed.groups
+        or parsed.wildcards
+        or parsed.min_match
         else ""
     )
     return f"""{corpus_ctes(table)}{tarr_cte},
@@ -594,7 +594,7 @@ def _phrase_sql(parsed: ParsedQuery, table: str) -> tuple[str, str]:
     over outer lambda variables and ``generate_series(a, b)`` is empty
     for a > b, so the innermost EXISTS vanishes exactly when the
     window is exhausted."""
-    phrases = getattr(parsed, "phrases", ())
+    phrases = parsed.phrases
     if not phrases:
         return "", ""
     from xsearch_spark.constants import TOKEN_SPLIT_REGEX

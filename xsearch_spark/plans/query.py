@@ -221,14 +221,14 @@ class ParsedQuery:
 
 def phrase_slop(parsed: "ParsedQuery", i: int) -> int:
     """Slop of phrase ``i`` under the empty-means-all-zero convention."""
-    slops = getattr(parsed, "phrase_slops", ())
+    slops = parsed.phrase_slops
     return slops[i] if i < len(slops) else 0
 
 
 def phrase_prefix(parsed: "ParsedQuery", i: int) -> str:
     """Prefix body of phrase ``i`` ("" = exact phrase) under the
     empty-means-all-exact convention (FIXTURES.md §3.28)."""
-    pfx = getattr(parsed, "phrase_prefixes", ())
+    pfx = parsed.phrase_prefixes
     return pfx[i] if i < len(pfx) else ""
 
 
@@ -236,7 +236,7 @@ def boost_of(parsed: "ParsedQuery", term: str) -> float:
     """The term's boost multiplier (1.0 when unboosted; last declaration
     wins — FIXTURES.md §3.15)."""
     out = 1.0
-    for t, b in getattr(parsed, "boosts", ()):
+    for t, b in parsed.boosts:
         if t == term:
             out = b
     return out

@@ -90,7 +90,7 @@ def search(index: PyRefIndex, query: str | ParsedQuery, k: int = 10, variant: st
         cand = [d for d in cand if hits[d] == len(parsed.terms)]
     if parsed.lang is not None:
         cand = [d for d in cand if index.lang.get(d) == parsed.lang]
-    for fld, val in getattr(parsed, "attrs", ()):
+    for fld, val in parsed.attrs:
         vals = (index.attrs or {}).get(fld, {})
 
         def _ok(d: int) -> bool:
@@ -100,7 +100,7 @@ def search(index: PyRefIndex, query: str | ParsedQuery, k: int = 10, variant: st
             return v == val
 
         cand = [d for d in cand if _ok(d)]
-    for ph in getattr(parsed, "phrases", ()):
+    for ph in parsed.phrases:
         want = list(ph)
         m = len(want)
         streams = index.tokens or {}
