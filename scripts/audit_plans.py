@@ -29,7 +29,7 @@ def plan_of(df) -> str:
 
 def main() -> None:
     from xsearch_spark import engine
-    from xsearch_spark.operators import build as b
+    from xsearch_spark.operators import segments as seg
     from xsearch_spark.operators.wand import pruned_index_scan, search_wand
     from xsearch_spark.plans.build_index import build_index
     from xsearch_spark.plans.query import parse
@@ -49,14 +49,15 @@ def main() -> None:
 
     sections: list[tuple[str, str, list[str], str]] = []
 
-    # 1. fused postings: must contain NO Exchange before the UDF
-    post = b.postings_with_dl_fused(docs, "text", "doc_id", "base")
+    # 1. source packer: tokenize+tf+dl+pack in one Arrow UDF
+    packed = seg.pack_from_source(docs, "text", "doc_id", "base")
     sections.append((
-        "Build stage 1 — fused tokenize+tf+dl",
-        plan_of(post),
+        "Build stage 1 — one-pass tokenize+tf+dl+pack",
+        plan_of(packed),
         ["MapInPandas"],
-        "One scan -> (optional fan-out repartition) -> Arrow UDF. No "
-        "aggregate, no join: tf/dl are complete per document.",
+        "One scan -> (doc-range repartition only when the input has too "
+        "few partitions) -> Arrow UDF. No aggregate, no join: tf/dl are "
+        "complete per document and runs are packed inside the UDF.",
     ))
 
     # 2. Q2 pruned index scan: PartitionFilters on bucket + PushedFilters on term

@@ -121,9 +121,9 @@ def test_streaming_ingest_matches_batch(spark, tmp_path):
     root = str(tmp_path / "stream_idx")
 
     corpus = engine.corpus_from_documents(spark, SF_DIR)
-    # deliberately WRONG hint: compaction must recompute the true global
+    # no avgdl hint at all: compaction must recompute the true global
     # avgdl from the per-epoch stats sidecars (round-1 advisor: drift)
-    q = start_ingest(spark, staging, root, avgdl_hint=1.0, docs_per_segment=128)
+    q = start_ingest(spark, staging, root, docs_per_segment=128)
     q.awaitTermination(120)
 
     bi = compact_segments(
@@ -172,7 +172,7 @@ def test_streaming_positional_multiattr_index(spark, tmp_path):
     docs.repartition(5).write.parquet(staging)
     root = str(tmp_path / "pos_stream_idx")
     q = start_ingest(
-        spark, staging, root, avgdl_hint=1.0, docs_per_segment=128,
+        spark, staging, root, docs_per_segment=128,
         attr_cols=("lang", "source"), positions=True,
     )
     q.awaitTermination(120)
@@ -582,7 +582,7 @@ def test_streaming_compact_shrinking_buckets_no_stale(spark, tmp_path):
     staging = str(tmp_path / "staging")
     docs.repartition(4).write.parquet(staging)
     root = str(tmp_path / "swap_idx")
-    q = start_ingest(spark, staging, root, avgdl_hint=1.0, docs_per_segment=128)
+    q = start_ingest(spark, staging, root, docs_per_segment=128)
     q.awaitTermination(120)
 
     bi8 = compact_segments(
@@ -682,7 +682,7 @@ def test_streamed_index_tombstones_and_compaction(spark, tmp_path):
     staging = str(tmp_path / "staging")
     docs.repartition(4).write.parquet(staging)
     root = str(tmp_path / "sidx")
-    q = start_ingest(spark, staging, root, avgdl_hint=1.0, docs_per_segment=128)
+    q = start_ingest(spark, staging, root, docs_per_segment=128)
     q.awaitTermination(120)
     bi = compact_segments(
         spark, root, segs_per_shard=2, num_buckets=8, docs_per_segment=128
@@ -742,7 +742,7 @@ def test_streaming_compact_attr_claim_guard(spark, tmp_path):
     docs.repartition(3).write.parquet(staging)
     root = str(tmp_path / "noattr_sidx")
     q = start_ingest(
-        spark, staging, root, avgdl_hint=1.0, docs_per_segment=128, attr_cols=None
+        spark, staging, root, docs_per_segment=128, attr_cols=None
     )
     q.awaitTermination(120)
     bi = compact_segments(
@@ -759,3 +759,111 @@ def test_streaming_compact_attr_claim_guard(spark, tmp_path):
         for r in engine.run_query(corpus, parse("lang:zh spark")).collect()
     ]
     assert got == want
+
+
+def _stream_epochs(spark, docs, root: str, **kw) -> None:
+    """Pack ``docs`` as two epochs (doc_id < 50, the rest)."""
+    from xsearch_spark.streaming.ingest import process_epoch
+
+    os.makedirs(os.path.join(root, "segments"), exist_ok=True)
+    os.makedirs(os.path.join(root, "epoch_stats"), exist_ok=True)
+    process_epoch(spark, docs.filter(F.col("doc_id") < 50), 0, root, **kw)
+    process_epoch(spark, docs.filter(F.col("doc_id") >= 50), 1, root, **kw)
+
+
+def test_streamed_attrs_follow_batch_rules(spark, tmp_path):
+    """Streamed epochs pack through the batch build's source packer, so
+    attr columns follow one set of rules: an integer column is encoded
+    order-preserving (its rows equal the batch build's and serve range
+    queries), and a float column raises the batch build's ValueError."""
+    from xsearch_spark.constants import attr_term
+    from xsearch_spark.streaming.ingest import compact_segments
+
+    af = ("lang", "n_chars")
+    docs = read_documents(spark, SF_DIR)
+    root = str(tmp_path / "num_stream_idx")
+    _stream_epochs(spark, docs, root, docs_per_segment=128, attr_cols=af)
+    bi = compact_segments(
+        spark, root, segs_per_shard=2, num_buckets=8, docs_per_segment=128
+    )
+    batch = build_index(
+        spark, docs, str(tmp_path / "num_batch_idx"),
+        text_col="text", variant="base",
+        docs_per_segment=128, segs_per_shard=2, num_buckets=8, attr_cols=af,
+    )
+    assert bi.num_attr_fields == batch.num_attr_fields == ("n_chars",)
+
+    def num_rows(ix):
+        return {
+            (r["term"], r["shard"], bytes(r["doc_ids"]), bytes(r["tfs"]),
+             bytes(r["dls"]), int(r["df"]))
+            for r in ix.index_df.filter(
+                F.col("term").startswith(attr_term("n_chars", ""))
+            ).collect()
+        }
+
+    streamed = num_rows(bi)
+    assert streamed and streamed == num_rows(batch)
+
+    parsed = parse("hash n_chars:400..530", attr_fields=af)
+    got = [
+        (r["doc_id"], round(r["score"], 6))
+        for r in search_wand(bi, parsed).collect()
+    ]
+    assert got
+    assert got == [
+        (r["doc_id"], round(r["score"], 6))
+        for r in search_wand(batch, parsed).collect()
+    ]
+    corpus = engine.corpus_from_documents(spark, SF_DIR)
+    assert got == [
+        (r["doc_id"], r["score"])
+        for r in engine.run_query(corpus, parsed).collect()
+    ]
+
+    # a float attr column: the epoch raises exactly what build_index does
+    fdocs = docs.withColumn("n_chars_f", F.col("n_chars").cast("double"))
+    froot = str(tmp_path / "float_stream_idx")
+    with pytest.raises(ValueError, match="quantized") as streamed_err:
+        _stream_epochs(spark, fdocs, froot, attr_cols=("n_chars_f",))
+    with pytest.raises(ValueError, match="quantized") as batch_err:
+        build_index(
+            spark, fdocs, str(tmp_path / "float_batch_idx"),
+            text_col="text", attr_cols=("n_chars_f",),
+        )
+    assert str(streamed_err.value) == str(batch_err.value)
+    assert not os.listdir(os.path.join(froot, "segments"))
+
+
+def test_compact_segments_reads_run_count_from_sidecars(
+    spark, tmp_path, monkeypatch
+):
+    """Each epoch sidecar records its packed run count, and compaction
+    sums the sidecars instead of opening every segment file footer."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    from xsearch_spark.streaming.ingest import compact_segments
+
+    docs = read_documents(spark, SF_DIR)
+    root = str(tmp_path / "runs_idx")
+    _stream_epochs(spark, docs, root, docs_per_segment=32)
+    for epoch in (0, 1):
+        with open(
+            os.path.join(root, "epoch_stats", f"epoch={epoch}.json")
+        ) as f:
+            side = json.load(f)
+        packed = spark.read.parquet(
+            os.path.join(root, "segments", f"epoch={epoch}")
+        )
+        assert side["n_runs"] == packed.count() > 0
+
+    def no_footer_reads(*a, **kw):
+        raise AssertionError("compact_segments opened a parquet footer")
+
+    monkeypatch.setattr(pq, "ParquetFile", no_footer_reads)
+    bi = compact_segments(
+        spark, root, segs_per_shard=2, num_buckets=8, docs_per_segment=32
+    )
+    assert bi.n_docs == docs.count()

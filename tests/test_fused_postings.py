@@ -1,13 +1,18 @@
-"""The fused tokenize+tf+dl UDF must be row-identical to the
-declarative explode+groupBy path on both tokenizer variants (it replaces
-it in the build for scale reasons — see postings_with_dl_fused)."""
+"""The one source packer (``segments.pack_from_source``: tokenize, tf,
+dl and pack in one Arrow UDF) must carry exactly the postings of the
+declarative explode+groupBy path on both tokenizer variants — decoded
+from its packed runs, (term, doc_id) -> (tf, dl) equals
+``postings_with_dl``. Every producer that tokenizes text (batch build,
+streamed epochs) packs through it."""
 
 from __future__ import annotations
 
 import pytest
 
 from tests.conftest import SF_DIR
+from xsearch_spark.functions import codec
 from xsearch_spark.operators import build as b
+from xsearch_spark.operators.segments import pack_from_source
 from xsearch_spark.sources.io import read_documents
 
 
@@ -15,11 +20,26 @@ def _as_dict(rows):
     return {(r["term"], r["doc_id"]): (r["tf"], r["dl"]) for r in rows}
 
 
+def _packed_dict(packed):
+    """Decode packed runs to (term, doc_id) -> (tf, dl); a posting packed
+    into two runs would be a pack bug, so duplicates fail."""
+    out: dict = {}
+    for r in packed.select("term", "doc_ids", "tfs", "dls").collect():
+        ids = codec.decode_doc_ids(bytes(r["doc_ids"]))
+        tfs = codec.decode_tfs(bytes(r["tfs"]))
+        dls = codec.decode_tfs(bytes(r["dls"]))
+        assert ids.size == tfs.size == dls.size
+        for d, tf, dl in zip(ids.tolist(), tfs.tolist(), dls.tolist()):
+            assert (r["term"], d) not in out, (r["term"], d)
+            out[(r["term"], d)] = (tf, dl)
+    return out
+
+
 def test_fused_equals_declarative_base(spark):
     docs = read_documents(spark, SF_DIR)
     tok = b.with_tokens(docs, "text", "base")
     a = _as_dict(b.postings_with_dl(tok).collect())
-    c = _as_dict(b.postings_with_dl_fused(docs, "text", "doc_id", "base").collect())
+    c = _packed_dict(pack_from_source(docs, "text", "doc_id", "base"))
     assert a == c
 
 
@@ -32,14 +52,14 @@ def test_fused_equals_declarative_code(spark):
     src = assign_doc_ids_global(read_source(spark, path))
     tok = b.with_tokens(src, "content", "code")
     a = _as_dict(b.postings_with_dl(tok).collect())
-    c = _as_dict(b.postings_with_dl_fused(src, "content", "doc_id", "code").collect())
+    c = _packed_dict(pack_from_source(src, "content", "doc_id", "code"))
     assert a == c
 
 
 def test_fused_empty_and_null_text(spark):
     rows = [(0, "hello world"), (1, ""), (2, None), (3, "...")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = _as_dict(b.postings_with_dl_fused(df, "text", "doc_id", "base").collect())
+    got = _packed_dict(pack_from_source(df, "text", "doc_id", "base"))
     assert got == {("hello", 0): (1, 2), ("world", 0): (1, 2)}
 
 

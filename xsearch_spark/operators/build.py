@@ -63,11 +63,11 @@ def postings_with_dl(tokenized: DataFrame, doc_id_col: str = "doc_id") -> DataFr
 
 def count_batch(texts, ids, variant: str, with_positions: bool = False):
     """Tokenize+count one Arrow batch -> (terms, doc_ids, tfs, dls) numpy
-    arrays sorted by doc_id. Shared by the fused postings UDF and the
-    one-pass segment packer. Returns None for an all-empty batch.
-    (Thin materializing wrapper over :func:`count_batch_coded` — the
-    segment packer consumes the coded form directly so per-posting term
-    STRINGS are never built on the build hot path.)
+    arrays sorted by doc_id. Returns None for an all-empty batch. (Thin
+    materializing wrapper over :func:`count_batch_coded`, kept for the
+    kernel benchmark and the parity tests — the one source packer,
+    ``segments.pack_from_source``, consumes the coded form directly so
+    per-posting term STRINGS are never built on the build hot path.)
 
     Round 7: base/code run on Arrow C++ kernels end to end — RE2 regex
     split (``pc.split_pattern_regex``), C++ lowercase, and
@@ -221,94 +221,6 @@ def count_batch_coded(texts, ids, variant: str, with_positions: bool = False):
     pos = np.arange(total, dtype=np.int64) - doc_starts[emit_row] + 1
     order = np.argsort(combined, kind="stable")
     return out + (pos[order],)
-
-
-def postings_with_dl_fused(
-    source_df: DataFrame,
-    text_col: str,
-    doc_id_col: str = "doc_id",
-    variant: str = "base",
-    positions: bool = False,
-) -> DataFrame:
-    """B1+B2 fused INTO the tokenizer UDF: source -> (term, doc_id, tf,
-    dl) in one ``mapInPandas``, no explode, no shuffle, no JVM hash-agg.
-
-    Why: a (term, doc_id) group is complete inside one document, so tf
-    counting never needs cross-partition data — the declarative
-    explode+groupBy shuffles ~40M freshly-allocated JVM strings only to
-    re-group what the tokenizer already had together. At local[32] that
-    allocation storm made the JVM GC the serial bottleneck (measured:
-    sha2-style allocation-heavy stages stop scaling past 8 threads while
-    low-allocation stages hit 1.9x). Counting is NumPy-vectorized
-    (repeat + lexsort + run-length encode) per Arrow batch: no per-row
-    Python, and the JVM only ever sees the final compact postings.
-
-    Must produce exactly the rows of :func:`postings_with_dl` (tested).
-
-    ``positions`` (v6): add a ``poss`` array<long> column — the
-    per-posting 1-based position list — so a streaming micro-batch can
-    pack a positional epoch (``build_segments`` -> ``_pack_frame``
-    re-encodes it into the varint stream).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    fields = [
-        StructField("term", StringType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("tf", IntegerType(), False),
-        StructField("dl", IntegerType(), False),
-    ]
-    if positions:
-        fields.append(StructField("poss", ArrayType(LongType()), False))
-    schema = StructType(fields)
-
-    def it(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            res = count_batch(
-                pdf[text_col],
-                pdf[doc_id_col].to_numpy(np.int64),
-                variant,
-                with_positions=positions,
-            )
-            if res is None:
-                continue
-            if positions:
-                terms, doc_ids, tfs, dls, flat = res
-            else:
-                terms, doc_ids, tfs, dls = res
-            out = pd.DataFrame(
-                {
-                    "term": terms,
-                    "doc_id": doc_ids,
-                    "tf": tfs.astype(np.int32),
-                    "dl": dls.astype(np.int32),
-                }
-            )
-            if positions:
-                out["poss"] = pd.Series(
-                    np.split(flat, np.cumsum(tfs)[:-1]), dtype=object
-                )
-            yield out
-
-    out = source_df.select(doc_id_col, text_col)
-    # the tokenizer must not be gated by coarse input splits (a 200 MB
-    # parquet = 2 natural partitions = 2 busy cores); fan out first
-    par = source_df.sparkSession.sparkContext.defaultParallelism
-    if out.rdd.getNumPartitions() < par:
-        out = out.repartition(par * 2)
-    return out.mapInPandas(it, schema)
 
 
 def doc_stats(tokenized: DataFrame, doc_id_col: str = "doc_id") -> DataFrame:

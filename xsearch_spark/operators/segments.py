@@ -391,7 +391,7 @@ def _pack_frame(pdf: pd.DataFrame, starts: np.ndarray, avgdl: float) -> pd.DataF
     pos_flat = None
     if "poss" in pdf.columns:
         # long postings carrying per-posting position lists (v6 — the
-        # compaction rebuild / streaming paths): flatten once, the
+        # compaction rebuild): flatten once, the
         # per-posting boundaries are recovered from the tfs stream
         cells = pdf["poss"].to_numpy(object)
         pos_flat = (
@@ -412,7 +412,9 @@ def build_segments(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """B4+B6+B7: long postings (term, doc_id, tf, dl) -> packed segment
-    runs, one shuffle (by seg_id) + partition-local sort."""
+    runs, one shuffle (by seg_id) + partition-local sort. Serves only the
+    rebuild from decoded postings (``admin.compact``); every producer
+    that tokenizes text packs through :func:`pack_from_source`."""
     n = num_partitions or postings_with_dl.sparkSession.sparkContext.defaultParallelism * 2
     p = postings_with_dl.withColumn(
         "seg_id", (F.col("doc_id") / F.lit(docs_per_segment)).cast("long")

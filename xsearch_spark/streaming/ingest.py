@@ -9,10 +9,13 @@ equivalent:
   * ``readStream`` over an append-only staging directory (files play the
     queue's role; at-least-once replay is Spark's checkpointed file
     source),
-  * ``foreachBatch``: each micro-batch runs the SAME batch operators
-    (A1 tokenize -> B1/B2 postings -> B4 pack) into new small segment
-    runs appended under ``segments/`` — one segment per (epoch, doc
-    slice), exactly xsearch's flush-small model,
+  * ``foreachBatch``: each micro-batch is packed by the SAME source
+    packer as the batch build (``segments.pack_from_source``: tokenize,
+    count, attribute postings and positions in one Arrow UDF) into new
+    small segment runs under ``segments/`` — one segment per (epoch, doc
+    slice), exactly xsearch's flush-small model — so streamed and batch
+    segments follow one set of attr rules (numeric encoding, type
+    checks),
   * exactly-once: each epoch writes to its own ``epoch=N`` directory
     with mode=overwrite, so foreachBatch re-delivery of an epoch
     replaces its own output idempotently (doc_ids are NOT re-keyed by
@@ -21,11 +24,11 @@ equivalent:
     doc_id invariant),
   * periodic ``compact_segments`` = the B5 merge as a batch job (the
     reference's background merge goroutine). BM25's avgdl is
-    collection-global, so each epoch records exact (n_docs, sum_dl) in a
-    tiny sidecar and compaction recomputes the TRUE global avgdl from
-    the sidecar sums — the merged index never scores with a drifted
-    hint (queries between compactions may still use a hint, the same
-    approximation any incremental engine makes between merges).
+    collection-global, so each epoch records exact (n_docs, sum_dl,
+    n_runs) in a tiny sidecar and compaction recomputes the TRUE global
+    avgdl and the run count from the sidecar sums, with no driver-side
+    file listing. Only the merged index serves queries; the merge
+    recomputes every block maximum under that avgdl.
 
 No watermarks/session windows: the capability set has no event-time
 aggregation (SURVEY.md §2.5 streaming note).
@@ -39,7 +42,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xsearch_spark.operators import build as b
 from xsearch_spark.operators import segments as seg
 from xsearch_spark.sources.io import DOCUMENTS_SCHEMA
 
@@ -48,7 +50,6 @@ def start_ingest(
     spark: SparkSession,
     staging_dir: str,
     index_root: str,
-    avgdl_hint: float,
     variant: str = "base",
     text_col: str = "text",
     docs_per_segment: int = 4096,
@@ -57,26 +58,22 @@ def start_ingest(
 ):
     """Start the streaming ingest; returns the StreamingQuery.
 
-    avgdl_hint: used only for the provisional per-epoch block maxima;
-    ``compact_segments`` recomputes real maxima under the exact global
-    avgdl, and only the merged index serves WAND queries.
-
-    ``attr_cols`` (v5, field-generic since round 5): each micro-batch
-    also emits the synthetic attribute postings (tf=0/dl=0 filter
-    carriers) for every listed column, so the compacted streamed index
-    serves ``lang:``/``source:`` filters from the index exactly like a
-    batch-built one. ``positions`` (v6): micro-batches pack the
-    positional stream so the compacted streamed index serves phrase
-    queries. ``compact_segments`` self-detects both from the merged
-    rows — no configuration to keep in sync.
+    Each micro-batch goes through :func:`process_epoch`, so ``attr_cols``
+    and ``positions`` mean exactly what they mean to ``build_index``:
+    every listed column present in the stream emits synthetic attribute
+    postings (integer columns order-preserving encoded, floats raise),
+    and ``positions`` packs the positional stream for phrase queries.
+    ``compact_segments`` self-detects both from the merged rows — no
+    configuration to keep in sync.
     """
     os.makedirs(os.path.join(index_root, "segments"), exist_ok=True)
     os.makedirs(os.path.join(index_root, "epoch_stats"), exist_ok=True)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         process_epoch(
-            spark, batch_df, epoch_id, index_root, avgdl_hint,
-            variant, text_col, docs_per_segment, attr_cols, positions,
+            spark, batch_df, epoch_id, index_root, variant=variant,
+            text_col=text_col, docs_per_segment=docs_per_segment,
+            attr_cols=attr_cols, positions=positions,
         )
 
     stream = (
@@ -97,7 +94,7 @@ def process_epoch(
     batch_df: DataFrame,
     epoch_id: int,
     index_root: str,
-    avgdl_hint: float,
+    avgdl_hint: float | None = None,
     variant: str = "base",
     text_col: str = "text",
     docs_per_segment: int = 4096,
@@ -112,73 +109,48 @@ def process_epoch(
     dir is mode=overwrite and the sidecar a temp-then-rename, so
     re-delivery replaces its own output idempotently (S4 semantics at
     the epoch granularity; asserted byte-identical in
-    tests/test_admin_streaming.py)."""
-    if batch_df.isEmpty():
-        return
+    tests/test_admin_streaming.py).
+
+    The batch is packed by ``segments.pack_from_source``, the batch
+    build's packer. ``avgdl_hint`` is ignored: packed runs carry no
+    block maxima that anything reads, because ``compact_segments``
+    recomputes every one under the exact global avgdl."""
     n_docs = batch_df.count()
+    if not n_docs:
+        return
     attrs = (
         (attr_cols,) if isinstance(attr_cols, str) else tuple(attr_cols or ())
     )
     attrs = tuple(c for c in attrs if c in batch_df.columns)
-    post = b.postings_with_dl_fused(
-        batch_df, text_col, "doc_id", variant, positions=positions
+    packed = seg.pack_from_source(
+        batch_df, text_col, "doc_id", variant, docs_per_segment,
+        n_docs=n_docs, attr_cols=attrs, positions=positions,
     )
-    from pyspark.sql.types import ArrayType
-
-    col_types = {f.name: f.dataType for f in batch_df.schema.fields}
-    for fld in attrs:
-        from xsearch_spark.constants import attr_term
-
-        if isinstance(col_types[fld], ArrayType):
-            # multi-value attr (tags/licenses): one synthetic posting per
-            # DISTINCT element per doc (distinct or repeated elements
-            # would trip the merge's duplicate-doc_id invariant)
-            pairs = (
-                batch_df.select(
-                    F.col("doc_id").cast("long").alias("doc_id"),
-                    F.explode(fld).alias("_v"),
-                )
-                .filter(F.col("_v").isNotNull())
-                .distinct()
-            )
-            syn = pairs.select(
-                F.concat(F.lit(attr_term(fld, "")), F.col("_v")).alias("term"),
-                "doc_id",
-                F.lit(0).cast("int").alias("tf"),
-                F.lit(0).cast("int").alias("dl"),
-            )
-        else:
-            syn = batch_df.filter(F.col(fld).isNotNull()).select(
-                F.concat(F.lit(attr_term(fld, "")), F.col(fld)).alias("term"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.lit(0).cast("int").alias("tf"),
-                F.lit(0).cast("int").alias("dl"),
-            )
-        if positions:  # synthetic filter carriers have no occurrences
-            syn = syn.withColumn(
-                "poss", F.array().cast("array<long>")
-            )
-        post = post.unionByName(syn)
-    packed = seg.build_segments(post, avgdl_hint, docs_per_segment)
     # one directory per epoch: idempotent on redelivery (exactly-once)
     out = os.path.join(index_root, "segments", f"epoch={epoch_id}")
     packed.write.mode("overwrite").parquet(out)
-    # exact epoch stats for the global-avgdl recompute at compaction:
-    # sum(dl over epoch docs) == sum(sum_tf over the packed runs)
-    sum_dl = (
-        spark.read.parquet(out).agg(F.sum("sum_tf")).collect()[0][0] or 0
-    )
-    stats = {"epoch": int(epoch_id), "n_docs": int(n_docs), "sum_dl": int(sum_dl)}
+    # exact epoch stats for the global-avgdl recompute at compaction
+    # (sum(dl over epoch docs) == sum(sum_tf over the packed runs)) and
+    # the run count that bounds the merge salt
+    sum_dl, n_runs = spark.read.parquet(out).agg(
+        F.sum("sum_tf"), F.count(F.lit(1))
+    ).collect()[0]
+    stats = {
+        "epoch": int(epoch_id),
+        "n_docs": int(n_docs),
+        "sum_dl": int(sum_dl or 0),
+        "n_runs": int(n_runs),
+    }
     sp = os.path.join(index_root, "epoch_stats", f"epoch={epoch_id}.json")
     with open(sp + ".tmp", "w") as f:
         json.dump(stats, f)
     os.replace(sp + ".tmp", sp)
 
 
-def _epoch_totals(index_root: str) -> tuple[int, int]:
-    """(n_docs, sum_dl) summed over all delivered epochs."""
+def _epoch_totals(index_root: str) -> tuple[int, int, int]:
+    """(n_docs, sum_dl, n_runs) summed over all delivered epochs."""
     d = os.path.join(index_root, "epoch_stats")
-    n, s = 0, 0
+    n, s, r = 0, 0, 0
     for name in sorted(os.listdir(d)) if os.path.isdir(d) else []:
         if not name.endswith(".json"):
             continue
@@ -186,7 +158,8 @@ def _epoch_totals(index_root: str) -> tuple[int, int]:
             row = json.load(f)
         n += int(row["n_docs"])
         s += int(row["sum_dl"])
-    return n, s
+        r += int(row["n_runs"])
+    return n, s, r
 
 
 def compact_segments(
@@ -202,8 +175,8 @@ def compact_segments(
 
     ``avgdl=None`` (the default) recomputes the exact global avgdl from
     the per-epoch stats sidecars — post-compaction scoring and block
-    maxima always reflect the full streamed collection, never the
-    start-time hint (round-1 advisor: avgdl drift).
+    maxima always reflect the full streamed collection (round-1
+    advisor: avgdl drift).
 
     The index write is a write-temp-then-rename swap (round-3 verdict
     item 3): ``build_index`` sets session-wide dynamic partition
@@ -216,25 +189,13 @@ def compact_segments(
 
     from xsearch_spark.plans.build_index import load_index, write_stats
 
-    n_docs, sum_dl = _epoch_totals(index_root)
+    n_docs, sum_dl, n_runs = _epoch_totals(index_root)
     if avgdl is None:
         avgdl = (sum_dl / n_docs) if n_docs else 0.0
     runs = spark.read.parquet(os.path.join(index_root, "segments"))
     # fused merge+layout (one shuffle) also stamps the global per-term df
-    # into every row (v4) — post-compaction queries are driver-stats-free
-    # run count from the epoch-segment parquet footers (driver-side,
-    # zero jobs) so the merge salt is runs-bounded (round 7)
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    n_runs = sum(
-        _pq.ParquetFile(f).metadata.num_rows
-        for f in _glob.glob(
-            os.path.join(index_root, "segments", "**", "*.parquet"),
-            recursive=True,
-        )
-    )
+    # into every row (v4) — post-compaction queries are driver-stats-free;
+    # the sidecars' run count bounds the merge salt (round 7)
     merged = seg.merge_to_index(
         runs.drop("epoch"), avgdl, segs_per_shard, num_buckets,
         n_runs=n_runs or None,
