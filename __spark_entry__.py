@@ -136,8 +136,9 @@ _ATTR_QUERY_SET = {
     # from the startswith-pushed dictionary scan, never the source)
     # round-6: bm25_rel_prefix_not demoted to extra_queries() for the
     # explain_score slot — the rel-path prefix machinery stays gated
-    # through search_count and search_histogram (both evaluate
-    # `hash OR d* -join` through _index_match_scored)
+    # through search_count (`hash OR d* -join` through
+    # _index_match_scored; search_histogram serves the same query
+    # through the shard scorer's full match set)
     "bm25_wand_prefix": ("d* join", "wand"),
     # fuzzy groups (round-6, FIXTURES.md §3.12): sow~1 expands to
     # {slow, row} in the documents vocabulary — a genuine two-member
@@ -157,9 +158,9 @@ _ATTR_QUERY_SET = {
     # numeric range filters (round-6, FIXTURES.md §3.13): n_chars rides
     # the index as order-preserving-encoded attr postings, so a range
     # is a pushed term-interval scan — the wand entry takes a selective
-    # upper-tail interval (the rel-path range surface rides
-    # search_sorted_page's filtered match set; bm25_rel_range_lang
-    # stays in extras). Oracle: plain comparisons on the source column
+    # upper-tail interval (the rel-path range surface is
+    # bm25_rel_range_lang in extras). Oracle: plain comparisons on the
+    # source column
     "bm25_wand_range": ("hash n_chars:400..530", "wand"),
 }
 
@@ -470,7 +471,8 @@ def _q_term_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_search_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q11b (round-6): total-hits count over the FULL match set — the
     result-page "About N results" number, via wand.match_count (shares
-    _index_match_scored with facets/relational search). The query
+    _index_match_scored with relational search — the declarative twin
+    of the shard scorer that serves the other result pages). The query
     composes OR + a prefix group + an exclusion so the count gate
     exercises the match evaluation, not just a posting length. Oracle:
     oracles.match_count_sql over the same _match_ctes as bm25_sql."""
@@ -484,11 +486,11 @@ def _q_search_sorted_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.14 (round-6): sort-by-field + pagination — the match set of
     an OR query ordered by the NUMERIC n_chars attr (descending,
     doc_id tiebreak), page 2 (offset 5, k 10), entirely index-side:
-    match truth from _index_match_scored, sort keys decoded from the
-    order-preserving-encoded attr postings. The query stacks a range
-    filter, so this entry also gates the REL-path range surface (the
-    wand-path one is bm25_wand_range). Oracle: oracles.sorted_sql over
-    the shared _match_ctes with LIMIT/OFFSET."""
+    the shard scorer serves the full match set and decodes each doc's
+    sort key from the order-preserving-encoded attr postings read in
+    the same scan. The query stacks a range filter, so the scorer's
+    range allowlist is checked in full-match mode too. Oracle:
+    oracles.sorted_sql over the shared _match_ctes with LIMIT/OFFSET."""
     from xsearch_spark.operators.wand import search_sorted
 
     built = _index(spark, sf_dir)
@@ -504,9 +506,10 @@ def _q_search_sorted_page(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_search_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.17 (round-6): numeric-field statistics over the FULL match
     set — count/min/max/sum/avg of n_chars across the docs matching an
-    OR query with a lang attr filter, entirely index-side (match truth
-    from _index_match_scored, values decoded from the
-    order-preserving-encoded attr postings). Oracle: oracles.stats_sql
+    OR query with a lang attr filter, entirely index-side (the shard
+    scorer's full match set, values decoded from the
+    order-preserving-encoded attr postings in the same scan). Oracle:
+    oracles.stats_sql
     over the shared _match_ctes (plain aggregates on the source
     column)."""
     from xsearch_spark.operators.wand import field_stats
@@ -534,10 +537,10 @@ def _q_facet_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FULL match set of an OR + prefix-group + exclusion query, the
     n_chars stats (count/min/max/sum/avg) of the bucket's docs: the
     terms-agg-with-stats-sub-agg result-page shape, entirely
-    index-side (match truth from _index_match_scored, facet values
-    from the lang attr postings via the _facet_values truth shared
-    with facet_counts, numeric values from the order-preserving-
-    encoded n_chars postings). Oracle: oracles.facet_stats_sql over
+    index-side (the shard scorer's full match set, with the lang attr
+    postings and the order-preserving-encoded n_chars postings read in
+    the same scan and emitted beside each matched doc). Oracle:
+    oracles.facet_stats_sql over
     the shared _match_ctes (a plain GROUP BY over the source
     columns)."""
     from xsearch_spark.operators.wand import facet_stats
@@ -1304,7 +1307,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # projection stays gated inside the IVF serving entries)
         "ann_lsh_buckets": _q_ann_lsh_buckets,
         # §3.26/§3.27 (round-6, post-cap): both compose the already-
-        # gated _index_match_scored truth with already-gated value
+        # gated scorer-served match set with already-gated value
         # machinery (facet attr postings, encoded numeric postings),
         # so the extras-level exact-value sweep at two scale factors
         # is their evidence tier — no gated surface is displaced

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -25,6 +26,18 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def assert_scorer_served(plan: str, what: str) -> None:
+    """A result page is the shard scorer's full match set plus its tail:
+    the scorer's MapInPandas, no relational posting decode and no
+    doc_id join between a match set and separately decoded values."""
+    assert "shard_iter" in plan, f"{what} plan lost the shard scorer"
+    assert "decode_iter" not in plan, (
+        f"{what} plan decodes postings relationally beside the scorer"
+    )
+    joins = re.findall(r"\w*Join\b", plan)
+    assert not joins, f"{what} plan joins on doc_id: {joins}"
 
 
 def main() -> None:
@@ -239,15 +252,16 @@ def main() -> None:
         "be served from the synthetic attr postings"
     )
     assert "poss" not in wf_plan, "non-phrase facet plan reads poss"
+    assert_scorer_served(wf_plan, "facet")
     sections.append((
         "Q11 facet counts over the full match set (index-only)",
         wf_plan,
         ["HashAggregate"],
-        "Both sides of the facet join are index reads: the decoded "
-        "match set and the field's attr postings (one prefix-filtered "
-        "scan). The count is a partial-agg groupBy on the joined "
-        "doc_ids — posting-list-sized inputs, no source scan, no "
-        "per-value jobs.",
+        "One pruned scan reads the query's rows and the field's attr "
+        "postings; the shard scorer emits (doc_id, value) for every "
+        "matched doc, and the count is a partial-agg groupBy in the "
+        "scorer's stage — posting-list-sized inputs, no source scan, "
+        "no doc_id join, no per-value jobs.",
     ))
 
     # 5d-bis. field collapse (round-6 §3.29): match truth + facet
@@ -266,12 +280,13 @@ def main() -> None:
         "collapse plan lost the per-bucket window rank"
     )
     sections.append((
-        "Q8+ field collapse (window over the index-only facet join)",
+        "Q8+ field collapse (window over the scorer-served values)",
         wc_plan,
         ["Window", "TakeOrderedAndProject"],
-        "Best-N-per-value is one window over the match-set-sized facet "
-        "join (one shuffle on value) and the global cut is a k-deep "
-        "heap — no source scan, posting-list-bounded inputs.",
+        "Best-N-per-value is one window over the scorer-served "
+        "(doc, value, score) rows (one shuffle on value) and the global "
+        "cut is a k-deep heap — no source scan, posting-list-bounded "
+        "inputs.",
     ))
 
     # 5d-ter. match-set scroll + grouped facet stats (round-6
@@ -300,8 +315,8 @@ def main() -> None:
         ["TakeOrderedAndProject"],
         "The doc_id cursor filters before the per-partition heaps, so a "
         "deep export page is the same one-scan job as page 1; grouped "
-        "facet stats join two posting-bounded value sides to the match "
-        "set and reduce in one partial agg.",
+        "facet stats read both fields' attr postings in the scorer's "
+        "scan and reduce in one partial agg.",
     ))
 
     # 5d-quater. field-value rescoring (round-6 §3.31): combined-order
@@ -322,9 +337,9 @@ def main() -> None:
         "Q8+ field-value rescoring (combined-order heap, index-only)",
         wr_plan,
         ["TakeOrderedAndProject"],
-        "The combined key is one projection over the match-set/attr "
-        "join; the global cut is a k-deep heap — the cost of a "
-        "sort-by-field page.",
+        "The combined key is one projection over the scorer-served "
+        "(doc, score, value) rows; the global cut is a k-deep heap — "
+        "the cost of a sort-by-field page.",
     ))
 
     # 5e. prefix query (round-6 §3.10): the expansion comes from a
@@ -501,14 +516,15 @@ def main() -> None:
         "sorted page does not plan as TakeOrderedAndProject — a global "
         "sort would materialize the full match set"
     )
+    assert_scorer_served(ss_plan, "sorted page")
     sections.append((
         "Sorted page (§3.14) — index-only keys, TakeOrdered cut",
         ss_plan,
         ["TakeOrderedAndProject"],
-        "Match truth from the shared decoded-posting evaluation, sort "
-        "keys from one prefix-pruned scan of the encoded numeric attr "
-        "postings, joined on doc_id; offset+k rides the TakeOrdered "
-        "heap — no source scan, no full sort at any match-set size.",
+        "The shard scorer serves the match set and decodes each matched "
+        "doc's sort key from the encoded numeric attr postings read in "
+        "the same scan; offset+k rides the TakeOrdered heap — no source "
+        "scan, no doc_id join, no full sort at any match-set size.",
     ))
 
     # 5e5. cursor pagination (round-6 §3.14 search_after): the cursor
@@ -560,13 +576,15 @@ def main() -> None:
         "the encoded attr postings"
     )
     assert "poss" not in st_plan, "non-phrase stats plan reads poss"
+    assert_scorer_served(st_plan, "field_stats")
     sections.append((
         "Field stats over the match set (§3.17 — index-only)",
         st_plan,
         ["HashAggregate"],
-        "min/max/sum/avg/count decode from the field's encoded attr "
-        "postings joined to the shared match set — posting-list-sized "
-        "inputs, a single partial-agg reduce, no source scan.",
+        "min/max/sum/avg/count over the values the shard scorer decodes "
+        "from the field's encoded attr postings for each matched doc — "
+        "posting-list-sized inputs, a single partial-agg reduce, no "
+        "source scan.",
     ))
 
     hg_plan = plan_of(

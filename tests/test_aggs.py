@@ -91,8 +91,9 @@ def test_histogram_matches_oracle(spark, built, duck, q, interval):
 
 
 def test_stats_histogram_respect_tombstones(spark, built, duck):
-    """Both aggregations ride _index_match_scored — the tombstone
-    anti-join must thin them exactly like every other surface."""
+    """Both aggregations ride the scorer-served match set — the
+    tombstone exclusion must thin them exactly like every other
+    surface."""
     parsed = parse("hash OR join", attr_fields=AF)
     tombs = spark.range(0, 10**6, 7).select(F.col("id").alias("doc_id"))
     pred = "tf.doc_id % 7 <> 0"

@@ -617,7 +617,7 @@ def test_match_count_full_set(spark, built, corpus, duck, q):
 
 def test_match_count_tombstones(spark, built, corpus):
     """Tombstoned docs leave the count (the anti-join shares
-    _index_match_scored with facets/relational)."""
+    _index_match_scored with relational search)."""
     from xsearch_spark.operators.wand import match_count
 
     parsed = parse("hash OR join")

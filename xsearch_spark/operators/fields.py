@@ -7,11 +7,11 @@ per-field BM25 scores over the union of the per-field match sets
 (BM25F-lite; Lucene's `title:q^w OR body:q` evaluation shape).
 
 Spark shape (scale-first): each field contributes its full scored
-match set through the SAME `_index_match_scored` evaluation every
-aggregate surface uses (one source of match truth), the per-field
-DataFrames `unionByName` BEFORE a single fuse aggregation, and the
-top-k is one TakeOrderedAndProject — one job, no per-field collect,
-no source scan. At 10^12 docs the fuse input is posting-list-sized
+match set through `_index_match_scored`, the declarative match
+evaluation behind `search_index_relational` and `match_count`; the
+per-field DataFrames `unionByName` BEFORE a single fuse aggregation,
+and the top-k is one TakeOrderedAndProject — one job, no per-field
+collect, no source scan. At 10^12 docs the fuse input is posting-list-sized
 per field, never corpus-sized.
 """
 

@@ -54,9 +54,11 @@ from xsearch_spark.constants import (
     BLOCK_SIZE,
     DEFAULT_TOP_K,
     K1,
+    NUM_ATTR_WIDTH,
     attr_term,
     fuzzy_candidates,
     idf as idf_py,
+    num_attr_decode,
     wildcard_regex,
     wildcard_scan_prefix,
 )
@@ -572,16 +574,29 @@ def _or_candidates(
 # Spark-side wiring
 
 
+def sql_literal(s: str) -> str:
+    """``s`` as a Spark SQL string literal that no text can break out of:
+    its UTF-8 bytes as a hex binary literal cast back to STRING. No
+    quote, backslash, ``${...}`` variable reference or ``\\x01`` in ``s``
+    reaches the parser as syntax, and constant folding turns the cast
+    back into a plain literal before filter pushdown. A filter written
+    as one SQL string costs one py4j round trip however many literals it
+    holds, where ``Column.isin`` pays one per literal."""
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+
+
+def _sql_in(col: str, values) -> str:
+    return f"{col} IN ({', '.join(sql_literal(v) for v in values)})"
+
+
 def pruned_index_scan(index_df: DataFrame, terms: list[str], num_buckets: int) -> DataFrame:
     """Q2: dictionary lookup = bucket-pruned + term-filtered scan. The
     bucket ids come from the Python twin of the write-path hash
     (functions.buckets) — no Spark job is spent on query planning."""
     if not terms:
         return index_df.limit(0)
-    buckets = buckets_of(terms, num_buckets)
-    return index_df.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
+    buckets = ", ".join(str(int(b)) for b in buckets_of(terms, num_buckets))
+    return index_df.where(f"bucket IN ({buckets}) AND {_sql_in('term', terms)}")
 
 
 def pruned_index_scan_prefix(
@@ -608,21 +623,22 @@ def pruned_index_scan_prefix(
     comparisons, which parquet row-group min/max statistics turn into a
     per-bucket value-interval seek (the doc-values read of a numeric
     range filter). Disjoint from both the exact list and any prefix (the
-    \\x01 namespace vs [a-z0-9_]+), so no cross-exclusion is needed."""
+    \\x01 namespace vs [a-z0-9_]+), so no cross-exclusion is needed.
+
+    The whole filter is one SQL string (``sql_literal``), so the plan
+    costs the same few py4j round trips for one term or a fuzzy
+    neighborhood of hundreds."""
     base = pruned_index_scan(index_df, terms, num_buckets)
-    conds = []
-    for p in prefixes or []:
-        conds.append(F.col("term").startswith(p))
-    for lo, hi in term_ranges or []:
-        conds.append((F.col("term") >= lo) & (F.col("term") <= hi))
+    conds = [f"startswith(term, {sql_literal(p)})" for p in prefixes or []] + [
+        f"(term >= {sql_literal(lo)} AND term <= {sql_literal(hi)})"
+        for lo, hi in term_ranges or []
+    ]
     if not conds:
         return base
-    cond = conds[0]
-    for c in conds[1:]:
-        cond = cond | c
+    cond = " OR ".join(conds)
     if terms:  # a term matching a prefix already rides the exact scan
-        cond = cond & ~F.col("term").isin(terms)
-    pre = index_df.filter(cond)
+        cond = f"({cond}) AND NOT {_sql_in('term', terms)}"
+    pre = index_df.where(cond)
     return base.unionByName(pre) if terms else pre
 
 
@@ -643,8 +659,12 @@ def _project_scorer_cols(rows: DataFrame, need_positions: bool) -> DataFrame:
     that the scorer never touches. The positional stream (``poss``) is
     kept only for position-decoding queries: positions roughly double
     posting bytes, and the plan audit asserts a non-phrase ReadSchema
-    excludes it (round-5 verdict weak mark #1)."""
-    return rows.select(*[c for c in _SCORER_COLS if need_positions or c != "poss"])
+    excludes it (round-5 verdict weak mark #1). ``selectExpr`` passes
+    the names as one list: ``select`` of string names resolves each
+    name in its own py4j round trips."""
+    return rows.selectExpr(
+        *[c for c in _SCORER_COLS if need_positions or c != "poss"]
+    )
 
 
 def _assemble_shard(
@@ -905,7 +925,7 @@ def _aux_doc_side(
     if langs:
         if source_df is None:
             raise ValueError("lang: filter requires source_df")
-        aux = source_df.filter(F.col("lang").isin(langs)).select(
+        aux = source_df.where(_sql_in("lang", langs)).select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("lang"),
             F.lit(False).alias("tomb"),
@@ -1033,30 +1053,128 @@ BATCH_TOPK_SCHEMA = StructType(
     ]
 )
 
-_EMPTY_OUT = {
-    "query_id": pd.Series(dtype=object),
-    "doc_id": _EMPTY_I64,
-    "score": np.empty(0, np.float64),
-}
+
+@dataclass(frozen=True)
+class _ValueSpec:
+    """One attr field whose values the shard scorer emits beside every
+    matched doc, as column ``name``: the field's ``\\x01field:`` rows ride
+    the query's pruned scan. A numeric field reads the encoded-term
+    interval [lo, hi] (search_sorted's cursor narrows it) and decodes to
+    int64; a string field reads its whole prefix."""
+
+    name: str
+    prefix: str
+    numeric: bool
+    lo: str | None = None
+    hi: str | None = None
+
+    def mask(self, terms: pd.Series) -> np.ndarray:
+        if self.numeric:
+            return ((terms >= self.lo) & (terms <= self.hi)).to_numpy(bool)
+        return terms.str.startswith(self.prefix).to_numpy(bool)
+
+    def values(self, g: pd.DataFrame) -> pd.DataFrame:
+        """(doc_id, <name>) of this field's rows in one shard: one row
+        per posting, so an array field gives one row per distinct
+        element of each doc."""
+        sel = g[self.mask(g["term"])]
+        ids = [codec.decode_doc_ids(b).astype(np.int64) for b in sel["doc_ids"]]
+        vals = [t[len(self.prefix):] for t in sel["term"]]
+        if self.numeric:
+            vals = np.array([num_attr_decode(v) for v in vals], np.int64)
+        else:
+            vals = np.array(vals, dtype=object)
+        return pd.DataFrame(
+            {
+                "doc_id": np.concatenate(ids) if ids else _EMPTY_I64,
+                self.name: np.repeat(vals, [a.size for a in ids]),
+            }
+        )
+
+
+def _attr_value_spec(built, name: str, field: str) -> _ValueSpec | None:
+    """The value spec of an attr-indexed ``field`` (numeric attrs decode
+    back to int64, the type the source fallback and the oracle emit);
+    None when the index does not carry the field."""
+    if built.has_num_attr(field):
+        return _num_value_spec(built, name, field)
+    if built.has_attr(field):
+        return _ValueSpec(name, attr_term(field, ""), False)
+    return None
+
+
+def _num_value_spec(
+    built,
+    name: str,
+    field: str,
+    lo: str | None = None,
+    hi: str | None = None,
+) -> _ValueSpec:
+    """The value spec of a numeric attr ``field``, its scan bounded to the
+    encoded-term interval [lo, hi] (default: the whole field). Raises
+    when the field is not a numeric attr of this index (scalar-int by
+    construction, so each doc has at most one value)."""
+    if not built.has_num_attr(field):
+        raise ValueError(
+            f"{field}: requires the field in the index's "
+            f"num_attr_fields (integer attr_cols, FIXTURES.md §3.13); "
+            f"this index carries {built.num_attr_fields!r}"
+        )
+    pref = attr_term(field, "")
+    return _ValueSpec(
+        name,
+        pref,
+        True,
+        lo or pref + "0" * NUM_ATTR_WIDTH,
+        hi or pref + "9" * NUM_ATTR_WIDTH,
+    )
+
+
+def _empty_out(values: tuple[_ValueSpec, ...]) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "query_id": pd.Series(dtype=object),
+            "doc_id": _EMPTY_I64,
+            "score": np.empty(0, np.float64),
+            **{
+                v.name: _EMPTY_I64 if v.numeric else pd.Series(dtype=object)
+                for v in values
+            },
+        }
+    )
 
 
 def _score_plans(
     built,
     plans: dict[str, _QueryPlan],
-    k: int,
+    k: int | None,
     source_df: DataFrame | None,
     tombstones: DataFrame | None,
+    values: tuple[_ValueSpec, ...] = (),
 ) -> DataFrame:
     """The one shard scorer -> (query_id, doc_id, score): every plan's
-    exact LOCAL top-k in each shard.
+    exact LOCAL top-k in each shard, or with ``k=None`` every matching
+    doc (the full match set the result pages aggregate).
 
     One pruned scan reads the union of the plans' scans; each shard task
     decodes that union once and slices it per plan through the plan's
     routing predicate. The per-doc filters the index does not carry —
     tombstones, and lang: on an index built without the lang attr — ride
-    one shard-keyed cogroup (``_aux_doc_side``)."""
+    one shard-keyed cogroup (``_aux_doc_side``).
+
+    ``values``: attr fields read by the same scan and emitted as one
+    more column each beside every matched doc — one row per (doc,
+    value), and a doc without one of the fields drops out (the
+    inner-join NULL rule)."""
+    # a shard holds at most docs_per_shard docs, so a local top-k that
+    # deep is the shard's whole match set: _or_candidates prunes nothing
+    # once its lists total <= 4k, and _local_topk keeps every candidate
+    k_shard = built.docs_per_shard if k is None else k
     scan_terms = sorted({t for p in plans.values() for t in p.scan_terms})
-    scan_prefixes = sorted({b for p in plans.values() for b in p.scan_prefixes})
+    scan_prefixes = sorted(
+        {b for p in plans.values() for b in p.scan_prefixes}
+        | {v.prefix for v in values if not v.numeric}
+    )
     range_specs = sorted({s for p in plans.values() for s in p.range_specs})
     spec_idx = {s: i for i, s in enumerate(range_specs)}
     allow_terms = frozenset(t for p in plans.values() for t in p.allow_terms)
@@ -1069,23 +1187,40 @@ def _score_plans(
         scan_terms,
         scan_prefixes,
         built.num_buckets,
-        term_ranges=range_specs,
+        term_ranges=sorted(
+            set(range_specs) | {(v.lo, v.hi) for v in values if v.numeric}
+        ),
     )
     rows = _project_scorer_cols(rows, bool(pos_need))
     n_docs, avgdl = built.n_docs, built.avgdl
+    schema = StructType(
+        BATCH_TOPK_SCHEMA.fields
+        + [
+            StructField(v.name, LongType() if v.numeric else StringType(), False)
+            for v in values
+        ]
+    )
 
     def score_rows(
         g: pd.DataFrame, by_lang: dict[str, np.ndarray], tombs: np.ndarray
     ) -> pd.DataFrame:
-        # shards holding only allowlist/exclusion runs can't contribute;
-        # skip before decoding (a hot lang list + rare term query would
-        # otherwise decode huge allowlists in shards the term never hits)
+        # shards holding only allowlist/exclusion/value runs can't
+        # contribute; skip before decoding (a hot lang list + rare term
+        # query would otherwise decode huge allowlists in shards the term
+        # never hits)
         terms = g["term"].unique()
         if not any(p.route(t) for p in plans.values() for t in terms):
-            return pd.DataFrame(_EMPTY_OUT)
+            return _empty_out(values)
+        vals = [v.values(g) for v in values]
         # numeric range rows (round-6 §3.13) are interval-membership
-        # allowlist carriers — split them out before posting assembly
+        # allowlist carriers — split them out before posting assembly,
+        # and value rows with them unless they are allowlists too
         g, range_lists = _split_range_rows(g, range_specs)
+        if values:
+            value_only = np.logical_or.reduce(
+                [v.mask(g["term"]) for v in values]
+            ) & ~g["term"].isin(allow_terms).to_numpy(bool)
+            g = g[~value_only]
         lists, blocks, _, dfs, attr_lists, pos_lists = _assemble_shard(
             g, set(), avgdl, allow_terms, pos_need
         )
@@ -1113,22 +1248,28 @@ def _score_plans(
             idfs = _scaled_idfs(
                 {t: idf_py(n_docs, dfs[t]) for t in q_lists}, p.parsed
             )
-            out.append(
-                (qid,)
-                + score_shard(
-                    q_lists, {t: blocks[t] for t in q_lists}, idfs, avgdl,
-                    p.parsed, k, ex, allowed, pos_lists, p.after,
-                )
+            ids, scores = score_shard(
+                q_lists, {t: blocks[t] for t in q_lists}, idfs, avgdl,
+                p.parsed, k_shard, ex, allowed, pos_lists, p.after,
             )
+            cols = {"doc_id": ids, "score": scores}
+            if vals:
+                frame = pd.DataFrame(cols)
+                for v in vals:
+                    frame = frame.merge(v, on="doc_id")
+                cols = {c: frame[c].to_numpy() for c in frame.columns}
+            out.append((qid, cols))
         # one frame per shard, however many plans
-        qids, ids, scores = zip(*out)
         return pd.DataFrame(
             {
                 "query_id": np.repeat(
-                    np.array(qids, dtype=object), [a.size for a in ids]
+                    np.array([q for q, _ in out], dtype=object),
+                    [c["doc_id"].size for _, c in out],
                 ),
-                "doc_id": np.concatenate(ids),
-                "score": np.concatenate(scores),
+                **{
+                    n: np.concatenate([c[n] for _, c in out])
+                    for n in schema.fieldNames()[1:]
+                },
             }
         )
 
@@ -1142,7 +1283,7 @@ def _score_plans(
 
         def cogroup_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             if left.empty:
-                return pd.DataFrame(_EMPTY_OUT)
+                return _empty_out(values)
             tomb_mask = right["tomb"].to_numpy(bool)
             by_lang = {
                 lang: np.sort(grp["doc_id"].to_numpy(np.int64))
@@ -1154,7 +1295,7 @@ def _score_plans(
         return (
             rows.groupBy("shard")
             .cogroup(aux.groupBy("shard"))
-            .applyInPandas(cogroup_fn, BATCH_TOPK_SCHEMA)
+            .applyInPandas(cogroup_fn, schema)
         )
 
     def shard_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1167,7 +1308,7 @@ def _score_plans(
         for _, g in pdf.groupby("shard", sort=False):
             yield score_rows(g, {}, _EMPTY_I64)
 
-    if not (
+    if values or not (
         built.unique_term_shard and all(p.one_exact_term for p in plans.values())
     ):
         # co-locate every run of a shard in one task. Plans that each read
@@ -1176,9 +1317,10 @@ def _score_plans(
         # the commonest query shape. Gated on unique_term_shard (round-4
         # advisor): an index that can repeat (term, shard) keys — a raw
         # union of merged indexes — must shuffle so _assemble_shard's
-        # repeated-key guard sees all runs of a key together.
+        # repeated-key guard sees all runs of a key together. Value rows
+        # must meet their shard's query runs, so they shuffle too.
         rows = rows.repartition("shard")
-    return rows.mapInPandas(shard_iter, BATCH_TOPK_SCHEMA)
+    return rows.mapInPandas(shard_iter, schema)
 
 
 def search_wand(
@@ -1449,6 +1591,45 @@ def _index_match_scored(
     return scored
 
 
+def _served_matches(
+    built,
+    parsed: ParsedQuery,
+    source_df: DataFrame | None,
+    tombstones: DataFrame | None,
+    *values: _ValueSpec,
+) -> DataFrame:
+    """The FULL match set served by the shard scorer -> (doc_id, score,
+    one column per value spec): one pruned scan of the query's rows and
+    the fields' attr rows, one shard exchange, one scorer task per
+    shard. Every result page is this frame plus a relational tail, so
+    Spark's partial aggregation runs in the scorer's own stage."""
+    return _score_plans(
+        built, {"_": _compile(built, parsed)}, None, source_df, tombstones,
+        values,
+    ).drop("query_id")
+
+
+def _facet_matches(
+    built,
+    parsed: ParsedQuery,
+    field: str,
+    source_df: DataFrame | None,
+    tombstones: DataFrame | None,
+    *values: _ValueSpec,
+) -> DataFrame:
+    """``_served_matches`` with ``field``'s values as column ``value``:
+    read by the scorer's scan on an attr-indexed field, else joined from
+    ``source_df`` on doc_id (``_facet_values``, which raises absent
+    both)."""
+    spec = _attr_value_spec(built, "value", field)
+    if spec is not None:
+        return _served_matches(built, parsed, source_df, tombstones, spec, *values)
+    vals = _facet_values(field, source_df)
+    return _served_matches(built, parsed, source_df, tombstones, *values).join(
+        vals, "doc_id"
+    )
+
+
 def facet_counts(
     built,
     parsed: ParsedQuery,
@@ -1462,57 +1643,34 @@ def facet_counts(
     ("312 in lang:en, 41 in lang:zh, …").
 
     On a v5 index with ``field`` attr-indexed, the whole computation is
-    INDEX-ONLY: values come from the field's synthetic attr postings
-    (one per distinct value per doc, so array-valued fields facet per
-    element for free) read through one prefix-pruned scan — the source
-    table is never touched, exactly like attr filtering. The match set
-    is the same decoded-posting relational evaluation as
-    `search_index_relational` minus the limit, so every query feature
-    (OR/NOT, attr filters, phrases, proximity, tombstones) composes.
+    INDEX-ONLY: the shard scorer reads the field's synthetic attr
+    postings (one per distinct value per doc, so array-valued fields
+    facet per element for free) in the query's own pruned scan and
+    emits (doc_id, value) for every matched doc — the source table is
+    never touched, exactly like attr filtering. The match set is the
+    same scorer that serves top-k, in full-match mode, so every query
+    feature (OR/NOT, attr filters, phrases, proximity, tombstones)
+    composes.
 
-    Scale shape: attr rows are bounded by sum over matched values of
-    df(value) — posting-list-sized, never corpus-sized; the join is one
-    shuffle on doc_id (broadcast-able when the match set is small, AQE
-    decides) and the final groupBy is a partial-agg count over at most
-    |match| x values-per-doc rows. Unindexed fields fall back to a
-    doc_id join against ``source_df`` (scalar or array column); absent
-    both, raises — never a silent corpus scan.
+    Scale shape: one shard exchange of posting-list-sized rows, then a
+    partial-agg count in the scorer's stage and one tiny final reduce
+    over at most |match| x values-per-doc rows. Unindexed fields fall
+    back to a doc_id join against ``source_df`` (scalar or array
+    column); absent both, raises — never a silent corpus scan.
     """
-    match = _index_match_scored(built, parsed, source_df, tombstones).select(
-        "doc_id"
-    )
-    vals = _facet_values(built, field, source_df)
-    return vals.join(match, "doc_id").groupBy("value").agg(
-        F.count("*").cast("long").alias("n_docs")
-    )
+    return _facet_matches(built, parsed, field, source_df, tombstones).groupBy(
+        "value"
+    ).agg(F.count("*").cast("long").alias("n_docs"))
 
 
-def _facet_values(built, field: str, source_df: DataFrame | None) -> DataFrame:
-    """(doc_id, value) pairs for a facet field — shared by
-    ``facet_counts`` and ``facet_stats`` (one value-extraction truth).
-    Attr-indexed fields read their synthetic postings through one
-    prefix-pruned scan (numeric attrs decode back to int64; array
-    fields yield one row per distinct element — the per-distinct-
-    element indexing convention); unindexed fields fall back to a
-    doc_id join against ``source_df``; absent both, raises."""
+def _facet_values(field: str, source_df: DataFrame | None) -> DataFrame:
+    """(doc_id, value) pairs of an UNINDEXED facet field from
+    ``source_df`` (array fields yield one row per distinct element — the
+    attr postings' per-distinct-element convention); raises without a
+    source table. Attr-indexed fields never come here: the shard scorer
+    reads their values (``_ValueSpec``)."""
     from pyspark.sql.types import ArrayType
 
-    from xsearch_spark.constants import ATTR_TERM_PREFIX
-    from xsearch_spark.operators import segments as seg
-
-    if built.has_attr(field):
-        pref = f"{ATTR_TERM_PREFIX}{field}:"
-        rows = built.index_df.filter(F.col("term").startswith(pref))
-        raw_val = F.col("term").substr(F.lit(len(pref) + 1), F.lit(2**30))
-        if built.has_num_attr(field):
-            # round-6 §3.13: numeric values are stored order-preserving
-            # encoded — decode back to the int64 (same type the source
-            # fallback and the oracle emit)
-            raw_val = _num_attr_decode_col(raw_val)
-        return seg.decode_postings(rows, include_attrs=True).select(
-            "doc_id",
-            raw_val.alias("value"),
-        )
     if source_df is not None:
         col = source_df.schema[field].dataType
         if isinstance(col, ArrayType):
@@ -1552,25 +1710,15 @@ def facet_stats(
     array-valued facet fields bucket once per DISTINCT element, exactly
     like ``facet_counts``; avg rounds to 6, the rest exact int64.
 
-    INDEX-ONLY like its two parents: match truth from the shared
-    ``_index_match_scored`` (every query feature composes), facet
-    values from ``_facet_values`` (the one value-extraction truth
-    shared with ``facet_counts``), numeric values from the
-    order-preserving-encoded attr postings (``_num_attr_values``, which
-    raises on a non-numeric field). Scale shape: two posting-list-
-    bounded sides joined to the match set on doc_id (AQE broadcasts
-    small sides) and ONE partial-agg groupBy — never a source scan,
+    INDEX-ONLY like its two parents: the shard scorer serves the match
+    set and reads BOTH fields' attr postings in the same scan (the
+    numeric one order-preserving encoded; raises on a non-numeric
+    ``value_field``), emitting one (doc, facet value, number) row per
+    qualifying pair — then ONE partial-agg groupBy, never a source scan,
     never more rows than |match| x values-per-doc."""
-    match = _index_match_scored(built, parsed, source_df, tombstones).select(
-        "doc_id"
-    )
-    vals = _facet_values(built, facet_field, source_df)
-    nvals = _num_attr_values(built, value_field).select(
-        "doc_id", F.col("value").alias("_v")
-    )
+    num = _num_value_spec(built, "_v", value_field)
     return (
-        vals.join(match, "doc_id")
-        .join(nvals, "doc_id")
+        _facet_matches(built, parsed, facet_field, source_df, tombstones, num)
         .groupBy("value")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
@@ -1606,21 +1754,17 @@ def search_collapse(
     NULL rule); scores come back rounded — they are the ordering key;
     ``per_value`` >= 1 (raises otherwise).
 
-    Engine shape: match truth from the shared ``_index_match_scored``,
-    values from ``_facet_values`` (both posting-list-bounded,
-    index-only on an attr-indexed field); the per-bucket rank is ONE
-    window over the match-set-sized join (partitionBy value — one
-    shuffle) and the global cut plans as TakeOrderedAndProject."""
+    Engine shape: the scorer-served match set with the field's values
+    (index-only on an attr-indexed field); the per-bucket rank is ONE
+    window over it (partitionBy value — one shuffle) and the global cut
+    plans as TakeOrderedAndProject."""
     if per_value < 1:
         raise ValueError(f"per_value must be >= 1, got {per_value!r}")
     from pyspark.sql.window import Window
 
-    match = _index_match_scored(built, parsed, source_df, tombstones)
-    match = match.select(
-        "doc_id", F.round(F.col("score"), 6).alias("score")
-    )
-    vals = _facet_values(built, field, source_df)
-    joined = match.join(vals, "doc_id")
+    joined = _facet_matches(
+        built, parsed, field, source_df, tombstones
+    ).select("doc_id", "value", F.round(F.col("score"), 6).alias("score"))
     w = Window.partitionBy("value").orderBy(
         F.desc("score"), F.asc("doc_id")
     )
@@ -1648,13 +1792,9 @@ def facet_cardinality(
     the matching docs carry (array fields count distinct elements —
     the facet convention; NULL-valued docs drop). The exact form of
     the ES cardinality aggregation: one distinct partial-agg over the
-    posting-list-bounded facet join — index-only on an attr-indexed
+    scorer-served (doc, value) rows — index-only on an attr-indexed
     field, no top-k, no source fetch."""
-    match = _index_match_scored(built, parsed, source_df, tombstones).select(
-        "doc_id"
-    )
-    vals = _facet_values(built, field, source_df)
-    return vals.join(match, "doc_id").agg(
+    return _facet_matches(built, parsed, field, source_df, tombstones).agg(
         F.count_distinct(F.col("value")).cast("long").alias("n_values")
     )
 
@@ -1675,8 +1815,8 @@ def range_facets(
     (sum of (value >= e_i) casts, no floats, identical on both
     sides); empty buckets are absent (GROUP BY semantics). ``field``
     must be a numeric attr; edges must be strictly increasing ints
-    (raises otherwise). Index-only like the histogram: one
-    prefix-pruned attr scan + one doc_id join + a partial-agg
+    (raises otherwise). Index-only like the histogram: the scorer
+    emits each matched doc's decoded value, then a partial-agg
     count."""
     if not edges or any(
         int(b) <= int(a) for a, b in zip(edges, edges[1:])
@@ -1685,15 +1825,12 @@ def range_facets(
             f"edges must be a non-empty strictly increasing int list, "
             f"got {edges!r}"
         )
-    match = _index_match_scored(built, parsed, source_df, tombstones).select(
-        "doc_id"
-    )
-    vals = _num_attr_values(built, field)
+    num = _num_value_spec(built, "value", field)
     bucket = sum(
         (F.col("value") >= F.lit(int(e))).cast("long") for e in edges
     ).alias("bucket")
     return (
-        vals.join(match, "doc_id")
+        _served_matches(built, parsed, source_df, tombstones, num)
         .select(bucket)
         .groupBy("bucket")
         .agg(F.count("*").cast("long").alias("n_docs"))
@@ -1724,14 +1861,12 @@ def search_rescored(
     0); match semantics are untouched (rescoring never adds or
     removes docs beyond the NULL rule).
 
-    Engine shape: the shared ``_index_match_scored`` truth joined to
-    the field's order-preserving-encoded attr postings (both
-    posting-list-bounded, index-only) and ONE TakeOrderedAndProject —
+    Engine shape: the scorer-served match set carrying each doc's
+    decoded attr value (index-only) and ONE TakeOrderedAndProject —
     the same cost as a sort-by-field page."""
-    match = _index_match_scored(built, parsed, source_df, tombstones)
-    vals = _num_attr_values(built, field)
+    num = _num_value_spec(built, "value", field)
     return (
-        match.join(vals, "doc_id")
+        _served_matches(built, parsed, source_df, tombstones, num)
         .select(
             "doc_id",
             F.round(
@@ -1767,21 +1902,20 @@ def scan_docs(
     are mutually exclusive; the BM25 score rides along for
     presentation and does not affect the order.
 
-    Engine shape: the shared ``_index_match_scored`` truth (every
-    query feature composes) with the cursor filter applied BEFORE the
-    k-deep per-partition heaps, planned as TakeOrderedAndProject —
-    deep scroll pages cost the same one-scan job as page 1, never an
-    offset+k heap (the offset form exists only as the oracle's
-    statement of the order)."""
+    Engine shape: the scorer-served match set (every query feature
+    composes) with the cursor filter applied BEFORE the k-deep
+    per-partition heaps, planned as TakeOrderedAndProject — deep
+    scroll pages cost the same as page 1, never an offset+k heap (the
+    offset form exists only as the oracle's statement of the order)."""
     if after is not None and offset:
         raise ValueError(
             "offset and after are mutually exclusive (FIXTURES.md §3.27): "
             "a cursor page is already positioned"
         )
-    scored = _index_match_scored(built, parsed, source_df, tombstones)
+    scored = _served_matches(built, parsed, source_df, tombstones)
     if after is not None:
         scored = scored.filter(F.col("doc_id") > F.lit(int(after)))
-    out = scored.select("doc_id", "score").orderBy(F.asc("doc_id"))
+    out = scored.orderBy(F.asc("doc_id"))
     if offset:
         out = out.offset(offset)
     return out.limit(k)
@@ -1795,64 +1929,16 @@ def match_count(
 ) -> DataFrame:
     """Total-hits count (round-6, Q11b): the number of docs in the FULL
     match set -> one (n_docs) row — the result-page "About N results"
-    number. Shares `_index_match_scored` with `search_index_relational`
-    and `facet_counts` (ONE source of match truth per CLAUDE.md), so
-    every query feature (OR/NOT, attrs, phrases, proximity, prefixes,
-    tombstones) composes; the count is a partial-agg reduce over the
-    match set — no top-k, no source fetch, no extra shuffle beyond the
-    match evaluation itself."""
+    number. Deliberately on the declarative twin ``_index_match_scored``
+    (shared with ``search_index_relational``), not the scorer that
+    serves the other result pages: a page checked against this count is
+    checked against a second, independent match evaluation. Every query
+    feature (OR/NOT, attrs, phrases, proximity, prefixes, tombstones)
+    composes; the count is a partial-agg reduce over the match set — no
+    top-k, no source fetch."""
     return (
         _index_match_scored(built, parsed, source_df, tombstones)
         .agg(F.count("*").cast("long").alias("n_docs"))
-    )
-
-
-def _num_attr_decode_col(col: "F.Column") -> "F.Column":
-    """Column twin of constants.num_attr_decode: 20-digit encoded value
-    -> int64 (via DECIMAL(20,0) — the encoded domain exceeds int64)."""
-    from decimal import Decimal
-
-    from xsearch_spark.constants import NUM_ATTR_OFFSET
-
-    return (
-        col.cast("decimal(20,0)") - F.lit(Decimal(NUM_ATTR_OFFSET))
-    ).cast("long")
-
-
-def _num_attr_values(
-    built,
-    field: str,
-    lo_term: str | None = None,
-    hi_term: str | None = None,
-) -> DataFrame:
-    """(doc_id, value) decoded from a numeric attr field's
-    order-preserving-encoded postings — ONE prefix-pruned index scan,
-    the source table never touched. ``lo_term``/``hi_term`` bound the
-    scan to an encoded-term interval (pushed to parquet, so row-group
-    min/max statistics prune by VALUE — the cursor-pagination and
-    range lever). Raises when the field is not a numeric attr of this
-    index (scalar-int by construction, so the (doc, value) relation is
-    1:1)."""
-    from xsearch_spark.constants import ATTR_TERM_PREFIX
-    from xsearch_spark.operators import segments as seg
-
-    if not built.has_num_attr(field):
-        raise ValueError(
-            f"{field}: requires the field in the index's "
-            f"num_attr_fields (integer attr_cols, FIXTURES.md §3.13); "
-            f"this index carries {built.num_attr_fields!r}"
-        )
-    pref = f"{ATTR_TERM_PREFIX}{field}:"
-    rows = built.index_df.filter(F.col("term").startswith(pref))
-    if lo_term is not None:
-        rows = rows.filter(F.col("term") >= lo_term)
-    if hi_term is not None:
-        rows = rows.filter(F.col("term") <= hi_term)
-    return seg.decode_postings(rows, include_attrs=True).select(
-        "doc_id",
-        _num_attr_decode_col(
-            F.col("term").substr(F.lit(len(pref) + 1), F.lit(2**30))
-        ).alias("value"),
     )
 
 
@@ -1873,15 +1959,14 @@ def search_sorted(
     total order (sort_value ASC|DESC, doc_id ASC) — the "sort by date /
     size, page 2" result shape.
 
-    INDEX-ONLY on both sides: the match set is the shared
-    ``_index_match_scored`` evaluation (every query feature composes —
-    OR/NOT/attrs/ranges/phrases/prefixes/fuzzy/tombstones), and the
-    sort keys come from the field's order-preserving-encoded attr
-    postings through one prefix-pruned scan — the source table is never
-    touched. Docs lacking the field have no attr posting and drop out
-    (frozen: NULL never sorts). Requires the field in
-    ``num_attr_fields`` — numeric attrs are scalar by construction
-    (build-time validation), so the value join is 1:1 and the total
+    INDEX-ONLY: the shard scorer serves the match set (every query
+    feature composes — OR/NOT/attrs/ranges/phrases/prefixes/fuzzy/
+    tombstones) and reads the sort keys from the field's
+    order-preserving-encoded attr postings in the same scan — the
+    source table is never touched. Docs lacking the field have no attr
+    posting and drop out (frozen: NULL never sorts). Requires the field
+    in ``num_attr_fields`` — numeric attrs are scalar by construction
+    (build-time validation), so each doc has one key and the total
     order is deterministic.
 
     ``after=(value, doc_id)`` (§3.14, cursor pagination): return the k
@@ -1895,42 +1980,38 @@ def search_sorted(
     heap stays k-deep where an offset page needs offset+k. Mutually
     exclusive with a non-zero offset.
 
-    Scale shape: the values side is posting-list-bounded, the join is
-    one shuffle (AQE broadcasts the smaller side), and the global cut
-    plans as TakeOrderedAndProject with limit offset+k — per-partition
-    heaps, never a full sort.
+    Scale shape: one shard exchange of posting-list-sized rows, and the
+    global cut plans as TakeOrderedAndProject with limit offset+k —
+    per-partition heaps, never a full sort.
     """
     if after is not None and offset:
         raise ValueError(
             "offset and after are mutually exclusive (FIXTURES.md §3.14): "
             "a cursor page is already positioned"
         )
-    match = _index_match_scored(built, parsed, source_df, tombstones)
     lo_term = hi_term = None
     if after is not None:
-        from xsearch_spark.constants import ATTR_TERM_PREFIX, num_attr_encode
+        from xsearch_spark.constants import num_attr_encode
 
-        bound = f"{ATTR_TERM_PREFIX}{sort_field}:{num_attr_encode(after[0])}"
+        bound = attr_term(sort_field, num_attr_encode(after[0]))
         if ascending:
             lo_term = bound
         else:
             hi_term = bound
-    vals = _num_attr_values(built, sort_field, lo_term, hi_term).select(
-        "doc_id", F.col("value").alias("sort_value")
-    )
-    joined = match.join(vals, "doc_id")
+    num = _num_value_spec(built, "sort_value", sort_field, lo_term, hi_term)
+    matched = _served_matches(built, parsed, source_df, tombstones, num)
     if after is not None:
         av, ad = after
         sv = F.col("sort_value")
         strict = sv > F.lit(av) if ascending else sv < F.lit(av)
-        joined = joined.filter(
+        matched = matched.filter(
             strict | ((sv == F.lit(av)) & (F.col("doc_id") > F.lit(ad)))
         )
     order = [
         F.asc("sort_value") if ascending else F.desc("sort_value"),
         F.asc("doc_id"),
     ]
-    out = joined.select("doc_id", "sort_value", "score").orderBy(*order)
+    out = matched.select("doc_id", "sort_value", "score").orderBy(*order)
     if offset:
         out = out.offset(offset)
     return out.limit(k)
@@ -1993,17 +2074,14 @@ def field_stats(
     """Numeric-field statistics over the FULL match set (round-6,
     FIXTURES.md §3.17) -> one (n_docs, min_value, max_value, sum_value,
     avg_value) row — the result-page "price range / size stats"
-    aggregation. INDEX-ONLY like facets: values decode from the
-    numeric attr postings (one prefix-pruned scan), the match set is
-    the shared ``_index_match_scored`` truth, and the aggregate is a
-    partial-agg reduce — no top-k, no source fetch. Docs lacking the
-    field carry no attr posting and drop out (n_docs counts docs WITH
-    the field, consistent with facet/sort NULL semantics)."""
-    match = _index_match_scored(built, parsed, source_df, tombstones).select(
-        "doc_id"
-    )
-    vals = _num_attr_values(built, field)
-    return vals.join(match, "doc_id").agg(
+    aggregation. INDEX-ONLY like facets: the shard scorer serves the
+    match set and decodes each matched doc's value from the numeric
+    attr postings read in the same scan; the aggregate is a partial-agg
+    reduce in the scorer's stage — no top-k, no source fetch. Docs
+    lacking the field carry no attr posting and drop out (n_docs counts
+    docs WITH the field, consistent with facet/sort NULL semantics)."""
+    num = _num_value_spec(built, "value", field)
+    return _served_matches(built, parsed, source_df, tombstones, num).agg(
         F.count("*").cast("long").alias("n_docs"),
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
@@ -2026,19 +2104,16 @@ def facet_histogram(
     too, via exact int64 arithmetic — ``v - pmod(v, interval)`` — so
     both sides agree at every boundary; no float division anywhere).
     The numeric-facet twin of ``facet_counts``: same index-only shape
-    (one prefix-pruned attr scan + one doc_id join + a partial-agg
-    count), every query feature composes."""
+    (the scorer emits each matched doc's decoded value, then a
+    partial-agg count), every query feature composes."""
     if interval <= 0:
         raise ValueError(f"interval must be a positive int, got {interval!r}")
-    match = _index_match_scored(built, parsed, source_df, tombstones).select(
-        "doc_id"
-    )
-    vals = _num_attr_values(built, field)
+    num = _num_value_spec(built, "value", field)
     bucket = (
         F.col("value") - F.pmod(F.col("value"), F.lit(interval))
     ).alias("bucket")
     return (
-        vals.join(match, "doc_id")
+        _served_matches(built, parsed, source_df, tombstones, num)
         .select(bucket)
         .groupBy("bucket")
         .agg(F.count("*").cast("long").alias("n_docs"))
