@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 from xsearch_spark import engine
+from xsearch_spark.constants import attr_term
 from xsearch_spark.operators import segments as seg
 from xsearch_spark.operators.wand import search_wand
 from xsearch_spark.plans import admin
@@ -47,18 +48,20 @@ def test_tombstone_then_compact(spark, built):
     before = [r["doc_id"] for r in search_wand(built, parsed, source_df=docs).collect()]
     victims = before[:2]
 
-    # S5 query-time tombstones: victims disappear without a rebuild
+    # S5 query-time tombstones: victims disappear without a rebuild, and
+    # the scorer drops them BEFORE its top-k cut, so a full page of k
+    # rows still comes back
     admin.append_tombstones(spark, built.root, victims)
     tomb = admin.load_tombstones(spark, built.root)
-    filtered = admin.apply_tombstones(
-        search_wand(built, parsed, k=20, source_df=docs), tomb
+    filtered = search_wand(
+        built, parsed, k=20, source_df=docs, tombstones=tomb
     ).collect()
     after_ids = [r["doc_id"] for r in filtered]
     assert not set(victims) & set(after_ids)
+    assert len(after_ids) == 20
 
     # compaction folds tombstones in; geometry comes from the persisted
-    # build-time values (docs_per_segment=128, segs_per_shard=2) — passing
-    # nothing here is the round-1-advisor regression test
+    # build-time values (docs_per_segment=128, segs_per_shard=2)
     admin.compact(spark, built)
     assert admin.load_tombstones(spark, built.root) is None
     post = [r["doc_id"] for r in search_wand(built, parsed, k=10, source_df=docs).collect()]
@@ -88,9 +91,8 @@ def test_tombstone_then_compact(spark, built):
     built_rows = seg.decode_postings(built.index_df.filter(F.col("term").isin(terms)))
     built_df = {(r["term"], r["df"]) for r in built_rows.select("term", "df").distinct().collect()}
     assert len(fresh_df) == 2 and fresh_df == built_df
-    # Q11 facets survive the compact: the rebuilt attr postings
-    # (include_attrs=True on the decode->rebuild path) must serve the
-    # same per-lang counts as a groupby over the surviving corpus
+    # Q11 facets survive the compact: the purged attr runs must serve
+    # the same per-lang counts as a groupby over the surviving corpus
     from xsearch_spark.operators.wand import facet_counts
 
     p = parse("hash OR join")
@@ -293,18 +295,19 @@ def test_streaming_multivalue_attr(spark, tmp_path):
 
 
 def test_compaction_preserves_positions(spark, tmp_path):
-    """v6 positional stream survives BOTH compaction paths: incremental
-    (the purge UDF drops deleted postings' substreams with the same
-    keep-mask) and full (decode_positions rides the rebuild). Oracle:
+    """v6 positional stream survives BOTH compaction paths, which share
+    one purge (deleted postings' substreams drop with the same
+    keep-mask); full compact then re-merges the purged runs. Oracles:
     phrase queries over the compacted index equal the naive evaluation
-    over source-minus-victims."""
+    over source-minus-victims, and the compacted index rows equal a
+    fresh build over source-minus-victims in every column."""
     docs = read_documents(spark, SF_DIR)
-    bi = build_index(
-        spark, docs, str(tmp_path / "pos_idx"),
+    geometry = dict(
         text_col="text", variant="base",
         docs_per_segment=128, segs_per_shard=2, num_buckets=8,
-        positions=True,
+        positions=True, attr_cols=("lang", "source", "n_chars"),
     )
+    bi = build_index(spark, docs, str(tmp_path / "pos_idx"), **geometry)
     assert bi.has_positions
     phrase = parse('"hash join" spark')
     before = [r["doc_id"] for r in search_wand(bi, phrase).collect()]
@@ -348,6 +351,28 @@ def test_compaction_preserves_positions(spark, tmp_path):
             (r["doc_id"], r["score"]) for r in engine.run_query(fresh, p).collect()
         ]
         assert got == want, q
+
+    # row identity: every column of every (term, shard) row — string and
+    # encoded numeric attr runs, positions, block maxima under the
+    # trued-up avgdl, df and bucket — equals a fresh build
+    rebuilt = build_index(spark, remaining, str(tmp_path / "fresh_idx"), **geometry)
+    assert bi.has_positions and bi.num_attr_fields == ("n_chars",)
+    assert (bi.n_docs, bi.sum_dl) == (rebuilt.n_docs, rebuilt.sum_dl)
+
+    def rows_of(b):
+        return {
+            (r["term"], r["shard"]): {
+                c: bytes(v) if isinstance(v, bytearray) else v
+                for c, v in r.asDict().items()
+            }
+            for r in b.index_df.collect()
+        }
+
+    got_rows, want_rows = rows_of(bi), rows_of(rebuilt)
+    assert len(bi.index_df.columns) == 13
+    assert sorted(bi.index_df.columns) == sorted(rebuilt.index_df.columns)
+    assert any(t.startswith(attr_term("n_chars", "")) for t, _ in want_rows)
+    assert got_rows == want_rows
 
 
 def test_streaming_epoch_redelivery_exactly_once(spark, tmp_path):

@@ -27,7 +27,7 @@ from xsearch_spark.operators.segments import (
 )
 
 
-def _pack_run(term, shard, ids, tfs, dls, avgdl, poss=None, bucket=None):
+def _pack_run(term, shard, ids, tfs, dls, avgdl, poss=None, bucket=0):
     """One packed run row as the merge stage receives it."""
     starts = np.arange(0, ids.size, BLOCK_SIZE)
     row = {
@@ -47,13 +47,12 @@ def _pack_run(term, shard, ids, tfs, dls, avgdl, poss=None, bucket=None):
         .tolist(),
         "block_max": np.zeros(starts.size).tolist(),
         "avgdl": avgdl,
+        "bucket": bucket,
     }
-    if bucket is not None:
-        row["bucket"] = bucket
     return row
 
 
-def _reference_merge(rows, include_bucket, avgdl):
+def _reference_merge(rows, avgdl):
     """Per-group reference: decode -> (sort) -> re-encode, the pre-round-6
     semantics, straight from the codec primitives."""
     pdf = pd.DataFrame(rows)
@@ -90,24 +89,22 @@ def _reference_merge(rows, include_bucket, avgdl):
             "block_max": np.maximum.reduceat(
                 _bm25_factor(tfs, dls, avgdl), bst
             ).tolist(),
+            "bucket": int(g["bucket"].iloc[0]),
         }
-        if include_bucket:
-            row["bucket"] = int(g["bucket"].iloc[0])
         out.append(row)
-    if include_bucket:
-        df_by_term = {}
-        for r in out:
-            if not r["term"].startswith(ATTR_TERM_PREFIX):
-                df_by_term[r["term"]] = df_by_term.get(r["term"], 0) + r["n_docs"]
-        for r in out:
-            r["df"] = df_by_term.get(r["term"], 0)
+    df_by_term = {}
+    for r in out:
+        if not r["term"].startswith(ATTR_TERM_PREFIX):
+            df_by_term[r["term"]] = df_by_term.get(r["term"], 0) + r["n_docs"]
+    for r in out:
+        r["df"] = df_by_term.get(r["term"], 0)
     return out
 
 
-def _random_frame(rng, with_positions, with_interleave, include_bucket, avgdl):
+def _random_frame(rng, with_positions, with_interleave, with_attr_term, avgdl):
     rows = []
     terms = [f"t{i:02d}" for i in range(rng.integers(3, 8))]
-    if include_bucket:
+    if with_attr_term:
         terms.append(ATTR_TERM_PREFIX + "lang=en")
     for ti, term in enumerate(sorted(terms)):
         for shard in range(int(rng.integers(1, 4))):
@@ -136,7 +133,7 @@ def _random_frame(rng, with_positions, with_interleave, include_bucket, avgdl):
                 rows.append(
                     _pack_run(
                         term, shard, ids, tfs, dls, avgdl, poss,
-                        bucket=(ti % 4) if include_bucket else None,
+                        bucket=ti % 4,
                     )
                 )
     return rows
@@ -144,16 +141,16 @@ def _random_frame(rng, with_positions, with_interleave, include_bucket, avgdl):
 
 @pytest.mark.parametrize("with_positions", [False, True])
 @pytest.mark.parametrize("with_interleave", [False, True])
-@pytest.mark.parametrize("include_bucket", [False, True])
-def test_merge_frame_matches_reference(with_positions, with_interleave, include_bucket):
+@pytest.mark.parametrize("with_attr_term", [False, True])
+def test_merge_frame_matches_reference(with_positions, with_interleave, with_attr_term):
     avgdl = 57.3
     for seed in range(3):
         rng = np.random.default_rng(1000 + seed)
-        rows = _random_frame(rng, with_positions, with_interleave, include_bucket, avgdl)
+        rows = _random_frame(rng, with_positions, with_interleave, with_attr_term, avgdl)
         pdf = pd.DataFrame(rows)
         starts = _group_bounds(pdf["term"].to_numpy(), pdf["shard"].to_numpy())
-        got = _merge_frame(pdf, starts, include_bucket=include_bucket)
-        want = _reference_merge(rows, include_bucket, avgdl)
+        got = _merge_frame(pdf, starts)
+        want = _reference_merge(rows, avgdl)
         assert len(got) == len(want)
         for i, w in enumerate(want):
             g = got.iloc[i]
@@ -163,8 +160,7 @@ def test_merge_frame_matches_reference(with_positions, with_interleave, include_
                 assert bytes(g[col]) == w[col], (i, col, w["term"])
             assert list(g["block_last"]) == w["block_last"], i
             assert np.allclose(list(g["block_max"]), w["block_max"], rtol=0, atol=0)
-            if include_bucket:
-                assert g["df"] == w["df"] and g["bucket"] == w["bucket"], i
+            assert g["df"] == w["df"] and g["bucket"] == w["bucket"], i
 
 
 @settings(max_examples=40, deadline=None)
@@ -172,20 +168,20 @@ def test_merge_frame_matches_reference(with_positions, with_interleave, include_
     seed=st.integers(0, 10**6),
     with_positions=st.booleans(),
     with_interleave=st.booleans(),
-    include_bucket=st.booleans(),
+    with_attr_term=st.booleans(),
 )
 def test_merge_frame_matches_reference_hypothesis(
-    seed, with_positions, with_interleave, include_bucket
+    seed, with_positions, with_interleave, with_attr_term
 ):
     """Hypothesis sweep over the same parity property — shrinkage finds
     minimal failing frame shapes if the flat-pass arithmetic regresses."""
     avgdl = 33.7
     rng = np.random.default_rng(seed)
-    rows = _random_frame(rng, with_positions, with_interleave, include_bucket, avgdl)
+    rows = _random_frame(rng, with_positions, with_interleave, with_attr_term, avgdl)
     pdf = pd.DataFrame(rows)
     starts = _group_bounds(pdf["term"].to_numpy(), pdf["shard"].to_numpy())
-    got = _merge_frame(pdf, starts, include_bucket=include_bucket)
-    want = _reference_merge(rows, include_bucket, avgdl)
+    got = _merge_frame(pdf, starts)
+    want = _reference_merge(rows, avgdl)
     assert len(got) == len(want)
     for i, w in enumerate(want):
         g = got.iloc[i]
@@ -196,8 +192,7 @@ def test_merge_frame_matches_reference_hypothesis(
             assert bytes(g[col]) == w[col], (i, col, w["term"])
         assert list(g["block_last"]) == w["block_last"], i
         assert list(g["block_max"]) == w["block_max"], i
-        if include_bucket:
-            assert g["df"] == w["df"], i
+        assert (g["df"], g["bucket"]) == (w["df"], w["bucket"]), i
 
 
 def test_merge_frame_duplicate_doc_id_raises():

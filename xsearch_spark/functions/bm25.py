@@ -27,13 +27,3 @@ def bm25_weight_col(idf: Column, tf: Column, dl: Column, avgdl) -> Column:
     dl_d = dl.cast("double")
     denom = tf_d + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * dl_d / a)
     return idf * tf_d * F.lit(K1 + 1.0) / denom
-
-
-def idf_upper_bound(idf: float) -> float:
-    """dl-independent BM25 upper bound per posting: idf * (k1 + 1).
-
-    Used for block-max WAND metadata (FIXTURES.md §3.4); any valid upper
-    bound is spec-legal because WAND must be exact (output equals naive
-    top-k).
-    """
-    return idf * (K1 + 1.0)

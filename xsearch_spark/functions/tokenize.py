@@ -110,10 +110,6 @@ def _expand_one(raw: str) -> tuple[str, ...]:
     return out
 
 
-def _expand_raw_tokens(raws: list[str]) -> list[str]:
-    return [t for raw in raws for t in (_EXPAND_CACHE.get(raw) or _expand_one(raw))]
-
-
 def make_code_tokenizer_udf():
     """Arrow-batched pandas UDF: content -> array<string> (code variant)."""
     from pyspark.sql.functions import pandas_udf
@@ -155,11 +151,6 @@ def tokenize_cjk_col(col: Column) -> Column:
         )
     )
     return F.concat(tokenize_base_col(col), bigrams)
-
-
-# the pluggable analyzer registry (A1): xsearch exposes analyzers as
-# plugins; here a variant name selects (column expr or UDF, python twin).
-ANALYZER_VARIANTS = ("base", "code", "cjk")
 
 
 def tokenize_df(df, text_col: str, variant: str = "base", out_col: str = "tokens"):

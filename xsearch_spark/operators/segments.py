@@ -12,11 +12,10 @@ varint-style posting compression".
 Topology here:
 
   * A *segment* is a doc-id slice: ``seg_id = doc_id // docs_per_seg``.
-    B4 shuffles long postings once by seg_id, sorts within partitions by
-    (seg_id, term, doc_id), and packs each (seg_id, term) group into one
-    compressed run via ``mapInPandas`` — an iterator over Arrow batches
-    with carry-over across batch boundaries, so a term's run never needs
-    the whole partition in memory.
+    B4 tokenizes the source documents and packs each (seg_id, term)
+    group into one compressed run in a single Arrow UDF
+    (:func:`pack_from_source`, the only packer), flushing a segment's
+    runs when the doc stream crosses its boundary.
   * B5 merge re-keys runs to ``shard = seg_id // segs_per_shard`` and
     concatenates presorted, disjoint runs per (term, shard). The shard
     key IS the salt (range-salting by doc-id slice, FIXTURES-pinned): a
@@ -347,146 +346,59 @@ def _group_bounds(*key_arrays: np.ndarray) -> np.ndarray:
     return np.nonzero(change)[0]
 
 
-def make_pack_iter(avgdl: float):
-    """mapInPandas packer: sorted (seg_id, term, doc_id, tf, dl) batches
-    -> packed runs. Carries the trailing (possibly incomplete) group
-    across Arrow batch boundaries so memory stays O(batch + one group)."""
-
-    def pack_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                continue
-            segs = pdf["seg_id"].to_numpy()
-            terms = pdf["term"].to_numpy()
-            starts = _group_bounds(segs, terms)
-            # hold back the final group — it may continue in the next batch
-            if starts.size > 1:
-                last_start = starts[-1]
-                carry = pdf.iloc[last_start:]
-                pdf = pdf.iloc[:last_start]
-                starts = starts[:-1]
-            else:
-                carry = pdf
-                continue
-            yield _pack_frame(pdf, starts, avgdl)
-        if carry is not None and not carry.empty:
-            segs = carry["seg_id"].to_numpy()
-            terms = carry["term"].to_numpy()
-            starts = _group_bounds(segs, terms)
-            yield _pack_frame(carry, starts, avgdl)
-
-    return pack_iter
-
-
-def _pack_frame(pdf: pd.DataFrame, starts: np.ndarray, avgdl: float) -> pd.DataFrame:
-    doc_ids = pdf["doc_id"].to_numpy(np.int64)
-    tfs = pdf["tf"].to_numpy(np.int64)
-    dls = pdf["dl"].to_numpy(np.int64)
-    segs = pdf["seg_id"].to_numpy()
-    terms = pdf["term"].to_numpy()
-    pos_flat = None
-    if "poss" in pdf.columns:
-        # long postings carrying per-posting position lists (v6 — the
-        # compaction rebuild): flatten once, the
-        # per-posting boundaries are recovered from the tfs stream
-        cells = pdf["poss"].to_numpy(object)
-        pos_flat = (
-            np.concatenate([np.asarray(c, dtype=np.int64) for c in cells])
-            if cells.size
-            else np.empty(0, np.int64)
-        )
-    out = _pack_groups_frame(
-        segs[starts], terms[starts], doc_ids, tfs, dls, starts, avgdl, pos_flat
-    )
-    return out[[f.name for f in PACKED_SCHEMA.fields]]
-
-
-def build_segments(
-    postings_with_dl: DataFrame,
-    avgdl: float,
-    docs_per_segment: int = DEFAULT_DOCS_PER_SEGMENT,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """B4+B6+B7: long postings (term, doc_id, tf, dl) -> packed segment
-    runs, one shuffle (by seg_id) + partition-local sort. Serves only the
-    rebuild from decoded postings (``admin.compact``); every producer
-    that tokenizes text packs through :func:`pack_from_source`."""
-    n = num_partitions or postings_with_dl.sparkSession.sparkContext.defaultParallelism * 2
-    p = postings_with_dl.withColumn(
-        "seg_id", (F.col("doc_id") / F.lit(docs_per_segment)).cast("long")
-    )
-    p = p.repartition(n, "seg_id").sortWithinPartitions("seg_id", "term", "doc_id")
-    return p.mapInPandas(make_pack_iter(avgdl), PACKED_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # B5: shuffle merge keyed by term, range-salted by shard
 
 
-def make_merge_iter(include_bucket: bool = False):
+def merge_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas merger: sorted (term, shard, first_doc_id) run batches
     -> one concatenated run per (term, shard). Runs are disjoint doc-id
     ranges (segments are doc slices), so concatenation needs no re-sort;
-    monotonicity is asserted. ``include_bucket``: carry a precomputed
-    ``bucket`` column through (constant per term) for the fused
-    merge->layout topology (:func:`merge_to_index`), AND denormalize the
-    term's GLOBAL df into every output row — in that topology all shards
-    of a term live in one bucket partition, so the true collection-wide
-    df is computable locally and warm queries read it straight from the
-    pruned scan (no term-dictionary collect / broadcast on the driver; a
-    billion-term source-code vocabulary never leaves the executors).
+    monotonicity is asserted. The precomputed ``bucket`` column rides
+    through (constant per term) for the fused merge->layout topology
+    (:func:`merge_to_index`), and the term's GLOBAL df is denormalized
+    into every output row — all shards of a term live in one bucket
+    partition, so the true collection-wide df is computable locally and
+    warm queries read it straight from the pruned scan (no
+    term-dictionary collect / broadcast on the driver; a billion-term
+    source-code vocabulary never leaves the executors).
 
-    Carry granularity follows: (term, shard) groups normally, whole TERM
-    groups when df is computed (a term's df needs all its shards in one
-    frame). The carry holds packed (still-encoded) runs, so a hot term
-    with many shards costs index-row bytes, not decoded postings."""
-
-    def merge_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                continue
-            terms = pdf["term"].to_numpy()
-            shards = pdf["shard"].to_numpy()
-            if include_bucket:
-                # term-granular carry for REAL terms (df needs all shards);
-                # synthetic attr terms (v5) get df=0 and carry per (term,
-                # shard) — a hot attr list (lang:en ~ half the corpus)
-                # must never be held whole in one frame. Vectorized
-                # prefix test: this runs over every run row of the merge.
-                is_attr = (
-                    pdf["term"].str.startswith(ATTR_TERM_PREFIX).to_numpy(bool)
-                )
-                cbounds = _group_bounds(terms, np.where(is_attr, shards, -1))
-            else:
-                cbounds = _group_bounds(terms, shards)
-            if cbounds.size > 1:
-                last_start = cbounds[-1]
-                carry = pdf.iloc[last_start:]
-                pdf = pdf.iloc[:last_start]
-                terms, shards = terms[:last_start], shards[:last_start]
-            else:
-                carry = pdf
-                continue
-            yield _merge_frame(pdf, _group_bounds(terms, shards), include_bucket)
-        if carry is not None and not carry.empty:
-            terms = carry["term"].to_numpy()
-            shards = carry["shard"].to_numpy()
-            yield _merge_frame(carry, _group_bounds(terms, shards), include_bucket)
-
-    return merge_iter
+    The carry is therefore TERM-granular for real terms (a term's df
+    needs all its shards in one frame). It holds packed (still-encoded)
+    runs, so a hot term with many shards costs index-row bytes, not
+    decoded postings."""
+    carry: pd.DataFrame | None = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+            carry = None
+        if pdf.empty:
+            continue
+        terms = pdf["term"].to_numpy()
+        shards = pdf["shard"].to_numpy()
+        # term-granular carry for REAL terms (df needs all shards);
+        # synthetic attr terms (v5) get df=0 and carry per (term, shard)
+        # — a hot attr list (lang:en ~ half the corpus) must never be
+        # held whole in one frame. Vectorized prefix test: this runs over
+        # every run row of the merge.
+        is_attr = pdf["term"].str.startswith(ATTR_TERM_PREFIX).to_numpy(bool)
+        cbounds = _group_bounds(terms, np.where(is_attr, shards, -1))
+        if cbounds.size > 1:
+            last_start = cbounds[-1]
+            carry = pdf.iloc[last_start:]
+            pdf = pdf.iloc[:last_start]
+            terms, shards = terms[:last_start], shards[:last_start]
+        else:
+            carry = pdf
+            continue
+        yield _merge_frame(pdf, _group_bounds(terms, shards))
+    if carry is not None and not carry.empty:
+        terms = carry["term"].to_numpy()
+        shards = carry["shard"].to_numpy()
+        yield _merge_frame(carry, _group_bounds(terms, shards))
 
 
-def _merge_frame(
-    pdf: pd.DataFrame, starts: np.ndarray, include_bucket: bool = False
-) -> pd.DataFrame:
+def _merge_frame(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
     """Merge consecutive (term, shard) run groups — SEGMENTED (round 6,
     the same treatment round 5 gave the pack stage): one vectorized
     codec pass per Arrow frame instead of a decode + re-encode per
@@ -699,19 +611,17 @@ def _merge_frame(
             "block_max": np.split(bm_flat, cuts),
         }
     )
-    if include_bucket:
-        # global df per term = Σ merged n_docs over its shards (shards
-        # are disjoint doc ranges, so the sum counts each doc once). All
-        # of a term's shards are in this frame (term-granular carry in
-        # merge_iter). Synthetic attr terms are never scored: their rows
-        # carry no contribution, so the per-term sum pins their df to 0.
-        out_terms = pd.Series(terms[starts])
-        is_attr_out = out_terms.str.startswith(ATTR_TERM_PREFIX).to_numpy(bool)
-        contrib = pd.Series(np.where(is_attr_out, 0, g_nd))
-        out["df"] = contrib.groupby(out_terms).transform("sum").to_numpy(np.int64)
-        out["bucket"] = pdf["bucket"].to_numpy()[starts].astype(np.int32)
-    schema = MERGED_BUCKET_SCHEMA if include_bucket else MERGED_SCHEMA
-    return out[[f.name for f in schema.fields]]
+    # global df per term = Σ merged n_docs over its shards (shards are
+    # disjoint doc ranges, so the sum counts each doc once). All of a
+    # term's shards are in this frame (term-granular carry in
+    # merge_iter). Synthetic attr terms are never scored: their rows
+    # carry no contribution, so the per-term sum pins their df to 0.
+    out_terms = pd.Series(terms[starts])
+    is_attr_out = out_terms.str.startswith(ATTR_TERM_PREFIX).to_numpy(bool)
+    contrib = pd.Series(np.where(is_attr_out, 0, g_nd))
+    out["df"] = contrib.groupby(out_terms).transform("sum").to_numpy(np.int64)
+    out["bucket"] = pdf["bucket"].to_numpy()[starts].astype(np.int32)
+    return out[[f.name for f in MERGED_SCHEMA.fields]]
 
 
 def _poss_bytes(b) -> bytes:
@@ -732,12 +642,6 @@ MERGED_SCHEMA = StructType(
         StructField("poss", BinaryType(), False),  # v6 positions (b"" = none)
         StructField("block_last", ArrayType(LongType()), False),
         StructField("block_max", ArrayType(DoubleType()), False),
-    ]
-)
-
-MERGED_BUCKET_SCHEMA = StructType(
-    MERGED_SCHEMA.fields
-    + [
         # global per-term doc frequency, denormalized so query-time idf
         # reads from the pruned scan (no driver-side term dictionary —
         # index layout v4, see plans/build_index.INDEX_FORMAT_VERSION)
@@ -745,25 +649,6 @@ MERGED_BUCKET_SCHEMA = StructType(
         StructField("bucket", IntegerType(), False),
     ]
 )
-
-
-def merge_segments(
-    segment_runs: DataFrame,
-    avgdl: float,
-    segs_per_shard: int = DEFAULT_SEGS_PER_SHARD,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """B5: (term, seg_id) runs -> (term, shard) merged runs. One shuffle
-    keyed (term, shard); the shard component is the range salt that
-    spreads hot-term merge work (SURVEY.md B5 / BASELINE.json:6)."""
-    n = num_partitions or segment_runs.sparkSession.sparkContext.defaultParallelism * 2
-    runs = segment_runs.withColumn(
-        "shard", (F.col("seg_id") / F.lit(segs_per_shard)).cast("long")
-    ).withColumn("avgdl", F.lit(avgdl))
-    runs = runs.repartition(n, "term", "shard").sortWithinPartitions(
-        "term", "shard", "first_doc_id"
-    )
-    return runs.mapInPandas(make_merge_iter(), MERGED_SCHEMA)
 
 
 # target packed-run rows per merge task (round 7): enough decode/concat
@@ -786,8 +671,8 @@ def merge_to_index(
     NO second exchange and no post-merge sort (the two-shuffle version
     spent as long re-laying-out the merged rows as merging them).
 
-    Trade-off vs :func:`merge_segments`: a term's shards all live in one
-    bucket partition, so per-term merge parallelism is bounded by
+    Trade-off vs a (term, shard)-keyed shuffle: a term's shards all live
+    in one bucket partition, so per-term merge parallelism is bounded by
     num_buckets rather than num_buckets x shards. With num_buckets >=
     2x cores (and thousands at prod scale) the bucket key spreads hot
     terms' decode bytes adequately; shard salting still bounds ROW size
@@ -831,13 +716,7 @@ def merge_to_index(
         runs = runs.repartition(num_buckets, "bucket").sortWithinPartitions(
             "term", "shard", "first_doc_id"
         )
-    return runs.mapInPandas(make_merge_iter(include_bucket=True), MERGED_BUCKET_SCHEMA)
-
-
-def _recompute_block_max(
-    tfs: np.ndarray, dls: np.ndarray, avgdl: float, block_starts: np.ndarray
-) -> list:
-    return np.maximum.reduceat(_bm25_factor(tfs, dls, avgdl), block_starts).tolist()
+    return runs.mapInPandas(merge_iter, MERGED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1095,23 +974,18 @@ def pack_from_source(
     return docs.drop("_chunk").mapInPandas(pack_docs_iter, PACKED_SCHEMA)
 
 
-def decode_postings(
-    packed: DataFrame,
-    include_attrs: bool = False,
-    include_positions: bool = False,
-) -> DataFrame:
+def decode_postings(packed: DataFrame, include_attrs: bool = False) -> DataFrame:
     """Q3: mirror of the packing codec — packed runs back to long form.
     Vectorized: one NumPy concat per Arrow batch, never per-posting
     Python. The index rows' denormalized ``df`` is carried through
     (repeated per posting) so the relational scorer needs no term-stats
-    join.
+    join. Positions never cross this boundary (phrase adjacency reads
+    them through :func:`decode_positions`); compaction never decodes —
+    it purges encoded runs and re-merges them.
 
     Synthetic attribute runs (v5, tf=0 filter carriers) are excluded by
     default — they are not document postings; ``include_attrs=True``
-    keeps them (compaction's decode->rebuild path must carry the
-    attribute lists through to the new index). ``include_positions``
-    (v6): add a ``poss`` array<long> column (per-posting position list)
-    so compaction's rebuild re-packs the positional stream too."""
+    keeps them (the lang allowlist and attr-value decodes read them)."""
     if not include_attrs:
         packed = packed.filter(~F.col("term").startswith(ATTR_TERM_PREFIX))
     # project to exactly the columns the decoder reads BEFORE the Arrow
@@ -1120,14 +994,10 @@ def decode_postings(
     # column — block_last/block_max arrays, doc-range metadata — that
     # the decode never touches (also prunes the positional stream for
     # non-positional decodes, the round-6 poss rule)
-    need = ["term", "doc_ids", "tfs", "dls", "df"]
-    if include_positions:
-        need.append("poss")
-    packed = packed.select(*need)
-    fields = list(LONG_SCHEMA.fields) + [StructField("df", LongType(), False)]
-    if include_positions:
-        fields.append(StructField("poss", ArrayType(LongType()), False))
-    schema = StructType(fields)
+    packed = packed.select("term", "doc_ids", "tfs", "dls", "df")
+    schema = StructType(
+        list(LONG_SCHEMA.fields) + [StructField("df", LongType(), False)]
+    )
 
     def decode_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1138,26 +1008,15 @@ def decode_postings(
             dls = [codec.decode_tfs(b) for b in pdf["dls"]]
             lens = np.array([a.size for a in ids])
             terms = np.repeat(pdf["term"].to_numpy(), lens)
-            cols = {
-                "term": terms,
-                "doc_id": np.concatenate(ids).astype(np.int64),
-                "tf": np.concatenate(tfs).astype(np.int64),
-                "dl": np.concatenate(dls).astype(np.int64),
-                "df": np.repeat(pdf["df"].to_numpy(np.int64), lens),
-            }
-            out = pd.DataFrame(cols)
-            if include_positions:
-                per_post: list[np.ndarray] = []
-                for t_arr, b in zip(tfs, pdf["poss"]):
-                    flat = codec.decode_tfs(_poss_bytes(b)).astype(np.int64)
-                    if flat.size != int(t_arr.sum()):
-                        raise ValueError(
-                            "include_positions on an index row without a "
-                            "positional stream — build with positions=True"
-                        )
-                    per_post.extend(np.split(flat, np.cumsum(t_arr)[:-1]))
-                out["poss"] = pd.Series(per_post, dtype=object)
-            yield out
+            yield pd.DataFrame(
+                {
+                    "term": terms,
+                    "doc_id": np.concatenate(ids).astype(np.int64),
+                    "tf": np.concatenate(tfs).astype(np.int64),
+                    "dl": np.concatenate(dls).astype(np.int64),
+                    "df": np.repeat(pdf["df"].to_numpy(np.int64), lens),
+                }
+            )
 
     return packed.mapInPandas(decode_iter, schema)
 

@@ -4,17 +4,27 @@ Reference parity: xsearch's metad folds deletes in as per-segment
 tombstones at merge time; re-adding a key replaces the old doc
 (component-level [R]). Spark shape:
 
-  * ``upsert_latest``    — S4: keep the newest commit per (repo, path)
-                           (row_number over a per-key window; Iceberg
-                           MERGE INTO in prod).
-  * ``append_tombstones``— S5: deleted doc_ids accumulate in a tiny
-                           append-only parquet table.
-  * ``apply_tombstones`` — query-time ``left_anti`` join (cheap: the
-                           tombstone side is small and broadcast).
-  * ``compact``          — folds tombstones into the packed index by
-                           rewriting only the affected (bucket) rows:
-                           decode -> filter -> re-pack, then clears the
-                           tombstone table.
+  * ``upsert_latest``       — S4: keep the newest commit per (repo, path)
+                              (row_number over a per-key window; Iceberg
+                              MERGE INTO in prod).
+  * ``append_tombstones``   — S5: deleted doc_ids accumulate in a tiny
+                              append-only parquet table. Until a
+                              compaction folds them in, queries pass them
+                              as the scorer's ``tombstones=`` (the one
+                              query-time delete path: they ride the
+                              shard-keyed cogroup BEFORE the top-k cut).
+  * ``compact_incremental`` — purges the tombstoned postings from only
+                              the affected buckets; N, avgdl and df stay
+                              frozen until the next full compact.
+  * ``compact``             — purges every run, then re-merges the purged
+                              runs under the trued-up avgdl.
+
+One purge, one merger; compaction never re-packs. Both compactions fold
+deletes through :func:`purge_tombstoned` (drop the deleted postings from
+each ENCODED run, cogrouped with the tombstones on the shard key), and
+full compact hands the purged runs to ``segments.merge_to_index`` — the
+build's own merger — which recomputes block maxima, re-stamps df and
+writes the bucket layout.
 """
 
 from __future__ import annotations
@@ -62,37 +72,24 @@ def load_tombstones(spark: SparkSession, index_root: str) -> DataFrame | None:
     return spark.read.parquet(p)
 
 
-def apply_tombstones(result: DataFrame, tombstones: DataFrame | None) -> DataFrame:
-    """S5 query-time filter: drop deleted docs before top-k."""
-    if tombstones is None:
-        return result
-    return result.join(F.broadcast(tombstones.select("doc_id")), "doc_id", "left_anti")
-
-
-def compact(
-    spark: SparkSession,
-    built,
-    segs_per_shard: int | None = None,
-    docs_per_segment: int | None = None,
-) -> None:
+def compact(spark: SparkSession, built) -> None:
     """Fold tombstones into the packed index and refresh the collection
     statistics. Semantics: the compacted index + stats equal a FRESH
     build over the source minus the deleted docs (same doc_ids, same
-    geometry) — that equivalence is what the post-compact oracle test
-    asserts.
+    geometry), row for row in every column — the post-compact tests
+    assert exactly that.
 
-    Geometry: the rebuild uses the BUILD-TIME docs_per_segment /
-    segs_per_shard persisted in stats.json (round-1 advisor: repacking
-    with a different geometry scatters a doc's terms across different
-    shard groups than its kept rows — silent top-k corruption).
-
-    Stats: N and avgdl are recomputed over the surviving docs. Because
+    Steps: measure the deleted docs' (N, Σdl) from the range-overlapping
+    rows; purge EVERY run (:func:`purge_tombstoned`); re-merge the purged
+    runs through ``segments.merge_to_index`` under the trued-up avgdl,
+    with ``seg_id = shard * segs_per_shard`` so each (term, shard) is a
+    single-run group; swap the directory in; write the sidecar. Because
     avgdl changes, EVERY row's block maxima must be recomputed (a stale
-    upper bound computed under a smaller avgdl can under-estimate and
-    make WAND prune a true top-k doc), so compaction rewrites the whole
-    index rather than only tombstone-overlapping rows — the same choice
-    Lucene makes for the segments it folds. The deleted docs' dl mass is
-    measured from only the range-overlapping rows (cheap pruned decode).
+    bound computed under a smaller avgdl can under-estimate and make
+    WAND prune a true top-k doc) — the merge always recomputes them, and
+    re-stamps each term's global df. The geometry is the build-time one
+    persisted in stats.json (round-1 advisor: any other scatters a doc's
+    terms across different shard groups — silent top-k corruption).
 
     Caveat: a doc that tokenized to zero terms has no postings, so its
     deletion cannot adjust (N, avgdl); fresh-build parity holds for any
@@ -105,6 +102,7 @@ def compact(
     """
     import shutil
 
+    from xsearch_spark.constants import ATTR_TERM_PREFIX
     from xsearch_spark.operators import segments as seg
     from xsearch_spark.plans.build_index import _paths, read_stats, write_stats
 
@@ -122,32 +120,34 @@ def compact(
         return
     if not has_tomb:
         tomb = spark.createDataFrame([], "doc_id long")
-    dps = docs_per_segment or built.docs_per_segment
-    sps = segs_per_shard or built.segs_per_shard
     idx = built.index_df
-    t = F.broadcast(tomb.select("doc_id").distinct())
 
-    n_deleted, dl_deleted = _measure_deleted(idx, t)
+    n_deleted, dl_deleted = _measure_deleted(
+        idx, F.broadcast(tomb.select("doc_id").distinct())
+    )
     n_docs_new = built.n_docs - n_deleted - int(pending["n_docs"])
     sum_dl_new = built.sum_dl - dl_deleted - int(pending["sum_dl"])
     avgdl_new = (sum_dl_new / n_docs_new) if n_docs_new else 0.0
 
-    # --- full decode -> anti-join -> rebuild with original geometry -----
-    # (merge_to_index recomputes the global df per surviving term, so the
-    # v4 denormalized idf inputs stay exact after deletes; attr runs —
-    # the v5 lang allowlists — are decoded too so the rebuilt index keeps
-    # serving lang: filters, minus the deleted docs)
-    kept = (
-        seg.decode_postings(
-            idx,
-            include_attrs=True,
-            include_positions=built.has_positions,
+    # the merge reads a run's sum_tf only to ask whether it scores
+    # (sum_tf > 0, the positional-sync check); index rows do not carry
+    # it, and every real posting has tf >= 1 while attr runs have tf = 0
+    runs = (
+        purge_tombstoned(idx, tomb, built.docs_per_shard, built.avgdl)
+        .withColumn("seg_id", F.col("shard") * F.lit(built.segs_per_shard))
+        .withColumn(
+            "sum_tf",
+            F.when(F.col("term").startswith(ATTR_TERM_PREFIX), F.lit(0))
+            .otherwise(F.col("n_docs"))
+            .cast("long"),
         )
-        .drop("df")
-        .join(t, "doc_id", "left_anti")
+        .select(
+            "term", "seg_id", "n_docs", "sum_tf", "first_doc_id",
+            "last_doc_id", "doc_ids", "tfs", "dls", "poss",
+        )
     )
     new_idx = seg.merge_to_index(
-        seg.build_segments(kept, avgdl_new, dps), avgdl_new, sps, built.num_buckets
+        runs, avgdl_new, built.segs_per_shard, built.num_buckets
     )
 
     tmp = paths["index"] + "_compacting"
@@ -158,7 +158,7 @@ def compact(
     final = spark.read.parquet(paths["index"])
 
     # --- refresh sidecar stats + the in-memory handle --------------------
-    # (pending_deleted was popped above: the full rebuild trues it up)
+    # (pending_deleted was popped above: the full compact trues it up)
     sidecar.update(
         {"n_docs": n_docs_new, "avgdl": avgdl_new, "sum_dl": sum_dl_new}
     )
@@ -168,6 +168,104 @@ def compact(
     built.n_docs = n_docs_new
     built.avgdl = avgdl_new
     built.sum_dl = sum_dl_new
+
+
+def purge_tombstoned(
+    rows: DataFrame, tomb: DataFrame, docs_per_shard: int, avgdl: float
+) -> DataFrame:
+    """Drop the tombstoned postings from encoded index runs — the one
+    delete fold, shared by :func:`compact` and :func:`compact_incremental`.
+
+    Tombstones are doc-range keyed, so they cogroup with the index rows
+    on the SAME shard key the query path uses — no broadcast of the
+    delete set, no full-index decode. A run with no tombstone inside
+    [first_doc_id, last_doc_id] passes through untouched (one vectorized
+    range test per shard). Only an overlapping run is decoded: its doc
+    ids, tfs, dls and positional substreams (v6) are cut with one
+    keep-mask and re-encoded, with block metadata recomputed under
+    ``avgdl``; a run whose every posting died is dropped. Returns rows in
+    the merged index schema (``df`` and ``bucket`` passed through)."""
+    import numpy as np
+    import pandas as pd
+
+    from xsearch_spark.constants import BLOCK_SIZE
+    from xsearch_spark.functions import codec
+    from xsearch_spark.operators.segments import (
+        MERGED_SCHEMA,
+        _bm25_factor,
+        _gather_substreams,
+    )
+
+    cols = [f.name for f in MERGED_SCHEMA.fields]
+
+    def purge_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if left.empty:
+            return pd.DataFrame(columns=cols)
+        left = left[cols]
+        if right.empty:
+            return left
+        tombs = np.sort(right["doc_id"].to_numpy(np.int64))
+        # a run overlaps the delete set iff a tombstone lies in its range
+        hit = np.searchsorted(
+            tombs, left["first_doc_id"].to_numpy(np.int64)
+        ) < np.searchsorted(
+            tombs, left["last_doc_id"].to_numpy(np.int64), side="right"
+        )
+        out = []
+        for r in left[hit].itertuples(index=False):
+            row = r._asdict()
+            ids = codec.decode_doc_ids(r.doc_ids).astype(np.int64)
+            pos = np.searchsorted(tombs, ids)
+            pos_c = np.minimum(pos, tombs.size - 1)
+            keep = ~((pos < tombs.size) & (tombs[pos_c] == ids))
+            if keep.all():
+                out.append(row)
+                continue
+            if not keep.any():
+                continue  # whole run deleted
+            ids_k = ids[keep]
+            tfs_full = codec.decode_tfs(r.tfs).astype(np.int64)
+            tfs_k = tfs_full[keep]
+            dls_k = codec.decode_tfs(r.dls).astype(np.int64)[keep]
+            if r.poss:
+                # v6: the positional stream is purged with the same
+                # keep-mask (kept postings keep their substreams intact)
+                flat = codec.decode_tfs(bytes(r.poss)).astype(np.int64)
+                row.update(
+                    poss=codec.encode_tfs(
+                        _gather_substreams(flat, tfs_full, np.nonzero(keep)[0])
+                    )
+                )
+            starts = np.arange(0, ids_k.size, BLOCK_SIZE)
+            row.update(
+                n_docs=int(ids_k.size),
+                first_doc_id=int(ids_k[0]),
+                last_doc_id=int(ids_k[-1]),
+                doc_ids=codec.encode_doc_ids(ids_k.astype(np.uint64)),
+                tfs=codec.encode_tfs(tfs_k),
+                dls=codec.encode_tfs(dls_k),
+                block_last=ids_k[
+                    np.minimum(starts + BLOCK_SIZE - 1, ids_k.size - 1)
+                ].astype(np.int64).tolist(),
+                block_max=np.maximum.reduceat(
+                    _bm25_factor(tfs_k, dls_k, avgdl), starts
+                ).tolist(),
+            )
+            out.append(row)
+        if not out:
+            return left[~hit]
+        return pd.concat(
+            [left[~hit], pd.DataFrame(out, columns=cols)], ignore_index=True
+        )
+
+    tomb_keyed = tomb.select("doc_id").distinct().withColumn(
+        "shard", (F.col("doc_id") / F.lit(docs_per_shard)).cast("long")
+    )
+    return (
+        rows.groupBy("shard")
+        .cogroup(tomb_keyed.groupBy("shard"))
+        .applyInPandas(purge_fn, MERGED_SCHEMA)
+    )
 
 
 def _measure_deleted(idx: DataFrame, t: DataFrame) -> tuple[int, int]:
@@ -217,10 +315,8 @@ def compact_incremental(
     stats.json ``pending_deleted`` sidecar so that full compact's
     N/avgdl account for docs whose postings are already gone.
 
-    Topology: tombstones are doc-range keyed, so they cogroup with the
-    index rows on the SAME shard key the query path uses — no broadcast
-    of the delete set, no full-index decode. Only buckets containing a
-    tombstone-overlapping shard are rewritten; the rewrite goes to a
+    Topology: the shard-keyed :func:`purge_tombstoned` over only the
+    buckets holding a tombstone-overlapping shard. The rewrite goes to a
     STAGING directory and is swapped in per-bucket (round-3 advisor:
     dynamic-overwriting the path being read both mutated session conf
     and relied on cached blocks surviving until the write; the swap also
@@ -231,15 +327,6 @@ def compact_incremental(
     """
     import shutil
 
-    import numpy as np
-    import pandas as pd
-
-    from xsearch_spark.constants import BLOCK_SIZE
-    from xsearch_spark.functions import codec
-    from xsearch_spark.operators.segments import (
-        MERGED_BUCKET_SCHEMA,
-        _bm25_factor,
-    )
     from xsearch_spark.plans.build_index import _paths, read_stats, write_stats
 
     tomb = load_tombstones(spark, built.root)
@@ -280,78 +367,13 @@ def compact_incremental(
         shutil.rmtree(tombstone_path(built.root), ignore_errors=True)
         return "incremental"
 
-    avgdl = built.avgdl
-    cols = [f.name for f in MERGED_BUCKET_SCHEMA.fields]
-
-    def purge_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=cols)
-        left = left[cols]
-        if right.empty:
-            return left
-        tombs = np.sort(right["doc_id"].to_numpy(np.int64))
-        out = []
-        for r in left.itertuples(index=False):
-            row = r._asdict()
-            if r.last_doc_id < tombs[0] or r.first_doc_id > tombs[-1]:
-                out.append(row)
-                continue
-            ids = codec.decode_doc_ids(r.doc_ids).astype(np.int64)
-            pos = np.searchsorted(tombs, ids)
-            pos_c = np.minimum(pos, tombs.size - 1)
-            keep = ~((pos < tombs.size) & (tombs[pos_c] == ids))
-            if keep.all():
-                out.append(row)
-                continue
-            if not keep.any():
-                continue  # whole run deleted
-            ids_k = ids[keep]
-            tfs_full = codec.decode_tfs(r.tfs).astype(np.int64)
-            tfs_k = tfs_full[keep]
-            dls_k = codec.decode_tfs(r.dls).astype(np.int64)[keep]
-            if r.poss:
-                # v6: the positional stream is purged with the same
-                # keep-mask (kept postings keep their substreams intact)
-                from xsearch_spark.operators.segments import (
-                    _gather_substreams,
-                )
-
-                flat = codec.decode_tfs(bytes(r.poss)).astype(np.int64)
-                row.update(
-                    poss=codec.encode_tfs(
-                        _gather_substreams(
-                            flat, tfs_full, np.nonzero(keep)[0]
-                        )
-                    )
-                )
-            starts = np.arange(0, ids_k.size, BLOCK_SIZE)
-            row.update(
-                n_docs=int(ids_k.size),
-                first_doc_id=int(ids_k[0]),
-                last_doc_id=int(ids_k[-1]),
-                doc_ids=codec.encode_doc_ids(ids_k.astype(np.uint64)),
-                tfs=codec.encode_tfs(tfs_k),
-                dls=codec.encode_tfs(dls_k),
-                block_last=ids_k[
-                    np.minimum(starts + BLOCK_SIZE - 1, ids_k.size - 1)
-                ].astype(np.int64).tolist(),
-                # same avgdl as the rest of the index: stats are frozen
-                # until full compact, so bounds stay exact
-                block_max=np.maximum.reduceat(
-                    _bm25_factor(tfs_k, dls_k, avgdl), starts
-                ).tolist(),
-            )
-            out.append(row)
-        return pd.DataFrame(out, columns=cols)
-
-    affected_rows = idx.filter(F.col("bucket").isin(affected))
-    tomb_keyed = tomb.select("doc_id").distinct().withColumn(
-        "shard", (F.col("doc_id") / F.lit(built.docs_per_shard)).cast("long")
-    )
-    new_rows = (
-        affected_rows.groupBy("shard")
-        .cogroup(tomb_keyed.groupBy("shard"))
-        .applyInPandas(purge_fn, MERGED_BUCKET_SCHEMA)
+    new_rows = purge_tombstoned(
+        idx.filter(F.col("bucket").isin(affected)),
+        tomb,
+        built.docs_per_shard,
+        # same avgdl as the rest of the index: stats are frozen until the
+        # full compact, so the rewritten rows' bounds stay exact
+        built.avgdl,
     )
 
     staging = paths["index"] + "_inc_staging"

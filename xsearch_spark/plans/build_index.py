@@ -64,9 +64,9 @@ class BuiltIndex:
     avgdl: float
     num_buckets: int
     # build-time geometry: doc-range mapping doc_id -> seg_id -> shard.
-    # compact() MUST rebuild with exactly these values or repacked rows
-    # land in different shard groups than kept rows (silent top-k
-    # corruption — found by the round-1 advisor).
+    # compact() MUST re-merge with exactly these values or purged rows
+    # land in different shard groups than the doc ranges they hold
+    # (silent top-k corruption — found by the round-1 advisor).
     docs_per_segment: int = seg.DEFAULT_DOCS_PER_SEGMENT
     segs_per_shard: int = seg.DEFAULT_SEGS_PER_SHARD
     sum_dl: int = 0  # exact Σdl over all docs (avgdl = sum_dl / n_docs)
@@ -151,11 +151,6 @@ def read_stats(root: str) -> dict:
             f"v{INDEX_FORMAT_VERSION} — rebuild the index"
         )
     return stats
-
-
-def _partition_rows(df: DataFrame, key: str) -> dict[str, dict]:
-    rows = df.groupBy(key).agg(F.count(F.lit(1)).alias("rows")).collect()
-    return {str(r[key]): {"rows": int(r["rows"])} for r in rows}
 
 
 def _partition_rows_parquet(path: str, key: str) -> dict[str, dict]:

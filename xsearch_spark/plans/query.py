@@ -119,9 +119,6 @@ _MAX_FUZZY_LEN = 64  # = constants.MAX_FUZZY_LEN (bounds the neighborhood)
 # base/code emission alphabet) — anything else keeps plain-text
 # semantics so `foo-bar*` or `*` alone never silently become filters
 _PREFIX_BODY_RE = re.compile(r"[a-z0-9_]+\Z")
-# a wildcard body (round-6, FIXTURES.md §3.24) is term chars + '*'
-# with a LITERAL first char (leading '*' raises — scan-bound rule)
-_WILDCARD_BODY_RE = re.compile(r"[a-z0-9_][a-z0-9_*]*\Z")
 _WILDCARD_CHARS_RE = re.compile(r"[a-z0-9_*]+\Z")
 # a fuzzy token is body~[N] with the same single-term body shape; the
 # distance digits are validated separately (only 0/absent/1 are legal)
