@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from xsearch_spark.constants import SRP_BIT_FLOOR
+from xsearch_spark.sources.io import write_json, write_table
 
 
 def _dot(a, b):
@@ -401,9 +402,7 @@ def build_ann_index(
     )
     # one file per bucket at test scale; at corpus scale the repartition
     # key bounds file count at num-shuffle-partitions per bucket
-    tbl.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(
-        vectors_path
-    )
+    write_table(tbl.repartition("bucket"), vectors_path, "bucket")
     table_df = spark.read.parquet(vectors_path)
     # n_vecs from the freshly written parquet footers (round 7): a
     # driver-side metadata read, zero Spark jobs — same move as the
@@ -413,18 +412,11 @@ def build_ann_index(
     n_vecs = sum(
         p["rows"] for p in _partition_rows_parquet(vectors_path, "bucket").values()
     )
-    stats = {
-        "num_planes": num_planes,
-        "n_vecs": n_vecs,
-        "dim": dim,
-    }
-    with open(os.path.join(out_dir, "ann_stats.json.tmp"), "w") as f:
-        json.dump(stats, f)
-    os.replace(
-        os.path.join(out_dir, "ann_stats.json.tmp"),
+    write_json(
         os.path.join(out_dir, "ann_stats.json"),
+        {"num_planes": num_planes, "n_vecs": n_vecs, "dim": dim},
     )
-    return BuiltAnnIndex(out_dir, table_df, num_planes, stats["n_vecs"], stats["dim"])
+    return BuiltAnnIndex(out_dir, table_df, num_planes, n_vecs, dim)
 
 
 def load_ann_index(spark: SparkSession, out_dir: str) -> BuiltAnnIndex:
@@ -474,8 +466,8 @@ def compact_ann_index(
     """Fold vector deletes into the persisted ANN index: rewrite the
     bucket-partitioned table minus the tombstoned vec_ids (bucket
     assignments are delete-independent, so surviving rows are simply
-    kept — no re-hash). Write-temp-then-swap, same hygiene as the text
-    index's compaction.
+    kept — no re-hash) through ``sources.io.write_table``, the text
+    index's table writer.
 
     The passed-in ``built`` is mutated IN PLACE (``table_df``/``n_vecs``
     re-pointed at the rewritten directory, same contract as
@@ -484,32 +476,18 @@ def compact_ann_index(
     handle would otherwise hit FileNotFound/empty scans at its next
     action (round-4 advisor). The refreshed index is also returned for
     convenience."""
-    import shutil
-
     vectors_path = os.path.join(built.root, "vectors")
-    tmp = vectors_path + "_compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
     tomb = tombstones.select("vec_id").distinct()
     kept = built.table_df.join(F.broadcast(tomb), "vec_id", "left_anti")
-    kept.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(tmp)
-    shutil.rmtree(vectors_path, ignore_errors=True)
-    os.replace(tmp, vectors_path)
+    write_table(kept.repartition("bucket"), vectors_path, "bucket")
     table_df = spark.read.parquet(vectors_path)
-    stats = {
-        "num_planes": built.num_planes,
-        "n_vecs": table_df.count(),
-        "dim": built.dim,
-    }
-    with open(os.path.join(built.root, "ann_stats.json.tmp"), "w") as f:
-        json.dump(stats, f)
-    os.replace(
-        os.path.join(built.root, "ann_stats.json.tmp"),
+    n_vecs = table_df.count()
+    write_json(
         os.path.join(built.root, "ann_stats.json"),
+        {"num_planes": built.num_planes, "n_vecs": n_vecs, "dim": built.dim},
     )
     built.table_df = table_df
-    built.n_vecs = stats["n_vecs"]
+    built.n_vecs = n_vecs
     return built
 
 

@@ -673,8 +673,6 @@ def _assemble_shard(
     avgdl: float,
     attr_terms: set[str] | frozenset[str] = frozenset(),
     position_terms: set[str] | frozenset[str] = frozenset(),
-    exclude_prefixes: tuple[str, ...] = (),
-    exclude_patterns: "tuple[re.Pattern[str], ...]" = (),
 ) -> tuple:
     """Decode one shard's index rows into per-term posting arrays.
 
@@ -707,11 +705,7 @@ def _assemble_shard(
     attr_acc: dict[str, list[np.ndarray]] = {}
     for r in g.itertuples(index=False):
         ids = codec.decode_doc_ids(r.doc_ids).astype(np.int64)
-        if (
-            r.term in exclude_terms
-            or (exclude_prefixes and r.term.startswith(exclude_prefixes))
-            or any(rx.fullmatch(r.term) for rx in exclude_patterns)
-        ):  # -body* / -pat*ern (round-6): exclusion wins over positive
+        if r.term in exclude_terms:  # exclusion wins over positive
             ex_lists.append(ids)
             continue
         if r.term in attr_terms:

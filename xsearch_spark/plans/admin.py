@@ -13,26 +13,35 @@ tombstones at merge time; re-adding a key replaces the old doc
                               as the scorer's ``tombstones=`` (the one
                               query-time delete path: they ride the
                               shard-keyed cogroup BEFORE the top-k cut).
-  * ``compact_incremental`` — purges the tombstoned postings from only
-                              the affected buckets; N, avgdl and df stay
-                              frozen until the next full compact.
+  * ``compact_incremental`` — purges the tombstoned postings from every
+                              run; N, avgdl and df stay frozen until the
+                              next full compact.
   * ``compact``             — purges every run, then re-merges the purged
                               runs under the trued-up avgdl.
 
-One purge, one merger; compaction never re-packs. Both compactions fold
-deletes through :func:`purge_tombstoned` (drop the deleted postings from
-each ENCODED run, cogrouped with the tombstones on the shard key), and
-full compact hands the purged runs to ``segments.merge_to_index`` — the
-build's own merger — which recomputes block maxima, re-stamps df and
-writes the bucket layout.
+One purge, one merger, one swap; compaction never re-packs. Both
+compactions fold deletes through :func:`purge_tombstoned` (drop the
+deleted postings from each ENCODED run, cogrouped with the tombstones on
+the shard key), and full compact hands the purged runs to
+``segments.merge_to_index`` — the build's own merger — which recomputes
+block maxima, re-stamps df and lays out the buckets. Both end in
+:func:`_swap_index`: the new index replaces the old one through
+``sources.io.write_table``, then the sidecar is written and the folded
+tombstones are cleared.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from xsearch_spark.plans.build_index import _paths, read_stats, write_stats
+from xsearch_spark.sources.io import write_table
+
+_NONE_DELETED = {"n_docs": 0, "sum_dl": 0}
 
 
 def upsert_latest(
@@ -80,60 +89,60 @@ def compact(spark: SparkSession, built) -> None:
     assert exactly that.
 
     Steps: measure the deleted docs' (N, Σdl) from the range-overlapping
-    rows; purge EVERY run (:func:`purge_tombstoned`); re-merge the purged
-    runs through ``segments.merge_to_index`` under the trued-up avgdl,
-    with ``seg_id = shard * segs_per_shard`` so each (term, shard) is a
-    single-run group; swap the directory in; write the sidecar. Because
-    avgdl changes, EVERY row's block maxima must be recomputed (a stale
-    bound computed under a smaller avgdl can under-estimate and make
-    WAND prune a true top-k doc) — the merge always recomputes them, and
-    re-stamps each term's global df. The geometry is the build-time one
-    persisted in stats.json (round-1 advisor: any other scatters a doc's
-    terms across different shard groups — silent top-k corruption).
+    rows, then :func:`_compact_full`. Docs already purged by earlier
+    incremental compactions still count in the persisted stats — a full
+    compact trues them up too, EVEN when no new tombstones exist
+    (round-3 advisor: returning early on an empty tombstone table left
+    accumulated pending_deleted applied never, so frozen N/avgdl drifted
+    permanently).
 
     Caveat: a doc that tokenized to zero terms has no postings, so its
     deletion cannot adjust (N, avgdl); fresh-build parity holds for any
     doc with at least one token.
-
-    The final write is an atomic directory swap (write temp -> rename),
-    immune to the session's dynamic partitionOverwriteMode: a bucket
-    whose rows all died must disappear, not survive as a stale partition
-    (round-1 advisor).
     """
-    import shutil
-
-    from xsearch_spark.constants import ATTR_TERM_PREFIX
-    from xsearch_spark.operators import segments as seg
-    from xsearch_spark.plans.build_index import _paths, read_stats, write_stats
-
-    # docs already purged by earlier incremental compactions still count
-    # in the persisted stats — a full compact trues them up too, EVEN
-    # when no new tombstones exist (round-3 advisor: returning early on
-    # an empty tombstone table left accumulated pending_deleted applied
-    # never, so frozen N/avgdl drifted permanently)
-    paths = _paths(built.root)
     sidecar = read_stats(built.root)
-    pending = sidecar.pop("pending_deleted", {"n_docs": 0, "sum_dl": 0})
+    pending = sidecar.get("pending_deleted", _NONE_DELETED)
     tomb = load_tombstones(spark, built.root)
     has_tomb = tomb is not None and not tomb.isEmpty()
     if not has_tomb and not (int(pending["n_docs"]) or int(pending["sum_dl"])):
         return
     if not has_tomb:
         tomb = spark.createDataFrame([], "doc_id long")
-    idx = built.index_df
-
-    n_deleted, dl_deleted = _measure_deleted(
-        idx, F.broadcast(tomb.select("doc_id").distinct())
+    _compact_full(
+        spark, built, tomb, sidecar, _measure_deleted(built.index_df, tomb)
     )
-    n_docs_new = built.n_docs - n_deleted - int(pending["n_docs"])
-    sum_dl_new = built.sum_dl - dl_deleted - int(pending["sum_dl"])
+
+
+def _compact_full(
+    spark: SparkSession, built, tomb: DataFrame, sidecar: dict,
+    deleted: tuple[int, int],
+) -> None:
+    """The full fold, given the tombstones, the stats.json sidecar and
+    the measured (n_docs, Σdl) of the deleted docs: purge EVERY run
+    (:func:`purge_tombstoned`), re-merge the purged runs through
+    ``segments.merge_to_index`` under the trued-up avgdl with ``seg_id =
+    shard * segs_per_shard`` so each (term, shard) is a single-run group,
+    and :func:`_swap_index`. Because avgdl changes, EVERY row's block
+    maxima must be recomputed (a stale bound computed under a smaller
+    avgdl can under-estimate and make WAND prune a true top-k doc) — the
+    merge always recomputes them, and re-stamps each term's global df.
+    The geometry is the build-time one persisted in stats.json (round-1
+    advisor: any other scatters a doc's terms across different shard
+    groups — silent top-k corruption)."""
+    from xsearch_spark.constants import ATTR_TERM_PREFIX
+    from xsearch_spark.operators import segments as seg
+
+    # pending_deleted is trued up here, so it leaves the sidecar
+    pending = sidecar.pop("pending_deleted", _NONE_DELETED)
+    n_docs_new = built.n_docs - deleted[0] - int(pending["n_docs"])
+    sum_dl_new = built.sum_dl - deleted[1] - int(pending["sum_dl"])
     avgdl_new = (sum_dl_new / n_docs_new) if n_docs_new else 0.0
 
     # the merge reads a run's sum_tf only to ask whether it scores
     # (sum_tf > 0, the positional-sync check); index rows do not carry
     # it, and every real posting has tf >= 1 while attr runs have tf = 0
     runs = (
-        purge_tombstoned(idx, tomb, built.docs_per_shard, built.avgdl)
+        purge_tombstoned(built.index_df, tomb, built.docs_per_shard, built.avgdl)
         .withColumn("seg_id", F.col("shard") * F.lit(built.segs_per_shard))
         .withColumn(
             "sum_tf",
@@ -149,25 +158,26 @@ def compact(spark: SparkSession, built) -> None:
     new_idx = seg.merge_to_index(
         runs, avgdl_new, built.segs_per_shard, built.num_buckets
     )
-
-    tmp = paths["index"] + "_compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    new_idx.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    shutil.rmtree(paths["index"], ignore_errors=True)
-    os.replace(tmp, paths["index"])
-    final = spark.read.parquet(paths["index"])
-
-    # --- refresh sidecar stats + the in-memory handle --------------------
-    # (pending_deleted was popped above: the full compact trues it up)
     sidecar.update(
         {"n_docs": n_docs_new, "avgdl": avgdl_new, "sum_dl": sum_dl_new}
     )
-    write_stats(built.root, **sidecar)
-    shutil.rmtree(tombstone_path(built.root), ignore_errors=True)
-    built.index_df = final
+    _swap_index(spark, built, new_idx, sidecar)
     built.n_docs = n_docs_new
     built.avgdl = avgdl_new
     built.sum_dl = sum_dl_new
+
+
+def _swap_index(spark: SparkSession, built, rows: DataFrame, sidecar: dict) -> None:
+    """The tail both compactions share: replace the index table with
+    ``rows`` (``sources.io.write_table`` — a bucket whose rows all died
+    disappears instead of surviving as a stale partition, round-1
+    advisor), write the sidecar, clear the folded tombstones and
+    re-point ``built.index_df`` at the new table."""
+    path = _paths(built.root)["index"]
+    write_table(rows, path, "bucket")
+    write_stats(built.root, **sidecar)
+    shutil.rmtree(tombstone_path(built.root), ignore_errors=True)
+    built.index_df = spark.read.parquet(path)
 
 
 def purge_tombstoned(
@@ -268,11 +278,13 @@ def purge_tombstoned(
     )
 
 
-def _measure_deleted(idx: DataFrame, t: DataFrame) -> tuple[int, int]:
+def _measure_deleted(idx: DataFrame, tomb: DataFrame) -> tuple[int, int]:
     """Exact (n_docs, Σdl) of the tombstoned docs that actually have
     postings — measured from only the range-overlapping index rows
-    (cheap pruned decode). ``t`` is the distinct broadcast tombstone set."""
+    (cheap pruned decode against the broadcast tombstone set)."""
     from xsearch_spark.operators import segments as seg
+
+    t = F.broadcast(tomb.select("doc_id").distinct())
 
     hit = idx.join(
         t.withColumnRenamed("doc_id", "_td"),
@@ -295,12 +307,11 @@ def compact_incremental(
     built,
     max_dl_drift: float = 0.01,
 ) -> str:
-    """Bounded-drift compaction (round-3): purge tombstoned postings from
-    ONLY the affected bucket partitions, leaving collection statistics —
-    N, avgdl, and every row's denormalized df — at their pre-delete
-    values until the next full :func:`compact`. Returns "incremental",
-    "full" (drift exceeded ``max_dl_drift`` -> full compact ran instead)
-    or "noop".
+    """Bounded-drift compaction (round-3): purge the tombstoned postings
+    while leaving collection statistics — N, avgdl, and every row's
+    denormalized df — at their pre-delete values until the next full
+    :func:`compact`. Returns "incremental", "full" (drift exceeded
+    ``max_dl_drift`` -> the full fold ran instead) or "noop".
 
     Semantics (Lucene's between-merges model: deleted docs keep counting
     in docFreq/avgdl until segments merge): post-compaction queries are
@@ -315,29 +326,20 @@ def compact_incremental(
     stats.json ``pending_deleted`` sidecar so that full compact's
     N/avgdl account for docs whose postings are already gone.
 
-    Topology: the shard-keyed :func:`purge_tombstoned` over only the
-    buckets holding a tombstone-overlapping shard. The rewrite goes to a
-    STAGING directory and is swapped in per-bucket (round-3 advisor:
-    dynamic-overwriting the path being read both mutated session conf
-    and relied on cached blocks surviving until the write; the swap also
-    removes fully-emptied buckets for free — the round-1 stale-partition
-    pitfall). Rewritten buckets are re-sorted by (term, shard,
-    first_doc_id) before the write so parquet row-group min/max term
-    skipping survives incremental folds (round-3 verdict item 4).
+    Topology: one :func:`purge_tombstoned` over every index row — a run
+    that no tombstone touches passes through unchanged — re-sorted by
+    (bucket, term, shard, first_doc_id) so parquet row-group min/max
+    term skipping survives incremental folds (round-3 verdict item 4;
+    ``bucket`` leads so the partitioned writer's required ordering is
+    already met and it injects no sort of its own), then the one index
+    swap (:func:`_swap_index`).
     """
-    import shutil
-
-    from xsearch_spark.plans.build_index import _paths, read_stats, write_stats
-
     tomb = load_tombstones(spark, built.root)
     if tomb is None or tomb.isEmpty():
         return "noop"
-    idx = built.index_df
-    t = F.broadcast(tomb.select("doc_id").distinct())
-    n_deleted, dl_deleted = _measure_deleted(idx, t)
-    paths = _paths(built.root)
+    n_deleted, dl_deleted = _measure_deleted(built.index_df, tomb)
     sidecar = read_stats(built.root)
-    pend = sidecar.get("pending_deleted", {"n_docs": 0, "sum_dl": 0})
+    pend = sidecar.get("pending_deleted", _NONE_DELETED)
     # the drift gate bounds TOTAL frozen-stats drift, so it must include
     # the dl mass already purged by earlier incremental passes (round-3
     # advisor: gating on the current batch alone let many small delete
@@ -346,65 +348,20 @@ def compact_incremental(
         built.sum_dl
         and (int(pend["sum_dl"]) + dl_deleted) / built.sum_dl > max_dl_drift
     ):
-        compact(spark, built)
+        _compact_full(spark, built, tomb, sidecar, (n_deleted, dl_deleted))
         return "full"
 
-    # --- affected buckets: any bucket holding a tombstone-overlapping
-    # shard (cheap column-pruned metadata scan; coarse superset is fine —
-    # unaffected rows pass through the purge unchanged)
-    tomb_shards = tomb.select(
-        (F.col("doc_id") / F.lit(built.docs_per_shard)).cast("long").alias("shard")
-    ).distinct()
-    affected = sorted(
-        r["bucket"]
-        for r in idx.join(tomb_shards, "shard", "left_semi")
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        # tombstoned docs have no postings at all: just clear the table
-        shutil.rmtree(tombstone_path(built.root), ignore_errors=True)
-        return "incremental"
-
-    new_rows = purge_tombstoned(
-        idx.filter(F.col("bucket").isin(affected)),
-        tomb,
-        built.docs_per_shard,
-        # same avgdl as the rest of the index: stats are frozen until the
-        # full compact, so the rewritten rows' bounds stay exact
-        built.avgdl,
-    )
-
-    staging = paths["index"] + "_inc_staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    # restore the term sort inside rewritten buckets (parquet row-group
-    # min/max skipping on `term`); one job writes the staging dirs — the
-    # purge UDF runs exactly once, no persist, no survivor-count job.
-    # `bucket` leads the sort so the partitioned writer's required
-    # ordering is already satisfied — otherwise it injects its own
-    # bucket-only sort and destroys the term order.
-    (
-        new_rows.repartition("bucket")
+    # same avgdl as the rest of the index: stats are frozen until the
+    # full compact, so the rewritten rows' bounds stay exact
+    rows = (
+        purge_tombstoned(built.index_df, tomb, built.docs_per_shard, built.avgdl)
+        .repartition("bucket")
         .sortWithinPartitions("bucket", "term", "shard", "first_doc_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(staging)
     )
-    for b in affected:
-        dst = os.path.join(paths["index"], f"bucket={b}")
-        src = os.path.join(staging, f"bucket={b}")
-        shutil.rmtree(dst, ignore_errors=True)
-        if os.path.isdir(src):  # fully-emptied buckets simply disappear
-            os.replace(src, dst)
-    shutil.rmtree(staging, ignore_errors=True)
-
     sidecar["pending_deleted"] = {
         "n_docs": int(pend["n_docs"]) + n_deleted,
         "sum_dl": int(pend["sum_dl"]) + dl_deleted,
     }
-    write_stats(built.root, **sidecar)
-    shutil.rmtree(tombstone_path(built.root), ignore_errors=True)
     # N/avgdl/df deliberately unchanged (frozen-stats semantics)
-    built.index_df = spark.read.parquet(paths["index"])
+    _swap_index(spark, built, rows, sidecar)
     return "incremental"

@@ -9,10 +9,11 @@ rebuilds only missing segment partitions):
                      partitions (see operators.segments.pack_from_source)
                      -> packed per-(seg_id, term) runs written
                      partitionBy(seg_group); resume = rebuild only the
-                     seg_groups missing from the manifest (dynamic
-                     partition overwrite; the universe of groups derives
-                     from dense doc_ids, no scan). avgdl comes from the
-                     runs' sum_tf column.
+                     seg_groups missing from the manifest (a per-write
+                     dynamic partition overwrite; the universe of groups
+                     derives from dense doc_ids, no scan). A build that
+                     is not a resume replaces the whole directory.
+                     avgdl comes from the runs' sum_tf column.
   2. ``index``     — B5 salted merge -> (term, shard) runs (+ real B7
                      block maxima) + term-hash ``bucket`` partition
                      column for query-time pruning.
@@ -39,6 +40,7 @@ from pyspark.sql import functions as F
 
 from xsearch_spark.operators import segments as seg
 from xsearch_spark.plans import checkpoints as ckpt
+from xsearch_spark.sources.io import write_json, write_table
 
 DEFAULT_NUM_BUCKETS = 64
 SEGS_PER_GROUP = 8  # seg_group = seg_id // SEGS_PER_GROUP: resume + layout unit
@@ -128,12 +130,11 @@ def write_stats(root: str, **stats: object) -> None:
     """Write the stats.json sidecar (N, avgdl, Σdl, build geometry, the
     serveable attr fields and positions) stamped with
     ``INDEX_FORMAT_VERSION`` — the one writer, shared by every index
-    producer and the compactions. Write-temp-then-rename, so a reader
-    never sees a torn file."""
-    path = _paths(root)["stats"]
-    with open(path + ".tmp", "w") as f:
-        json.dump({**stats, "format_version": INDEX_FORMAT_VERSION}, f)
-    os.replace(path + ".tmp", path)
+    producer and the compactions. Written through ``write_json``, so a
+    reader never sees a torn file."""
+    write_json(
+        _paths(root)["stats"], {**stats, "format_version": INDEX_FORMAT_VERSION}
+    )
 
 
 def read_stats(root: str) -> dict:
@@ -267,7 +268,6 @@ def build_index(
     """
     paths = _paths(out_dir)
     os.makedirs(out_dir, exist_ok=True)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     attrs: tuple[str, ...] = (
         (attr_cols,) if isinstance(attr_cols, str) else tuple(attr_cols or ())
     )
@@ -329,16 +329,19 @@ def build_index(
             ).withColumn(
                 "seg_group", (F.col("seg_id") / F.lit(segs_per_group)).cast("long")
             )
-            # dynamic overwrite: only the seg_group partitions in `packed`
-            # are replaced; completed ones stay untouched (resume unit).
+            # a resume overwrites dynamically, for this write only: just
+            # the seg_group partitions in `packed` are replaced and the
+            # completed ones stay untouched (resume unit). Any other
+            # build replaces the whole directory, so no group of an
+            # earlier build with another geometry survives to be merged.
             # subsplit the write so a group isn't funneled through one
             # task (at sf0.1 there are only ~4 groups but ~200 MB of
             # packed runs; 8 files per group keeps the write parallel)
             packed.repartition(
                 F.col("seg_group"), F.pmod(F.xxhash64("term"), F.lit(8))
-            ).write.mode("overwrite").partitionBy("seg_group").parquet(
-                paths["segments"]
-            )
+            ).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic" if done_groups else "static"
+            ).partitionBy("seg_group").parquet(paths["segments"])
         seg_df = spark.read.parquet(paths["segments"])
         # one small-table agg yields lineage rows AND the avgdl input
         parts = {
@@ -396,9 +399,7 @@ def build_index(
                 seg_df.drop("seg_group"), avgdl, segs_per_shard, num_buckets,
                 n_runs=int(m2.rows_out) if m2 and m2.rows_out else None,
             )
-            merged.write.mode("overwrite").partitionBy("bucket").parquet(
-                paths["index"]
-            )
+            write_table(merged, paths["index"], "bucket")
         m3 = ckpt.StageManifest("index", fp3, "done", t.wall_ms)
         m3.partitions = _partition_rows_parquet(paths["index"], "bucket")
         m3.rows_out = sum(p["rows"] for p in m3.partitions.values())
@@ -406,7 +407,7 @@ def build_index(
         ckpt.save_manifest(out_dir, m3)
 
     ckpt.progress_event(
-        os.getcwd(),
+        out_dir,
         {
             "event": "index_built",
             "out_dir": out_dir,
@@ -465,9 +466,7 @@ def _build_index_fused(
                 packed, avgdl, segs_per_shard, num_buckets,
                 n_runs=int(row["runs"]),
             )
-            merged.write.mode("overwrite").partitionBy("bucket").parquet(
-                paths["index"]
-            )
+            write_table(merged, paths["index"], "bucket")
             packed.unpersist()
         m = ckpt.StageManifest("index", fpF, "done", t.wall_ms)
         m.partitions = _partition_rows_parquet(paths["index"], "bucket")
@@ -490,7 +489,7 @@ def _build_index_fused(
     built = load_index(spark, out_dir)
 
     ckpt.progress_event(
-        os.getcwd(),
+        out_dir,
         {
             "event": "index_built",
             "out_dir": out_dir,

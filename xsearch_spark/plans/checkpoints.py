@@ -7,11 +7,12 @@ flushed segments (component-level [R]); the Spark equivalent is a
 manifest per stage recording the input fingerprint, per-partition row
 counts/bytes, and wall time. A re-run skips completed stages whose
 fingerprint matches, and the segment stage resumes at partition
-granularity (only missing seg_groups are rebuilt, via dynamic partition
-overwrite).
+granularity (only missing seg_groups are rebuilt, via a per-write
+dynamic partition overwrite).
 
-Manifests are written atomically (tmp + rename) as JSON next to the
-stage output.
+Manifests are written atomically (``sources.io.write_json``) as JSON
+under ``<root>/manifests/``, beside the build's ``PROGRESS.jsonl``
+event log.
 """
 
 from __future__ import annotations
@@ -20,6 +21,8 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
+
+from xsearch_spark.sources.io import write_json
 
 
 @dataclass
@@ -49,10 +52,7 @@ def load_manifest(root: str, stage: str) -> StageManifest | None:
 def save_manifest(root: str, m: StageManifest) -> None:
     p = manifest_path(root, m.stage)
     os.makedirs(os.path.dirname(p), exist_ok=True)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(m.__dict__, f, indent=1, sort_keys=True)
-    os.replace(tmp, p)  # atomic on POSIX
+    write_json(p, m.__dict__, indent=1, sort_keys=True)
 
 
 def stage_done(root: str, stage: str, fingerprint: str) -> StageManifest | None:
@@ -73,10 +73,14 @@ class StageTimer:
         return False
 
 
-def progress_event(repo_root: str, event: dict) -> None:
-    """Append a metrics event to PROGRESS.jsonl (throughput lineage)."""
+def progress_event(root: str, event: dict) -> None:
+    """Append a metrics event to ``<root>/manifests/PROGRESS.jsonl``
+    (throughput lineage that lives with the index, whatever the process
+    cwd)."""
     try:
-        with open(os.path.join(repo_root, "PROGRESS.jsonl"), "a") as f:
+        d = os.path.join(root, "manifests")
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, "PROGRESS.jsonl"), "a") as f:
             f.write(json.dumps({"ts": time.time(), **event}) + "\n")
     except OSError:
         pass

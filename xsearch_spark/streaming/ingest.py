@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xsearch_spark.operators import segments as seg
-from xsearch_spark.sources.io import DOCUMENTS_SCHEMA
+from xsearch_spark.sources.io import DOCUMENTS_SCHEMA, write_json, write_table
 
 
 def start_ingest(
@@ -106,7 +106,7 @@ def process_epoch(
     testable in isolation: foreachBatch is at-least-once, and calling
     this twice with the same (batch, epoch_id) must leave the epoch
     directory and sidecar in the same state as one delivery — the epoch
-    dir is mode=overwrite and the sidecar a temp-then-rename, so
+    dir is mode=overwrite and the sidecar goes through ``write_json``, so
     re-delivery replaces its own output idempotently (S4 semantics at
     the epoch granularity; asserted byte-identical in
     tests/test_admin_streaming.py).
@@ -141,10 +141,9 @@ def process_epoch(
         "sum_dl": int(sum_dl or 0),
         "n_runs": int(n_runs),
     }
-    sp = os.path.join(index_root, "epoch_stats", f"epoch={epoch_id}.json")
-    with open(sp + ".tmp", "w") as f:
-        json.dump(stats, f)
-    os.replace(sp + ".tmp", sp)
+    write_json(
+        os.path.join(index_root, "epoch_stats", f"epoch={epoch_id}.json"), stats
+    )
 
 
 def _epoch_totals(index_root: str) -> tuple[int, int, int]:
@@ -178,15 +177,12 @@ def compact_segments(
     maxima always reflect the full streamed collection (round-1
     advisor: avgdl drift).
 
-    The index write is a write-temp-then-rename swap (round-3 verdict
-    item 3): ``build_index`` sets session-wide dynamic partition
-    overwrite, under which an in-place re-compaction that shrinks the
-    bucket set would leave stale bucket partitions — the exact round-1
-    pitfall ``admin.compact`` already guards against. stats.json carries
-    ``format_version``, and ``load_index`` rejects any other layout.
+    The index is replaced through ``sources.io.write_table`` (round-3
+    verdict item 3): a re-compaction that shrinks the bucket set leaves
+    no stale bucket partition, whatever the session's
+    ``partitionOverwriteMode``. stats.json carries ``format_version``,
+    and ``load_index`` rejects any other layout.
     """
-    import shutil
-
     from xsearch_spark.plans.build_index import load_index, write_stats
 
     n_docs, sum_dl, n_runs = _epoch_totals(index_root)
@@ -201,11 +197,7 @@ def compact_segments(
         n_runs=n_runs or None,
     )
     out = os.path.join(index_root, "index")
-    tmp = out + "_compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    shutil.rmtree(out, ignore_errors=True)
-    os.replace(tmp, out)
+    write_table(merged, out, "bucket")
     index_df = spark.read.parquet(out)
     # SELF-DETECT the serveable capabilities from the merged rows (a
     # stats.json that promises filters/phrases the index cannot serve
