@@ -40,6 +40,16 @@ def assert_scorer_served(plan: str, what: str) -> None:
     assert not joins, f"{what} plan joins on doc_id: {joins}"
 
 
+def assert_one_prefix_scan(plan: str, what: str) -> None:
+    """A prefix scan is one filter over data columns: exact terms ride
+    the startswith scan (no Union reading their bucket files twice) and
+    StringStartsWith still reaches parquet."""
+    assert "Union" not in plan, f"{what} plan unions two index scans"
+    assert "StringStartsWith" in plan, (
+        f"{what} scan does not push StringStartsWith to parquet"
+    )
+
+
 def main() -> None:
     from xsearch_spark import engine
     from xsearch_spark.operators import segments as seg
@@ -253,6 +263,7 @@ def main() -> None:
     )
     assert "poss" not in wf_plan, "non-phrase facet plan reads poss"
     assert_scorer_served(wf_plan, "facet")
+    assert_one_prefix_scan(wf_plan, "string facet")
     sections.append((
         "Q11 facet counts over the full match set (index-only)",
         wf_plan,
@@ -353,19 +364,16 @@ def main() -> None:
         "the index dictionary"
     )
     assert "poss" not in wx_plan, "non-phrase prefix plan reads poss"
-    assert "StringStartsWith" in wx_plan, (
-        "prefix scan does not push StringStartsWith to parquet — the "
-        "expansion degenerates to a full dictionary sweep"
-    )
+    assert_one_prefix_scan(wx_plan, "prefix")
     sections.append((
         "Q8 WAND prefix query (startswith-pushed dictionary expansion)",
         wx_plan,
         ["MapInPandas", "TakeOrderedAndProject", "StringStartsWith"],
         "A prefix group's expansion rides a startswith-filtered scan of "
         "the same index (term-sorted row groups per bucket bound the "
-        "read); exact terms keep their bucket-pruned scan, the two "
-        "unions feed one scorer pass — no source scan, no vocabulary "
-        "collect, no positional bytes.",
+        "read); the exact terms ride the same filter (term IN ... OR "
+        "startswith), so there is one scan and no Union — no source "
+        "scan, no vocabulary collect, no positional bytes.",
     ))
 
     # 5e2. fuzzy query (round-6 §3.12): the d=1 neighborhood is

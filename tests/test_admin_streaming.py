@@ -129,7 +129,7 @@ def test_streaming_ingest_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
 
     bi = compact_segments(
-        spark, root, avgdl=None, segs_per_shard=2, num_buckets=8, docs_per_segment=128
+        spark, root, segs_per_shard=2, num_buckets=8, docs_per_segment=128
     )
     assert bi.n_docs == corpus.stats.n_docs
     assert abs(bi.avgdl - corpus.stats.avgdl) < 1e-12
@@ -162,8 +162,8 @@ def test_streaming_ingest_matches_batch(spark, tmp_path):
 
 def test_streaming_positional_multiattr_index(spark, tmp_path):
     """Round-5 streaming generality: micro-batches can pack the v6
-    positional stream AND multiple attr fields; compact_segments
-    SELF-DETECTS both from the merged rows (no config to keep in sync).
+    positional stream AND multiple attr fields; compact_segments reads
+    both from the epoch sidecars (no config to keep in sync).
     The compacted streamed index must serve phrase, source:, and
     combined queries identically to the batch naive evaluation, and its
     decoded positions must equal a batch positional build's."""
@@ -202,8 +202,8 @@ def test_streaming_positional_multiattr_index(spark, tmp_path):
         ]
         assert got == want, qs
 
-    # Q11 facets on a streamed-then-compacted index: the self-detected
-    # attr postings must serve counts over the full match set
+    # Q11 facets on a streamed-then-compacted index: the streamed attr
+    # postings must serve counts over the full match set
     from xsearch_spark.operators.wand import facet_counts
 
     pf = parse("hash OR join")
@@ -253,8 +253,9 @@ def test_streaming_positional_multiattr_index(spark, tmp_path):
 def test_streaming_multivalue_attr(spark, tmp_path):
     """Streaming twin of the multi-value attr path: an array<string>
     column exploded to one DISTINCT synthetic posting per element per
-    doc inside the micro-batch; compaction self-detects the field and
-    tags: queries serve index-only, matching the naive evaluation."""
+    doc inside the micro-batch; compaction takes the field from the epoch
+    sidecar and tags: queries serve index-only, matching the naive
+    evaluation."""
     import os as _os
 
     from xsearch_spark.streaming.ingest import compact_segments, process_epoch
@@ -772,7 +773,7 @@ def test_streaming_compact_attr_claim_guard(spark, tmp_path):
     q.awaitTermination(120)
     bi = compact_segments(
         spark, root, segs_per_shard=2, num_buckets=8, docs_per_segment=128
-    )  # detection must find NO synthetic rows and claim no fields
+    )  # the epoch sidecars list no attr field, so neither does the index
     assert not bi.has_attr("lang")
     corpus = engine.corpus_from_documents(spark, SF_DIR)
     got = [
@@ -858,6 +859,58 @@ def test_streamed_attrs_follow_batch_rules(spark, tmp_path):
         )
     assert str(streamed_err.value) == str(batch_err.value)
     assert not os.listdir(os.path.join(froot, "segments"))
+
+
+def test_compact_segments_takes_geometry_from_sidecars(spark, tmp_path):
+    """Epochs packed at 16 docs/segment: compacting with another
+    docs_per_segment raises and names both values (the index would map
+    doc_id -> shard with the wrong one, so tombstones and page scans
+    miss docs); omitting it takes the sidecars' value."""
+    from xsearch_spark.operators.wand import match_count, scan_docs
+    from xsearch_spark.streaming.ingest import compact_segments
+
+    docs = read_documents(spark, SF_DIR)
+    root = str(tmp_path / "geom_idx")
+    _stream_epochs(spark, docs, root, docs_per_segment=16)
+    with pytest.raises(ValueError, match="docs_per_segment=4096.*docs_per_segment=16"):
+        compact_segments(
+            spark, root, segs_per_shard=2, num_buckets=8, docs_per_segment=4096
+        )
+    bi = compact_segments(spark, root, segs_per_shard=2, num_buckets=8)
+    assert bi.docs_per_segment == 16
+
+    parsed = parse("hash OR join")
+    victims = [r["doc_id"] for r in search_wand(bi, parsed, k=3).collect()]
+    tomb = spark.createDataFrame([(int(v),) for v in victims], "doc_id long")
+    kept = {
+        r["doc_id"]
+        for r in search_wand(bi, parsed, k=10_000, tombstones=tomb).collect()
+    }
+    assert len(victims) == 3 and not kept & set(victims)
+    n_match = match_count(bi, parsed).first()[0]
+    assert scan_docs(bi, parsed, k=10_000).count() == n_match == len(kept) + 3
+
+
+@pytest.mark.parametrize(
+    "second", [{"attr_cols": ("lang", "source")}, {"positions": True}]
+)
+def test_compact_segments_rejects_disagreeing_epochs(spark, tmp_path, second):
+    """Epochs packed with different attr fields or positions cannot make
+    one index: its stats would promise filters or phrases that part of
+    the runs cannot serve, so compaction raises."""
+    from xsearch_spark.streaming.ingest import compact_segments, process_epoch
+
+    docs = read_documents(spark, SF_DIR)
+    root = str(tmp_path / "mixed_idx")
+    os.makedirs(os.path.join(root, "segments"), exist_ok=True)
+    os.makedirs(os.path.join(root, "epoch_stats"), exist_ok=True)
+    kw = {"docs_per_segment": 128, "attr_cols": ("lang",), "positions": False}
+    process_epoch(spark, docs.filter(F.col("doc_id") < 50), 0, root, **kw)
+    process_epoch(
+        spark, docs.filter(F.col("doc_id") >= 50), 1, root, **{**kw, **second}
+    )
+    with pytest.raises(ValueError, match="epoch sidecar epoch=1.json was packed with"):
+        compact_segments(spark, root, segs_per_shard=2, num_buckets=8)
 
 
 def test_compact_segments_reads_run_count_from_sidecars(

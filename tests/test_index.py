@@ -209,6 +209,30 @@ def test_fused_build_equals_staged(spark, built, tmp_path):
     assert a == b
 
 
+@pytest.mark.parametrize("fused", [False, True])
+def test_index_manifest_totals(spark, built, tmp_path, fused):
+    """Both places the runs can wait in write the same index manifest
+    fields, and the build benchmark's check reads two of them: rows_out
+    is the index row count, _totals.postings every posting (synthetic
+    attr postings included), _totals.sum_tf the sidecar's Σdl."""
+    from xsearch_spark.plans import checkpoints as ckpt
+
+    ix = built
+    if fused:
+        ix = build_index(
+            spark, read_documents(spark, SF_DIR), str(tmp_path / "fused_idx"),
+            text_col="text", variant="base",
+            docs_per_segment=128, segs_per_shard=2, num_buckets=16,
+            fused_merge=True, attr_cols=("lang", "source"), positions=True,
+        )
+    m = ckpt.load_manifest(ix.root, "index")
+    totals = m.partitions["_totals"]
+    assert m.rows_out == ix.index_df.count() > 0
+    assert totals["postings"] == ix.index_df.agg(F.sum("n_docs")).first()[0]
+    assert totals["sum_tf"] == ix.sum_dl
+    assert totals["rows"] >= m.rows_out  # packed runs merge into rows
+
+
 def test_checkpoint_source_ids_stable(spark, tmp_path):
     """Stage-0 ids checkpoint: second call reuses the manifest (no
     recompute) and returns the same mapping."""

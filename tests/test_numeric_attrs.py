@@ -196,10 +196,10 @@ def test_range_survives_compact(spark, built, duck, tmp_path):
 
     root = str(tmp_path / "cidx")
     sh.copytree(built.root, root)
-    bi = load_index(spark, root, num_buckets=built.num_buckets)
+    bi = load_index(spark, root)
     assert bi.num_attr_fields == ("n_chars",)
     compact(spark, bi)
-    bi2 = load_index(spark, root, num_buckets=built.num_buckets)
+    bi2 = load_index(spark, root)
     assert bi2.num_attr_fields == ("n_chars",)
     parsed = parse("hash n_chars:400..900", attr_fields=AF)
     got = _rounded(search_wand(bi2, parsed))

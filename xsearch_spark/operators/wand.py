@@ -607,39 +607,42 @@ def pruned_index_scan_prefix(
     term_ranges: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Q2 dictionary lookup with prefix groups (round-6, FIXTURES.md
-    §3.10): exact terms keep the bucket-pruned scan; prefixes add a
-    ``startswith``-filtered scan of the same parquet. The md5 bucket
-    layout cannot partition-prune a prefix range (that is the price of
-    hash bucketing — the same trade Lucene's hashed term dictionaries
-    make), but rows within each bucket file are term-sorted
-    (sortWithinPartitions), so the pushed ``StringStartsWith`` filter
-    prunes to the few row groups whose [min, max] term range straddles
-    the prefix — per bucket, a dictionary range seek, not a scan.
-    Synthetic attr terms (``\\x01`` prefix) can never match a
-    ``[a-z0-9_]+`` prefix, so no extra exclusion is needed.
+    §3.10). Without prefixes or ranges this is the bucket-pruned exact
+    scan. Otherwise it is ONE ``where`` over data columns only:
+    ``startswith(term, prefix) OR (term >= lo AND term <= hi) OR term IN
+    (exact)``. The md5 bucket layout cannot partition-prune a prefix
+    range (that is the price of hash bucketing — the same trade Lucene's
+    hashed term dictionaries make), so a prefix scan opens every bucket
+    file anyway and the exact terms ride it; ``bucket`` stays out of the
+    OR, because a filter that names a partition column is not pushed to
+    parquet.
+    Rows within each bucket file are term-sorted (sortWithinPartitions),
+    so the pushed ``StringStartsWith`` filter prunes to the few row
+    groups whose [min, max] term range straddles the prefix — per
+    bucket, a dictionary range seek, not a scan. Synthetic attr terms
+    (``\\x01`` prefix) can never match a ``[a-z0-9_]+`` prefix.
 
     ``term_ranges`` (round-6 §3.13): [lo_term, hi_term] closed intervals
     over the ENCODED numeric attr namespace — pushed as >=/<= string
     comparisons, which parquet row-group min/max statistics turn into a
     per-bucket value-interval seek (the doc-values read of a numeric
-    range filter). Disjoint from both the exact list and any prefix (the
-    \\x01 namespace vs [a-z0-9_]+), so no cross-exclusion is needed.
+    range filter).
 
     The whole filter is one SQL string (``sql_literal``), so the plan
     costs the same few py4j round trips for one term or a fuzzy
     neighborhood of hundreds."""
-    base = pruned_index_scan(index_df, terms, num_buckets)
     conds = [f"startswith(term, {sql_literal(p)})" for p in prefixes or []] + [
         f"(term >= {sql_literal(lo)} AND term <= {sql_literal(hi)})"
         for lo, hi in term_ranges or []
     ]
     if not conds:
-        return base
-    cond = " OR ".join(conds)
-    if terms:  # a term matching a prefix already rides the exact scan
-        cond = f"({cond}) AND NOT {_sql_in('term', terms)}"
-    pre = index_df.where(cond)
-    return base.unionByName(pre) if terms else pre
+        return pruned_index_scan(index_df, terms, num_buckets)
+    # the exact list goes last: a plan prints its pushed filters cut to
+    # ~100 characters, and a fuzzy list of hundreds of terms would hide
+    # the prefix and range bounds behind it
+    if terms:
+        conds.append(_sql_in("term", terms))
+    return index_df.where(" OR ".join(conds))
 
 
 # every column the Arrow scorer (_assemble_shard / _split_range_rows)

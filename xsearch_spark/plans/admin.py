@@ -19,15 +19,15 @@ tombstones at merge time; re-adding a key replaces the old doc
   * ``compact``             — purges every run, then re-merges the purged
                               runs under the trued-up avgdl.
 
-One purge, one merger, one swap; compaction never re-packs. Both
-compactions fold deletes through :func:`purge_tombstoned` (drop the
-deleted postings from each ENCODED run, cogrouped with the tombstones on
-the shard key), and full compact hands the purged runs to
-``segments.merge_to_index`` — the build's own merger — which recomputes
-block maxima, re-stamps df and lays out the buckets. Both end in
-:func:`_swap_index`: the new index replaces the old one through
-``sources.io.write_table``, then the sidecar is written and the folded
-tombstones are cleared.
+One purge, one publisher; compaction never re-packs. Both compactions
+fold deletes through :func:`purge_tombstoned` (drop the deleted postings
+from each ENCODED run, cogrouped with the tombstones on the shard key).
+Full compact hands the purged runs to ``build_index.publish_index`` —
+the build's own merge → write → open — which recomputes block maxima,
+re-stamps df, lays out the buckets and writes the sidecar; incremental
+compact writes the purged rows back through ``sources.io.write_table``
+with the stats frozen. Either way the folded tombstones are then
+cleared.
 """
 
 from __future__ import annotations
@@ -38,7 +38,12 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from xsearch_spark.plans.build_index import _paths, read_stats, write_stats
+from xsearch_spark.plans.build_index import (
+    _paths,
+    publish_index,
+    read_stats,
+    write_stats,
+)
 from xsearch_spark.sources.io import write_table
 
 _NONE_DELETED = {"n_docs": 0, "sum_dl": 0}
@@ -100,43 +105,35 @@ def compact(spark: SparkSession, built) -> None:
     deletion cannot adjust (N, avgdl); fresh-build parity holds for any
     doc with at least one token.
     """
-    sidecar = read_stats(built.root)
-    pending = sidecar.get("pending_deleted", _NONE_DELETED)
+    pending = read_stats(built.root).get("pending_deleted", _NONE_DELETED)
     tomb = load_tombstones(spark, built.root)
     has_tomb = tomb is not None and not tomb.isEmpty()
     if not has_tomb and not (int(pending["n_docs"]) or int(pending["sum_dl"])):
         return
     if not has_tomb:
         tomb = spark.createDataFrame([], "doc_id long")
-    _compact_full(
-        spark, built, tomb, sidecar, _measure_deleted(built.index_df, tomb)
-    )
+    _compact_full(spark, built, tomb, pending, _measure_deleted(built.index_df, tomb))
 
 
 def _compact_full(
-    spark: SparkSession, built, tomb: DataFrame, sidecar: dict,
+    spark: SparkSession, built, tomb: DataFrame, pending: dict,
     deleted: tuple[int, int],
 ) -> None:
-    """The full fold, given the tombstones, the stats.json sidecar and
-    the measured (n_docs, Σdl) of the deleted docs: purge EVERY run
-    (:func:`purge_tombstoned`), re-merge the purged runs through
-    ``segments.merge_to_index`` under the trued-up avgdl with ``seg_id =
-    shard * segs_per_shard`` so each (term, shard) is a single-run group,
-    and :func:`_swap_index`. Because avgdl changes, EVERY row's block
-    maxima must be recomputed (a stale bound computed under a smaller
-    avgdl can under-estimate and make WAND prune a true top-k doc) — the
-    merge always recomputes them, and re-stamps each term's global df.
-    The geometry is the build-time one persisted in stats.json (round-1
-    advisor: any other scatters a doc's terms across different shard
-    groups — silent top-k corruption)."""
+    """The full fold, given the tombstones, the sidecar's
+    ``pending_deleted`` and the measured (n_docs, Σdl) of the deleted
+    docs: purge EVERY run (:func:`purge_tombstoned`) and publish the
+    purged runs (``build_index.publish_index``, the build's own merge →
+    write → open) under the trued-up N and Σdl, with ``seg_id = shard *
+    segs_per_shard`` so each (term, shard) is a single-run group. Because
+    avgdl changes, EVERY row's block maxima must be recomputed (a stale
+    bound computed under a smaller avgdl can under-estimate and make WAND
+    prune a true top-k doc) — the merge always recomputes them, and
+    re-stamps each term's global df. The geometry and attr contract are
+    the build-time ones persisted in stats.json (round-1 advisor: any
+    other geometry scatters a doc's terms across different shard groups —
+    silent top-k corruption). The sidecar is rewritten without
+    ``pending_deleted``: it is trued up here."""
     from xsearch_spark.constants import ATTR_TERM_PREFIX
-    from xsearch_spark.operators import segments as seg
-
-    # pending_deleted is trued up here, so it leaves the sidecar
-    pending = sidecar.pop("pending_deleted", _NONE_DELETED)
-    n_docs_new = built.n_docs - deleted[0] - int(pending["n_docs"])
-    sum_dl_new = built.sum_dl - deleted[1] - int(pending["sum_dl"])
-    avgdl_new = (sum_dl_new / n_docs_new) if n_docs_new else 0.0
 
     # the merge reads a run's sum_tf only to ask whether it scores
     # (sum_tf > 0, the positional-sync check); index rows do not carry
@@ -155,29 +152,18 @@ def _compact_full(
             "last_doc_id", "doc_ids", "tfs", "dls", "poss",
         )
     )
-    new_idx = seg.merge_to_index(
-        runs, avgdl_new, built.segs_per_shard, built.num_buckets
+    new = publish_index(
+        spark, built.root, runs,
+        n_docs=built.n_docs - deleted[0] - int(pending["n_docs"]),
+        sum_dl=built.sum_dl - deleted[1] - int(pending["sum_dl"]),
+        n_runs=None, docs_per_segment=built.docs_per_segment,
+        segs_per_shard=built.segs_per_shard, num_buckets=built.num_buckets,
+        attr_fields=built.attr_fields, num_attr_fields=built.num_attr_fields,
+        positions=built.has_positions,
     )
-    sidecar.update(
-        {"n_docs": n_docs_new, "avgdl": avgdl_new, "sum_dl": sum_dl_new}
-    )
-    _swap_index(spark, built, new_idx, sidecar)
-    built.n_docs = n_docs_new
-    built.avgdl = avgdl_new
-    built.sum_dl = sum_dl_new
-
-
-def _swap_index(spark: SparkSession, built, rows: DataFrame, sidecar: dict) -> None:
-    """The tail both compactions share: replace the index table with
-    ``rows`` (``sources.io.write_table`` — a bucket whose rows all died
-    disappears instead of surviving as a stale partition, round-1
-    advisor), write the sidecar, clear the folded tombstones and
-    re-point ``built.index_df`` at the new table."""
-    path = _paths(built.root)["index"]
-    write_table(rows, path, "bucket")
-    write_stats(built.root, **sidecar)
     shutil.rmtree(tombstone_path(built.root), ignore_errors=True)
-    built.index_df = spark.read.parquet(path)
+    built.index_df = new.index_df
+    built.n_docs, built.avgdl, built.sum_dl = new.n_docs, new.avgdl, new.sum_dl
 
 
 def purge_tombstoned(
@@ -331,8 +317,8 @@ def compact_incremental(
     (bucket, term, shard, first_doc_id) so parquet row-group min/max
     term skipping survives incremental folds (round-3 verdict item 4;
     ``bucket`` leads so the partitioned writer's required ordering is
-    already met and it injects no sort of its own), then the one index
-    swap (:func:`_swap_index`).
+    already met and it injects no sort of its own), then one table
+    write and the sidecar with the grown ``pending_deleted``.
     """
     tomb = load_tombstones(spark, built.root)
     if tomb is None or tomb.isEmpty():
@@ -348,7 +334,7 @@ def compact_incremental(
         built.sum_dl
         and (int(pend["sum_dl"]) + dl_deleted) / built.sum_dl > max_dl_drift
     ):
-        _compact_full(spark, built, tomb, sidecar, (n_deleted, dl_deleted))
+        _compact_full(spark, built, tomb, pend, (n_deleted, dl_deleted))
         return "full"
 
     # same avgdl as the rest of the index: stats are frozen until the
@@ -362,6 +348,12 @@ def compact_incremental(
         "n_docs": int(pend["n_docs"]) + n_deleted,
         "sum_dl": int(pend["sum_dl"]) + dl_deleted,
     }
-    # N/avgdl/df deliberately unchanged (frozen-stats semantics)
-    _swap_index(spark, built, rows, sidecar)
+    # N/avgdl/df deliberately unchanged (frozen-stats semantics); a
+    # bucket whose rows all died disappears instead of surviving as a
+    # stale partition (round-1 advisor)
+    path = _paths(built.root)["index"]
+    write_table(rows, path, "bucket")
+    write_stats(built.root, **sidecar)
+    shutil.rmtree(tombstone_path(built.root), ignore_errors=True)
+    built.index_df = spark.read.parquet(path)
     return "incremental"

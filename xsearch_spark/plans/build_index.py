@@ -1,30 +1,30 @@
 """Entry point 1: the full index-build pipeline (SURVEY.md §3.1),
-checkpointed per stage with per-partition lineage (B8).
+checkpointed with per-partition lineage (B8), and the one index
+publisher every merged index leaves through.
 
-Stages (each persisted + manifested; a re-run skips completed stages and
-rebuilds only missing segment partitions):
+One flow (:func:`build_index`): if the index manifest matches these
+inputs, open the index; otherwise
 
-  1. ``segments``  — ONE pass: tokenize (A1/A2) + B1 tf + B2 dl + B4/B6
-                     packing fused in a single Arrow UDF over doc-range
-                     partitions (see operators.segments.pack_from_source)
-                     -> packed per-(seg_id, term) runs written
-                     partitionBy(seg_group); resume = rebuild only the
-                     seg_groups missing from the manifest (a per-write
-                     dynamic partition overwrite; the universe of groups
-                     derives from dense doc_ids, no scan). A build that
-                     is not a resume replaces the whole directory.
-                     avgdl comes from the runs' sum_tf column.
-  2. ``index``     — B5 salted merge -> (term, shard) runs (+ real B7
-                     block maxima) + term-hash ``bucket`` partition
-                     column for query-time pruning.
-  3. ``stats``     — term df (sum of run n_docs — no postings re-scan),
-                     N/avgdl sidecar JSON.
+  1. get the packed runs — ONE pass of tokenize (A1/A2) + B1 tf + B2 dl
+     + B4/B6 packing in a single Arrow UDF over doc-range partitions
+     (``operators.segments.pack_from_source``). They wait either in
+     ``segments/`` parquet partitioned by seg_group (the staged default;
+     resume = re-pack only the seg_groups missing from the ``segments``
+     manifest, the universe of groups derives from dense doc_ids, no
+     scan) or cached in the cluster (``fused_merge=True``);
+  2. publish them (:func:`publish_index`): B5 salted merge -> (term,
+     shard) runs with real B7 block maxima, each term's global df and
+     the term-hash ``bucket`` partition column -> index table +
+     ``stats.json`` (N, avgdl = Σdl / N with Σdl = Σ of the runs'
+     sum_tf, geometry, attr fields, positions) -> ``BuiltIndex``;
+  3. write the index manifest (per-bucket rows from the file footers,
+     run/posting totals) and the progress event.
 
 Scale notes: every stage is one shuffle; nothing collects to the driver
-except the (N, avgdl) scalars and per-partition manifest rows. The
-``bucket`` layout gives Q2 dictionary lookups static partition pruning;
-``shard`` bounds per-row posting size and parallelizes hot-term work at
-both merge and query time.
+except the run totals and per-partition manifest rows. The ``bucket``
+layout gives Q2 dictionary lookups static partition pruning; ``shard``
+bounds per-row posting size and parallelizes hot-term work at both
+merge and query time.
 """
 
 from __future__ import annotations
@@ -75,9 +75,9 @@ class BuiltIndex:
     # attribute fields indexed as synthetic posting lists — queries on
     # these fields never touch the source table
     attr_fields: tuple[str, ...] = ()
-    # True iff every (term, shard) key is unique — guaranteed by all
-    # merge_to_index-routed producers (build_index, load_index,
-    # streaming.compact_segments). wand's single-term zero-exchange fast
+    # True iff every (term, shard) key is unique — guaranteed by every
+    # index opened through load_index (publish_index merges through
+    # merge_to_index). wand's single-term zero-exchange fast
     # path is gated on this: a hand-assembled UNION of indexes can
     # legally repeat keys, and the fast path scores runs wherever the
     # scan read them, bypassing _assemble_shard's repeated-key guard
@@ -239,26 +239,28 @@ def build_index(
     segs_per_shard: int = seg.DEFAULT_SEGS_PER_SHARD,
     num_buckets: int = DEFAULT_NUM_BUCKETS,
     segs_per_group: int = SEGS_PER_GROUP,
-    source_fingerprint: str | None = None,
     n_docs: int | None = None,
     fused_merge: bool = False,
     attr_cols: "str | tuple[str, ...] | list[str] | None" = "lang",
     positions: bool = False,
 ) -> BuiltIndex:
-    """Build the packed index. Two build topologies:
+    """Build the packed index in one flow: open it if it is already done
+    for these inputs; otherwise get the packed runs, publish them
+    (:func:`publish_index`), then write the index manifest and the
+    progress event. ``fused_merge`` only picks where the runs wait:
 
-    * ``fused_merge=False`` (staged, default): pack -> durable segments
-      parquet (+ per-seg_group manifests, the fine-grained resume unit)
-      -> merge -> index. A lost task or driver re-tokenizes only missing
+    * ``False`` (default): in ``segments/`` parquet, partitioned by
+      seg_group with one manifest row per group — the per-partition
+      resume unit: a lost task or driver re-tokenizes only the missing
       seg_groups.
-    * ``fused_merge=True``: pack -> cluster-cached runs -> merge -> index
-      in ONE lineage, no segments parquet round-trip (the write + read-
-      back + manifest agg was ~1/3 of build wall at sf0.1). avgdl comes
-      from one aggregate over the cached runs, so tokenization still runs
-      exactly once. Resume granularity coarsens to {ids checkpoint,
-      finished index} — choose this for throughput when the cluster can
-      cache the packed runs (they are index-sized), the staged path when
-      per-partition resumability matters more.
+    * ``True``: cached in the cluster, in one lineage with the merge —
+      no segments parquet round trip (the write + read-back was ~1/3 of
+      build wall at sf0.1). Resume granularity coarsens to {ids
+      checkpoint, finished index}.
+
+    Both publish byte-identical indexes, and the index manifest carries
+    the same fields either way: per-bucket rows, ``rows_out`` (index
+    rows) and ``_totals`` (packed runs, postings and Σtf).
 
     ``attr_cols`` (v5; a string or a sequence, default "lang"; fields
     missing from the source are dropped): index the per-doc attributes
@@ -266,52 +268,102 @@ def build_index(
     ``source:``, license/domain on a real corpus) are pruned index
     reads at query time.
     """
-    paths = _paths(out_dir)
+    from pyspark import StorageLevel
+
     os.makedirs(out_dir, exist_ok=True)
     attrs: tuple[str, ...] = (
         (attr_cols,) if isinstance(attr_cols, str) else tuple(attr_cols or ())
     )
     attrs = tuple(c for c in attrs if c in source_df.columns)
-    # round-6 §3.13: classify integer attr columns ONCE from the schema;
-    # the classification is part of the index contract (stats.json)
-    num_attrs = seg.numeric_attr_fields(source_df.schema, attrs)
-    fp_base = _fingerprint(
-        source_fingerprint
-        or _fingerprint(text_col, variant, docs_per_segment, segs_per_shard, num_buckets, segs_per_group),
-        INDEX_FORMAT_VERSION,
-        attrs,
-        positions,
+    fp = _fingerprint(
+        text_col, variant, docs_per_segment, segs_per_shard, num_buckets,
+        segs_per_group, INDEX_FORMAT_VERSION, attrs, positions,
     )
     t_start = time.monotonic()
+    index_path = _paths(out_dir)["index"]
+    if ckpt.stage_done(out_dir, "index", fp) and os.path.exists(_paths(out_dir)["stats"]):
+        built = load_index(spark, out_dir)
+    else:
+        if n_docs is None:
+            # callers that know the row count (parquet metadata) pass it
+            # in; otherwise this is the only full-input driver job
+            n_docs = source_df.count()
 
-    if fused_merge:
-        return _build_index_fused(
-            spark, source_df, out_dir, paths, fp_base, text_col, doc_id_col,
-            variant, docs_per_segment, segs_per_shard, num_buckets, n_docs, t_start,
-            attrs, positions,
-        )
+        def pack(df: DataFrame, n: int) -> DataFrame:
+            # one pass: tokenize (A1/A2) + tf (B1) + dl (B2) + packing
+            return seg.pack_from_source(
+                df, text_col, doc_id_col, variant, docs_per_segment,
+                n_docs=n, attr_cols=attrs, positions=positions,
+            )
 
-    # ---- stage 1+2 fused: docs -> packed segments in ONE pass ------------
-    # (xsearch's own topology: a shard tokenizes into its in-memory
-    # segment map and flushes packed — no long-postings materialization.)
-    # Resume unit: seg_group, derivable WITHOUT a data scan because
-    # doc_ids are dense 0..N-1 (S2 invariant).
-    fp2 = _fingerprint("segments", fp_base)
-    m2 = ckpt.load_manifest(out_dir, "segments")
-    if n_docs is None and (
-        m2 is not None
-        and m2.input_fingerprint == fp2
-        and m2.status == "done"
-        and os.path.exists(paths["stats"])
-    ):
-        n_docs = int(read_stats(out_dir)["n_docs"])  # checkpointed: no job
-    if n_docs is None:
-        # callers that know the row count (parquet metadata) pass it in;
-        # otherwise this is the only full-input driver job
-        n_docs = source_df.count()
+        with ckpt.StageTimer() as t:
+            if fused_merge:
+                runs = pack(source_df, n_docs).persist(StorageLevel.MEMORY_AND_DISK)
+                # one aggregate over the cached runs; tokenization runs once
+                row = runs.agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.sum("n_docs").alias("postings"),
+                    F.sum("sum_tf").alias("sum_tf"),
+                ).collect()[0]
+                totals = {k: int(row[k] or 0) for k in ("rows", "postings", "sum_tf")}
+            else:
+                runs, totals = _segment_runs(
+                    spark, source_df, out_dir, _fingerprint("segments", fp),
+                    pack, n_docs, doc_id_col, docs_per_segment, segs_per_group,
+                )
+            # sum(dl over all docs) == sum(tf over postings): avgdl is
+            # exact with no second tokenizer pass and no decode
+            built = publish_index(
+                spark, out_dir, runs, n_docs=n_docs, sum_dl=totals["sum_tf"],
+                n_runs=totals["rows"], docs_per_segment=docs_per_segment,
+                segs_per_shard=segs_per_shard, num_buckets=num_buckets,
+                attr_fields=attrs,
+                num_attr_fields=seg.numeric_attr_fields(source_df.schema, attrs),
+                positions=positions,
+            )
+            runs.unpersist()
+        m = ckpt.StageManifest("index", fp, "done", t.wall_ms)
+        m.partitions = _partition_rows_parquet(index_path, "bucket")
+        m.rows_out = sum(p["rows"] for p in m.partitions.values())
+        m.partitions["_totals"] = totals
+        m.completed_at = time.time()
+        ckpt.save_manifest(out_dir, m)
+
+    ckpt.progress_event(
+        out_dir,
+        {
+            "event": "index_built",
+            "out_dir": out_dir,
+            "n_docs": built.n_docs,
+            "wall_s": time.monotonic() - t_start,
+        },
+    )
+    return built
+
+
+def _segment_runs(
+    spark: SparkSession,
+    source_df: DataFrame,
+    out_dir: str,
+    fp: str,
+    pack,
+    n_docs: int,
+    doc_id_col: str,
+    docs_per_segment: int,
+    segs_per_group: int,
+) -> tuple[DataFrame, dict]:
+    """The staged build's runs: packed into ``segments/`` partitioned by
+    seg_group, with one ``segments`` manifest row per group. Only the
+    groups missing from the manifest are packed — the universe of groups
+    derives from dense doc_ids 0..N-1 (S2 invariant), no data scan.
+    Returns the runs read back and their totals (rows, postings, Σtf)."""
+    path = _paths(out_dir)["segments"]
     docs_per_group = docs_per_segment * segs_per_group
-    all_groups = {str(g) for g in range((n_docs + docs_per_group - 1) // docs_per_group)}
-    done_groups = set(m2.partitions) if m2 and m2.input_fingerprint == fp2 else set()
+    m = ckpt.load_manifest(out_dir, "segments")
+    if m is None or m.input_fingerprint != fp:
+        m = ckpt.StageManifest("segments", fp)
+    all_groups = {str(g) for g in range(-(-n_docs // docs_per_group))}
+    done_groups = set(m.partitions)
     missing = sorted(all_groups - done_groups, key=int)
     if missing:
         with ckpt.StageTimer() as t:
@@ -322,13 +374,6 @@ def build_index(
                     .cast("long")
                     .isin([int(g) for g in missing])
                 )
-            packed = seg.pack_from_source(
-                todo, text_col, doc_id_col, variant, docs_per_segment,
-                n_docs=len(missing) * docs_per_group if done_groups else n_docs,
-                attr_cols=attrs, positions=positions,
-            ).withColumn(
-                "seg_group", (F.col("seg_id") / F.lit(segs_per_group)).cast("long")
-            )
             # a resume overwrites dynamically, for this write only: just
             # the seg_group partitions in `packed` are replaced and the
             # completed ones stay untouched (resume unit). Any other
@@ -337,171 +382,93 @@ def build_index(
             # subsplit the write so a group isn't funneled through one
             # task (at sf0.1 there are only ~4 groups but ~200 MB of
             # packed runs; 8 files per group keeps the write parallel)
-            packed.repartition(
+            pack(
+                todo, len(missing) * docs_per_group if done_groups else n_docs
+            ).withColumn(
+                "seg_group", (F.col("seg_id") / F.lit(segs_per_group)).cast("long")
+            ).repartition(
                 F.col("seg_group"), F.pmod(F.xxhash64("term"), F.lit(8))
             ).write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic" if done_groups else "static"
-            ).partitionBy("seg_group").parquet(paths["segments"])
-        seg_df = spark.read.parquet(paths["segments"])
-        # one small-table agg yields lineage rows AND the avgdl input
-        parts = {
-            str(r["seg_group"]): {
-                "rows": int(r["rows"]),
-                "postings": int(r["postings"]),
-                "sum_tf": int(r["s"]),
-            }
-            for r in seg_df.groupBy("seg_group")
+            ).partitionBy("seg_group").parquet(path)
+        # one small-table agg yields the lineage rows of the new groups
+        for r in (
+            spark.read.parquet(path)
+            .filter(F.col("seg_group").isin([int(g) for g in missing]))
+            .groupBy("seg_group")
             .agg(
                 F.count(F.lit(1)).alias("rows"),
                 F.sum("n_docs").alias("postings"),
-                F.sum("sum_tf").alias("s"),
+                F.sum("sum_tf").alias("sum_tf"),
             )
             .collect()
-        }
-        if m2 is None or m2.input_fingerprint != fp2:
-            m2 = ckpt.StageManifest("segments", fp2)
-        for k, v in parts.items():
-            if k in m2.partitions and k not in missing:
-                continue  # untouched group: keep its original lineage row
-            v["wall_ms_batch"] = t.wall_ms
-            m2.partitions[k] = v
-        m2.wall_ms += t.wall_ms
-        m2.rows_out = sum(p["rows"] for p in m2.partitions.values())
-        m2.status = "done"
-        m2.completed_at = time.time()
-        ckpt.save_manifest(out_dir, m2)
-        # sum(dl over all docs) == sum(tf over postings): avgdl is exact
-        # with no second tokenizer pass and no decode
-        sum_dl = sum(p["sum_tf"] for p in m2.partitions.values())
-        # geometry persisted so compact()/load_index rebuild with the
-        # exact build-time doc->seg->shard mapping
-        write_stats(
-            out_dir, n_docs=n_docs, avgdl=(sum_dl / n_docs) if n_docs else 0.0,
-            sum_dl=sum_dl, docs_per_segment=docs_per_segment,
-            segs_per_shard=segs_per_shard, num_buckets=num_buckets,
-            attr_fields=list(attrs), num_attr_fields=list(num_attrs),
-            positions=positions,
-        )
-    sidecar = read_stats(out_dir)
-    n_docs, avgdl = int(sidecar["n_docs"]), float(sidecar["avgdl"])
-    seg_df = spark.read.parquet(paths["segments"])
+        ):
+            m.partitions[str(r["seg_group"])] = {
+                "rows": int(r["rows"]),
+                "postings": int(r["postings"]),
+                "sum_tf": int(r["sum_tf"]),
+                "wall_ms_batch": t.wall_ms,
+            }
+        m.wall_ms += t.wall_ms
+        m.rows_out = sum(p["rows"] for p in m.partitions.values())
+        m.status = "done"
+        m.completed_at = time.time()
+        ckpt.save_manifest(out_dir, m)
+    totals = {
+        k: sum(p[k] for p in m.partitions.values())
+        for k in ("rows", "postings", "sum_tf")
+    }
+    return spark.read.parquet(path).drop("seg_group"), totals
 
-    # ---- stage 3: salted merge -> final index ----------------------------
-    fp3 = _fingerprint("index", fp2)
-    if ckpt.stage_done(out_dir, "index", fp3) is None:
-        with ckpt.StageTimer() as t:
-            # merge fused with the bucket layout (same topology as the
-            # fused build): ONE shuffle, rows leave the UDF already
-            # bucket-partitioned + term-sorted (parquet row-group min/max
-            # on `term` skip within each bucket file) and carrying the
-            # denormalized global df (v4)
-            merged = seg.merge_to_index(
-                seg_df.drop("seg_group"), avgdl, segs_per_shard, num_buckets,
-                n_runs=int(m2.rows_out) if m2 and m2.rows_out else None,
-            )
-            write_table(merged, paths["index"], "bucket")
-        m3 = ckpt.StageManifest("index", fp3, "done", t.wall_ms)
-        m3.partitions = _partition_rows_parquet(paths["index"], "bucket")
-        m3.rows_out = sum(p["rows"] for p in m3.partitions.values())
-        m3.completed_at = time.time()
-        ckpt.save_manifest(out_dir, m3)
 
-    ckpt.progress_event(
-        out_dir,
-        {
-            "event": "index_built",
-            "out_dir": out_dir,
-            "n_docs": n_docs,
-            "wall_s": time.monotonic() - t_start,
-        },
+def publish_index(
+    spark: SparkSession,
+    out_dir: str,
+    runs: DataFrame,
+    *,
+    n_docs: int,
+    sum_dl: int,
+    n_runs: int | None,
+    docs_per_segment: int,
+    segs_per_shard: int,
+    num_buckets: int,
+    attr_fields: "tuple[str, ...] | list[str]",
+    num_attr_fields: "tuple[str, ...] | list[str]",
+    positions: bool,
+) -> BuiltIndex:
+    """The one index publisher: packed runs plus the index contract ->
+    merged table + stats.json -> BuiltIndex. Every merged index leaves
+    through here — the staged and fused builds, the streaming compactor
+    and full compact.
+
+    The contract is what the runs were packed under and what the index
+    promises its queries: N, Σdl and the run count; the geometry
+    (``docs_per_segment`` maps doc_id -> seg_id at pack time,
+    ``segs_per_shard`` seg_id -> shard at merge time, ``num_buckets`` the
+    term -> bucket layout); the attr fields, their numeric subset and
+    whether the rows carry positions. ``segments.merge_to_index``
+    recomputes every block maximum under avgdl = Σdl / N and stamps each
+    term's global df (``n_runs`` bounds the merge salt; None when
+    unknown); the table is replaced through ``sources.io.write_table``
+    and the sidecar through :func:`write_stats`, and the index opens
+    through :func:`load_index`. Writes no manifest: bookkeeping is the
+    caller's."""
+    avgdl = (sum_dl / n_docs) if n_docs else 0.0
+    write_table(
+        seg.merge_to_index(runs, avgdl, segs_per_shard, num_buckets, n_runs=n_runs),
+        _paths(out_dir)["index"],
+        "bucket",
+    )
+    write_stats(
+        out_dir, n_docs=n_docs, avgdl=avgdl, sum_dl=sum_dl,
+        docs_per_segment=docs_per_segment, segs_per_shard=segs_per_shard,
+        num_buckets=num_buckets, attr_fields=list(attr_fields),
+        num_attr_fields=list(num_attr_fields), positions=positions,
     )
     return load_index(spark, out_dir)
 
 
-def _build_index_fused(
-    spark: SparkSession,
-    source_df: DataFrame,
-    out_dir: str,
-    paths: dict[str, str],
-    fp_base: str,
-    text_col: str,
-    doc_id_col: str,
-    variant: str,
-    docs_per_segment: int,
-    segs_per_shard: int,
-    num_buckets: int,
-    n_docs: int | None,
-    t_start: float,
-    attrs: tuple[str, ...] = (),
-    positions: bool = False,
-) -> BuiltIndex:
-    """One-lineage build: tokenize+pack (Arrow UDF) -> cached runs ->
-    salted merge -> index write. See :func:`build_index` docstring."""
-    from pyspark import StorageLevel
-
-    num_attrs = seg.numeric_attr_fields(source_df.schema, attrs)
-    fpF = _fingerprint("fused_index", fp_base)
-    if ckpt.stage_done(out_dir, "index", fpF) is None or not os.path.exists(paths["stats"]):
-        if n_docs is None:
-            n_docs = source_df.count()
-        with ckpt.StageTimer() as t:
-            packed = seg.pack_from_source(
-                source_df, text_col, doc_id_col, variant, docs_per_segment,
-                n_docs=n_docs, attr_cols=attrs, positions=positions,
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            # one aggregate over the cached runs yields the exact avgdl
-            # (sum of dl over docs == sum of tf over postings) and the
-            # lineage totals; tokenization runs exactly once
-            row = packed.agg(
-                F.sum("sum_tf").alias("s"),
-                F.sum("n_docs").alias("postings"),
-                F.count(F.lit(1)).alias("runs"),
-            ).collect()[0]
-            sum_dl = int(row["s"] or 0)
-            avgdl = (sum_dl / n_docs) if n_docs else 0.0
-            # merge fused with the bucket layout: rows leave the merge UDF
-            # already bucket-partitioned and term-sorted -> direct write,
-            # no second exchange (see segments.merge_to_index)
-            merged = seg.merge_to_index(
-                packed, avgdl, segs_per_shard, num_buckets,
-                n_runs=int(row["runs"]),
-            )
-            write_table(merged, paths["index"], "bucket")
-            packed.unpersist()
-        m = ckpt.StageManifest("index", fpF, "done", t.wall_ms)
-        m.partitions = _partition_rows_parquet(paths["index"], "bucket")
-        m.partitions["_totals"] = {
-            "rows": int(row["runs"]),
-            "postings": int(row["postings"]),
-            "sum_tf": sum_dl,
-        }
-        m.rows_out = sum(
-            p["rows"] for k, p in m.partitions.items() if k != "_totals"
-        )
-        m.completed_at = time.time()
-        ckpt.save_manifest(out_dir, m)
-        write_stats(
-            out_dir, n_docs=n_docs, avgdl=avgdl, sum_dl=sum_dl,
-            docs_per_segment=docs_per_segment, segs_per_shard=segs_per_shard,
-            num_buckets=num_buckets, attr_fields=list(attrs),
-            num_attr_fields=list(num_attrs), positions=positions,
-        )
-    built = load_index(spark, out_dir)
-
-    ckpt.progress_event(
-        out_dir,
-        {
-            "event": "index_built",
-            "out_dir": out_dir,
-            "n_docs": built.n_docs,
-            "fused": True,
-            "wall_s": time.monotonic() - t_start,
-        },
-    )
-    return built
-
-
-def load_index(spark: SparkSession, out_dir: str, num_buckets: int | None = None) -> BuiltIndex:
+def load_index(spark: SparkSession, out_dir: str) -> BuiltIndex:
     """Open a built index from its root: the stats.json sidecar (checked
     by :func:`read_stats`) plus the index parquet. Every producer returns
     its BuiltIndex through here."""
@@ -511,7 +478,7 @@ def load_index(spark: SparkSession, out_dir: str, num_buckets: int | None = None
         spark.read.parquet(_paths(out_dir)["index"]),
         int(stats["n_docs"]),
         float(stats["avgdl"]),
-        num_buckets or int(stats["num_buckets"]),
+        int(stats["num_buckets"]),
         docs_per_segment=int(stats["docs_per_segment"]),
         segs_per_shard=int(stats["segs_per_shard"]),
         sum_dl=int(stats["sum_dl"]),

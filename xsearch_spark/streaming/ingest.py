@@ -23,12 +23,16 @@ equivalent:
     violation and fails fast at merge time via the strictly-increasing
     doc_id invariant),
   * periodic ``compact_segments`` = the B5 merge as a batch job (the
-    reference's background merge goroutine). BM25's avgdl is
-    collection-global, so each epoch records exact (n_docs, sum_dl,
-    n_runs) in a tiny sidecar and compaction recomputes the TRUE global
-    avgdl and the run count from the sidecar sums, with no driver-side
-    file listing. Only the merged index serves queries; the merge
-    recomputes every block maximum under that avgdl.
+    reference's background merge goroutine). Each epoch records in a
+    tiny sidecar what its packer knew: exact (n_docs, sum_dl, n_runs)
+    and the packer's contract (``docs_per_segment``, attr fields, their
+    numeric subset, positions). Compaction sums the first (BM25's avgdl
+    is collection-global, so it is recomputed from the sums, and the run
+    count bounds the merge salt, with no file listing), checks that
+    every epoch agrees on the second, and hands both to the batch
+    build's publisher (``build_index.publish_index``). Only the merged
+    index serves queries; the merge recomputes every block maximum under
+    the global avgdl.
 
 No watermarks/session windows: the capability set has no event-time
 aggregation (SURVEY.md §2.5 streaming note).
@@ -43,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xsearch_spark.operators import segments as seg
-from xsearch_spark.sources.io import DOCUMENTS_SCHEMA, write_json, write_table
+from xsearch_spark.sources.io import DOCUMENTS_SCHEMA, write_json
 
 
 def start_ingest(
@@ -63,8 +67,9 @@ def start_ingest(
     every listed column present in the stream emits synthetic attribute
     postings (integer columns order-preserving encoded, floats raise),
     and ``positions`` packs the positional stream for phrase queries.
-    ``compact_segments`` self-detects both from the merged rows — no
-    configuration to keep in sync.
+    Each epoch's sidecar records them with ``docs_per_segment``, and
+    ``compact_segments`` publishes the merged index under that recorded
+    contract — there is nothing to repeat when compacting.
     """
     os.makedirs(os.path.join(index_root, "segments"), exist_ok=True)
     os.makedirs(os.path.join(index_root, "epoch_stats"), exist_ok=True)
@@ -135,109 +140,90 @@ def process_epoch(
     sum_dl, n_runs = spark.read.parquet(out).agg(
         F.sum("sum_tf"), F.count(F.lit(1))
     ).collect()[0]
+    # and the packer's contract, which compact_segments checks across
+    # epochs and hands to the publisher
     stats = {
         "epoch": int(epoch_id),
         "n_docs": int(n_docs),
         "sum_dl": int(sum_dl or 0),
         "n_runs": int(n_runs),
+        "docs_per_segment": int(docs_per_segment),
+        "attr_fields": list(attrs),
+        "num_attr_fields": list(seg.numeric_attr_fields(batch_df.schema, attrs)),
+        "positions": bool(positions),
     }
     write_json(
         os.path.join(index_root, "epoch_stats", f"epoch={epoch_id}.json"), stats
     )
 
 
-def _epoch_totals(index_root: str) -> tuple[int, int, int]:
-    """(n_docs, sum_dl, n_runs) summed over all delivered epochs."""
+# what every epoch must agree on: the packer's contract, recorded in each
+# sidecar and handed to the publisher as the merged index's contract
+_EPOCH_CONTRACT = ("docs_per_segment", "attr_fields", "num_attr_fields", "positions")
+
+
+def _epoch_contract(index_root: str, docs_per_segment: int | None) -> dict:
+    """The merged index's contract from the epoch sidecars: (n_docs,
+    sum_dl, n_runs) summed over all delivered epochs, plus the packer's
+    contract, which every epoch must share. Raises if two epochs were
+    packed under different contracts, or if ``docs_per_segment`` is
+    given and is not the one the epochs were packed with (the query
+    path maps doc_id -> shard with it: another value reads the wrong
+    shards)."""
     d = os.path.join(index_root, "epoch_stats")
-    n, s, r = 0, 0, 0
+    sums = {"n_docs": 0, "sum_dl": 0, "n_runs": 0}
+    packed: dict = {}
     for name in sorted(os.listdir(d)) if os.path.isdir(d) else []:
         if not name.endswith(".json"):
             continue
         with open(os.path.join(d, name)) as f:
             row = json.load(f)
-        n += int(row["n_docs"])
-        s += int(row["sum_dl"])
-        r += int(row["n_runs"])
-    return n, s, r
+        for k in sums:
+            sums[k] += int(row[k])
+        this = {k: row[k] for k in _EPOCH_CONTRACT}
+        if packed and this != packed:
+            raise ValueError(
+                f"epoch sidecar {name} was packed with {this}, earlier "
+                f"epochs with {packed}: one index cannot serve both"
+            )
+        packed = this
+    if not packed:
+        raise ValueError(f"{index_root} has no delivered epoch to compact")
+    if docs_per_segment not in (None, packed["docs_per_segment"]):
+        raise ValueError(
+            f"compact_segments(docs_per_segment={docs_per_segment}), but "
+            f"the epochs were packed with docs_per_segment="
+            f"{packed['docs_per_segment']}"
+        )
+    return {**sums, **packed}
 
 
 def compact_segments(
     spark: SparkSession,
     index_root: str,
-    avgdl: float | None = None,
     segs_per_shard: int = 4,
     num_buckets: int = 32,
-    docs_per_segment: int = 4096,
+    docs_per_segment: int | None = None,
 ):
     """The background-merge analogue: fold all streamed epoch segments
     into a queryable merged index (B5) and return a BuiltIndex.
 
-    ``avgdl=None`` (the default) recomputes the exact global avgdl from
-    the per-epoch stats sidecars — post-compaction scoring and block
-    maxima always reflect the full streamed collection (round-1
-    advisor: avgdl drift).
-
-    The index is replaced through ``sources.io.write_table`` (round-3
-    verdict item 3): a re-compaction that shrinks the bucket set leaves
-    no stale bucket partition, whatever the session's
-    ``partitionOverwriteMode``. stats.json carries ``format_version``,
-    and ``load_index`` rejects any other layout.
+    The epochs' runs go through the batch build's publisher
+    (``build_index.publish_index``) under the contract the epoch
+    sidecars recorded: the exact global N and Σdl (so avgdl and every
+    block maximum reflect the full streamed collection — round-1
+    advisor: avgdl drift), the run count that bounds the merge salt
+    (no file listing, no footer read), and the packer's
+    ``docs_per_segment``, attr fields, numeric attr fields and
+    positions. ``docs_per_segment`` may be omitted; if given it must
+    match the epochs'. ``segs_per_shard`` and ``num_buckets`` are the
+    merge's own choice.
     """
-    from xsearch_spark.plans.build_index import load_index, write_stats
+    from xsearch_spark.plans.build_index import publish_index
 
-    n_docs, sum_dl, n_runs = _epoch_totals(index_root)
-    if avgdl is None:
-        avgdl = (sum_dl / n_docs) if n_docs else 0.0
-    runs = spark.read.parquet(os.path.join(index_root, "segments"))
-    # fused merge+layout (one shuffle) also stamps the global per-term df
-    # into every row (v4) — post-compaction queries are driver-stats-free;
-    # the sidecars' run count bounds the merge salt (round 7)
-    merged = seg.merge_to_index(
-        runs.drop("epoch"), avgdl, segs_per_shard, num_buckets,
-        n_runs=n_runs or None,
+    contract = _epoch_contract(index_root, docs_per_segment)
+    runs = spark.read.parquet(os.path.join(index_root, "segments")).drop("epoch")
+    return publish_index(
+        spark, index_root, runs, segs_per_shard=segs_per_shard,
+        num_buckets=num_buckets, **contract,
     )
-    out = os.path.join(index_root, "index")
-    write_table(merged, out, "bucket")
-    index_df = spark.read.parquet(out)
-    # SELF-DETECT the serveable capabilities from the merged rows (a
-    # stats.json that promises filters/phrases the index cannot serve
-    # would make those queries silently empty or raise): attr fields =
-    # the distinct \x01field: prefixes actually present; positions =
-    # any non-empty poss stream. Two tiny limit/distinct jobs at
-    # compaction time — zero config to keep in sync with the ingest.
-    from xsearch_spark.constants import ATTR_TERM_PREFIX
-
-    # numeric self-detection (round-6 §3.13): a field whose every value
-    # part is a 20-digit encoding was packed through num_attr_encode —
-    # the same one-job aggregate that finds the field set decides it
-    attr_rows = (
-        index_df.filter(F.col("term").startswith(ATTR_TERM_PREFIX))
-        .select(
-            F.substring_index(
-                F.expr("substring(term, 2)"), ":", 1
-            ).alias("f"),
-            F.col("term"),
-        )
-        .select(
-            "f", F.expr("substring(term, length(f) + 3)").alias("v")
-        )
-        .groupBy("f")
-        .agg(
-            F.min(
-                F.col("v").rlike("^[0-9]{20}$").cast("int")
-            ).alias("all_num")
-        )
-        .collect()
-    )
-    attr_fields = sorted(r["f"] for r in attr_rows)
-    num_attr_fields = sorted(r["f"] for r in attr_rows if r["all_num"] == 1)
-    has_positions = bool(
-        index_df.filter(F.octet_length("poss") > 0).limit(1).count()
-    )
-    write_stats(
-        index_root, n_docs=n_docs, avgdl=avgdl, sum_dl=sum_dl,
-        docs_per_segment=docs_per_segment, segs_per_shard=segs_per_shard,
-        num_buckets=num_buckets, attr_fields=attr_fields,
-        num_attr_fields=num_attr_fields, positions=has_positions,
-    )
-    return load_index(spark, index_root)
