@@ -28,6 +28,14 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def pushed_of(df) -> str:
+    """Every file scan's PushedFilters, untruncated: pushdown checks read
+    these, never a printed plan (whose metadata may be cut)."""
+    from xsearch_spark.session import pushed_filters
+
+    return "\n".join(pushed_filters(df))
+
+
 def assert_scorer_served(plan: str, what: str) -> None:
     """A result page is the shard scorer's full match set plus its tail:
     the scorer's MapInPandas, no relational posting decode and no
@@ -40,14 +48,16 @@ def assert_scorer_served(plan: str, what: str) -> None:
     assert not joins, f"{what} plan joins on doc_id: {joins}"
 
 
-def assert_one_prefix_scan(plan: str, what: str) -> None:
+def assert_one_prefix_scan(df, what: str) -> str:
     """A prefix scan is one filter over data columns: exact terms ride
     the startswith scan (no Union reading their bucket files twice) and
-    StringStartsWith still reaches parquet."""
+    StringStartsWith still reaches parquet. Returns the plan text."""
+    plan = plan_of(df)
     assert "Union" not in plan, f"{what} plan unions two index scans"
-    assert "StringStartsWith" in plan, (
+    assert "StringStartsWith" in pushed_of(df), (
         f"{what} scan does not push StringStartsWith to parquet"
     )
+    return plan
 
 
 def main() -> None:
@@ -72,14 +82,49 @@ def main() -> None:
 
     sections: list[tuple[str, str, list[str], str]] = []
 
+    # 0. one-bucket ids checkpoint: under MIN_BUCKET_DOCS rows the
+    # id assignment is the global window — no seeded sample, no Python
+    # bucket UDF, no per-bucket offsets broadcast back in
+    from xsearch_spark.sources.datagen import generate_code_files
+    from xsearch_spark.sources.ids import assign_doc_ids_scalable
+    from xsearch_spark.sources.io import read_source
+
+    code = read_source(spark, generate_code_files(
+        "0.001", os.path.join(REPO, ".cache", "code_files", "sf0.001")
+    ))
+    ids_plan = plan_of(assign_doc_ids_scalable(code, 16)[0])
+    assert not re.findall(r"\w*EvalPython", ids_plan), (
+        "one-bucket ids plan evaluates a Python UDF"
+    )
+    assert "Broadcast" not in ids_plan, (
+        "one-bucket ids plan broadcasts per-bucket offsets"
+    )
+    sections.append((
+        "Build stage 0 — one-bucket ids checkpoint",
+        ids_plan,
+        ["Window"],
+        "Below MIN_BUCKET_DOCS rows (one id bucket) the bucket's "
+        "row_number window at offset 0 is the global window: one "
+        "exchange into a single partition, sort, number. No sample "
+        "collect, no Python stage and no per-bucket count job; the "
+        "count that sized the buckets is returned with the ids, so the "
+        "checkpoint does not count again.",
+    ))
+
     # 1. source packer: tokenize+tf+dl+pack in one Arrow UDF
     packed = seg.pack_from_source(docs, "text", "doc_id", "base")
     sections.append((
         "Build stage 1 — one-pass tokenize+tf+dl+pack",
         plan_of(packed),
-        ["MapInPandas"],
-        "One scan -> (doc-range repartition only when the input has too "
-        "few partitions) -> Arrow UDF. No aggregate, no join: tf/dl are "
+        ["MapInPandas", "rangepartitioning"],
+        "One scan -> (only when the input has fewer partitions than "
+        "cores, as this one-file table does) an exchange sorted by "
+        "doc_id -> Arrow UDF. With at least cores-many segments, or no "
+        "row count given as here, it is a range exchange on whole "
+        "segments (doc_id // docs_per_segment) and each (term, segment) "
+        "leaves the packer as one run; with fewer segments than cores "
+        "it hashes 2 x cores contiguous doc ranges, so the tokenize "
+        "stage keeps its tasks. No aggregate, no join: tf/dl are "
         "complete per document and runs are packed inside the UDF.",
     ))
 
@@ -206,14 +251,15 @@ def main() -> None:
     # 5c-bis. phrase-prefix (round-6 §3.28): the positional stream AND
     # the startswith-pushed expansion ride the one pruned scan — no
     # source table, no cogroup, no second read
-    wpp_plan = plan_of(search_wand(built, parse('"hash jo*" spark')))
+    wpp = search_wand(built, parse('"hash jo*" spark'))
+    wpp_plan = plan_of(wpp)
     assert "documents.parquet" not in wpp_plan, (
         "phrase-prefix plan scans the source table"
     )
     assert "poss" in wpp_plan, (
         "phrase-prefix plan does not read the positional stream"
     )
-    assert "StringStartsWith" in wpp_plan, (
+    assert "StringStartsWith" in pushed_of(wpp), (
         "phrase-prefix scan does not push the expansion startswith — "
         "the final slot degenerates to a dictionary sweep"
     )
@@ -256,14 +302,15 @@ def main() -> None:
     # positional bytes
     from xsearch_spark.operators.wand import facet_counts
 
-    wf_plan = plan_of(facet_counts(built, parse("hash OR join"), "lang"))
+    wf_plan = assert_one_prefix_scan(
+        facet_counts(built, parse("hash OR join"), "lang"), "string facet"
+    )
     assert "documents.parquet" not in wf_plan, (
         "facet plan scans the source table — attr-indexed facets must "
         "be served from the synthetic attr postings"
     )
     assert "poss" not in wf_plan, "non-phrase facet plan reads poss"
     assert_scorer_served(wf_plan, "facet")
-    assert_one_prefix_scan(wf_plan, "string facet")
     sections.append((
         "Q11 facet counts over the full match set (index-only)",
         wf_plan,
@@ -358,17 +405,17 @@ def main() -> None:
     # no vocabulary collect, no positional bytes); the pushed
     # StringStartsWith filter is what makes the scan a per-bucket
     # row-group range seek instead of a dictionary sweep
-    wx_plan = plan_of(search_wand(built, parse("d* join")))
+    wx = search_wand(built, parse("d* join"))
+    wx_plan = assert_one_prefix_scan(wx, "prefix")
     assert "documents.parquet" not in wx_plan, (
         "prefix plan scans the source table — expansions must come from "
         "the index dictionary"
     )
     assert "poss" not in wx_plan, "non-phrase prefix plan reads poss"
-    assert_one_prefix_scan(wx_plan, "prefix")
     sections.append((
         "Q8 WAND prefix query (startswith-pushed dictionary expansion)",
         wx_plan,
-        ["MapInPandas", "TakeOrderedAndProject", "StringStartsWith"],
+        ["MapInPandas", "TakeOrderedAndProject"],
         "A prefix group's expansion rides a startswith-filtered scan of "
         "the same index (term-sorted row groups per bucket bound the "
         "read); the exact terms ride the same filter (term IN ... OR "
@@ -381,13 +428,14 @@ def main() -> None:
     # exact-term lookup — NO StringStartsWith, no dictionary sweep, no
     # source table, no positional bytes (fuzzy pays the same plan as an
     # ordinary multi-term query, just with a wider IN list)
-    wz_plan = plan_of(search_wand(built, parse("sort sow~1")))
+    wz = search_wand(built, parse("sort sow~1"))
+    wz_plan = plan_of(wz)
     assert "documents.parquet" not in wz_plan, (
         "fuzzy plan scans the source table — the neighborhood must come "
         "from the enumerated exact-term scan"
     )
     assert "poss" not in wz_plan, "non-phrase fuzzy plan reads poss"
-    assert "StringStartsWith" not in wz_plan, (
+    assert "StringStartsWith" not in pushed_of(wz), (
         "fuzzy scan fell back to a dictionary sweep — the d=1 "
         "neighborhood must ride the exact-term IN filter"
     )
@@ -402,19 +450,28 @@ def main() -> None:
         "vocabulary size, no source scan, no positional bytes.",
     ))
 
+    # 5e2-bis. a fuzzy neighborhood of dozens of terms beside a prefix:
+    # the exact IN list and the startswith both reach parquet. Read from
+    # the scans' own PushedFilters, so a printed plan that cuts the
+    # list short cannot hide either one
+    wzp_pushed = pushed_of(search_wand(built, parse("hsah~1 jion~1 sotr~1 d*")))
+    assert "In(term," in wzp_pushed and "StringStartsWith" in wzp_pushed, (
+        "fuzzy + prefix scan lost the exact IN list or the startswith: "
+        f"{wzp_pushed[:200]}"
+    )
+
     # 5e2b. boolean OR-group (round-6 §3.19): members are explicit
     # terms, so the group pays exactly an ordinary multi-term query's
     # plan — the same bucket-pruned exact-term IN scan, no prefix sweep,
     # no source table, no positional bytes
-    wg_plan = plan_of(
-        search_wand(built, parse("(hash OR join) sort -(dup OR slow)"))
-    )
+    wg = search_wand(built, parse("(hash OR join) sort -(dup OR slow)"))
+    wg_plan = plan_of(wg)
     assert "documents.parquet" not in wg_plan, (
         "boolean-group plan scans the source table — members must ride "
         "the exact-term scan"
     )
     assert "poss" not in wg_plan, "non-phrase group plan reads poss"
-    assert "StringStartsWith" not in wg_plan, (
+    assert "StringStartsWith" not in pushed_of(wg), (
         "boolean-group scan fell back to a dictionary sweep"
     )
     assert "bucket" in wg_plan, "group scan lost bucket partition pruning"
@@ -432,19 +489,20 @@ def main() -> None:
     # pushed literal prefix before the first '*' (the same
     # StringStartsWith range as a prefix group); glob membership
     # narrows executor-side — no source, no poss, no full sweep
-    ww_plan = plan_of(search_wand(built, parse("s*t hash -d*p")))
+    ww = search_wand(built, parse("s*t hash -d*p"))
+    ww_plan = plan_of(ww)
     assert "documents.parquet" not in ww_plan, (
         "wildcard plan scans the source table"
     )
     assert "poss" not in ww_plan, "non-phrase wildcard plan reads poss"
-    assert "StringStartsWith" in ww_plan, (
+    assert "StringStartsWith" in pushed_of(ww), (
         "wildcard pattern prefix not pushed to the dictionary scan — "
         "the expansion degenerates to a full sweep"
     )
     sections.append((
         "Q8 WAND wildcard group (prefix-bounded scan, glob membership)",
         ww_plan,
-        ["MapInPandas", "TakeOrderedAndProject", "StringStartsWith"],
+        ["MapInPandas", "TakeOrderedAndProject"],
         "A wildcard pattern reads only the dictionary range under its "
         "literal prefix (pushed startswith; term-sorted row groups "
         "bound the read); the anchored-glob membership and exclusion "
@@ -454,14 +512,13 @@ def main() -> None:
     # 5e2c. minimum should match (round-6 §3.20): clause counting is
     # scorer-internal — the plan is byte-for-byte the plain hot-OR
     # query's (bucket-pruned IN scan, no source, no poss, no sweep)
-    wm_plan = plan_of(
-        search_wand(built, parse("the OR scan OR join min_match:2"))
-    )
+    wm = search_wand(built, parse("the OR scan OR join min_match:2"))
+    wm_plan = plan_of(wm)
     assert "documents.parquet" not in wm_plan, (
         "min_match plan scans the source table"
     )
     assert "poss" not in wm_plan, "non-phrase min_match plan reads poss"
-    assert "StringStartsWith" not in wm_plan, (
+    assert "StringStartsWith" not in pushed_of(wm), (
         "min_match scan fell back to a dictionary sweep"
     )
     assert "bucket" in wm_plan, "min_match scan lost bucket pruning"
@@ -618,16 +675,17 @@ def main() -> None:
     # slice — the full vocabulary is never collected or aggregated
     from xsearch_spark.operators.wand import suggest_terms
 
-    sg_plan = plan_of(suggest_terms(built, "s", 5))
+    sg = suggest_terms(built, "s", 5)
+    sg_plan = plan_of(sg)
     assert "documents.parquet" not in sg_plan, "suggest scans the source"
-    assert "StringStartsWith" in sg_plan, (
+    assert "StringStartsWith" in pushed_of(sg), (
         "suggest scan does not push StringStartsWith"
     )
     assert "poss" not in sg_plan, "suggest reads the positional stream"
     sections.append((
         "Dictionary completion (suggest_terms — index-only)",
         sg_plan,
-        ["StringStartsWith", "TakeOrderedAndProject"],
+        ["TakeOrderedAndProject"],
         "Global df rides every v4 index row, so completion is a pushed "
         "startswith scan + distinct + top-n — collect-free at any "
         "vocabulary size.",

@@ -43,7 +43,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("xsearch-build-index").getOrCreate()
     df = read_table(spark, args.input)
     if args.assign_ids:
-        df = assign_doc_ids_scalable(df)
+        df, _n = assign_doc_ids_scalable(df)
     built = build_index(
         spark,
         df,

@@ -21,6 +21,7 @@ from xsearch_spark.operators.wand import (
 )
 from xsearch_spark.plans.build_index import build_index
 from xsearch_spark.plans.query import parse
+from xsearch_spark.session import pushed_filters
 from xsearch_spark.sources.io import read_documents
 
 AF = ("lang", "source", "n_chars")
@@ -204,17 +205,33 @@ def test_search_after_matches_offset_oracle(spark, built, duck):
 
 def test_after_cursor_bounds_the_attr_scan(spark, built):
     """The cursor must push an encoded-term bound into the attr-postings
-    scan (the deep-paging lever): the physical plan's PushedFilters for
-    a descending cursor page carries a LessThanOrEqual on term."""
+    scan (the deep-paging lever): the untruncated PushedFilters of a
+    descending cursor page carry a LessThanOrEqual on term."""
     parsed = parse("hash OR join", attr_fields=AF)
-    plan = search_sorted(
+    desc = search_sorted(
         built, parsed, "n_chars", ascending=False, k=5, after=(300, 0)
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "LessThanOrEqual(term," in plan
-    plan_asc = search_sorted(
+    )
+    assert any("LessThanOrEqual(term," in f for f in pushed_filters(desc))
+    asc = search_sorted(
         built, parsed, "n_chars", ascending=True, k=5, after=(300, 0)
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "GreaterThanOrEqual(term," in plan_asc
+    )
+    assert any("GreaterThanOrEqual(term," in f for f in pushed_filters(asc))
+
+
+def test_pushed_filters_read_past_the_print_cut(spark, built):
+    """A long fuzzy list ahead of a prefix pushes a StringStartsWith
+    that the printed plan cuts off (~100 characters of metadata):
+    pushed_filters reads it anyway."""
+    from xsearch_spark.operators.wand import _sql_in
+
+    fuzzy = [f"hsah{i:03d}" for i in range(40)]
+    df = built.index_df.where(
+        _sql_in("term", fuzzy) + " OR startswith(term, 'ha')"
+    )
+    printed = df._jdf.queryExecution().executedPlan().toString()
+    assert "In(term," in printed and "StringStartsWith" not in printed
+    (scan,) = pushed_filters(df)
+    assert "In(term," in scan and "StringStartsWith(term,ha)" in scan
 
 
 FACET_STATS_QUERIES = [

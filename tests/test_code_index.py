@@ -86,15 +86,36 @@ def test_sha256_copy_invariant(spark, code_path, source):
     assert joined.filter(F.col("content_sha256") != F.col("expected_sha")).count() == 0
 
 
-def test_doc_id_global_vs_scalable(spark, code_path):
+def _assert_scalable_ids_equal_global(spark, code_path):
+    """The scalable mapping equals the global window's, row for row, is
+    dense, and comes back with its row count. Returns its plan text."""
     src = read_source(spark, code_path)
     g = assign_doc_ids_global(src).select("repo", "path", "commit", "doc_id")
-    s = assign_doc_ids_scalable(src, 8).select(
-        "repo", "path", "commit", F.col("doc_id").alias("doc_id2")
-    )
+    s, n = assign_doc_ids_scalable(src, 8)
+    s = s.select("repo", "path", "commit", F.col("doc_id").alias("doc_id2"))
     j = g.join(s, ["repo", "path", "commit"])
-    assert j.count() == g.count()
+    assert n == g.count() == j.count()
     assert j.filter(F.col("doc_id") != F.col("doc_id2")).count() == 0
+    assert sorted(r[0] for r in s.select("doc_id2").collect()) == list(range(n))
+    return s._jdf.queryExecution().executedPlan().toString()
+
+
+def test_doc_id_global_vs_scalable(spark, code_path):
+    """1 000 rows clamp to one id bucket: the global window at offset 0,
+    with no Python stage."""
+    plan = _assert_scalable_ids_equal_global(spark, code_path)
+    assert "bucket_of" not in plan
+
+
+def test_doc_id_global_vs_scalable_multi_bucket(spark, code_path, monkeypatch):
+    """A smaller bucket floor puts the same corpus in 8 id buckets, so
+    the sample -> searchsorted -> per-bucket offset path runs and must
+    give the same mapping."""
+    from xsearch_spark.sources import ids
+
+    monkeypatch.setattr(ids, "MIN_BUCKET_DOCS", 64)
+    plan = _assert_scalable_ids_equal_global(spark, code_path)
+    assert "bucket_of" in plan
 
 
 def test_doc_ids_dense(source):

@@ -63,6 +63,41 @@ def test_fused_empty_and_null_text(spark):
     assert got == {("hello", 0): (1, 2), ("world", 0): (1, 2)}
 
 
+def test_pack_one_partition_input_one_run_per_term_segment(spark):
+    """An input with fewer partitions than cores (a one-bucket ids
+    checkpoint is one file) and at least cores-many segments is
+    exchanged by whole segments: every (term, seg_id) leaves the packer
+    as exactly one run, with n_docs passed as the batch build and
+    perfbench pass it, and the postings are the declarative path's."""
+    docs = read_documents(spark, SF_DIR)
+    one = docs.coalesce(1)
+    n = one.count()
+    packed = pack_from_source(one, "text", "doc_id", "base", 64, n_docs=n)
+    keys = [(r["term"], r["seg_id"]) for r in packed.select("term", "seg_id").collect()]
+    assert len(keys) == len(set(keys))
+    assert {s for _, s in keys} == set(range(-(-n // 64)))
+    tok = b.with_tokens(docs, "text", "base")
+    assert _packed_dict(packed) == _as_dict(b.postings_with_dl(tok).collect())
+
+
+def test_pack_few_segments_input_spreads_over_tasks(spark):
+    """An input with fewer segments than cores is NOT keyed by segment,
+    which would tokenize it in one task per segment: it is split into
+    contiguous doc ranges over several tasks, whose partial runs carry
+    the declarative path's postings."""
+    from pyspark.sql import functions as F
+
+    docs = read_documents(spark, SF_DIR)
+    one = docs.coalesce(1)
+    n = one.count()
+    packed = pack_from_source(one, "text", "doc_id", "base", n, n_docs=n)
+    tasks = packed.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert tasks >= spark.sparkContext.defaultParallelism
+    assert {r["seg_id"] for r in packed.select("seg_id").distinct().collect()} == {0}
+    tok = b.with_tokens(docs, "text", "base")
+    assert _packed_dict(packed) == _as_dict(b.postings_with_dl(tok).collect())
+
+
 def test_segmented_pack_equals_pergroup_reference():
     """Round-5: _pack_groups_frame (one vectorized pass per flush) must
     be BYTE-identical to the per-group _pack_group reference — blobs,

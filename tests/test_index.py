@@ -252,6 +252,32 @@ def test_checkpoint_source_ids_stable(spark, tmp_path):
     assert sorted(m1.values()) == list(range(n1))  # dense 0..N-1
 
 
+def test_checkpoint_source_ids_one_bucket_shape(spark, tmp_path):
+    """A one-bucket ids checkpoint (1 000 rows, under the id-bucket
+    floor) is the count pass plus the numbering write: at most 4 Spark
+    jobs (11 with the seeded sample, the per-bucket counts and a
+    re-read count), and its plan has no Python stage and no broadcast
+    join."""
+    from xsearch_spark.plans.build_index import checkpoint_source_ids
+    from xsearch_spark.sources.datagen import generate_code_files
+    from xsearch_spark.sources.ids import assign_doc_ids_scalable
+    from xsearch_spark.sources.io import read_source
+
+    src = read_source(spark, generate_code_files("0.001", str(tmp_path / "code")))
+    ids, n = assign_doc_ids_scalable(src, 4 * spark.sparkContext.defaultParallelism)
+    plan = ids._jdf.queryExecution().executedPlan().toString()
+    assert n == 1000
+    assert "ArrowEvalPython" not in plan and "BroadcastHashJoin" not in plan
+    sc = spark.sparkContext
+    sc.setJobGroup("ids_checkpoint", "ids_checkpoint")
+    try:
+        df, n = checkpoint_source_ids(spark, src, str(tmp_path / "idx"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup("ids_checkpoint")) <= 4
+    assert n == 1000 and df.rdd.getNumPartitions() == 1
+
+
 def test_block_meta_consistent(built):
     import math
 

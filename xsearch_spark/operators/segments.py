@@ -738,7 +738,6 @@ def pack_from_source(
     doc_id_col: str = "doc_id",
     variant: str = "base",
     docs_per_segment: int = DEFAULT_DOCS_PER_SEGMENT,
-    num_partitions: int | None = None,
     n_docs: int | None = None,
     attr_cols: "str | tuple[str, ...] | list[str] | None" = None,
     positions: bool = False,
@@ -748,8 +747,8 @@ def pack_from_source(
     tokenizes into its in-memory segment map and flushes packed; [R],
     SURVEY.md §3.1).
 
-    Topology: shuffle the (doc_id, text) pairs once by seg_group, sort
-    within partitions by doc_id (segments become contiguous), then a
+    Topology: at most one exchange of the (doc_id, text) pairs, by
+    segment and sorted by doc_id (segments become contiguous), then a
     single Arrow UDF tokenizes, counts, accumulates a segment's postings
     and packs it when the doc stream crosses the segment boundary.
     Versus the two-stage path this removes: the 33M-row postings
@@ -764,22 +763,42 @@ def pack_from_source(
 
     Parallelism notes (round-2 fixes, measured at sf0.1):
 
-    * Partitioning by ``doc_id // docs_per_segment`` capped the tokenize
-      stage at n_docs/docs_per_segment tasks — 25 tasks on 32 cores, the
-      cause of the round-1 local[32] throughput regression.
-    * The repartition itself shuffles the FULL content column (~5 KB/doc)
-      and re-sorts it — pure memory-bandwidth tax that does not scale on
+    * The repartition shuffles the FULL content column (~5 KB/doc) and
+      re-sorts it — pure memory-bandwidth tax that does not scale on
       SMT cores. When the input is already split into at least
       cores-many partitions (the checkpointed ids table is written as
-      contiguous doc-range files precisely for this), the exchange+sort
-      is SKIPPED: the packer tolerates any doc order and any range
-      fragmentation, emitting partial runs that the B5 merge — which
-      runs anyway — concatenates. The merged index is byte-identical
-      either way (tested).
-    * Only when the input has too few partitions (small tables, exotic
-      sources) does the chunked repartition fall back in: a finer
-      doc-range chunk key (>= 2 chunks per target partition, never
-      coarser than a segment).
+      contiguous doc-range files at scale precisely for this), the
+      exchange+sort is SKIPPED: the packer tolerates any doc order and
+      any range fragmentation, emitting partial runs that the B5 merge
+      — which runs anyway — concatenates. The merged index is
+      byte-identical either way (tested).
+    * An input with too few partitions (a one-bucket ids checkpoint is
+      one file, a streamed epoch a few) is exchanged and sorted by
+      doc_id. The key is chosen from the input's segment count,
+      ceil(``n_docs`` / ``docs_per_segment``):
+
+      - at least cores-many segments, or ``n_docs`` not given (the
+        key then needs no row count): a RANGE exchange on whole
+        segments (``doc_id // docs_per_segment``) into up to 2 × cores
+        partitions, so each (term, segment) leaves the packer as
+        exactly one run. 2 × cores contiguous doc ranges emitted 1.75
+        runs per (term, segment) on the 2 000-doc perfbench build.
+        Range, not hash: hashing 4 segment keys into 8 partitions put
+        segments 0 and 1 in one task (3 pack tasks for 4 segments); the
+        sampling job costs less than that task (traced perfbench build,
+        local[4]: pack 0.9–1.2 s against 1.3–1.5 s).
+      - fewer segments than cores: 2 × cores contiguous doc ranges
+        hashed into 2 × cores partitions. A segment key would
+        cap the tokenize stage at one task per segment — partitioning
+        by ``doc_id // docs_per_segment`` alone was the round-1 local[32]
+        throughput regression (25 tasks on 32 cores), and a build under
+        one segment would tokenize in ONE task. The ranges split a
+        segment across tasks, so its terms leave as several partial
+        runs that the merge concatenates. Contiguous ranges, not fine
+        sub-segment chunks: two non-adjacent chunks of one segment
+        hashed together pack as one sparse run overlapping its
+        neighbours, which sends the merge group onto the interleaved
+        k-way-sort path (round 7, sf0.1: 42 % of groups).
 
     ``attr_cols`` (index layout v5; a string or a sequence of column
     names): additionally emit one SYNTHETIC posting per (doc, field) —
@@ -804,8 +823,6 @@ def pack_from_source(
     # schema (a per-batch dtype sniff would misclassify all-null batches)
     num_fields = frozenset(numeric_attr_fields(source_df.schema, attrs))
     par = source_df.sparkSession.sparkContext.defaultParallelism
-    n = num_partitions or par * 2
-    chunk = docs_per_segment
 
     def pack_docs_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from xsearch_spark.operators.build import count_batch_coded
@@ -951,27 +968,20 @@ def pack_from_source(
         # input is already parallel enough: no exchange, no sort — the
         # packer handles arbitrary doc order via flush-on-seg-change
         return docs.mapInPandas(pack_docs_iter, PACKED_SCHEMA)
-    if n_docs:
-        # round 7: the chunk key is n CONTIGUOUS equal doc ranges, not
-        # fine sub-segment chunks. Two non-adjacent sub-segment chunks
-        # of ONE segment hashed into the same partition sort together
-        # and pack as a single SPARSE run whose doc range overlaps the
-        # other partitions' runs of that segment — every such merge
-        # group then pays the interleaved k-way-sort path (measured at
-        # sf0.1: ~20 runs per (term, shard) group, 42% interleaved).
-        # Contiguous ranges bound fragmentation at ceil(seg/range)+1
-        # disjoint contiguous runs per group and keep the merge on the
-        # byte-concatenation fast path at every scale.
-        docs = docs.withColumn(
-            "_chunk",
-            ((F.col(doc_id_col) * F.lit(n)) / F.lit(n_docs)).cast("long"),
-        )
+    n = par * 2
+    if n_docs and -(-n_docs // docs_per_segment) < par:
+        # fewer segments than cores: n contiguous doc ranges
+        chunk = ((F.col(doc_id_col) * F.lit(n)) / F.lit(n_docs)).cast("long")
+        docs = docs.repartition(n, chunk)
     else:
-        docs = docs.withColumn(
-            "_chunk", (F.col(doc_id_col) / F.lit(chunk)).cast("long")
+        # one task holds each segment whole: a (term, segment) flushes
+        # as one run
+        docs = docs.repartitionByRange(
+            n, (F.col(doc_id_col) / F.lit(docs_per_segment)).cast("long")
         )
-    docs = docs.repartition(n, "_chunk").sortWithinPartitions(doc_id_col)
-    return docs.drop("_chunk").mapInPandas(pack_docs_iter, PACKED_SCHEMA)
+    return docs.sortWithinPartitions(doc_id_col).mapInPandas(
+        pack_docs_iter, PACKED_SCHEMA
+    )
 
 
 def decode_postings(packed: DataFrame, include_attrs: bool = False) -> DataFrame:

@@ -186,11 +186,12 @@ def checkpoint_source_ids(
 
     Without this, every consumer of the assigned ids (the pack pass, each
     lang-filtered query's cogroup side, the resume range filter) re-runs
-    the two-pass zipWithIndex topology — a full window shuffle per
-    consumer. Materializing turns those into parquet scans, and the row
-    count comes back from the manifest with no extra job. Everything
-    downstream depends on the id mapping, so this is also the natural
-    resume anchor (SURVEY.md §8 open item 2).
+    the id assignment — a full window shuffle per consumer.
+    Materializing turns those into parquet scans. The row count is the
+    one ``assign_doc_ids_scalable`` takes to size its id buckets (on a
+    resume, the manifest's), so the checkpoint costs no count of its
+    own. Everything downstream depends on the id mapping, so this is
+    also the natural resume anchor (SURVEY.md §8 open item 2).
     """
     from xsearch_spark.sources.ids import assign_doc_ids_scalable
 
@@ -200,10 +201,13 @@ def checkpoint_source_ids(
     m = ckpt.load_manifest(out_dir, "source_ids")
     if not (m and m.input_fingerprint == fp and m.status == "done" and os.path.isdir(path)):
         with ckpt.StageTimer() as t:
-            # 4x-cores id buckets -> the checkpoint lands as many small
-            # contiguous doc-range files, which lets pack_from_source
-            # scan them with NO exchange (see segments.pack_from_source)
-            ids = assign_doc_ids_scalable(
+            # 4x-cores id buckets (clamped to MIN_BUCKET_DOCS rows each)
+            # -> at scale the checkpoint lands as many contiguous
+            # doc-range files, which pack_from_source scans with NO
+            # exchange; a one-bucket input lands as one file, which it
+            # exchanges by segment or doc range (see
+            # segments.pack_from_source)
+            ids, n = assign_doc_ids_scalable(
                 source_df, num_buckets or spark.sparkContext.defaultParallelism * 4
             )
             # round 7: AQE coalesces the window's hash(_bk) exchange, and
@@ -216,16 +220,13 @@ def checkpoint_source_ids(
             # monotone doc-range file layout the packer's no-exchange
             # scan depends on; the merged index is byte-identical.
             ids.sortWithinPartitions("doc_id").write.mode("overwrite").parquet(path)
-        df = spark.read.parquet(path)
-        n = df.count()
         m = ckpt.StageManifest("source_ids", fp, "done", t.wall_ms)
         m.rows_out = n
         m.completed_at = time.time()
         ckpt.save_manifest(out_dir, m)
-    else:
-        df = spark.read.parquet(path)
-        n = int(m.rows_out)
-    return df, n
+        # the schema just written: no footer-reading inference job
+        return spark.read.schema(ids.schema).parquet(path), n
+    return spark.read.parquet(path), int(m.rows_out)
 
 
 def build_index(

@@ -8,6 +8,9 @@ cluster; locally they make local[N] behave like a small cluster:
   * Arrow enabled with a bounded batch size — source-code ``content``
     rows can exceed 100 KB, so the default 10k records/batch would blow
     up Python-worker memory (SURVEY.md §4).
+
+Plus :func:`pushed_filters`, the one reader of a plan's pushdown that
+the tests and the plan audit share.
 """
 
 from __future__ import annotations
@@ -63,3 +66,18 @@ def _master_cores(master: str, default: int) -> int:
         except ValueError:
             return default
     return default
+
+
+def pushed_filters(df) -> list[str]:
+    """The ``PushedFilters`` of every file scan in ``df``'s physical
+    plan, one string per scan, untruncated. A printed plan cuts each
+    scan's metadata at ``spark.sql.maxMetadataStringLength`` (~100)
+    characters, so a filter behind a long ``In`` list is missing from
+    the plan text although parquet receives it."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            out.append(leaf.metadata().apply("PushedFilters"))
+    return out

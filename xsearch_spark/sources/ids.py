@@ -4,20 +4,28 @@ Reference parity: xsearch assigns shard-local auto-increment IDs at
 ingest (component-level [R]). Our pinned mapping (FIXTURES.md §2): dense
 ``row_number() - 1`` ordered by (repo, path, commit) ascending.
 
-Two implementations that must produce the SAME mapping (tested):
+Two implementations that must produce the SAME mapping (tested, at one
+and at several id buckets):
 
   * ``assign_doc_ids_global``  — a single window over a global order.
     Fine at test scale; at 100 TB a global-order window funnels every
     row through one task — unusable.
   * ``assign_doc_ids_scalable`` — the zipWithIndex topology in the
-    DataFrame API: (1) range boundaries from a SEEDED sample collected
-    once on the driver (deterministic — unlike ``repartitionByRange``,
-    whose re-sampling between the counts pass and the numbering pass can
-    shift boundaries and silently double-assign ids; observed at sf0.1),
-    (2) a vectorized searchsorted pandas UDF maps each key to its range
-    bucket, (3) per-bucket counts -> driver-side exclusive prefix sum
+    DataFrame API, after one ``count()`` that sizes the id buckets
+    (``MIN_BUCKET_DOCS`` per bucket at least) and is returned with the
+    ids. Several buckets: (1) range boundaries from a SEEDED sample
+    collected once on the driver (deterministic — unlike
+    ``repartitionByRange``, whose re-sampling between the counts pass
+    and the numbering pass can shift boundaries and silently
+    double-assign ids; observed at sf0.1), (2) a vectorized
+    searchsorted pandas UDF maps each key to its range bucket, (3)
+    per-bucket counts -> driver-side exclusive prefix sum
     (num_partitions rows), (4) row_number within each bucket + offset.
     Two passes over the data, no global sort, no single-task stage.
+    One bucket (every input under ``MIN_BUCKET_DOCS`` rows): the
+    bucket's window at offset 0 is the global window, so it runs as
+    exactly that — no sample, no Python stage, no count per bucket and
+    no broadcast join; the count pass plus the numbering pass.
 
 Key-ordering note: buckets are ranged on ``repo \\x01 path \\x01 commit``;
 the separator sorts below every printable character, so concatenated
@@ -56,20 +64,27 @@ MIN_BUCKET_DOCS = 4096  # = segments.DEFAULT_DOCS_PER_SEGMENT: id buckets
 # exceeds the requested parallelism and the clamp is inert.
 
 
-def assign_doc_ids_scalable(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def assign_doc_ids_scalable(
+    df: DataFrame, num_partitions: int | None = None
+) -> tuple[DataFrame, int]:
+    """Returns ``(df with doc_id, row count)``; the count is the pass
+    that sizes the buckets, so callers need no second one."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # --- deterministic range boundaries from one seeded sample ----------
     total = df.count()
     if total == 0:
-        return df.withColumn("doc_id", F.lit(None).cast("long"))
+        return df.withColumn("doc_id", F.lit(None).cast("long")), 0
     n = max(1, min(n, total // MIN_BUCKET_DOCS + 1))
+    if n == 1:
+        # one bucket at offset 0: its window IS the global window
+        return assign_doc_ids_global(df), total
+    # --- deterministic range boundaries from one seeded sample ----------
     frac = min(1.0, (_SAMPLES_PER_BUCKET * n) / total)
     sample = sorted(
         r["k"]
         for r in df.select(_key_col().alias("k")).sample(fraction=frac, seed=42).collect()
     )
     bounds: list[str] = []
-    if sample and n > 1:
+    if sample:
         step = len(sample) / n
         bounds = sorted({sample[int(step * i)] for i in range(1, n)})
     bounds_arr = np.array(bounds, dtype=object)
@@ -101,4 +116,4 @@ def assign_doc_ids_scalable(df: DataFrame, num_partitions: int | None = None) ->
         with_b.join(F.broadcast(offset_df), "_bk")
         .withColumn("doc_id", (F.row_number().over(w) - 1 + F.col("_offset")).cast("long"))
         .drop("_bk", "_offset")
-    )
+    ), total
