@@ -13,6 +13,7 @@ from __future__ import annotations
 import io
 import os
 import re
+import shutil
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -61,18 +62,31 @@ def assert_one_prefix_scan(df, what: str) -> str:
 
 
 def main() -> None:
+    from xsearch_spark.session import get_spark
+
+    spark = get_spark("plan-audit", master="local[4]", shuffle_partitions=8)
+    out = tempfile.mkdtemp(prefix="xsaudit_")
+    ann_out = tempfile.mkdtemp(prefix="xsaudit_ann_")
+    try:
+        audit(spark, out, ann_out)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(ann_out, ignore_errors=True)
+
+
+def audit(spark, out: str, ann_out: str) -> None:
+    """Build into ``out`` (the index) and ``ann_out`` (the ANN index),
+    check every section and write docs/PLANS.md; exits 1 on a missing
+    plan property."""
     from xsearch_spark import engine
     from xsearch_spark.operators import segments as seg
     from xsearch_spark.operators.wand import pruned_index_scan, search_wand
     from xsearch_spark.plans.build_index import build_index
     from xsearch_spark.plans.query import parse
-    from xsearch_spark.session import get_spark
     from xsearch_spark.sources.io import read_documents
 
-    spark = get_spark("plan-audit", master="local[4]", shuffle_partitions=8)
     sf = "/root/testdata/sf0.001"
     docs = read_documents(spark, sf)
-    out = tempfile.mkdtemp(prefix="xsaudit_")
     built = build_index(
         spark, docs, out, text_col="text", variant="base",
         docs_per_segment=128, segs_per_shard=2, num_buckets=16,
@@ -697,7 +711,7 @@ def main() -> None:
     from xsearch_spark.operators.similarity import ann_index_topk, build_ann_index
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    ann = build_ann_index(spark, emb, tempfile.mkdtemp(prefix="xsaudit_ann_"))
+    ann = build_ann_index(spark, emb, ann_out)
     qvec = emb.filter("vec_id = 0").select("embedding").first()[0]
     probe = ann_index_topk(ann, qvec, k=10)  # serving-default probe
     sections.append((

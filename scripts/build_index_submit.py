@@ -34,13 +34,14 @@ def main() -> None:
                          "faster, coarser resume granularity")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from pyspark import SparkConf
 
     from xsearch_spark.plans.build_index import build_index
+    from xsearch_spark.session import start_session
     from xsearch_spark.sources.ids import assign_doc_ids_scalable
     from xsearch_spark.sources.io import read_table
 
-    spark = SparkSession.builder.appName("xsearch-build-index").getOrCreate()
+    spark = start_session(SparkConf().setAppName("xsearch-build-index"))
     df = read_table(spark, args.input)
     if args.assign_ids:
         df, _n = assign_doc_ids_scalable(df)

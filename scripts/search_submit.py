@@ -26,15 +26,16 @@ def main() -> None:
     ap.add_argument("--fetch", default=None, help="comma-separated columns to fetch")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from pyspark import SparkConf
 
     from xsearch_spark.constants import SCORE_ROUND_DECIMALS
     from xsearch_spark.operators.wand import search_wand
     from xsearch_spark.plans.build_index import load_index
     from xsearch_spark.plans.query import parse
+    from xsearch_spark.session import start_session
     from xsearch_spark.sources.io import read_table
 
-    spark = SparkSession.builder.appName("xsearch-search").getOrCreate()
+    spark = start_session(SparkConf().setAppName("xsearch-search"))
     built = load_index(spark, args.index)  # geometry from stats.json
     source = read_table(spark, args.source) if args.source else None
     parsed = parse(args.query, args.variant)
