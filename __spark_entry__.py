@@ -709,7 +709,8 @@ def _q_multi_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.25 (round-6): multi-field fused search — a title index (the
     deterministic first-6-words field, with_title) at weight 2.5 plus
     the body index at 1.0, per-field queries with their own semantics,
-    one fuse job (operators.fields.multi_field_search). Oracle:
+    each field's match set from the shard scorer and one fuse
+    aggregation (operators.fields.multi_field_search). Oracle:
     oracles.multi_field_sql over the same derived field tables."""
     from xsearch_spark.operators.fields import multi_field_search
 
@@ -993,7 +994,7 @@ def _q_tombstone_topk(spark, sf_dir):
 
 def _q_tombstone_wand(spark, sf_dir):
     """S5 deletes on the WAND ENGINE path (round-3): tombstoned doc_ids
-    ride the shard-keyed cogroup as one more exclude list — the warm
+    ride the scorer's shard exchange as one more exclude list — the warm
     production path serves correct results between compactions. OR query
     so the tombstones also exercise the block-max seed/theta filtering."""
     from xsearch_spark.operators.wand import search_wand
@@ -1008,8 +1009,9 @@ def _q_tombstone_wand(spark, sf_dir):
 
 
 def _q_tombstone_wand_lang(spark, sf_dir):
-    """S5 + Q5b combined: tombstones AND a lang: allowlist in the SAME
-    shard-keyed cogroup (one co-shuffle carries both per-doc filters)."""
+    """S5 + Q5b combined: tombstones AND a lang: allowlist on the SAME
+    scorer scan (the lang allowlist from the index, the tombstones as
+    doc-side rows through its one shard exchange)."""
     from xsearch_spark.operators.wand import search_wand
 
     built = _index(spark, sf_dir)
@@ -1042,7 +1044,7 @@ def _ann_index(spark: SparkSession, sf_dir: str):
 
 def _q_bm25_batch_tombstone(spark, sf_dir):
     """Batch search × S5 deletes (round-4): the whole FIXTURES §4 query
-    set in ONE job with tombstones riding the shard-keyed cogroup —
+    set in ONE scorer pass with tombstones riding its shard exchange —
     every query in the batch must see the deletes. Oracle: UNION ALL of
     the per-query naive SQL with the tombstone predicate."""
     from xsearch_spark.operators.wand import search_wand_batch
@@ -1233,7 +1235,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality_features": _q_quality_features,
         # round-6 demotions for the proximity + highlight slots:
         # rel-path NOT stays gated via bm25_rel_source_not; the
-        # tombstone-cogroup and lang-filter surfaces stay gated via
+        # tombstone and lang-filter surfaces stay gated via
         # tombstone_wand_topk and bm25_wand_filter
         "bm25_index_not": _make_index_query("hash -join", "rel"),
         "tombstone_wand_lang": _q_tombstone_wand_lang,

@@ -288,9 +288,9 @@ def audit(spark, out: str, ann_out: str) -> None:
         "zero extra reads.",
     ))
 
-    # 5b. lang + tombstones: deletes still ride the shard-keyed cogroup,
-    # but the lang allowlist stays in the index — the aux side carries
-    # ONLY the tombstones, and the source table still never appears
+    # 5b. lang + tombstones: deletes are more rows of the scorer's own
+    # scan (a Union under the one shard exchange), and the lang
+    # allowlist stays in the index — the source table never appears
     tomb_small = spark.createDataFrame([(7,), (14,)], "doc_id long")
     wt_plan = plan_of(
         search_wand(built, parse("lang:zh hash join"), tombstones=tomb_small)
@@ -298,16 +298,26 @@ def audit(spark, out: str, ann_out: str) -> None:
     assert "documents.parquet" not in wt_plan, (
         "lang+tombstone plan scans the source table"
     )
+    assert "FlatMapCoGroupsInPandas" not in wt_plan, (
+        "tombstones ride a cogroup instead of the scorer's scan"
+    )
+    exchanges = set(re.findall(r"\((\d+)\) Exchange\b", wt_plan))
+    assert len(exchanges) == 1, (
+        f"tombstone plan has {len(exchanges)} exchanges below the scorer, "
+        f"not the one shard exchange"
+    )
     assert "poss" not in wt_plan, (
-        "non-phrase cogroup (tombstone) plan reads poss"
+        "non-phrase tombstone plan reads poss"
     )
     sections.append((
-        "Q8 WAND with lang: + tombstones (cogroup carries deletes only)",
+        "Q8 WAND with lang: + tombstones (doc-side rows in the scan)",
         wt_plan,
-        ["FlatMapCoGroupsInPandas", "TakeOrderedAndProject"],
-        "Tombstones are doc-range keyed and co-shuffle with the index "
-        "rows on the shard key; the lang allowlist arrives through the "
-        "pruned index scan — the source table appears nowhere.",
+        ["Union", "MapInPandas", "TakeOrderedAndProject"],
+        "Tombstones are doc-range keyed: they union into the pruned scan "
+        "as doc-side rows and take its one shard exchange to the scorer "
+        "(asserted: exactly one Exchange, no cogroup); the lang allowlist "
+        "arrives through the pruned index scan — the source table "
+        "appears nowhere.",
     ))
 
     # 5d. facet counts (round-6 Q11): the full-match-set aggregation on

@@ -759,7 +759,7 @@ def test_streaming_compact_attr_claim_guard(spark, tmp_path):
     """compact_segments must not claim attr support the segments cannot
     serve: a stream ingested with attr_col=None compacts into an index
     whose stats say NO attr fields, so lang: queries take the source
-    cogroup fallback (and agree with the naive evaluation) instead of
+    fallback (and agree with the naive evaluation) instead of
     silently returning empty."""
     from xsearch_spark.streaming.ingest import compact_segments, start_ingest
 

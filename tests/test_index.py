@@ -436,7 +436,7 @@ def test_lang_serves_from_index_no_source(spark, built, corpus):
 @pytest.fixture(scope="module")
 def noattr_built(spark, corpus, tmp_path_factory):
     """The same documents indexed with attr_cols=None: lang: queries on
-    it are served by the source-allowlist cogroup."""
+    it are served by the source allowlist (the scorer's doc-side rows)."""
     out = str(tmp_path_factory.mktemp("noattr_idx"))
     bi = build_index(
         spark, corpus.source, out,
@@ -450,8 +450,8 @@ def noattr_built(spark, corpus, tmp_path_factory):
 
 def test_lang_fallback_without_attr_index(spark, corpus, noattr_built):
     """Pre-v5 compatibility: an index built with attr_col=None must still
-    serve lang: queries through the distributed source-allowlist cogroup
-    and produce identical results."""
+    serve lang: queries through the source allowlist, distributed as
+    doc-side rows of the scorer's scan, and produce identical results."""
     docs = corpus.source
     bi = noattr_built
     from xsearch_spark.constants import ATTR_TERM_PREFIX
@@ -469,7 +469,7 @@ def test_lang_fallback_without_attr_index(spark, corpus, noattr_built):
 
 
 def test_lang_fallback_batch_equals_singles(spark, corpus, noattr_built):
-    """One batch on the attr_cols=None index mixing two cogroup-served
+    """One batch on the attr_cols=None index mixing two source-served
     langs and a no-lang query, with and without tombstones: every answer
     equals its single-query answer and the naive evaluation (the naive
     ranking read past the tombstoned docs)."""

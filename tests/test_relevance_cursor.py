@@ -9,9 +9,13 @@ import shutil
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from tests.conftest import SF_DIR
 from xsearch_spark import oracles
-from xsearch_spark.operators.wand import search_after_topk
+from xsearch_spark.constants import SCORE_ROUND_DECIMALS
+from xsearch_spark.operators import search
+from xsearch_spark.operators.wand import _index_match_scored, search_after_topk
 from xsearch_spark.plans.build_index import build_index
 from xsearch_spark.plans.query import parse
 from xsearch_spark.sources.io import read_documents
@@ -48,18 +52,31 @@ def _rows(df):
     return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
+def _rel_page(built, parsed, k, after):
+    """The same page from the declarative match evaluation: round the
+    full scored match set, keep what lies after the cursor, top-k."""
+    scored = _index_match_scored(built, parsed).select(
+        "doc_id", F.round("score", SCORE_ROUND_DECIMALS).alias("score")
+    )
+    if after is not None:
+        cs, cd = after
+        scored = scored.filter(
+            (F.col("score") < cs)
+            | ((F.col("score") == cs) & (F.col("doc_id") > cd))
+        )
+    return search.top_k(scored, k)
+
+
 @pytest.mark.parametrize("q", CURSOR_QUERIES)
 def test_page_walk_equals_offset_paging(spark, built, duck, q):
     """Walk three k=5 pages by cursor; every page must equal the
-    oracle's LIMIT 5 OFFSET 5*i of the frozen order, on BOTH engine
-    paths."""
+    oracle's LIMIT 5 OFFSET 5*i of the frozen order, from the scorer
+    and from the declarative match evaluation alike."""
     parsed = parse(q, attr_fields=("lang",))
     cursor = None
     for i in range(3):
         wand = _rows(search_after_topk(built, parsed, k=5, after=cursor))
-        rel = _rows(
-            search_after_topk(built, parsed, k=5, after=cursor, path="rel")
-        )
+        rel = _rows(_rel_page(built, parsed, 5, cursor))
         want = [
             (int(a), float(b))
             for a, b in duck.execute(

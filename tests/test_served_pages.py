@@ -140,28 +140,37 @@ def test_served_match_set_equals_relational(spark, built, q, tombs):
         assert got, q
 
 
-def test_served_match_set_lang_fallback(spark, tmp_path):
-    """attr_cols=None: lang: rides the source cogroup in the scorer and
-    the relational allowlist join in the twin — same match set."""
-    docs = read_documents(spark, SF_DIR)
+@pytest.fixture(scope="module")
+def nolang(spark, tmp_path_factory):
+    """An index built with attr_cols=None: lang: comes from the source."""
+    out = str(tmp_path_factory.mktemp("nolang_idx"))
     bi = build_index(
-        spark, docs, str(tmp_path / "nolang_idx"), text_col="text",
+        spark, read_documents(spark, SF_DIR), out, text_col="text",
         docs_per_segment=128, segs_per_shard=2, num_buckets=16,
         attr_cols=None,
     )
+    yield bi
+    shutil.rmtree(out, ignore_errors=True)
+
+
+def test_served_match_set_lang_fallback(spark, nolang):
+    """attr_cols=None: lang: rides the scorer's doc-side rows and the
+    relational allowlist join in the twin — same match set."""
+    docs = read_documents(spark, SF_DIR)
     tombs = spark.range(0, 1000, 3).select(F.col("id").alias("doc_id"))
     for q in ("hash OR join lang:en", "s* lang:zh"):
         parsed = parse(q)
         for t in (None, tombs):
-            got = _pairs(wand._served_matches(bi, parsed, docs, t))
-            want = _pairs(wand._index_match_scored(bi, parsed, docs, t))
+            got = _pairs(wand._served_matches(nolang, parsed, docs, t))
+            want = _pairs(wand._index_match_scored(nolang, parsed, docs, t))
             assert got == want and got, q
     # an unindexed facet field joins the source on the served match set
+    p = parse("hash OR join")
     got = sorted(
         (r["value"], r["n_docs"])
-        for r in wand.facet_counts(bi, parse("hash OR join"), "lang", docs).collect()
+        for r in wand.facet_counts(nolang, p, "lang", docs).collect()
     )
-    match = wand._index_match_scored(bi, parse("hash OR join"), docs).select("doc_id")
+    match = wand._index_match_scored(nolang, p, docs).select("doc_id")
     want = sorted(
         (r["lang"], r["count"])
         for r in docs.join(match, "doc_id").groupBy("lang").count().collect()
@@ -213,11 +222,16 @@ def _jobs(spark, name, make) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(name))
 
 
-def test_page_ops_job_counts(spark, built):
+def test_page_ops_job_counts(spark, built, nolang):
     """One shard exchange, the scorer, then the page's own tail: facet
     counts, stats and histograms run in at most 3 Spark jobs (4 when the
     match set and the values were decoded apart and joined on doc_id),
-    a sorted page in at most 2 (was 3)."""
+    a sorted page in at most 2 (was 3). Tombstones and a source lang:
+    allowlist are more rows of the scorer's own scan and take its one
+    shard exchange: no job of their own (a cogroup shuffled them in a
+    second exchange)."""
+    docs = read_documents(spark, SF_DIR)
+    tombs = spark.range(0, 1000, 5).select(F.col("id").alias("doc_id"))
     p = parse("hash OR join", attr_fields=AF)
     pages = {
         "facet_counts": (lambda: wand.facet_counts(built, p, "lang"), 3),
@@ -228,8 +242,29 @@ def test_page_ops_job_counts(spark, built):
         "search_sorted": (
             lambda: wand.search_sorted(built, p, "n_chars", k=10), 2
         ),
+        "topk_tombstoned": (
+            lambda: wand.search_wand(built, p, k=10, tombstones=tombs), 2
+        ),
+        "topk_source_lang": (
+            lambda: wand.search_wand(
+                nolang, parse("hash OR join lang:en"), k=10, source_df=docs
+            ),
+            2,
+        ),
+        "batch_source_lang_tombstoned": (
+            lambda: wand.search_wand_batch(
+                nolang,
+                {"a": parse("hash lang:en"), "b": parse("join OR scan lang:zh")},
+                k=10, source_df=docs, tombstones=tombs,
+            ),
+            3,
+        ),
+        "field_stats_tombstoned": (
+            lambda: wand.field_stats(built, p, "n_chars", tombstones=tombs), 3
+        ),
     }
+    counts = {}
     for name, (make, limit) in pages.items():
         make().collect()  # warm: count the steady state
-        n = _jobs(spark, f"served_{name}", make)
-        assert 0 < n <= limit, (name, n)
+        counts[name] = (_jobs(spark, f"served_{name}", make), limit)
+    assert all(0 < n <= limit for n, limit in counts.values()), counts

@@ -7,12 +7,12 @@ per-field BM25 scores over the union of the per-field match sets
 (BM25F-lite; Lucene's `title:q^w OR body:q` evaluation shape).
 
 Spark shape (scale-first): each field contributes its full scored
-match set through `_index_match_scored`, the declarative match
-evaluation behind `search_index_relational` and `match_count`; the
-per-field DataFrames `unionByName` BEFORE a single fuse aggregation,
-and the top-k is one TakeOrderedAndProject — one job, no per-field
-collect, no source scan. At 10^12 docs the fuse input is posting-list-sized
-per field, never corpus-sized.
+match set through `_served_matches`, the shard scorer that serves
+every result page (one pruned scan and one shard exchange per
+field); the per-field DataFrames `unionByName` BEFORE a single fuse
+aggregation, and the top-k is one TakeOrderedAndProject — no
+per-field collect, no source scan. At 10^12 docs the fuse input is
+posting-list-sized per field, never corpus-sized.
 """
 
 from __future__ import annotations
@@ -53,7 +53,7 @@ def multi_field_search(
     score is rounded AFTER summation (each per-field score stays
     raw float64 through the fuse, same discipline as every per-doc
     weight sum)."""
-    from xsearch_spark.operators.wand import _index_match_scored
+    from xsearch_spark.operators.wand import _served_matches
 
     if not fields:
         raise ValueError("multi_field_search needs at least one field")
@@ -66,7 +66,7 @@ def multi_field_search(
     parts = []
     for fname, (built, parsed) in fields.items():
         w = float(weights.get(fname, 1.0))
-        scored = _index_match_scored(built, parsed, None, tombstones)
+        scored = _served_matches(built, parsed, None, tombstones)
         parts.append(
             scored.select(
                 "doc_id", (F.col("score") * F.lit(w)).alias("score")

@@ -646,7 +646,7 @@ def pruned_index_scan_prefix(
 
 
 # every column the Arrow scorer (_assemble_shard / _split_range_rows)
-# actually decodes; shard is the grouping/cogroup key
+# actually decodes; shard is the exchange and grouping key
 _SCORER_COLS = (
     "term", "shard", "doc_ids", "tfs", "dls", "block_last", "block_max",
     "df", "poss",
@@ -655,8 +655,8 @@ _SCORER_COLS = (
 
 def _project_scorer_cols(rows: DataFrame, need_positions: bool) -> DataFrame:
     """Project the pruned scan to exactly the columns the scorer decodes
-    BEFORE the Arrow boundary (round 7, guide §4.1): mapInPandas/cogroup
-    are opaque to the optimizer, so without an explicit select every
+    BEFORE the Arrow boundary (round 7, guide §4.1): mapInPandas is
+    opaque to the optimizer, so without an explicit select every
     warm query also reads (parquet ReadSchema) and ships (Arrow) the
     doc-range metadata — n_docs, first_doc_id, last_doc_id, bucket —
     that the scorer never touches. The positional stream (``poss``) is
@@ -881,7 +881,7 @@ def _phrase_pos_need(built, parsed: ParsedQuery) -> "_PosNeed":
 def _attr_filter_terms(built, parsed: ParsedQuery) -> list[str]:
     """Synthetic index terms for the query's generic ``field:value``
     filters (``parsed.attrs``). Unlike ``lang:`` (which keeps a
-    source-cogroup fallback for indexes built without the lang attr),
+    source fallback for indexes built without the lang attr),
     these REQUIRE an index carrying the field — raising beats a silent
     per-query corpus scan at 10^12 docs."""
     from xsearch_spark.constants import num_attr_encode
@@ -914,30 +914,34 @@ def _aux_doc_side(
     tombstones: DataFrame | None,
     docs_per_shard: int,
 ) -> DataFrame | None:
-    """The doc-side input of the scorer cogroup: lang-allowlist rows and
-    tombstone rows in ONE DataFrame keyed by the shard doc-range, so one
-    co-shuffle carries every per-doc filter to its postings. Columns:
-    (doc_id, lang, tomb, shard); None when neither filter is present."""
-    aux: DataFrame | None = None
+    """The scorer's doc-side rows: the per-doc filters the index does not
+    carry, as (term, doc_id, shard, df) rows that union into the pruned
+    scan and take its shard exchange. A source ``lang`` row carries
+    ``attr_term("lang", x)``, the allowlist term an attr-indexed build
+    carries; a tombstone row carries a NULL term. ``df`` is 0 so that no
+    bigint column of the union holds a null (pandas would widen it to
+    float64). None when neither filter is present."""
+    side: DataFrame | None = None
     if langs:
         if source_df is None:
             raise ValueError("lang: filter requires source_df")
-        aux = source_df.where(_sql_in("lang", langs)).select(
+        side = source_df.where(_sql_in("lang", langs)).select(
+            F.concat(F.lit(attr_term("lang", "")), F.col("lang")).alias("term"),
             F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("lang"),
-            F.lit(False).alias("tomb"),
         )
     if tombstones is not None:
         t = tombstones.select(
+            F.lit(None).cast("string").alias("term"),
             F.col("doc_id").cast("long").alias("doc_id"),
-            F.lit(None).cast("string").alias("lang"),
-            F.lit(True).alias("tomb"),
         )
-        aux = t if aux is None else aux.unionByName(t)
-    if aux is None:
+        side = t if side is None else side.unionByName(t)
+    if side is None:
         return None
-    return aux.withColumn(
-        "shard", (F.col("doc_id") / F.lit(docs_per_shard)).cast("long")
+    return side.select(
+        "term",
+        "doc_id",
+        (F.col("doc_id") / F.lit(docs_per_shard)).cast("long").alias("shard"),
+        F.lit(0).cast("long").alias("df"),
     )
 
 
@@ -956,11 +960,9 @@ class _QueryPlan:
     # membership narrows executor-side)
     scan_prefixes: tuple[str, ...]
     range_specs: tuple[tuple[str, str], ...]
-    # synthetic attr terms whose postings AND into the allowlist
+    # synthetic attr terms whose postings AND into the allowlist; on an
+    # index without the lang attr, lang's comes from the doc-side rows
     allow_terms: tuple[str, ...]
-    # the lang the source cogroup serves: set only on an index built
-    # without the lang attr (attr_cols=None)
-    cogroup_lang: str | None
     pos_need: _PosNeed
     after: tuple[float, int] | None
     # what route() reads beside parsed.prefixes / parsed.exclude_prefixes
@@ -1008,10 +1010,9 @@ def _compile(
     (attr fields, positions, numeric ranges) raises here, before any
     Spark work."""
     fz_pos, fz_neg = _fuzzy_unions(parsed)
-    lang_attr = parsed.lang is not None and built.has_attr("lang")
-    allow_terms = (
-        [attr_term("lang", parsed.lang)] if lang_attr else []
-    ) + _attr_filter_terms(built, parsed)
+    lang = [] if parsed.lang is None else [attr_term("lang", parsed.lang)]
+    attr_terms = _attr_filter_terms(built, parsed)
+    index_allow = (lang if lang and built.has_attr("lang") else []) + attr_terms
     pos_need = _phrase_pos_need(built, parsed)
     range_specs = tuple(_attr_range_specs(built, parsed))
     exact = list(parsed.terms) + list(parsed.exclude)
@@ -1020,7 +1021,7 @@ def _compile(
         # fuzzy neighborhoods and group members ride the bucket-pruned
         # exact scan (the point of the closed-form d=1 enumeration)
         scan_terms=tuple(
-            exact + sorted((fz_pos | fz_neg) - set(exact)) + allow_terms
+            exact + sorted((fz_pos | fz_neg) - set(exact)) + index_allow
         ),
         scan_prefixes=parsed.prefixes
         + parsed.exclude_prefixes
@@ -1029,8 +1030,7 @@ def _compile(
             for w in parsed.wildcards + parsed.exclude_wildcards
         ),
         range_specs=range_specs,
-        allow_terms=tuple(allow_terms),
-        cogroup_lang=None if lang_attr else parsed.lang,
+        allow_terms=tuple(lang + attr_terms),
         pos_need=pos_need,
         after=after,
         exclude_terms=frozenset(parsed.exclude) | fz_neg,
@@ -1156,8 +1156,11 @@ def _score_plans(
     One pruned scan reads the union of the plans' scans; each shard task
     decodes that union once and slices it per plan through the plan's
     routing predicate. The per-doc filters the index does not carry —
-    tombstones, and lang: on an index built without the lang attr — ride
-    one shard-keyed cogroup (``_aux_doc_side``).
+    tombstones, and lang: on an index built without the lang attr — are
+    doc-side rows (``_aux_doc_side``) unioned into the scan: they take
+    its shard exchange, and ``shard_iter`` splits them off and hands
+    each shard's allowlists and tombstones to the scorer. Every call is
+    ``rows [∪ doc-side rows] [.repartition("shard")] .mapInPandas``.
 
     ``values``: attr fields read by the same scan and emitted as one
     more column each beside every matched doc — one row per (doc,
@@ -1198,9 +1201,8 @@ def _score_plans(
         ]
     )
 
-    def score_rows(
-        g: pd.DataFrame, by_lang: dict[str, np.ndarray], tombs: np.ndarray
-    ) -> pd.DataFrame:
+    def score_rows(g: pd.DataFrame, d: pd.DataFrame | None) -> pd.DataFrame:
+        # g: one shard's index rows; d: its doc-side rows, if any
         # shards holding only allowlist/exclusion/value runs can't
         # contribute; skip before decoding (a hot lang list + rare term
         # query would otherwise decode huge allowlists in shards the term
@@ -1221,6 +1223,14 @@ def _score_plans(
         lists, blocks, _, dfs, attr_lists, pos_lists = _assemble_shard(
             g, set(), avgdl, allow_terms, pos_need
         )
+        tombs = _EMPTY_I64
+        if d is not None:
+            tomb = d["term"].isna().to_numpy(bool)
+            tombs = np.unique(d["doc_id"].to_numpy(np.int64)[tomb])
+            attr_lists.update(
+                (t, np.unique(a["doc_id"].to_numpy(np.int64)))
+                for t, a in d[~tomb].groupby("term", sort=False)
+            )
         out = []
         for qid, p in plans.items():
             routes = {t: p.route(t) for t in lists}
@@ -1228,12 +1238,8 @@ def _score_plans(
             ex = [lists[t][0] for t, r in routes.items() if r is False]
             if tombs.size:
                 ex.append(tombs)
-            allowed = (
-                None
-                if p.cogroup_lang is None
-                else by_lang.get(p.cogroup_lang, _EMPTY_I64)
-            )
-            # AND-intersect every index-side allowlist into `allowed`
+            allowed = None
+            # AND-intersect every allowlist into `allowed`
             for lst in [attr_lists.get(t, _EMPTY_I64) for t in p.allow_terms] + [
                 range_lists[spec_idx[s]] for s in p.range_specs
             ]:
@@ -1270,29 +1276,20 @@ def _score_plans(
             }
         )
 
-    aux = _aux_doc_side(
-        sorted({p.cogroup_lang for p in plans.values()} - {None}),
+    doc_side = _aux_doc_side(
+        [] if built.has_attr("lang")
+        else sorted({p.parsed.lang for p in plans.values()} - {None}),
         source_df,
         tombstones,
         built.docs_per_shard,
     )
-    if aux is not None:
-
-        def cogroup_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return _empty_out(values)
-            tomb_mask = right["tomb"].to_numpy(bool)
-            by_lang = {
-                lang: np.sort(grp["doc_id"].to_numpy(np.int64))
-                for lang, grp in right[~tomb_mask].groupby("lang", sort=False)
-            }
-            tombs = np.sort(right["doc_id"].to_numpy(np.int64)[tomb_mask])
-            return score_rows(left, by_lang, tombs)
-
-        return (
-            rows.groupBy("shard")
-            .cogroup(aux.groupBy("shard"))
-            .applyInPandas(cogroup_fn, schema)
+    # a bool, not the DataFrame: the UDF closure must not capture it
+    has_doc_side = doc_side is not None
+    if has_doc_side:
+        # index rows get a non-null doc_id for the same reason doc-side
+        # rows get df = 0: pandas keeps both columns int64
+        rows = rows.withColumn("doc_id", F.lit(-1).cast("long")).unionByName(
+            doc_side, allowMissingColumns=True
         )
 
     def shard_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1302,10 +1299,18 @@ def _score_plans(
         if not frames:
             return
         pdf = pd.concat(frames, ignore_index=True)
-        for _, g in pdf.groupby("shard", sort=False):
-            yield score_rows(g, {}, _EMPTY_I64)
+        side: dict = {}
+        if has_doc_side:
+            # doc-side rows carry no postings; those of a shard without
+            # index rows meet nothing and drop here, in one step
+            mask = pdf["doc_ids"].isna().to_numpy(bool)
+            doc, pdf = pdf[mask], pdf[~mask]
+            doc = doc[doc["shard"].isin(pdf["shard"].unique())]
+            side = {s: d for s, d in doc.groupby("shard", sort=False)}
+        for s, g in pdf.groupby("shard", sort=False):
+            yield score_rows(g, side.get(s))
 
-    if values or not (
+    if has_doc_side or values or not (
         built.unique_term_shard and all(p.one_exact_term for p in plans.values())
     ):
         # co-locate every run of a shard in one task. Plans that each read
@@ -1315,7 +1320,8 @@ def _score_plans(
         # advisor): an index that can repeat (term, shard) keys — a raw
         # union of merged indexes — must shuffle so _assemble_shard's
         # repeated-key guard sees all runs of a key together. Value rows
-        # must meet their shard's query runs, so they shuffle too.
+        # and doc-side rows must meet their shard's query runs, so they
+        # shuffle too.
         rows = rows.repartition("shard")
     return rows.mapInPandas(shard_iter, schema)
 
@@ -1341,8 +1347,8 @@ def search_wand(
     stats sidecar. On the shuffled path a warm query runs as TWO Spark
     jobs: the shard exchange's map stage, then the scorer and the top-k
     merge (the traced serve benchmark reads topk.jobs = 2). The
-    no-exchange path runs as one; the doc-side cogroup adds the
-    exchange of its aux side.
+    no-exchange path runs as one; doc-side rows (tombstones, a source
+    lang allowlist) ride the same exchange and add no job.
 
     ``lang:`` filtering (v5 index): the attribute is indexed as a
     synthetic posting list (``attr_term("lang", x)``, build-time), so the
@@ -1351,9 +1357,9 @@ def search_wand(
     lang: query costs O(matching docs in the probed shards), never a
     per-query scan+shuffle of the source table (the round-3 weak mark).
     Indexes built without the lang attr (``attr_cols=None``) fall back
-    to the round-2 distributed cogroup: the lang-filtered source doc_ids
-    co-shuffle with the index rows on the shard key and meet the scorer
-    in a cogrouped Arrow UDF.
+    to the source: its lang-filtered doc_ids become doc-side rows under
+    the same attr term, union into the scan and reach the scorer
+    through its one shard exchange.
 
     Generic ``field:value`` filters (round-5, ``parsed.attrs``): every
     field indexed via ``attr_cols`` rides the same machinery — one
@@ -1362,8 +1368,8 @@ def search_wand(
     table fallback: filtering on an unindexed field raises instead of
     silently scanning the corpus per query.
 
-    ``tombstones`` (S5, round-3): deleted doc_ids ride a shard-keyed
-    cogroup (a tombstone is doc-range keyed exactly like the postings)
+    ``tombstones`` (S5, round-3): deleted doc_ids are doc-side rows of
+    the scan (a tombstone is doc-range keyed exactly like the postings)
     and are applied inside the scorer as one more exclude list — the
     engine path serves correct results between compactions with no extra
     Spark job and no driver-side delete set.
@@ -1397,11 +1403,11 @@ def search_wand_batch(
 
     ``lang:`` queries read their allowlists from the index itself
     (synthetic attr posting lists ride the same pruned scan, sliced per
-    query); on indexes built without the lang attr they fall back to
-    the cogrouped source allowlist carrying (doc_id, lang, shard) for
-    the union of requested langs. ``tombstones`` (S5) ride the
-    shard-keyed cogroup and are excluded from every query's results —
-    fresh deletes are visible to the whole batch with no extra job.
+    query); on indexes built without the lang attr the source supplies
+    the union of requested langs as doc-side rows of the same scan.
+    ``tombstones`` (S5) are doc-side rows too and are excluded from
+    every query's results — fresh deletes are visible to the whole
+    batch with no extra job.
     """
     from pyspark.sql import Window
 
@@ -2021,7 +2027,6 @@ def search_after_topk(
     after: tuple[float, int] | None = None,
     source_df: DataFrame | None = None,
     tombstones: DataFrame | None = None,
-    path: str = "wand",
 ) -> DataFrame:
     """Relevance-order cursor paging (round-6, FIXTURES.md §3.23): the
     k docs strictly after ``after`` = (rounded_score, doc_id) in the
@@ -2036,23 +2041,6 @@ def search_after_topk(
     the cursor (subset-seed exactness, with the raw-vs-rounded pruning
     bound relaxed by one rounding quantum). Deep pages therefore cost
     the same as page 1, never an offset+k heap."""
-    from xsearch_spark.constants import SCORE_ROUND_DECIMALS
-
-    if path == "rel":
-        from xsearch_spark.operators import search as rel
-
-        scored = _index_match_scored(built, parsed, source_df, tombstones)
-        scored = scored.select(
-            "doc_id",
-            F.round(F.col("score"), SCORE_ROUND_DECIMALS).alias("score"),
-        )
-        if after is not None:
-            cs, cd = float(after[0]), int(after[1])
-            scored = scored.filter(
-                (F.col("score") < cs)
-                | ((F.col("score") == cs) & (F.col("doc_id") > cd))
-            )
-        return rel.top_k(scored, k)
     cur = (
         (float(after[0]), int(after[1]))
         if after is not None

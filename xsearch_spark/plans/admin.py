@@ -11,8 +11,9 @@ tombstones at merge time; re-adding a key replaces the old doc
                               append-only parquet table. Until a
                               compaction folds them in, queries pass them
                               as the scorer's ``tombstones=`` (the one
-                              query-time delete path: they ride the
-                              shard-keyed cogroup BEFORE the top-k cut).
+                              query-time delete path: doc-side rows of
+                              the scorer's scan, applied BEFORE the
+                              top-k cut).
   * ``compact_incremental`` — purges the tombstoned postings from every
                               run; N, avgdl and df stay frozen until the
                               next full compact.

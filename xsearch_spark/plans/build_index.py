@@ -185,7 +185,7 @@ def checkpoint_source_ids(
     materialize the id-keyed source ONCE.
 
     Without this, every consumer of the assigned ids (the pack pass, each
-    lang-filtered query's cogroup side, the resume range filter) re-runs
+    source-lang query's doc-side rows, the resume range filter) re-runs
     the id assignment — a full window shuffle per consumer.
     Materializing turns those into parquet scans. The row count is the
     one ``assign_doc_ids_scalable`` takes to size its id buckets (on a

@@ -10,7 +10,7 @@ Grammar (xsearch-style free-text term bag, plus the pinned extensions):
                             the index's v5 synthetic attr postings
                             (license/domain/source filters on a real
                             corpus). ``lang`` keeps its dedicated slot
-                            (it alone has a source-cogroup fallback);
+                            (it alone has a source fallback);
                             other fields require an attr-indexed build.
   * ``-term``            -> NOT: exclude docs containing term
   * ``"quoted span"``    -> PHRASE (round 5, v6 positional index): the
